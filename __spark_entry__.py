@@ -43,29 +43,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def _par(df: DataFrame, id_col: str) -> DataFrame:
-    """Spread a narrow scan across all cores before CPU-heavy map work.
-
-    The driver's larger scale factors ship each table as ONE parquet
-    file with ONE row group, so the scan — and every map-side stage
-    fused with it (tokenize, regex, vector math) — executes as a single
-    task no matter how many cores the session has (guide §2.5 "input
-    skew": fix at the source or repartition right after the read). The
-    repartition hashes a unique id (deterministic, and no
-    sort-before-repartition cost — that only applies to the keyless
-    round-robin form), and is a NO-OP whenever the source already scans
-    with ≥ defaultParallelism partitions — i.e. it never fires on a
-    properly laid-out production table. Value-safe: row sets are
-    unchanged and every aggregate downstream is either exact
-    (int/decimal) or per-row; the 3-SF oracle gate re-verified every
-    query this touches (OPTIMIZATION_r06.md).
-    """
-    n = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < n:
-        return df.repartition(n, F.col(id_col))
-    return df
-
-
 # ---------------------------------------------------------------------------
 # flagship
 # ---------------------------------------------------------------------------
@@ -1447,8 +1424,9 @@ def _q_perplexity(spark, sf_dir):
     # add-0.5 bigram model fit on the corpus itself; DuckDB replays the
     # full model fit + scoring math.
     from logstash_integration_jdbc_spark.operators.lm import perplexity
+    from logstash_integration_jdbc_spark.operators.skew import spread
 
-    docs = _par(_t(spark, sf_dir, "documents"), "doc_id")
+    docs = spread(_t(spark, sf_dir, "documents"), "doc_id")
     return perplexity(docs)
 
 
@@ -1588,8 +1566,9 @@ def _q_tfidf(spark, sf_dir):
 
 def _q_bm25_topk(spark, sf_dir):
     from logstash_integration_jdbc_spark.operators.relevance import bm25_topk
+    from logstash_integration_jdbc_spark.operators.skew import spread
 
-    docs = _par(_t(spark, sf_dir, "documents"), "doc_id")
+    docs = spread(_t(spark, sf_dir, "documents"), "doc_id")
     return bm25_topk(docs, ["spark", "join", "window"], k=25)
 
 
@@ -1637,8 +1616,9 @@ def _q_ann_quantized_topk(spark, sf_dir):
 
 def _q_ann_cosine_topk(spark, sf_dir):
     from logstash_integration_jdbc_spark.operators.similarity import cosine_topk
+    from logstash_integration_jdbc_spark.operators.skew import spread
 
-    emb = _par(_t(spark, sf_dir, "embeddings"), "vec_id").withColumn(
+    emb = spread(_t(spark, sf_dir, "embeddings"), "vec_id").withColumn(
         "embedding", F.col("embedding").cast("array<double>")
     )
     queries = emb.filter(F.col("vec_id") < 5).selectExpr("vec_id as query_id", "embedding")
@@ -3032,7 +3012,7 @@ def _value_oracle(key: str, build) -> str:
 
 
 def _py_simhash(text: str) -> int:
-    """Independent simhash twin of operators.dedup._get_simhash_udf."""
+    """Independent simhash twin of operators.dedup._simhash_udf."""
     import numpy as np
 
     from logstash_integration_jdbc_spark.functions.xxhash import (

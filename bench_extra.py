@@ -1,12 +1,11 @@
 """Supplementary benchmarks for the optimization round (guide §1.4):
 noop-sink / count isolation per query and per stage. ``bench.py`` is
 frozen for the driver's measurement; all exploratory numbers cited in
-OPTIMIZATION_r06.md come from here.
+OPTIMIZATION_r06.md come from here. Per-layer timings of the minhash
+and pipeline paths come from ``perfbench/run.py --trace 1``.
 
 Usage:
   python bench_extra.py queries [name ...]      # headline queries, min-of-k
-  python bench_extra.py minhash-stages [rows]   # stage breakdown
-  python bench_extra.py pipeline-stages [rows]  # stage breakdown
   python bench_extra.py substring-stages [rows]
   python bench_extra.py perplexity-stages [rows]
 
@@ -66,99 +65,6 @@ def cmd_queries(names):
     print(json.dumps({k: v["min"] for k, v in out.items()}))
 
 
-def cmd_minhash_stages(rows):
-    from pyspark.sql import functions as F
-
-    from bench import _docs_input
-    from logstash_integration_jdbc_spark.operators import dedup
-
-    spark = _spark()
-    docs = spark.read.parquet(_docs_input(spark, rows))
-    print(f"docs input partitions: {docs.rdd.getNumPartitions()}")
-
-    spread = dedup._spread(docs, "doc_id", "text")
-    _time(spark, "mh1: scan only", _noop(docs.select("doc_id", "text")))
-    _time(spark, "mh2: spread (repartition)", _noop(spread))
-    sh = dedup._shingled(spread, "doc_id", "text", 3)
-    _time(spark, "mh3: spread+shingle", _noop(sh))
-    sig = sh.withColumn("__sig", dedup.minhash_signature_udf(64)(F.col("__sh"))).select("doc_id", "__sig")
-    _time(spark, "mh4: spread+shingle+signature", _noop(sig))
-    bands = dedup.minhash_band_buckets(docs, "doc_id", "text", 3, 64, 16)
-    _time(spark, "mh5: band keys (pre-exchange)", _noop(bands))
-    cand_input = (bands.groupBy("__band", "__bucket")
-                  .agg(F.sort_array(F.collect_list("doc_id")).alias("__ids"))
-                  .filter(F.size("__ids") > 1))
-    _time(spark, "mh6: +bucket groupBy", _noop(cand_input))
-
-    def full():
-        spark.catalog.clearCache()
-        return (dedup.minhash_lsh_candidates(docs, num_hashes=64, bands=16)
-                .filter(F.col("jaccard") >= 0.8).count())
-
-    _time(spark, "mh7: full minhash_lsh_candidates", full)
-
-
-def cmd_pipeline_stages(rows):
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from bench import _pipeline_input, run_pipeline_bench
-    from logstash_integration_jdbc_spark.functions.parse import parse_tool_calls
-    from logstash_integration_jdbc_spark.pipeline import (
-        PipelineConfig,
-        build_lookups,
-        build_router,
-    )
-    from logstash_integration_jdbc_spark.operators.skew import salted_repartition
-    from logstash_integration_jdbc_spark.sources.scan import (
-        incremental_scan,
-        partition_cursors,
-    )
-
-    from logstash_integration_jdbc_spark.sources.value_tracking import ValueTracker
-
-    spark = _spark()
-    data = _pipeline_input(spark, rows)
-    raw = spark.read.parquet(f"{data}/transcripts.parquet")
-    print(f"transcripts partitions: {raw.rdd.getNumPartitions()}")
-    wm = ValueTracker(path=None, tracking_type="timestamp", clean_run=True).value
-    cfg = PipelineConfig(
-        transcripts_path=f"{data}/transcripts.parquet",
-        tool_dim_path=f"{data}/tool_dim.parquet",
-        role_dim_path=f"{data}/role_dim.parquet",
-        out_dir=tempfile.mkdtemp(prefix="pstage-"),
-        checkpoint_path=None, clean_run=True)
-
-    scanned = incremental_scan(raw, "ts", wm)
-    _time(spark, "p1: scan", _noop(scanned))
-    parsed = parse_tool_calls(scanned)
-    _time(spark, "p2: scan+parse", _noop(parsed))
-    proc = build_lookups(spark, cfg)
-    enriched = proc.enhance(parsed)
-    _time(spark, "p3: scan+parse+enrich", _noop(enriched))
-    router = build_router()
-    routed = enriched.withColumn(
-        "ts_hour", F.date_format(F.date_trunc("hour", F.col("ts")), "yyyy-MM-dd-HH")
-    ).withColumn("run_id", F.lit("x")).withColumn("sink", router.sink_expr())
-    _time(spark, "p4: +route cols", _noop(routed))
-    salted = salted_repartition(routed, key="conv_id", n_salts=8,
-                                extra_cols=["sink", "ts_hour", "run_id"],
-                                with_key=False)
-    _time(spark, "p5: +salted repartition", _noop(salted))
-
-    def write_real():
-        import shutil
-        out = tempfile.mkdtemp(prefix="pstage-w-")
-        salted.write.mode("overwrite").partitionBy("sink", "ts_hour", "run_id").parquet(out)
-        shutil.rmtree(out, ignore_errors=True)
-
-    _time(spark, "p6: +parquet write (partitioned)", write_real)
-    _time(spark, "p7: cursors job", lambda: partition_cursors(scanned, ts_col="ts"))
-    _time(spark, "p8: full run_pipeline",
-          lambda: run_pipeline_bench(spark, rows, warm=False, reps=1), reps=REPS)
-
-
 def cmd_substring_stages(rows):
     from pyspark.sql import functions as F
 
@@ -194,10 +100,6 @@ if __name__ == "__main__":
     cmd = sys.argv[1] if len(sys.argv) > 1 else "queries"
     if cmd == "queries":
         cmd_queries(sys.argv[2:])
-    elif cmd == "minhash-stages":
-        cmd_minhash_stages(int(sys.argv[2]) if len(sys.argv) > 2 else 1_000_000)
-    elif cmd == "pipeline-stages":
-        cmd_pipeline_stages(int(sys.argv[2]) if len(sys.argv) > 2 else 1_000_000)
     elif cmd == "substring-stages":
         cmd_substring_stages(int(sys.argv[2]) if len(sys.argv) > 2 else 1_000_000)
     elif cmd == "perplexity-stages":

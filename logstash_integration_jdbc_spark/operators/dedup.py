@@ -20,10 +20,15 @@ Scale design notes:
 
 from __future__ import annotations
 
+import functools
+
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+
+from logstash_integration_jdbc_spark.operators.skew import spread
 
 # Mersenne prime 2^31-1: with 31-bit coefficients and 31-bit-folded
 # shingle hashes, a·h+b < 2^62 stays exact in BIGINT (no silent wrap).
@@ -173,9 +178,94 @@ def minhash_signature(shingles: Column, num_hashes: int = 64) -> Column:
     return F.array(*sigs)
 
 
-_SIG_UDFS: dict[int, object] = {}
+# -- numpy kernel core (shared by the Arrow UDFs below) ---------------------
+
+# XXH64 primes (uint64 wraparound arithmetic throughout)
+_X1 = np.uint64(11400714785074694791)
+_X2 = np.uint64(14029467366897019727)
+_X3 = np.uint64(1609587929392839161)
+_X4 = np.uint64(9650029242287828579)
+_X5 = np.uint64(2870177450012600261)
 
 
+def _rotl(x, r: int):
+    r = np.uint64(r)
+    return (x << r) | (x >> (np.uint64(64) - r))
+
+
+def _xxh64_long(k, seed):
+    """Spark's ``XXH64.hashLong`` vectorized: the XXH64 of each value of
+    ``k`` (a LongType, 8 little-endian bytes) under the matching running
+    seed of ``seed`` (uint64). Chaining it from seed 42 over several
+    columns reproduces ``F.xxhash64(c1, c2, …)`` — parity pinned in
+    test_xxhash / test_dedup."""
+    with np.errstate(over="ignore"):
+        k = k.astype(np.uint64, copy=False)
+        h = seed + _X5 + np.uint64(8)
+        h = h ^ (_rotl(k * _X2, 31) * _X1)
+        h = _rotl(h, 27) * _X1 + _X4
+        h ^= h >> np.uint64(33)
+        h *= _X2
+        h ^= h >> np.uint64(29)
+        h *= _X3
+        h ^= h >> np.uint64(32)
+    return h
+
+
+def _flatten(batch: pd.Series):
+    """Ragged array batch → ``(nz, flat, starts)``: the mask of non-null,
+    non-empty rows, those rows concatenated as one int64 vector, and each
+    one's start offset in it (``flat``/``starts`` are None when no row is
+    non-empty). Empty rows are masked out, not kept as zero-length
+    segments: in ``reduceat`` a zero-length segment would alias the next
+    row's first value (or raise on a trailing empty row)."""
+    lens = np.fromiter((0 if x is None else len(x) for x in batch),
+                       dtype=np.int64, count=len(batch))
+    nz = lens > 0
+    if not nz.any():
+        return nz, None, None
+    flat = np.concatenate(
+        [np.asarray(x, dtype=np.int64) for x in batch if x is not None and len(x)]
+    )
+    starts = np.zeros(int(nz.sum()), dtype=np.int64)
+    np.cumsum(lens[nz][:-1], out=starts[1:])
+    return nz, flat, starts
+
+
+def _scatter(rows, nz, fill) -> pd.Series:
+    """Per-row UDF output: the j-th entry of ``rows`` for the j-th
+    non-empty row of the batch, ``fill`` for every other row."""
+    out = [fill] * len(nz)
+    for j, i in enumerate(np.flatnonzero(nz)):
+        out[i] = rows[j]
+    return pd.Series(out, dtype=object)
+
+
+def _signatures(flat, starts, A, B):
+    """(rows × num_hashes) minhash matrix: for permutation k, the
+    segment-min of ``((h mod P)·A[k] + B[k]) mod P`` over each row's
+    shingle hashes. h < 2^31 and A[k] < 2^31 keep the product exact in
+    int64; memory stays O(total shingles) — one pass per permutation,
+    never a (total × num_hashes) matrix."""
+    hm = flat % _P  # numpy % matches pmod (non-negative) for positive divisor
+    out = np.empty((len(starts), len(A)), dtype=np.int64)
+    # NOTE (r6): a Mersenne-fold replacement for `% _P` was benchmarked
+    # and REVERTED — the loop is memory-bandwidth bound (3 passes over
+    # the flat vector per permutation), so trading one modulo pass for
+    # four cheap passes measured ~10% SLOWER. Kept as the minimal-pass
+    # form.
+    for k in range(len(A)):
+        out[:, k] = np.minimum.reduceat((hm * A[k] + B[k]) % _P, starts)
+    return out
+
+
+def _perm_arrays(num_hashes: int):
+    coeffs = _perm_coeffs(num_hashes)
+    return (np.array([a for a, _ in coeffs], dtype=np.int64),
+            np.array([b for _, b in coeffs], dtype=np.int64))
+
+
+@functools.lru_cache(maxsize=None)
 def minhash_signature_udf(num_hashes: int = 64):
     """Arrow pandas UDF computing the SAME signature as
     `minhash_signature`, numpy-vectorized across the whole batch.
@@ -183,62 +273,22 @@ def minhash_signature_udf(num_hashes: int = 64):
     The batch's shingle arrays are flattened once; per permutation k we
     compute (h·a_k + b_k) mod P over the flat vector and segment-min with
     `np.minimum.reduceat` — O(total_shingles) per permutation with no
-    Python-level row loop. h < 2^31 and a_k < 2^31 keep the product exact
-    in int64. Memory stays O(total_shingles) (per-permutation passes, not
-    a (total × num_hashes) matrix), so executor batches never balloon.
+    Python-level row loop. Null/empty shingle arrays → [null]*num_hashes,
+    matching the expression form (array_min over an empty/null
+    transform).
     """
-    if num_hashes in _SIG_UDFS:
-        return _SIG_UDFS[num_hashes]
-
-    import numpy as np
-
-    coeffs = _perm_coeffs(num_hashes)
-    A = np.array([a for a, _ in coeffs], dtype=np.int64)
-    B = np.array([b for _, b in coeffs], dtype=np.int64)
+    A, B = _perm_arrays(num_hashes)
 
     @pandas_udf("array<bigint>")
     def _sig(sh: pd.Series) -> pd.Series:
-        n = len(sh)
-        if n == 0:
-            return pd.Series([], dtype=object)
-        # null/empty shingle arrays → [null]*num_hashes, matching the
-        # expression form (array_min over empty/null transform). Masked out
-        # before reduceat: a zero-length segment would otherwise alias the
-        # next row's first hash (or raise on a trailing empty row).
-        lens = np.fromiter((0 if x is None else len(x) for x in sh),
-                           dtype=np.int64, count=n)
-        nz = lens > 0
-        result: list = [None] * n
-        null_sig = [None] * num_hashes
-        for i in np.flatnonzero(~nz):
-            result[i] = null_sig
-        if nz.any():
-            flat = np.concatenate(
-                [np.asarray(x, dtype=np.int64) for x in sh if x is not None and len(x)]
-            )
-            hm = flat % _P  # numpy % matches pmod (non-negative) for positive divisor
-            m = int(nz.sum())
-            offsets = np.zeros(m, dtype=np.int64)
-            np.cumsum(lens[nz][:-1], out=offsets[1:])
-            out = np.empty((m, num_hashes), dtype=np.int64)
-            # NOTE (r6): a Mersenne-fold replacement for `% _P` was
-            # benchmarked and REVERTED — the loop is memory-bandwidth
-            # bound (3 passes over the flat vector per permutation), so
-            # trading one modulo pass for four cheap passes measured
-            # ~10% SLOWER. Kept as the minimal-pass form.
-            for k in range(num_hashes):
-                out[:, k] = np.minimum.reduceat((hm * A[k] + B[k]) % _P, offsets)
-            for j, i in enumerate(np.flatnonzero(nz)):
-                result[i] = out[j]
-        return pd.Series(result)
+        nz, flat, starts = _flatten(sh)
+        rows = _signatures(flat, starts, A, B) if flat is not None else ()
+        return _scatter(rows, nz, [None] * num_hashes)
 
-    _SIG_UDFS[num_hashes] = _sig
     return _sig
 
 
-_BUCKET_UDFS: dict[tuple[int, int], object] = {}
-
-
+@functools.lru_cache(maxsize=None)
 def minhash_band_bucket_udf(num_hashes: int = 64, bands: int = 16):
     """Arrow pandas UDF: shingle-hash array → per-band LSH bucket keys.
 
@@ -248,80 +298,27 @@ def minhash_band_bucket_udf(num_hashes: int = 64, bands: int = 16):
     per doc return over Arrow — ¼ of the bytes at 64/16. The bucket
     value is SPARK-PARITY ``xxhash64`` over the band's signature values
     as BIGINTs — the chained 8-byte XXH64 (running seed from 42) that
-    ``F.xxhash64(sig[i], ..., sig[i+r-1])`` computes, vectorized with
-    numpy uint64 wraparound arithmetic; parity is pinned against the
-    JVM expression in test_dedup. Rows with null/empty shingles emit
-    the all-null-input value (the seed, 42) for every band, matching
-    the JVM's skip-null fold over an all-null signature.
+    ``F.xxhash64(sig[i], ..., sig[i+r-1])`` computes; parity is pinned
+    against the JVM expression in test_dedup. Rows with null/empty
+    shingles emit the all-null-input value (the seed, 42) for every
+    band, matching the JVM's skip-null fold over an all-null signature.
     """
-    key = (num_hashes, bands)
-    if key in _BUCKET_UDFS:
-        return _BUCKET_UDFS[key]
-
-    import numpy as np
-
-    coeffs = _perm_coeffs(num_hashes)
-    A = np.array([a for a, _ in coeffs], dtype=np.int64)
-    B = np.array([b for _, b in coeffs], dtype=np.int64)
-    rows_per_band = num_hashes // bands
-
-    _P1 = np.uint64(11400714785074694791)
-    _P2 = np.uint64(14029467366897019727)
-    _P3 = np.uint64(1609587929392839161)
-    _P4 = np.uint64(9650029242287828579)
-    _P5 = np.uint64(2870177450012600261)
-
-    def _rotl(x, r):
-        r = np.uint64(r)
-        return (x << r) | (x >> (np.uint64(64) - r))
-
-    def _xxh64_long(k_i64, seed_u64):
-        # XXH64 of one LongType value (8 little-endian bytes) with a
-        # vector of running seeds — Spark's XXH64.hashLong, vectorized.
-        k = k_i64.astype(np.uint64)
-        h = seed_u64 + _P5 + np.uint64(8)
-        h = h ^ (_rotl(k * _P2, 31) * _P1)
-        h = _rotl(h, 27) * _P1 + _P4
-        h ^= h >> np.uint64(33)
-        h *= _P2
-        h ^= h >> np.uint64(29)
-        h *= _P3
-        h ^= h >> np.uint64(32)
-        return h
+    A, B = _perm_arrays(num_hashes)
+    r = num_hashes // bands
 
     @pandas_udf("array<bigint>")
     def _buckets(sh: pd.Series) -> pd.Series:
-        n = len(sh)
-        if n == 0:
-            return pd.Series([], dtype=object)
-        lens = np.fromiter((0 if x is None else len(x) for x in sh),
-                           dtype=np.int64, count=n)
-        nz = lens > 0
-        result: list = [None] * n
-        null_buckets = [42] * bands  # xxhash64 over all-null = seed
-        for i in np.flatnonzero(~nz):
-            result[i] = null_buckets
-        if nz.any():
-            flat = np.concatenate(
-                [np.asarray(x, dtype=np.int64) for x in sh if x is not None and len(x)]
-            )
-            hm = flat % _P
-            m = int(nz.sum())
-            offsets = np.zeros(m, dtype=np.int64)
-            np.cumsum(lens[nz][:-1], out=offsets[1:])
-            sig = np.empty((m, num_hashes), dtype=np.int64)
-            for k in range(num_hashes):
-                sig[:, k] = np.minimum.reduceat((hm * A[k] + B[k]) % _P, offsets)
-            buckets = np.empty((m, bands), dtype=np.int64)
-            with np.errstate(over="ignore"):
-                for b in range(bands):
-                    h = np.full(m, 42, dtype=np.uint64)
-                    for r in range(rows_per_band):
-                        h = _xxh64_long(sig[:, b * rows_per_band + r], h)
-                    buckets[:, b] = h.astype(np.int64)
-            for j, i in enumerate(np.flatnonzero(nz)):
-                result[i] = buckets[j]
-        return pd.Series(result)
+        nz, flat, starts = _flatten(sh)
+        rows = ()
+        if flat is not None:
+            sig = _signatures(flat, starts, A, B)
+            rows = np.empty((len(starts), bands), dtype=np.int64)
+            for b in range(bands):
+                h = np.full(len(starts), 42, dtype=np.uint64)
+                for k in range(b * r, (b + 1) * r):
+                    h = _xxh64_long(sig[:, k], h)
+                rows[:, b] = h.astype(np.int64)
+        return _scatter(rows, nz, [42] * bands)
 
     # Optimizer fence (guide §4.4): without this, the plan duplicates
     # the ArrowEvalPython below the spread exchange with the WHOLE
@@ -330,32 +327,16 @@ def minhash_band_bucket_udf(num_hashes: int = 64, bands: int = 16):
     # (O(words²), the exact trap the gram_hashes docstring documents)
     # and ran 5× slower at 1M docs. The function is semantically
     # deterministic; the flag only blocks re-ordering/duplication.
-    _buckets = _buckets.asNondeterministic()
-    _BUCKET_UDFS[key] = _buckets
-    return _buckets
+    return _buckets.asNondeterministic()
 
 
-def _spread(df: DataFrame, id_col: str, text_col: str,
-            force: bool = False) -> DataFrame:
-    """Null-safe (id, text) projection spread across all cores — the
-    shingle/signature stages must not run in the source's 1-2
-    file-partitions (measured ~70% slower at sf0.1).
-
-    The repartition is skipped when the input already carries at least
-    ``defaultParallelism`` partitions (guide §2.4: a repartition added
-    "for parallelism" is a pure extra exchange when the scan is already
-    parallel — measured ~0.45 s of the 1M-doc minhash wall). ``force``
-    keeps it unconditional for consumers whose DOWNSTREAM plan relies on
-    the id-hash partitioning itself (``winnow_anchors``: the per-id
-    window sort would otherwise exchange the token-EXPLODED rows, ~40×
-    the text bytes)."""
-    out = df.select(
+def _texts(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Null-safe (id, text) projection, spread across all cores
+    (``skew.spread``) — the shingle/signature stages must not run in the
+    source's 1-2 file-partitions (measured ~70% slower at sf0.1)."""
+    return spread(df.select(
         F.col(id_col), F.coalesce(F.col(text_col), F.lit("")).alias(text_col)
-    )
-    n = df.sparkSession.sparkContext.defaultParallelism
-    if force or out.rdd.getNumPartitions() < n:
-        out = out.repartition(n, F.col(id_col))
-    return out
+    ), id_col)
 
 
 def _shingled(src: DataFrame, id_col: str, text_col: str,
@@ -371,6 +352,47 @@ def _shingled(src: DataFrame, id_col: str, text_col: str,
         .select(F.col(id_col),
                 gram_hashes(F.col("__th"), F.col(text_col),
                             n_shingle, distinct=distinct).alias("__sh"))
+    )
+
+
+def _bucket_pairs(df: DataFrame, keys: list[str], members: Column) -> DataFrame:
+    """Ordered member pairs from every bucket of ``df`` grouped by
+    ``keys``: the bucket columns plus ``__a`` < ``__b`` for each pair of
+    entries of the sorted ``members`` aggregate, over buckets of more
+    than one member.
+
+    The shared pair emitter of the LSH-style operators (minhash bands,
+    winnow anchors, simhash chunks, sketch probes): ONE shuffle on the
+    bucket key, each member's signature computed once (vs a self-join
+    evaluating it per side), pairs emitted by posexplode + slice-explode
+    of the sorted member list. A degenerate bucket of B members (e.g.
+    boilerplate docs) yields O(B²) pairs; exact-dedup upstream is the
+    intended guard.
+    """
+    return (
+        df.groupBy(*keys)
+        .agg(F.sort_array(members).alias("__ms"))
+        .filter(F.size("__ms") > 1)
+        .select(*keys, F.posexplode("__ms").alias("__i", "__a"), F.col("__ms"))
+        .select(*keys, "__a",
+                F.explode(F.expr("slice(__ms, __i + 2, size(__ms))")).alias("__b"))
+    )
+
+
+def _jaccard_verify(cand: DataFrame, a: str, b: str, sh_a: DataFrame,
+                    sh_b: DataFrame, id_col: str) -> DataFrame:
+    """(a, b, jaccard): exact shingle-set jaccard of the candidate pairs
+    in ``cand``; ``sh_a``/``sh_b`` are the (id_col, __sh) shingle frames
+    of the two sides."""
+    return (
+        cand.join(sh_a.withColumnsRenamed({id_col: a, "__sh": "__sh_a"}), a)
+        .join(sh_b.withColumnsRenamed({id_col: b, "__sh": "__sh_b"}), b)
+        .withColumn(
+            "jaccard",
+            F.size(F.array_intersect("__sh_a", "__sh_b"))
+            / F.size(F.array_union("__sh_a", "__sh_b")),
+        )
+        .select(a, b, "jaccard")
     )
 
 
@@ -399,7 +421,7 @@ def minhash_band_buckets(
     # lost; hash collisions only ADD candidates, which the
     # exact-jaccard verify filters — downstream ≥-threshold outputs are
     # unchanged (verified vs brute-force jaccard at sf0.01/sf0.1).
-    base = _shingled(_spread(df, id_col, text_col), id_col, text_col,
+    base = _shingled(_texts(df, id_col, text_col), id_col, text_col,
                      n_shingle, distinct=False).withColumn(
         "__bk", minhash_band_bucket_udf(num_hashes, bands)(F.col("__sh")))
     return base.select(
@@ -426,23 +448,12 @@ def minhash_lsh_candidates(
     # Shingle hashing stays JVM-side (staged token/gram xxhash64); the
     # signature is the CPU hot spot and runs as a numpy-vectorized Arrow
     # UDF — both inside minhash_band_buckets.
-    spread = _spread(df, id_col, text_col)
+    texts = _texts(df, id_col, text_col)
     band_keys = minhash_band_buckets(df, id_col, text_col, n_shingle,
                                      num_hashes, bands)
-    # Pair generation: group ids per (band, bucket) and emit ordered pairs
-    # from each bucket's id list. One shuffle on the bucket key, signature
-    # computed exactly once (vs a self-join recomputing both sides). At
-    # 100 TB a degenerate bucket (e.g. boilerplate docs) yields O(B²)
-    # pairs either way; exact-dedup upstream is the intended guard.
     cand = (
-        band_keys.groupBy("__band", "__bucket")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("__ids"))
-        .filter(F.size("__ids") > 1)
-        .select(F.posexplode("__ids").alias("__i", "id_a"), F.col("__ids"))
-        .select(
-            "id_a",
-            F.explode(F.expr("slice(__ids, __i + 2, size(__ids))")).alias("id_b"),
-        )
+        _bucket_pairs(band_keys, ["__band", "__bucket"], F.collect_list(id_col))
+        .select(F.col("__a").alias("id_a"), F.col("__b").alias("id_b"))
         .distinct()
         # Materialized eagerly: the candidate PAIR set is small by
         # design (bounded by the banding precision) and feeds two
@@ -463,17 +474,8 @@ def minhash_lsh_candidates(
     # candidate set, not the corpus.
     pair_ids = cand.select(
         F.explode(F.array("id_a", "id_b")).alias(id_col)).distinct()
-    sh = _shingled(spread.join(pair_ids, id_col), id_col, text_col, n_shingle)
-    return (
-        cand.join(sh.withColumnsRenamed({id_col: "id_a", "__sh": "__sh_a"}), "id_a")
-        .join(sh.withColumnsRenamed({id_col: "id_b", "__sh": "__sh_b"}), "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("__sh_a", "__sh_b"))
-            / F.size(F.array_union("__sh_a", "__sh_b")),
-        )
-        .select("id_a", "id_b", "jaccard")
-    )
+    sh = _shingled(texts.join(pair_ids, id_col), id_col, text_col, n_shingle)
+    return _jaccard_verify(cand, "id_a", "id_b", sh, sh, id_col)
 
 
 def contamination_pairs(
@@ -499,10 +501,10 @@ def contamination_pairs(
     Self-pairs (same id on both sides, e.g. when the benchmark is a
     subset of the corpus) are excluded.
     """
-    c = _shingled(_spread(corpus, id_col, text_col), id_col, text_col,
+    c = _shingled(_texts(corpus, id_col, text_col), id_col, text_col,
                   n_shingle).select(
         F.col(id_col).alias("corpus_id"), F.explode("__sh").alias("__g"))
-    b = _shingled(_spread(benchmark, id_col, text_col), id_col, text_col,
+    b = _shingled(_texts(benchmark, id_col, text_col), id_col, text_col,
                   n_shingle).select(
         F.col(id_col).alias("bench_id"), F.explode("__sh").alias("__g"))
     return (
@@ -525,9 +527,7 @@ def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.8,
 
 # -- exact-substring duplication (winnowed anchors) ------------------------
 
-_WINNOW_UDFS: dict[tuple[int, int], object] = {}
-
-
+@functools.lru_cache(maxsize=None)
 def winnow_anchor_udf(min_tokens: int = 10, window: int = 4):
     """Arrow pandas UDF: token-hash array → distinct winnow anchors.
 
@@ -538,96 +538,55 @@ def winnow_anchor_udf(min_tokens: int = 10, window: int = 4):
     ``minhash_band_bucket_udf``, parity pinned in test_xxhash /
     test_dedup), the winnow minimum is a shifted ``np.minimum`` ladder
     over the batch-flattened gram vector with INT64_MAX sentinels at
-    doc tails (each doc's ≥ min_tokens−1 ≥ window−1 invalid tail
-    positions stop any window from reading the next doc's grams), and
-    per-doc anchors deduplicate with ``np.unique``. Replaces one 40×
+    the min_tokens−1 invalid tail positions of each doc (full windows
+    never reach past them), the single anchor of a doc with fewer than
+    ``window`` grams is the segment-min over that doc alone, and per-doc
+    anchors deduplicate with ``np.unique``. Replaces one 40×
     token-exploded sort + three window passes + a dropDuplicates
     exchange with a map-only kernel.
     """
-    key = (min_tokens, window)
-    if key in _WINNOW_UDFS:
-        return _WINNOW_UDFS[key]
-
-    import numpy as np
-
     L, W = min_tokens, window
     _MAX = np.int64(np.iinfo(np.int64).max)
 
-    _P1 = np.uint64(11400714785074694791)
-    _P2 = np.uint64(14029467366897019727)
-    _P3 = np.uint64(1609587929392839161)
-    _P4 = np.uint64(9650029242287828579)
-    _P5 = np.uint64(2870177450012600261)
-
-    def _rotl(x, r):
-        r = np.uint64(r)
-        return (x << r) | (x >> (np.uint64(64) - r))
-
-    def _xxh64_long(k_u64, seed_u64):
-        h = seed_u64 + _P5 + np.uint64(8)
-        h = h ^ (_rotl(k_u64 * _P2, 31) * _P1)
-        h = _rotl(h, 27) * _P1 + _P4
-        h ^= h >> np.uint64(33)
-        h *= _P2
-        h ^= h >> np.uint64(29)
-        h *= _P3
-        h ^= h >> np.uint64(32)
-        return h
-
     @pandas_udf("array<bigint>")
     def _anchors(th: pd.Series) -> pd.Series:
-        n = len(th)
-        if n == 0:
-            return pd.Series([], dtype=object)
-        lens = np.fromiter((0 if x is None else len(x) for x in th),
-                           dtype=np.int64, count=n)
-        result: list = [[]] * n
-        nz = lens > 0
-        if not nz.any():
-            return pd.Series(result)
-        flat = np.concatenate(
-            [np.asarray(x, dtype=np.int64) for x in th if x is not None and len(x)]
-        )
+        nz, flat, starts = _flatten(th)
+        if flat is None:
+            return _scatter((), nz, [])
         N = len(flat)
-        nzlens = lens[nz]
-        starts = np.zeros(len(nzlens), dtype=np.int64)
-        np.cumsum(nzlens[:-1], out=starts[1:])
+        nzlens = np.diff(starts, append=N)
         # positional gram hashes: chained XXH64 over L consecutive
         # token hashes, one vector pass per chain step (doc tails
         # produce garbage values that the validity mask below discards)
-        with np.errstate(over="ignore"):
-            pad = np.concatenate(
-                [flat.astype(np.uint64), np.zeros(L - 1, dtype=np.uint64)])
-            h = np.full(N, 42, dtype=np.uint64)
-            for j in range(L):
-                h = _xxh64_long(pad[j:j + N], h)
-        g = h.astype(np.int64)
+        pad = np.concatenate([flat, np.zeros(L - 1, dtype=np.int64)]).view(np.uint64)
+        h = np.full(N, 42, dtype=np.uint64)
+        for j in range(L):
+            h = _xxh64_long(pad[j:j + N], h)
         # gram validity: token position p of doc d is a gram iff
-        # p <= len_d - L; invalid positions become +inf sentinels
+        # p < gc_d = len_d - L + 1; invalid positions become +inf sentinels
         pos = np.arange(N, dtype=np.int64) - np.repeat(starts, nzlens)
-        doc_len = np.repeat(nzlens, nzlens)
-        ga = np.where(pos <= doc_len - L, g, _MAX)
+        doc_gc = np.maximum(nzlens - L + 1, 0)
+        gc = np.repeat(doc_gc, nzlens)
+        ga = np.where(pos < gc, h.astype(np.int64), _MAX)
         # winnow minimum of each W consecutive gram positions
         wpad = np.concatenate([ga, np.full(W - 1, _MAX, dtype=np.int64)])
         m = ga
         for j in range(1, W):
             m = np.minimum(m, wpad[j:j + N])
-        # anchor positions: full windows, plus the pos-0 window of docs
-        # with 1..W-1 grams (it spans all their grams)
-        gc = np.maximum(doc_len - L + 1, 0)
-        sel = (pos <= gc - W) | ((gc > 0) & (gc < W) & (pos == 0))
+        # docs with 1..W-1 grams anchor once, on the min of all their
+        # grams — taken per doc: with W > L their pos-0 window above
+        # runs past the L-1 tail sentinels into the next doc's grams
+        short = (doc_gc > 0) & (doc_gc < W)
+        if short.any():
+            m[starts[short]] = np.minimum.reduceat(ga, starts)[short]
+        # anchor positions: full windows, plus the pos-0 window of short docs
+        sel = (pos <= gc - W) | (np.repeat(short, nzlens) & (pos == 0))
         ends = starts + nzlens
-        for j, i in enumerate(np.flatnonzero(nz)):
-            s, e = starts[j], ends[j]
-            picked = m[s:e][sel[s:e]]
-            if len(picked):
-                result[i] = np.unique(picked)
-        return pd.Series(result)
+        rows = [np.unique(m[s:e][sel[s:e]]) for s, e in zip(starts, ends)]
+        return _scatter(rows, nz, [])
 
     # same optimizer fence as minhash_band_bucket_udf (guide §4.4)
-    _anchors = _anchors.asNondeterministic()
-    _WINNOW_UDFS[key] = _anchors
-    return _anchors
+    return _anchors.asNondeterministic()
 
 
 def winnow_anchors(df: DataFrame, id_col: str = "doc_id",
@@ -652,8 +611,7 @@ def winnow_anchors(df: DataFrame, id_col: str = "doc_id",
     """
     if min_tokens < 2 or window < 1:
         raise ValueError("min_tokens must be >= 2 and window >= 1")
-    src = _spread(df, id_col, text_col)
-    return src.select(
+    return _texts(df, id_col, text_col).select(
         F.col(id_col),
         F.explode(
             winnow_anchor_udf(min_tokens, window)(token_hashes(F.col(text_col)))
@@ -675,14 +633,17 @@ def winnow_anchors_expr(df: DataFrame, id_col: str = "doc_id",
     ``xxhash64(t, lead(t,1), …, lead(t,L-1))``, winnow min = windowed
     ``min`` over the next ``window`` gram rows; all three window
     functions share one (id, pos) sort whose hash partition comes from
-    ``_spread``'s forced repartition.
+    the id repartition below — unconditional, unlike ``skew.spread``:
+    skipping it would make the window sort exchange the token-EXPLODED
+    rows, ~40× the text bytes.
     """
     if min_tokens < 2 or window < 1:
         raise ValueError("min_tokens must be >= 2 and window >= 1")
     from pyspark.sql import Window
 
     L, W = min_tokens, window
-    src = _spread(df, id_col, text_col, force=True)
+    src = _texts(df, id_col, text_col).repartition(
+        df.sparkSession.sparkContext.defaultParallelism, F.col(id_col))
     toks = src.select(
         F.col(id_col),
         F.posexplode(token_hashes(F.col(text_col))).alias("__pos", "__t"),
@@ -735,71 +696,41 @@ def substring_dup_pairs(df: DataFrame, id_col: str = "doc_id",
     """
     anch = winnow_anchors(df, id_col, text_col, min_tokens, window)
     return (
-        anch.groupBy("__anchor")
-        .agg(F.sort_array(F.collect_set(id_col)).alias("__ids"))
-        .filter(F.size("__ids") > 1)
-        .select(F.posexplode("__ids").alias("__i", "id_a"), F.col("__ids"))
-        .select(
-            "id_a",
-            F.explode(F.expr("slice(__ids, __i + 2, size(__ids))")).alias("id_b"),
-        )
-        .groupBy("id_a", "id_b")
+        _bucket_pairs(anch, ["__anchor"], F.collect_set(id_col))
+        .groupBy(F.col("__a").alias("id_a"), F.col("__b").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("n_shared_anchors"))
     )
 
 
 # -- SimHash ----------------------------------------------------------------
 
-_SIMHASH_UDF = None
-
-
-def _get_simhash_udf():
-    """Lazily build the simhash pandas UDF (needs an active session).
+@functools.lru_cache(maxsize=None)
+def _simhash_udf():
+    """The simhash pandas UDF (built lazily: needs an active session).
 
     Input is the array of 64-bit *token hashes* (computed JVM-side with
     xxhash64 — string work never crosses into Python). The UDF flattens
     the batch, unpacks hash bits to ±1, and segment-sums with
     `np.add.reduceat` — no per-row or per-token Python loop.
     """
-    global _SIMHASH_UDF
-    if _SIMHASH_UDF is not None:
-        return _SIMHASH_UDF
-
     @pandas_udf("long")
     def _simhash64(hashes: pd.Series) -> pd.Series:
-        import numpy as np
-
-        n = len(hashes)
-        out = np.zeros(n, dtype=np.int64)
-        if n == 0:
-            return pd.Series(out)
-        lens = np.fromiter(
-            (0 if x is None else len(x) for x in hashes), dtype=np.int64, count=n
-        )
-        nz = lens > 0
-        if not nz.any():
-            return pd.Series(out)
-        flat = np.concatenate(
-            [np.asarray(x, dtype=np.int64) for x in hashes if x is not None and len(x)]
-        )
-        # bit matrix (total_tokens × 64) of ±1 contributions
-        bits = np.unpackbits(
-            flat.astype(">i8").view(np.uint8).reshape(-1, 8), axis=1
-        ).astype(np.int32) * 2 - 1
-        offsets = np.zeros(int(nz.sum()), dtype=np.int64)
-        np.cumsum(lens[nz][:-1], out=offsets[1:])
-        acc = np.add.reduceat(bits, offsets, axis=0)
-        out[nz] = np.packbits(acc > 0, axis=1).copy().view(">i8").ravel()
+        nz, flat, starts = _flatten(hashes)
+        out = np.zeros(len(hashes), dtype=np.int64)
+        if flat is not None:
+            # bit matrix (total_tokens × 64) of ±1 contributions
+            bits = np.unpackbits(
+                flat.astype(">i8").view(np.uint8).reshape(-1, 8), axis=1
+            ).astype(np.int32) * 2 - 1
+            acc = np.add.reduceat(bits, starts, axis=0)
+            out[nz] = np.packbits(acc > 0, axis=1).copy().view(">i8").ravel()
         return pd.Series(out)
 
-    _SIMHASH_UDF = _simhash64
-    return _SIMHASH_UDF
+    return _simhash64
 
 
 def simhash(df: DataFrame, text_col: str = "text", out_col: str = "simhash") -> DataFrame:
-    words = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-    token_hashes = F.transform(words, lambda w: F.xxhash64(w))
-    return df.withColumn(out_col, _get_simhash_udf()(token_hashes))
+    return df.withColumn(out_col, _simhash_udf()(token_hashes(F.col(text_col))))
 
 
 def simhash_near_dups(df: DataFrame, id_col: str = "doc_id",
@@ -810,10 +741,8 @@ def simhash_near_dups(df: DataFrame, id_col: str = "doc_id",
     hamming ≤ 3 agrees on ≥1 chunk), join within blocks, verify with
     bit_count(xor) — all JVM-side after the signature.
     """
-    spread = df.select(id_col, text_col).repartition(
-        df.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
-    )
-    sh = simhash(spread, text_col).select(id_col, "simhash")
+    sh = simhash(spread(df.select(id_col, text_col), id_col),
+                 text_col).select(id_col, "simhash")
     chunks = sh.select(
         id_col, "simhash",
         F.posexplode(F.array(*[
@@ -821,17 +750,9 @@ def simhash_near_dups(df: DataFrame, id_col: str = "doc_id",
             for k in range(4)
         ])).alias("__chunk_idx", "__chunk"),
     )
-    # Group per block and emit ordered pairs from the member list: the
-    # signature UDF runs once (a self-join would evaluate it per side)
-    # and the only shuffle is the block-key exchange.
+    members = F.collect_list(F.struct(F.col(id_col).alias("id"), F.col("simhash")))
     return (
-        chunks.groupBy("__chunk_idx", "__chunk")
-        .agg(F.sort_array(F.collect_list(F.struct(
-            F.col(id_col).alias("id"), F.col("simhash")))).alias("__ms"))
-        .filter(F.size("__ms") > 1)
-        .select(F.posexplode("__ms").alias("__i", "__a"), F.col("__ms"))
-        .select("__a", F.explode(
-            F.expr("slice(__ms, __i + 2, size(__ms))")).alias("__b"))
+        _bucket_pairs(chunks, ["__chunk_idx", "__chunk"], members)
         .select(
             F.col("__a.id").alias("id_a"), F.col("__b.id").alias("id_b"),
             F.bit_count(F.col("__a.simhash").bitwiseXOR(F.col("__b.simhash"))).alias("hamming"),
@@ -857,6 +778,33 @@ def _tile_count(n_rows: int, target_tile_rows: int,
     # smallest B with B(B+1)/2 >= min_parallelism
     b_par = math.ceil((math.sqrt(8 * max(min_parallelism, 1) + 1) - 1) / 2)
     return max(min(max(b_mem, b_par), max(n_rows, 1)), 1)
+
+
+def _cosine_verify(cand: DataFrame, df: DataFrame, id_col: str,
+                   vec_col: str, min_cosine: float) -> DataFrame:
+    """(id_a, id_b, cosine) for the candidate pairs in ``cand`` whose
+    exact cosine (sequential JVM expression arithmetic) is ≥ min_cosine.
+    Row norms are computed once per ROW and carried into the pair
+    verify, so each pair costs one interpreted aggregate (the dot), not
+    three — float-identical to dot/(norm(a)·norm(b)) per pair."""
+    from logstash_integration_jdbc_spark.operators.similarity import (
+        dot_expr,
+        norm_expr,
+    )
+
+    vecs = df.select(F.col(id_col), F.col(vec_col)).withColumn(
+        "__n", norm_expr(F.col(vec_col))
+    )
+    return (
+        cand.join(vecs.withColumnsRenamed(
+            {id_col: "id_a", vec_col: "__va", "__n": "__na"}), "id_a")
+        .join(vecs.withColumnsRenamed(
+            {id_col: "id_b", vec_col: "__vb", "__n": "__nb"}), "id_b")
+        .withColumn("cosine",
+                    dot_expr(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb")))
+        .filter(F.col("cosine") >= min_cosine)
+        .select("id_a", "id_b", "cosine")
+    )
 
 
 def exact_cosine_pairs(df: DataFrame, id_col: str = "vec_id",
@@ -901,13 +849,6 @@ def exact_cosine_pairs(df: DataFrame, id_col: str = "vec_id",
     B only sizes tiles, so an estimate within ~2× is fine) or persist
     the input around the call.
     """
-    import numpy as np
-
-    from logstash_integration_jdbc_spark.operators.similarity import (
-        dot_expr,
-        norm_expr,
-    )
-
     if n_blocks is None:
         if n_rows is None:
             n_rows = df.select(id_col).count()
@@ -924,13 +865,9 @@ def exact_cosine_pairs(df: DataFrame, id_col: str = "vec_id",
     )
     # single-row-group inputs scan as one task; spread BEFORE the ×B
     # explode so the replication and shuffle write parallelize (and the
-    # exchange carries 1/B of the exploded bytes). No-op on
-    # well-partitioned inputs.
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if proj.rdd.getNumPartitions() < par:
-        proj = proj.repartition(par, F.col("__id"))
+    # exchange carries 1/B of the exploded bytes).
     tiles = (
-        proj
+        spread(proj, "__id")
         .withColumn("__j", F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1))))
         .withColumn("__lo", F.least("__b", "__j"))
         .withColumn("__hi", F.greatest("__b", "__j"))
@@ -987,19 +924,8 @@ def exact_cosine_pairs(df: DataFrame, id_col: str = "vec_id",
         tiles.groupBy("__lo", "__hi")
         .applyInPandas(kernel, schema="id_a bigint, id_b bigint")
     )
-    vecs = df.select(F.col(id_col), F.col(vec_col)).withColumn(
-        "__n", norm_expr(F.col(vec_col))
-    )
-    return (
-        cand.join(vecs.withColumnsRenamed(
-            {id_col: "id_a", vec_col: "__va", "__n": "__na"}), "id_a")
-        .join(vecs.withColumnsRenamed(
-            {id_col: "id_b", vec_col: "__vb", "__n": "__nb"}), "id_b")
-        .withColumn("cosine",
-                    dot_expr(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb")))
-        .filter(F.col("cosine") >= min_cosine)
-        .select("id_a", "id_b", "cosine")
-    )
+    return _cosine_verify(cand, df, id_col, vec_col, min_cosine)
+
 
 def embedding_near_dups(df: DataFrame, id_col: str = "vec_id",
                         vec_col: str = "embedding",
@@ -1034,17 +960,13 @@ def embedding_near_dups(df: DataFrame, id_col: str = "vec_id",
     sketch computed once); vectors re-join only for surviving candidates.
     """
     from logstash_integration_jdbc_spark.operators.similarity import (
-        dot_expr,
         hyperplane_sketch_udf,
-        norm_expr,
     )
 
     n_chunks = bits // chunk_bits
     mask = (1 << chunk_bits) - 1
-    spread = df.select(F.col(id_col), F.col(vec_col)).repartition(
-        df.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
-    )
-    base = spread.withColumn("__sk", hyperplane_sketch_udf(bits)(F.col(vec_col)))
+    base = spread(df.select(F.col(id_col), F.col(vec_col)), id_col).withColumn(
+        "__sk", hyperplane_sketch_udf(bits)(F.col(vec_col)))
 
     # entry array: per chunk, the exact value + its hamming-1 flips; the
     # full sketch rides along for the first-collision filter below
@@ -1072,34 +994,14 @@ def embedding_near_dups(df: DataFrame, id_col: str = "vec_id",
         f"bit_count(shiftrightunsigned(__a.sk ^ __b.sk, CAST(c * {chunk_bits} AS INT))"
         f" & {mask}) <= 1)"
     )
+    members = F.collect_list(F.struct(
+        F.col(id_col).alias("id"), F.col("exact"), F.col("__sk").alias("sk")))
     cand = (
-        exploded.groupBy("chunk", "val")
-        .agg(F.sort_array(F.collect_list(F.struct(
-            F.col(id_col).alias("id"), F.col("exact"),
-            F.col("__sk").alias("sk")))).alias("__ms"))
-        .filter(F.size("__ms") > 1)
-        .select("chunk", F.posexplode("__ms").alias("__i", "__a"), F.col("__ms"))
-        .select("chunk", "__a", F.explode(
-            F.expr("slice(__ms, __i + 2, size(__ms))")).alias("__b"))
+        _bucket_pairs(exploded, ["chunk", "val"], members)
         .filter(F.col("__a.exact") & F.expr(no_prior))
         .select(F.col("__a.id").alias("id_a"), F.col("__b.id").alias("id_b"))
     )
-    # Row norms are computed once per ROW and carried into the pair
-    # verify, so each pair costs one interpreted aggregate (the dot),
-    # not three — float-identical to dot/(norm(a)·norm(b)) per pair.
-    vecs = df.select(F.col(id_col), F.col(vec_col)).withColumn(
-        "__n", norm_expr(F.col(vec_col))
-    )
-    return (
-        cand.join(vecs.withColumnsRenamed(
-            {id_col: "id_a", vec_col: "__va", "__n": "__na"}), "id_a")
-        .join(vecs.withColumnsRenamed(
-            {id_col: "id_b", vec_col: "__vb", "__n": "__nb"}), "id_b")
-        .withColumn("cosine",
-                    dot_expr(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb")))
-        .filter(F.col("cosine") >= min_cosine)
-        .select("id_a", "id_b", "cosine")
-    )
+    return _cosine_verify(cand, df, id_col, vec_col, min_cosine)
 
 
 def dedup_components(pairs: DataFrame, id_a: str = "id_a",
@@ -1241,20 +1143,11 @@ def dedup_against_index(new_df: DataFrame, index: DataFrame,
             .localCheckpoint(eager=True))
     new_ids = cand.select(F.col("new_id").alias(id_col)).distinct()
     idx_ids = cand.select(F.col("index_id").alias(id_col)).distinct()
-    sh_new = _shingled(_spread(new_df.join(new_ids, id_col), id_col,
-                               text_col), id_col, text_col, n_shingle)
-    sh_idx = _shingled(_spread(index_texts.join(idx_ids, id_col), id_col,
-                               text_col), id_col, text_col, n_shingle)
-    return (cand
-            .join(sh_new.withColumnsRenamed(
-                {id_col: "new_id", "__sh": "__sh_n"}), "new_id")
-            .join(sh_idx.withColumnsRenamed(
-                {id_col: "index_id", "__sh": "__sh_i"}), "index_id")
-            .withColumn(
-                "jaccard",
-                F.size(F.array_intersect("__sh_n", "__sh_i"))
-                / F.size(F.array_union("__sh_n", "__sh_i")))
-            .select("new_id", "index_id", "jaccard"))
+    sh_new = _shingled(_texts(new_df.join(new_ids, id_col), id_col,
+                              text_col), id_col, text_col, n_shingle)
+    sh_idx = _shingled(_texts(index_texts.join(idx_ids, id_col), id_col,
+                              text_col), id_col, text_col, n_shingle)
+    return _jaccard_verify(cand, "new_id", "index_id", sh_new, sh_idx, id_col)
 
 
 def novel_in_batch(new_df: DataFrame, index: DataFrame,

@@ -87,9 +87,7 @@ class Router:
         n_salts: int = 8,
         fmt: str = "parquet",
         run_id: str | None = None,
-        already_persisted: bool = False,
         extra_observe: dict[str, Column] | None = None,
-        pre_partitioned: bool = False,
         catalog_table: str | None = None,
     ) -> dict[str, int]:
         """Write every sink, hour-partitioned and salt-spread; returns counts.
@@ -138,20 +136,12 @@ class Router:
                 exprs.append(col.alias(alias))
             routed = routed.observe(obs, *exprs)
             all_parts = ["sink"] + part_cols
-            if pre_partitioned:
-                # caller already exchanged on (sink, bucket, salt) — e.g.
-                # the pipeline shuffles the LIGHT projection (raw columns
-                # + routing key) and re-derives the enrich payload after
-                # the exchange, so derived arrays/tags never cross the
-                # wire. Deterministic re-derivation ⇒ identical rows.
-                out = routed
-            else:
-                # (sink, ts_hour[, run_id], salt) partitioning WITHOUT the
-                # raw key column: each reduce task holds a few whole
-                # partition-dir groups, so output files ≈ dirs × salts
-                # rather than tasks × dirs (see salted_repartition).
-                out = salted_repartition(routed, key=salt_col, n_salts=n_salts,
-                                         extra_cols=all_parts, with_key=False)
+            # (sink, ts_hour[, run_id], salt) partitioning WITHOUT the
+            # raw key column: each reduce task holds a few whole
+            # partition-dir groups, so output files ≈ dirs × salts
+            # rather than tasks × dirs (see salted_repartition).
+            out = salted_repartition(routed, key=salt_col, n_salts=n_salts,
+                                     extra_cols=all_parts, with_key=False)
             if catalog_table is not None:
                 spark = out.sparkSession
                 if not spark.catalog.tableExists(catalog_table):
@@ -229,8 +219,7 @@ class Router:
 
         # multicast (non-exclusive): per-sink writes are unavoidable —
         # an event may land in several sinks.
-        if not already_persisted:
-            df = df.persist()
+        df = df.persist()
         try:
             counts = {}
             for name, sink_df in self.split(df).items():
@@ -243,5 +232,4 @@ class Router:
                 counts[name] = n
             return counts
         finally:
-            if not already_persisted:
-                df.unpersist()
+            df.unpersist()

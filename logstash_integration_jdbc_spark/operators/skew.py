@@ -11,6 +11,9 @@ mitigations, used together:
   one hot key spreads over ``n_salts`` tasks. The salt derives from
   xxhash64 of the key plus a per-row component, deterministic and
   RNG-free.
+
+``spread`` handles the opposite skew — too FEW input partitions: a
+narrow scan is hash-spread across all cores before CPU-heavy map work.
 """
 
 from __future__ import annotations
@@ -35,18 +38,22 @@ def salted_repartition(
     num_partitions: int | None = None,
     with_key: bool = True,
 ) -> DataFrame:
-    """Repartition on (extra_cols, key, salt) — hot keys spread n_salts-wide.
+    """Repartition on (extra_cols, key, salt) — hot keys spread n_salts-wide
+    when the frame carries a per-row salt column (``turn_idx`` and/or
+    ``ts``); without one the salt is constant per key, so a hot key
+    still lands in one task.
 
     ``with_key=False`` drops the raw key COLUMN from the partitioning
-    expression (the salt still derives from it, so a hot key still
-    spreads n_salts-wide): partitioning degenerates to the
-    (extra_cols, salt) group key, so each reduce task holds only the few
-    groups that hash to it instead of a slice of EVERY group. For a
-    dynamic-partitioned write that is the difference between
-    O(groups) and O(tasks × groups) output files (guide §6 small-files;
-    measured 1572 → ~170 files and −45% write wall on the 1M-row
-    pipeline sink). Keep ``with_key=True`` when downstream needs rows of
-    one key clustered or a uniform row-level spread.
+    expression (the salt still derives from it, so with a per-row salt
+    column a hot key still spreads n_salts-wide): partitioning
+    degenerates to the (extra_cols, salt) group key, so each reduce
+    task holds only the few groups that hash to it instead of a slice
+    of EVERY group. For a dynamic-partitioned write that is the
+    difference between O(groups) and O(tasks × groups) output files
+    (guide §6 small-files; measured 1572 → ~170 files and −45% write
+    wall on the 1M-row pipeline sink). Keep ``with_key=True`` when
+    downstream needs rows of one key clustered or a uniform row-level
+    spread.
     """
     row_cols = [c for c in ("turn_idx", "ts") if c in df.columns]
     salt = salt_expr(key, n_salts, row_cols).alias("__salt")
@@ -74,3 +81,24 @@ def salted_repartition(
         # and per-task sort/flush overhead without adding parallelism.
         num_partitions = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(num_partitions, *cols)
+
+
+def spread(df: DataFrame, key: str) -> DataFrame:
+    """Hash-repartition ``df`` on ``key`` to ``defaultParallelism``
+    partitions — only when it has fewer partitions than that.
+
+    Single-file, single-row-group inputs scan as ONE task, and so does
+    every map stage fused with the scan (tokenize, shingle, signature
+    kernels, vector math) however many cores the session has (guide §2.5
+    "input skew": fix at the source or repartition right after the
+    read). Hashing a unique key is deterministic and skips the sort a
+    keyless round-robin repartition needs. On an input that already
+    scans with ≥ ``defaultParallelism`` partitions the repartition would
+    be a pure extra exchange (guide §2.4; measured ~0.45 s of the
+    1M-doc minhash wall), so it is skipped. Value-safe: the row set is
+    unchanged.
+    """
+    n = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < n:
+        return df.repartition(n, F.col(key))
+    return df

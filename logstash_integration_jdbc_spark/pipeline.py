@@ -89,15 +89,6 @@ class PipelineConfig:
     tracking_column: str = "ts"
     n_salts: int = 8
     max_dim_rows: int = 1_000_000
-    # Aggregate-input policy. True (default): read the just-written sinks
-    # back, pruned to 4 columns — measured fastest on local disk. False:
-    # derive the hourly counts from the routed frame directly (a second
-    # action recomputing the map-only parse/enrich over the pruned raw
-    # scan) — no sink read-back, the right choice when the sink sits on
-    # high-latency object storage where a re-read pays a full round trip.
-    # Both produce identical rows (deterministic routing). Measurements
-    # at sf0.1 recorded in BASELINE.md.
-    agg_from_sinks: bool = True
     # reference defaults: statement_retry_attempts 1, wait 0.5 s
     # (jdbc.rb mixin :111-114); retries re-run the whole sink write under
     # the same run_id (idempotent dynamic overwrite)
@@ -194,12 +185,6 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict[str, Any]:
     # (sink, ts_hour, run_id). No persist — the parse/enrich stages are
     # map-only and recomputing them for the (tiny-output) aggregate pass
     # is the 100 TB-correct tradeoff vs caching the whole batch.
-    # (A light-shuffle variant — exchange raw columns + routing key only,
-    # re-derive parse/enrich post-exchange — was measured ~15% SLOWER
-    # end-to-end here: the extra regex pass + broadcast probes cost more
-    # than the ~25% smaller exchange payload saves on one box. Router's
-    # pre_partitioned flag keeps that shape available for deployments
-    # where network shuffle dominates.)
     # ALL per-stage lineage counters ride the write action as ONE
     # CollectMetrics node. One node, not one per stage: each observe()
     # splits whole-stage codegen, and three of them measured +90% wall on
@@ -221,26 +206,15 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict[str, Any]:
     )
     observed = router.last_observed
 
-    # per-sink hourly aggregates — two sources, same rows (deterministic
-    # routing), selected by cfg.agg_from_sinks:
-    # - sinks read-back (default): columnar re-read pruned to 4 columns;
-    #   cheapest on local/low-latency storage, aggregates exactly what
-    #   was committed.
-    # - routed-frame recompute: second action over the pruned raw scan
-    #   (regex + broadcast probes re-run, no shuffle, no sink read) —
-    #   avoids the extra storage round trip on S3-like sinks.
+    # per-sink hourly aggregates over the sinks read back (columnar
+    # re-read pruned to 4 columns): aggregates exactly what was committed.
     agg_counts: dict[str, int] = {}
     if sum(sink_counts.values()) > 0:
         from pyspark.sql import Observation
 
-        if cfg.agg_from_sinks:
-            agg_src = spark.read.parquet(os.path.join(cfg.out_dir, "sinks")).filter(
-                F.col("run_id") == run_id
-            )
-        else:
-            agg_src = enriched.withColumn("sink", router.sink_expr()).select(
-                "sink", "role", "tool", "ts"
-            )
+        agg_src = spark.read.parquet(os.path.join(cfg.out_dir, "sinks")).filter(
+            F.col("run_id") == run_id
+        )
         agg = hourly_counts(agg_src, keys=("sink", "role", "tool")).withColumn(
             "run_id", F.lit(run_id)
         )

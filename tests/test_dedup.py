@@ -729,12 +729,12 @@ def test_band_bucket_is_numeric_hash_of_band_slice(docs, spark):
     of the same longs."""
     from logstash_integration_jdbc_spark.operators.dedup import (
         _shingled,
-        _spread,
+        _texts,
         minhash_band_buckets,
         minhash_signature_udf,
     )
 
-    sig = (_shingled(_spread(docs, "doc_id", "text"), "doc_id", "text", 3)
+    sig = (_shingled(_texts(docs, "doc_id", "text"), "doc_id", "text", 3)
            .withColumn("__sig", minhash_signature_udf(64)(F.col("__sh")))
            .select("doc_id", "__sig"))
     expected = sig.select(
@@ -749,18 +749,16 @@ def test_band_bucket_is_numeric_hash_of_band_slice(docs, spark):
 
 
 def test_spread_skips_repartition_when_already_parallel(spark):
-    from logstash_integration_jdbc_spark.operators.dedup import _spread
+    from logstash_integration_jdbc_spark.operators.skew import spread
 
     n = spark.sparkContext.defaultParallelism
     wide = spark.range(0, 10000, numPartitions=n).select(
         F.col("id").alias("doc_id"), F.lit("t").alias("text"))
     narrow = spark.range(0, 10000, numPartitions=1).select(
         F.col("id").alias("doc_id"), F.lit("t").alias("text"))
-    assert "Exchange" not in _spread(wide, "doc_id", "text")._jdf.queryExecution(
+    assert "Exchange" not in spread(wide, "doc_id")._jdf.queryExecution(
     ).executedPlan().toString()
-    assert _spread(narrow, "doc_id", "text").rdd.getNumPartitions() == n
-    assert "Exchange" in _spread(wide, "doc_id", "text", force=True)._jdf.queryExecution(
-    ).executedPlan().toString()
+    assert spread(narrow, "doc_id").rdd.getNumPartitions() == n
 
 
 def test_band_bucket_udf_evaluated_once(docs, spark):
@@ -793,7 +791,18 @@ def test_winnow_kernel_matches_window_reference(spark):
              (200005, None), (200006, "")]
     extra = spark.createDataFrame(texts, "doc_id long, text string")
     both = docs.select("doc_id", "text").unionByName(extra)
-    got = {(r["doc_id"], r["__anchor"]) for r in winnow_anchors(both).collect()}
-    want = {(r["doc_id"], r["__anchor"])
-            for r in winnow_anchors_expr(both).collect()}
-    assert got == want and len(got) > 0
+
+    def anchors(fn, df, **kw):
+        return {(r["doc_id"], r["__anchor"]) for r in fn(df, **kw).collect()}
+
+    got = anchors(winnow_anchors, both)
+    assert got == anchors(winnow_anchors_expr, both) and len(got) > 0
+    # window > min_tokens: adjacent docs with 1..window-1 grams share a
+    # kernel batch, and each one's single anchor must come from its own
+    # grams, never from the next doc's
+    short = spark.createDataFrame(
+        [(i, f"p{i} q{i}" if i % 3 else f"a{i} b{i} c{i}") for i in range(40)]
+        + [(40, None), (41, "")], "doc_id long, text string")
+    got = anchors(winnow_anchors, short, min_tokens=2, window=4)
+    assert got == anchors(winnow_anchors_expr, short, min_tokens=2, window=4)
+    assert len(got) == 40

@@ -254,26 +254,3 @@ class TestRetry:
         # watermark must NOT have advanced (at-least-once: rerun re-emits)
         t = ValueTracker(path=ckpt, tracking_type="timestamp")
         assert str(t.value) == str(ValueTracker(path=None, tracking_type="timestamp").value)
-
-
-class TestAggSourceFlag:
-    def test_recompute_agg_equals_sink_readback(self, spark, fixture_dir, tmp_path):
-        """agg_from_sinks=False (routed-frame recompute, no sink
-        read-back) must produce row-identical hourly aggregates."""
-        results = {}
-        for flag in (True, False):
-            out = str(tmp_path / f"out_{flag}")
-            cfg = PipelineConfig(
-                transcripts_path=f"{fixture_dir}/transcripts.parquet",
-                tool_dim_path=f"{fixture_dir}/tool_dim.parquet",
-                role_dim_path=f"{fixture_dir}/role_dim.parquet",
-                out_dir=out, checkpoint_path=str(tmp_path / f"ckpt_{flag}.json"),
-                clean_run=True, agg_from_sinks=flag)
-            m = run_pipeline(spark, cfg)
-            rows = sorted(
-                tuple(str(x) for x in r)
-                for r in spark.read.parquet(f"{out}/agg").drop("run_id").collect()
-            )
-            results[flag] = (m["agg_rows"], rows)
-        assert results[True] == results[False]
-        assert results[True][1], "aggregate must be non-empty"
