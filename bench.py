@@ -3,24 +3,14 @@
 Default mode (what the driver runs): executes the headline queries from
 ``__spark_entry__.queries()`` plus the end-to-end transcript pipeline at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line::
+``local[$SPARK_GRAFT_CPUS]`` (default all cores) and prints ONE JSON line::
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-Scaling modes (north_rule two-cluster-size criterion; all append results
-to BENCH_SCALING.md, method details + host controls documented there):
-
-- ``--scaling-cluster``: ONE Spark standalone cluster (pinned 1-core
-  2 GiB worker daemons); the identical job submitted with
-  spark.cores.max = N vs 4N executors. Highest fidelity (one driver,
-  executor JVMs, dynamic task scheduling).
-- ``--scaling-local``: identical pipeline at local[N] vs local[4N]
-  (the task's example form), fresh pinned JVM per run.
-- ``--scaling``: N vs 4N independent single-JVM executor processes over
-  statically sharded input (kept for per-worker rate decomposition).
-
-``--pipeline-only`` / ``--shard-worker`` / ``--cluster-app`` /
-``--local-app`` (internal): child processes for the scaling modes.
+Scaling mode ``--scaling-submit`` (north_rule two-cluster-size
+criterion): the identical pipeline job run via ``spark-submit --py-files``
+on a local Spark standalone cluster at N vs 4N 1-core executors; appends
+its result to BENCH_SCALING.md, where the method is documented.
 """
 
 from __future__ import annotations
@@ -51,8 +41,6 @@ BENCH_REPS = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
 # amortized-regime pipeline row count folded into the standard bench
 BENCH_8M_ROWS = int(os.environ.get("SPARK_GRAFT_BENCH_8M_ROWS", "8000000"))
 BENCH_8M_REPS = int(os.environ.get("SPARK_GRAFT_BENCH_8M_REPS", "2"))
-SCALING_ROWS = int(os.environ.get("SPARK_GRAFT_SCALING_ROWS", "8000000"))
-SCALING_EXEC_CORES = int(os.environ.get("SPARK_GRAFT_SCALING_EXEC_CORES", "1"))
 
 
 def _pipeline_input(spark, n_rows: int) -> str:
@@ -97,7 +85,7 @@ def run_pipeline_bench(spark, n_rows: int, warm: bool = True,
 
     if warm:
         # untimed JIT/codegen warm pass on a small slice — steady-state
-        # executors have hot code (same policy as the scaling workers);
+        # executors have hot code (same policy as the submitted app);
         # the first-ever run pays ~12 s of one-time JVM compilation that
         # a long-lived cluster amortizes to zero
         wdata = _pipeline_input(spark, 50_000)
@@ -114,121 +102,11 @@ def run_pipeline_bench(spark, n_rows: int, warm: bool = True,
         walls.append(time.time() - t0)
         rows = metrics["stages"].get("scan", {}).get("rows", n_rows)
         # drop this rep's sink output while still dirty so later reps
-        # don't fight its page-cache writeback (same hygiene as --scaling)
+        # don't fight its page-cache writeback
         _sh.rmtree(out, ignore_errors=True)
     wall = min(walls)
     return {"wall_sec": wall, "rows": rows, "turns_per_sec": rows / wall,
             "wall_sec_median": sorted(walls)[len(walls) // 2], "reps": len(walls)}
-
-
-MEDIA_ROWS = int(os.environ.get("SPARK_GRAFT_MEDIA_ROWS", "3000"))
-
-
-def _media_input(spark, fmt: str, n_rows: int) -> str:
-    """Materialize a media table once per (format, size): decode timing
-    must not include fixture generation (JPEG/PNG encode costs as much
-    as decode)."""
-    base = os.path.join(tempfile.gettempdir(), f"ljspark-media-{fmt}-{n_rows}")
-    marker = os.path.join(base, "_DONE")
-    if not os.path.exists(marker):
-        if fmt in ("jpeg_large", "jpeg_prog_large"):
-            # 64 256×256 JPEGs: the 16-64 px gen_media images measure
-            # per-image overhead; these reps measure the codec (baseline
-            # 4:2:0 vs the progressive successive-approximation ladder)
-            import pandas as pd
-
-            from logstash_integration_jdbc_spark.functions.jpeg import (
-                encode_jpeg,
-                encode_jpeg_progressive,
-            )
-            from logstash_integration_jdbc_spark.operators.multimodal import (
-                MEDIA_SCHEMA,
-                _pixel_bytes,
-            )
-
-            progressive = fmt == "jpeg_prog_large"
-
-            def gen(batches):
-                import numpy as np
-
-                for pdf in batches:
-                    rows = []
-                    for i in pdf["id"]:
-                        i = int(i)
-                        px = np.frombuffer(
-                            _pixel_bytes(i, 7, 256 * 256 * 3), dtype=np.uint8
-                        ).reshape(256, 256, 3)
-                        blob = (encode_jpeg_progressive(px, quality=90)
-                                if progressive
-                                else encode_jpeg(px, quality=90,
-                                                 subsample=True))
-                        rows.append({
-                            "media_id": i, "kind": "image",
-                            "payload": blob,
-                            "meta": {"width": 256, "height": 256,
-                                     "sample_rate": 0, "n_frames": 0,
-                                     "mime": "image/jpeg"},
-                        })
-                    yield pd.DataFrame(rows)
-
-            spark.range(64).repartition(32).mapInPandas(
-                gen, schema=MEDIA_SCHEMA
-            ).write.mode("overwrite").parquet(os.path.join(base, "media.parquet"))
-        else:
-            from logstash_integration_jdbc_spark.operators.multimodal import (
-                gen_media,
-            )
-
-            kw = ({"video_format": "mjpeg"} if fmt == "mjpeg"
-                  else {"image_format": fmt})
-            gen_media(spark, n_rows=n_rows, **kw).write.mode("overwrite").parquet(
-                os.path.join(base, "media.parquet"))
-        with open(marker, "w") as f:
-            f.write("ok")
-    return os.path.join(base, "media.parquet")
-
-
-def run_media_decode_bench(spark, n_rows: int = MEDIA_ROWS,
-                           reps: int = BENCH_REPS) -> dict:
-    """Decode throughput of the pure-stdlib media codecs through the
-    real mapInPandas kernels (VERDICT r3 ask: make the Pillow-swap gap
-    a number). Reports per-format wall, items/s, and payload MB/s —
-    min-of-k like every other bench entry."""
-    from pyspark.sql import functions as F
-
-    from logstash_integration_jdbc_spark.operators.multimodal import (
-        extract_image_features,
-        sample_frames,
-    )
-
-    out = {}
-    for fmt in ("ppm", "png", "gif", "jpeg", "jpeg_large",
-                "jpeg_prog_large", "mjpeg"):
-        path = _media_input(spark, fmt, n_rows)
-        df = spark.read.parquet(path)
-        kind = "video" if fmt == "mjpeg" else "image"
-        stats = df.filter(F.col("kind") == kind).agg(
-            F.count(F.lit(1)), F.sum(F.length("payload"))).first()
-        n_items, n_bytes = int(stats[0]), int(stats[1])
-        walls = []
-        for _ in range(max(reps, 1)):
-            t0 = time.time()
-            if fmt == "mjpeg":
-                # carve every frame from every container (the decode of
-                # each carved frame is the jpeg row's number)
-                sample_frames(df, every_n=1, max_frames=10**6).count()
-            else:
-                extract_image_features(df, dim=4).count()
-            walls.append(time.time() - t0)
-        wall = min(walls)
-        out[fmt] = {
-            "wall_sec": round(wall, 3),
-            "items": n_items,
-            "items_per_sec": round(n_items / wall, 1),
-            "payload_mb": round(n_bytes / 1e6, 2),
-            "mb_per_sec": round(n_bytes / 1e6 / wall, 2),
-        }
-    return out
 
 
 MINHASH_ROWS = int(os.environ.get("SPARK_GRAFT_MINHASH_ROWS", "1000000"))
@@ -411,10 +289,9 @@ def run_minhash_bench(spark, n_rows: int = MINHASH_ROWS,
 
 def main_bench() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     from logstash_integration_jdbc_spark.session import get_spark
 
-    spark = get_spark(app_name="bench", master=f"local[{cpus}]")
+    spark = get_spark(app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entrymod
@@ -451,8 +328,6 @@ def main_bench() -> None:
                                 reps=BENCH_8M_REPS)
     per_query["pipeline_e2e_8m"] = round(pipe8m["wall_sec"], 3)
 
-    media = run_media_decode_bench(spark)
-
     mh = run_minhash_bench(spark)
     per_query["dedup_minhash_1m"] = mh["wall_sec"]
     # amortized regime (JVM/Arrow workers hot from the 1M reps)
@@ -476,13 +351,12 @@ def main_bench() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     # r4 lesson: the driver's tail capture truncated the FRONT of one
     # long line and lost the machine-readable headline. Split output:
-    # a DETAIL line first (medians, media, minhash breakdowns — also
+    # a DETAIL line first (medians, minhash breakdowns — also
     # written to BENCH_DETAIL.json beside this script), then a COMPACT
     # headline JSON as the very LAST line so tail capture always parses.
     detail = {
         "detail": True,
         "queries_median": per_query_median,
-        "media_decode": media,
         "minhash_1m": mh,
         "minhash_8m": mh8m,
         "substring_1m": sub1m,
@@ -508,185 +382,8 @@ def main_bench() -> None:
         "pipeline_turns_per_sec": round(pipe["turns_per_sec"], 1),
         "pipeline_8m_rows": pipe8m["rows"],
         "pipeline_8m_turns_per_sec": round(pipe8m["turns_per_sec"], 1),
-        "cpus": int(cpus),
+        "cpus": spark.sparkContext.defaultParallelism,
     }))
-
-
-def main_pipeline_only(n_rows: int, master: str) -> None:
-    from logstash_integration_jdbc_spark.session import get_spark
-
-    spark = get_spark(app_name=f"bench-{master}", master=master)
-    spark.sparkContext.setLogLevel("ERROR")
-    # generate outside the timed section (shared deterministic input)
-    _pipeline_input(spark, n_rows)
-    res = run_pipeline_bench(spark, n_rows)
-    print(json.dumps(res))
-
-
-def main_shard_worker(files_json: str, cores: int, out_dir: str,
-                      go_file: str) -> None:
-    """One 'executor': full pipeline over its shard of the input files.
-
-    Startup (JVM, Spark session) happens before the READY signal and is
-    untimed — cluster executors are provisioned before a job is
-    submitted; the benchmark measures the job, not fleet boot.
-    """
-    files = json.loads(files_json)
-    from logstash_integration_jdbc_spark.pipeline import PipelineConfig, run_pipeline
-    from logstash_integration_jdbc_spark.session import get_spark
-
-    spark = get_spark(app_name="bench-shard", master=f"local[{cores}]",
-                      extra_conf={"spark.sql.shuffle.partitions": str(cores * 2)})
-    spark.sparkContext.setLogLevel("ERROR")
-    base = os.path.dirname(os.path.dirname(files[0]))
-    cfg = PipelineConfig(
-        transcripts_path=files,
-        tool_dim_path=f"{base}/tool_dim.parquet",
-        role_dim_path=f"{base}/role_dim.parquet",
-        out_dir=out_dir,
-        checkpoint_path=os.path.join(out_dir, "ckpt.json"),
-        clean_run=True,
-    )
-    # JIT/codegen warm-up: run the full pipeline once on one input file
-    # into a scratch dir. Untimed — steady-state executors have hot code.
-    warm_cfg = PipelineConfig(
-        transcripts_path=files[:1],
-        tool_dim_path=cfg.tool_dim_path, role_dim_path=cfg.role_dim_path,
-        out_dir=tempfile.mkdtemp(prefix="warm-"),
-        checkpoint_path=None, clean_run=True,
-    )
-    run_pipeline(spark, warm_cfg)
-    print("READY", flush=True)
-    while not os.path.exists(go_file):
-        time.sleep(0.05)
-    t0 = time.time()
-    m = run_pipeline(spark, cfg)
-    print(json.dumps({"wall_sec": time.time() - t0,
-                      "rows": m["stages"]["scan"]["rows"]}), flush=True)
-
-
-def main_scaling() -> None:
-    """North-rule evidence: the same job at N vs 4N *executor processes*.
-
-    A real cluster scales by adding executor JVMs, not threads inside
-    one JVM (single-JVM thread scaling is bounded by shared-heap GC and
-    memory-bandwidth contention — measured and documented in
-    BENCH_SCALING.md). Proxy: the identical deterministic input, sharded
-    by parquet file, processed end-to-end (parse→enrich→route→aggregate→
-    write→checkpoint) by 2 vs 8 concurrent executor processes at 4 cores
-    each. Throughput = total rows / wall-clock of the whole fleet.
-    """
-    import glob as _glob
-
-    n_rows = SCALING_ROWS
-    from logstash_integration_jdbc_spark.session import get_spark
-
-    spark = get_spark(app_name="bench-gen", master="local[32]")
-    spark.sparkContext.setLogLevel("ERROR")
-    data = _pipeline_input(spark, n_rows)
-    spark.stop()
-    files = sorted(_glob.glob(f"{data}/transcripts.parquet/part-*.parquet"))
-
-    here = os.path.dirname(os.path.abspath(__file__))
-
-    # balance shards by actual row count (parquet footer metadata), not
-    # file count — fleet wall-clock is the slowest worker
-    import pyarrow.parquet as pq
-
-    sizes = [(f, pq.ParquetFile(f).metadata.num_rows) for f in files]
-    sizes.sort(key=lambda x: -x[1])
-
-    def make_shards(n: int) -> list[list[str]]:
-        shards: list[list[str]] = [[] for _ in range(n)]
-        loads = [0] * n
-        for f, r in sizes:  # greedy longest-processing-time bin packing
-            i = loads.index(min(loads))
-            shards[i].append(f)
-            loads[i] += r
-        return shards
-
-    import shutil as _shutil
-
-    n_cpus = os.cpu_count() or 32
-    use_pin = _shutil.which("taskset") and os.environ.get("SPARK_GRAFT_SCALING_PIN", "1") == "1"
-
-    def run_fleet(n_exec: int) -> dict:
-        shards = make_shards(n_exec)
-        go_file = os.path.join(tempfile.mkdtemp(), "go")
-        procs = []
-        outs = []
-        # window size identical at N and 4N; 2 CPUs per 1-core executor
-        # (compute thread + JVM helpers) keeps the 4N fleet at 16 demanded
-        # vCPUs — inside this host's measured linear-scaling zone
-        cpus_per_worker = int(os.environ.get("SPARK_GRAFT_SCALING_CPUS_PER_WORKER",
-                                             str(max(n_cpus // 16, 1))))
-        for i, shard in enumerate(shards):
-            out = tempfile.mkdtemp(prefix=f"ljspark-scale-{n_exec}-{i}-")
-            outs.append(out)
-            cmd = [sys.executable, os.path.abspath(__file__), "--shard-worker",
-                   json.dumps(shard), str(SCALING_EXEC_CORES), out, go_file]
-            if use_pin:
-                # pin each executor JVM to its own CPU window: helper
-                # threads (GC/JIT) stay inside the executor's core budget
-                # and the JVM sizes its pools from the affinity mask —
-                # exactly how cgroup-limited cluster executors behave
-                lo = (i * cpus_per_worker) % n_cpus
-                cmd = ["taskset", "-c", f"{lo}-{lo + cpus_per_worker - 1}"] + cmd
-            procs.append(subprocess.Popen(
-                cmd, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
-                text=True, cwd=here, bufsize=1))
-        for p in procs:  # wait for all executors to finish provisioning
-            while p.stdout.readline().strip() != "READY":
-                pass
-        # flush pending writeback from any previous rep BEFORE timing:
-        # ~16 GB of a prior fleet's sink output sitting dirty in the page
-        # cache turns the next fleet's run into a writeback fight
-        # (measured: the 4N fleet ran 3x slower after the N fleet than
-        # standalone). Deleting each rep's outputs below + sync here keeps
-        # every rep on equal, quiescent-disk footing.
-        os.sync()
-        t0 = time.time()
-        with open(go_file, "w") as f:
-            f.write("go")
-        rows = 0
-        for p in procs:
-            stdout, _ = p.communicate()
-            if p.returncode != 0:
-                raise RuntimeError(f"shard worker failed rc={p.returncode}")
-            line = [ln for ln in stdout.strip().splitlines() if ln.startswith("{")][-1]
-            rows += json.loads(line)["rows"]
-        wall = time.time() - t0
-        # unlink this rep's outputs while still (mostly) dirty — the pages
-        # are discarded instead of written back under the next rep
-        for o in outs:
-            _shutil.rmtree(o, ignore_errors=True)
-        return {"wall_sec": wall, "rows": rows, "turns_per_sec": rows / wall}
-
-    # best-of-k per config: the sandbox host shows double-digit steal%
-    # spikes (documented in BENCH_SCALING.md); the best run is the least
-    # noise-contaminated estimate of the engine's own scaling.
-    reps = int(os.environ.get("SPARK_GRAFT_SCALING_REPS", "2"))
-    results = {}
-    for n_exec in (2, 8):
-        runs = [run_fleet(n_exec) for _ in range(reps)]
-        results[n_exec] = max(runs, key=lambda r: r["turns_per_sec"])
-    t_n, t_4n = results[2]["turns_per_sec"], results[8]["turns_per_sec"]
-    eff = (t_4n / t_n) / 4.0
-    report = {
-        "rows": n_rows,
-        "executors_n": 2, "executors_4n": 8, "cores_per_executor": SCALING_EXEC_CORES,
-        "turns_per_sec_n": round(t_n, 1),
-        "turns_per_sec_4n": round(t_4n, 1),
-        "wall_sec_n": round(results[2]["wall_sec"], 2),
-        "wall_sec_4n": round(results[8]["wall_sec"], 2),
-        "scaling_efficiency": round(eff, 3),
-    }
-    print(json.dumps(report))
-    with open(os.path.join(here, "BENCH_SCALING.md"), "a") as f:
-        f.write(
-            f"\n| {n_rows} | 2×{SCALING_EXEC_CORES} cores | 8×{SCALING_EXEC_CORES} cores | {report['turns_per_sec_n']} | "
-            f"{report['turns_per_sec_4n']} | {report['scaling_efficiency']} |"
-        )
 
 
 def _spark_cluster(n_workers: int, cores: int = 1, mem: str = "2g"):
@@ -695,9 +392,8 @@ def _spark_cluster(n_workers: int, cores: int = 1, mem: str = "2g"):
 
     This is the highest-fidelity in-sandbox proxy for the north rule's
     multi-executor criterion: ONE driver, N executor JVMs, dynamic task
-    scheduling (a slow vCPU gets fewer tasks — unlike static
-    shard-per-process fleets, where the slowest pinned worker sets the
-    fleet wall; measured per-vCPU speed varies ±25% on this host).
+    scheduling (a slow vCPU gets fewer tasks; measured per-vCPU speed
+    varies ±25% on this host).
     Returns (master_url, [procs]) — caller terminates procs.
     """
     import shutil as _sh
@@ -749,207 +445,6 @@ def _spark_cluster(n_workers: int, cores: int = 1, mem: str = "2g"):
     return url, procs
 
 
-def main_cluster_app(n_exec: int, n_rows: int) -> None:
-    """Driver app: the full pipeline on the standalone cluster with
-    exactly n_exec 1-core executors (spark.cores.max). Prints one JSON
-    line with warm + timed walls."""
-    from logstash_integration_jdbc_spark.pipeline import PipelineConfig, run_pipeline
-    from logstash_integration_jdbc_spark.session import get_spark
-
-    spark = get_spark(
-        app_name=f"scale-{n_exec}x", master="spark://127.0.0.1:7077",
-        extra_conf={
-            "spark.cores.max": str(n_exec),
-            "spark.executor.cores": "1",
-            "spark.executor.memory": "2g",
-            "spark.sql.shuffle.partitions": str(max(n_exec * 2, 8)),
-            # all data is node-local; never stall a task on locality
-            "spark.locality.wait": "0s",
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    data = _pipeline_input(spark, n_rows)
-
-    def one(path, out):
-        cfg = PipelineConfig(
-            transcripts_path=path,
-            tool_dim_path=f"{data}/tool_dim.parquet",
-            role_dim_path=f"{data}/role_dim.parquet",
-            out_dir=out, checkpoint_path=os.path.join(out, "ckpt.json"),
-            clean_run=True)
-        t0 = time.time()
-        m = run_pipeline(spark, cfg)
-        return time.time() - t0, m["stages"]["scan"]["rows"]
-
-    # JIT warm (executors live for the app; steady-state code is hot)
-    wdata = _pipeline_input(spark, 50_000)
-    one(f"{wdata}/transcripts.parquet", tempfile.mkdtemp(prefix="warm-"))
-    out = tempfile.mkdtemp(prefix=f"cluster-{n_exec}-")
-    wall, rows = one(f"{data}/transcripts.parquet", out)
-    import shutil as _sh
-    _sh.rmtree(out, ignore_errors=True)
-    print(json.dumps({"n_exec": n_exec, "wall_sec": round(wall, 2), "rows": rows,
-                      "turns_per_sec": round(rows / wall, 1)}), flush=True)
-
-
-def main_local_app(cores: int, n_rows: int, mem: str) -> None:
-    """Child for --scaling-local: warm + timed pipeline at local[cores]."""
-    from logstash_integration_jdbc_spark.pipeline import PipelineConfig, run_pipeline
-    from logstash_integration_jdbc_spark.session import get_spark
-
-    spark = get_spark(app_name=f"scale-local-{cores}", master=f"local[{cores}]",
-                      extra_conf={"spark.sql.shuffle.partitions": str(cores * 2),
-                                  "spark.driver.memory": mem})
-    spark.sparkContext.setLogLevel("ERROR")
-    data = _pipeline_input(spark, n_rows)
-    wdata = _pipeline_input(spark, 50_000)
-
-    def one(path):
-        out = tempfile.mkdtemp(prefix="sl-")
-        cfg = PipelineConfig(
-            transcripts_path=path,
-            tool_dim_path=f"{data}/tool_dim.parquet",
-            role_dim_path=f"{data}/role_dim.parquet",
-            out_dir=out, checkpoint_path=os.path.join(out, "ckpt.json"),
-            clean_run=True)
-        t0 = time.time()
-        run_pipeline(spark, cfg)
-        return time.time() - t0, out
-
-    one(f"{wdata}/transcripts.parquet")
-    wall, out = one(f"{data}/transcripts.parquet")
-    import shutil as _sh
-    _sh.rmtree(out, ignore_errors=True)
-    print(json.dumps({"cores": cores, "wall_sec": round(wall, 2),
-                      "turns_per_sec": round(n_rows / wall, 1)}), flush=True)
-
-
-def main_scaling_local() -> None:
-    """North-rule evidence, N-vs-4N-cores form (the task's own example:
-    'local[8] and local[32], or N and 4N cores'): the identical pipeline
-    at local[N] vs local[4N] on the identical input, fresh pinned JVM per
-    run, warm pass untimed. Default N=1 (4 demanded vCPUs at 4N incl.
-    2-vCPU windows per core — inside this host's measured linear zone)."""
-    n_rows = SCALING_ROWS
-    from logstash_integration_jdbc_spark.session import get_spark
-
-    gen = get_spark(app_name="bench-gen", master="local[32]")
-    gen.sparkContext.setLogLevel("ERROR")
-    _pipeline_input(gen, n_rows)
-    _pipeline_input(gen, 50_000)
-    gen.stop()
-
-    import shutil as _sh
-
-    n_lo = int(os.environ.get("SPARK_GRAFT_SCALING_CORES_N", "1"))
-    n_hi = n_lo * 4
-    here = os.path.dirname(os.path.abspath(__file__))
-    reps = int(os.environ.get("SPARK_GRAFT_SCALING_REPS", "2"))
-    use_pin = _sh.which("taskset")
-
-    n_cpus = os.cpu_count() or 32
-
-    def run_one(cores: int, mem: str) -> dict:
-        best = None
-        for rep in range(reps):
-            os.sync()
-            cmd = [sys.executable, os.path.abspath(__file__),
-                   "--local-app", str(cores), str(n_rows), mem]
-            if use_pin:
-                # rotate the pinned window per rep: per-vCPU speed varies
-                # ±25% on this host, and a fixed window makes every rep
-                # captive to the same (possibly slow) vCPUs — the cluster
-                # mode is robust to this via dynamic task scheduling
-                # across worker windows; here best-of-k over rotated
-                # windows plays the same role
-                width = 2 * cores
-                lo = (rep * width) % max(n_cpus - width + 1, 1)
-                cmd = ["taskset", "-c", f"{lo}-{lo + width - 1}"] + cmd
-            out = subprocess.run(cmd, capture_output=True, text=True,
-                                 cwd=here, timeout=3600)
-            line = [ln for ln in out.stdout.strip().splitlines()
-                    if ln.startswith("{")][-1]
-            r = json.loads(line)
-            if best is None or r["turns_per_sec"] > best["turns_per_sec"]:
-                best = r
-        return best
-
-    r_n = run_one(n_lo, f"{max(2 * n_lo, 2)}g")
-    r_4n = run_one(n_hi, f"{max(2 * n_hi, 2)}g")
-    eff = (r_4n["turns_per_sec"] / r_n["turns_per_sec"]) / 4.0
-    report = {
-        "mode": "local-cores", "rows": n_rows,
-        "cores_n": n_lo, "cores_4n": n_hi,
-        "turns_per_sec_n": r_n["turns_per_sec"],
-        "turns_per_sec_4n": r_4n["turns_per_sec"],
-        "wall_sec_n": r_n["wall_sec"], "wall_sec_4n": r_4n["wall_sec"],
-        "scaling_efficiency": round(eff, 3),
-    }
-    print(json.dumps(report))
-    with open(os.path.join(here, "BENCH_SCALING.md"), "a") as f:
-        f.write(
-            f"\n| {n_rows} | local[{n_lo}] | local[{n_hi}] | {r_n['turns_per_sec']} | {r_4n['turns_per_sec']} | {report['scaling_efficiency']} |"
-        )
-
-
-def main_scaling_cluster() -> None:
-    """North-rule evidence, cluster form: ONE Spark standalone cluster
-    (8 pinned 1-core 2 GB workers), the identical job submitted with
-    spark.cores.max = N=2 vs 4N=8. Dynamic task scheduling balances work
-    across executors exactly as on a real cluster."""
-    n_rows = SCALING_ROWS
-    from logstash_integration_jdbc_spark.session import get_spark
-
-    gen = get_spark(app_name="bench-gen", master="local[32]")
-    gen.sparkContext.setLogLevel("ERROR")
-    _pipeline_input(gen, n_rows)
-    _pipeline_input(gen, 50_000)
-    gen.stop()
-
-    # N vs 4N executor counts: default 1 vs 4 — the host's raw-CPU control
-    # is linear only to ~8-16 demanded vCPUs (BENCH_SCALING.md), and a
-    # 4-executor fleet (8 demanded vCPUs incl. 2-vCPU pinned windows)
-    # measures the engine rather than host memory-bandwidth saturation.
-    n_lo = int(os.environ.get("SPARK_GRAFT_SCALING_EXECS_N", "1"))
-    n_hi = n_lo * 4
-    url, procs = _spark_cluster(max(n_hi, 4))
-    here = os.path.dirname(os.path.abspath(__file__))
-    reps = int(os.environ.get("SPARK_GRAFT_SCALING_REPS", "2"))
-    try:
-        results = {}
-        for n_exec in (n_lo, n_hi):
-            best = None
-            for _ in range(reps):
-                os.sync()
-                out = subprocess.run(
-                    [sys.executable, os.path.abspath(__file__),
-                     "--cluster-app", str(n_exec), str(n_rows)],
-                    capture_output=True, text=True, cwd=here, timeout=3600)
-                line = [ln for ln in out.stdout.strip().splitlines()
-                        if ln.startswith("{")][-1]
-                r = json.loads(line)
-                if best is None or r["turns_per_sec"] > best["turns_per_sec"]:
-                    best = r
-            results[n_exec] = best
-    finally:
-        for p in procs:
-            p.terminate()
-    t_n, t_4n = results[n_lo]["turns_per_sec"], results[n_hi]["turns_per_sec"]
-    eff = (t_4n / t_n) / 4.0
-    report = {
-        "mode": "standalone-cluster", "rows": n_rows,
-        "executors_n": n_lo, "executors_4n": n_hi, "cores_per_executor": 1,
-        "turns_per_sec_n": t_n, "turns_per_sec_4n": t_4n,
-        "wall_sec_n": results[n_lo]["wall_sec"], "wall_sec_4n": results[n_hi]["wall_sec"],
-        "scaling_efficiency": round(eff, 3),
-    }
-    print(json.dumps(report))
-    with open(os.path.join(here, "BENCH_SCALING.md"), "a") as f:
-        f.write(
-            f"\n| {n_rows} | cluster {n_lo}×1c | cluster {n_hi}×1c | {t_n} | {t_4n} | {report['scaling_efficiency']} |"
-        )
-
-
 def build_pyfiles_zip() -> str:
     """Zip the package for spark-submit --py-files (dist/
     ljspark_pyfiles.zip): package sources only, deterministic order."""
@@ -992,7 +487,7 @@ def main_scaling_submit() -> None:
     # identical pre-generated bytes for every rep and both exec counts
     from logstash_integration_jdbc_spark.session import get_spark
 
-    gen = get_spark(app_name="submit-gen", master="local[32]")
+    gen = get_spark(app_name="submit-gen")
     gen.sparkContext.setLogLevel("ERROR")
     data = _pipeline_input(gen, n_rows)
     warm = _pipeline_input(gen, 50_000)
@@ -1042,21 +537,7 @@ def main_scaling_submit() -> None:
 
 
 if __name__ == "__main__":
-    if len(sys.argv) > 1 and sys.argv[1] == "--scaling":
-        main_scaling()
-    elif len(sys.argv) > 1 and sys.argv[1] == "--scaling-submit":
+    if len(sys.argv) > 1 and sys.argv[1] == "--scaling-submit":
         main_scaling_submit()
-    elif len(sys.argv) > 1 and sys.argv[1] == "--scaling-cluster":
-        main_scaling_cluster()
-    elif len(sys.argv) > 1 and sys.argv[1] == "--cluster-app":
-        main_cluster_app(int(sys.argv[2]), int(sys.argv[3]))
-    elif len(sys.argv) > 1 and sys.argv[1] == "--scaling-local":
-        main_scaling_local()
-    elif len(sys.argv) > 1 and sys.argv[1] == "--local-app":
-        main_local_app(int(sys.argv[2]), int(sys.argv[3]), sys.argv[4])
-    elif len(sys.argv) > 1 and sys.argv[1] == "--pipeline-only":
-        main_pipeline_only(int(sys.argv[2]), sys.argv[3])
-    elif len(sys.argv) > 1 and sys.argv[1] == "--shard-worker":
-        main_shard_worker(sys.argv[2], int(sys.argv[3]), sys.argv[4], sys.argv[5])
     else:
         main_bench()

@@ -10,8 +10,7 @@ runs, per-scan table redefinition) — with 1 (grayscale), 3 (YCbCr /
 Adobe RGB), or 4 (CMYK / YCCK via the APP14 Adobe transform)
 components and sampling factors 1 or 2, i.e. the shapes real-world
 JPEGs use. Arithmetic coding and lossless/hierarchical raise
-``NotImplementedError`` naming Pillow, matching the multimodal
-kernels' contract.
+``NotImplementedError`` naming Pillow.
 
 The encoder exists so tests can build REAL JPEG bytes without any
 library: 4:4:4 baseline with the JPEG Annex K example quantization and
@@ -19,10 +18,9 @@ huffman tables (public spec constants). It is not tuned for size or
 speed — the decoder is the product; the encoder is the fixture factory.
 
 All heavy loops are per-8×8-block numpy; entropy decoding is a Python
-bit-reader (inherently sequential). A production deployment swaps
-Pillow/libjpeg-turbo into the same mapInPandas contract for throughput;
-this codec makes the *semantics* real and testable in a
-stdlib-only container.
+bit-reader (inherently sequential). Pillow/libjpeg-turbo is the
+throughput choice; this codec makes the *semantics* real and testable
+without either.
 """
 
 from __future__ import annotations

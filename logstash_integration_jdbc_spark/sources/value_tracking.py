@@ -21,9 +21,10 @@ Deviations from the reference (documented, deliberate):
   scans, SURVEY.md §7.3a);
 - extended with per-partition cursors ``{bucket: {max_ts, conv_id,
   turn_idx}}`` so a 1000-executor run can resume per partition
-  (north_star requirement); the scalar watermark is their min — resuming
-  from it is always safe (at-least-once), the per-partition cursors allow
-  exact dedup on replay.
+  (north_star requirement); the scalar watermark is their max, and the
+  next run scans only rows with ``tracking_column`` strictly above it. A
+  late row whose value is at or below the committed max is therefore
+  not rescanned.
 
 File writes are atomic (temp file + ``os.replace``) so a crash mid-write
 never corrupts the checkpoint.

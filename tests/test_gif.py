@@ -73,18 +73,6 @@ def test_gif_rejects_garbage():
         parse_gif(full[:30] + b"\x00\x3b")
 
 
-def test_gif_spec_fixture_roundtrip():
-    from logstash_integration_jdbc_spark.operators.multimodal import (
-        build_palette_pixels,
-    )
-
-    for mid in (0, 3, 11):
-        pal, idx = build_palette_pixels(mid, 42, 12, 9)
-        blob = encode_gif(idx, pal, interlace=bool(mid % 2))
-        w, h, got = parse_gif(blob)
-        assert (w, h) == (12, 9) and np.array_equal(got, pal[idx])
-
-
 def test_animated_gif_split_and_decode():
     from logstash_integration_jdbc_spark.functions.gif import (
         encode_gif_animation,
@@ -128,20 +116,6 @@ def test_split_gif_frames_compositing_boundary():
     k = t.find(b"\x2C", 14)
     with pytest.raises(NotImplementedError, match="compositing"):
         split_gif_frames(bytes(t[:k]) + gce + bytes(t[k:]))
-
-
-def test_sample_frames_animated_gif(spark):
-    from logstash_integration_jdbc_spark.operators.multimodal import (
-        gen_media,
-        sample_frames,
-    )
-
-    media = gen_media(spark, n_rows=40, video_format="gif")
-    out = sample_frames(media, every_n=2, max_frames=3).collect()
-    assert out, "expected sampled GIF frames"
-    for r in out[:5]:
-        w, h, px = parse_gif(bytes(r.frame_bytes))
-        assert w > 0 and h > 0 and px.shape == (h, w, 3)
 
 
 # ---------------------------------------------------------------------------
@@ -287,35 +261,6 @@ def test_gif_frames_as_standalone_fast_path_unchanged():
     frames = [np.full((4, 4), i % 4, np.uint8) for i in range(3)]
     blob = encode_gif_animation(frames, PAL4)
     assert gif_frames_as_standalone(blob) == split_gif_frames(blob)
-
-
-def test_sample_frames_composited_gif(spark):
-    from logstash_integration_jdbc_spark.functions.gif import (
-        composite_gif_frames,
-        encode_gif_animation,
-    )
-    from logstash_integration_jdbc_spark.operators.multimodal import (
-        sample_frames,
-    )
-
-    base = np.full((6, 6), 1, np.uint8)
-    blob = encode_gif_animation(
-        [base,
-         {"idx": np.full((2, 2), 2, np.uint8), "left": 2, "top": 2,
-          "disposal": 3},
-         {"idx": np.full((3, 3), 3, np.uint8), "left": 3, "top": 0,
-          "transparent_index": 0}],
-        PAL4)
-    df = spark.createDataFrame(
-        [(1, "video", bytearray(blob), {"n_frames": "3"})],
-        "media_id bigint, kind string, payload binary, meta map<string,string>")
-    rows = sample_frames(df, every_n=1, max_frames=10).collect()
-    assert [r.frame_idx for r in rows] == [0, 1, 2]
-    comp = composite_gif_frames(blob)
-    for r, (w, h, rgb) in zip(rows, comp):
-        fw, fh, px = parse_gif(bytes(r.frame_bytes))
-        assert (fw, fh) == (w, h)
-        assert np.array_equal(px, rgb)
 
 
 def test_median_cut_exact_when_under_256():

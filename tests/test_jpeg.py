@@ -181,50 +181,6 @@ def test_not_a_jpeg_rejected():
         parse_jpeg(b"\x89PNG\r\n\x1a\n")
 
 
-def test_spark_jpeg_features_and_resize(spark):
-    """Real JPEG bytes through the mapInPandas kernels end-to-end."""
-    from logstash_integration_jdbc_spark.functions.jpeg import parse_jpeg as _pj
-    from logstash_integration_jdbc_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        extract_image_features,
-        parse_png,
-        resize_images,
-    )
-
-    rng = np.random.RandomState(5)
-    pxs = {i: np.clip(rng.randint(0, 64, size=(16 + i, 12 + i, 3))
-                      + np.mgrid[0 : 16 + i, 0 : 12 + i][0][:, :, None] * 8,
-                      0, 255).astype(np.uint8)
-           for i in range(3)}
-    rows = [
-        {"media_id": i, "kind": "image",
-         "payload": bytearray(encode_jpeg(pxs[i], quality=95)),
-         "meta": {"width": 12 + i, "height": 16 + i, "sample_rate": 0,
-                  "n_frames": 0, "mime": "image/jpeg"}}
-        for i in range(3)
-    ]
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-    feats = {r.media_id: r for r in extract_image_features(df, dim=8).collect()}
-    for i, px in pxs.items():
-        # expected features come from the DECODED pixels (JPEG is lossy)
-        decoded = _pj(bytes(encode_jpeg(px, quality=95)))[2]
-        flat = decoded.reshape(-1).astype(np.float64)
-        want = [float(b.mean() / 255.0) for b in np.array_split(flat, 8)]
-        got = feats[i]
-        assert (got.width, got.height) == (px.shape[1], px.shape[0])
-        assert np.allclose(got.features, want, atol=1e-6)
-
-    resized = {r.media_id: r for r in resize_images(df, 6, 9).collect()}
-    for i, px in pxs.items():
-        w, h, got = parse_png(bytes(resized[i].payload))  # JPEG in → PNG out
-        assert (w, h) == (6, 9)
-        decoded = _pj(bytes(encode_jpeg(px, quality=95)))[2]
-        rs = (np.arange(9, dtype=np.int64) * decoded.shape[0]) // 9
-        cs = (np.arange(6, dtype=np.int64) * decoded.shape[1]) // 6
-        assert np.array_equal(got, decoded[rs][:, cs])
-
-
 def test_420_subsampled_roundtrip():
     """4:2:0 (the dominant real-world layout) exercises multi-block MCUs
     and the decoder's chroma upsampling path."""

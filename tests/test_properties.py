@@ -135,27 +135,6 @@ def test_exact_dedup_invariants(spark, texts):
     assert sorted(r.doc_id for r in kept) == sorted(first_idx.values())
 
 
-@given(
-    w=st.integers(min_value=1, max_value=24),
-    h=st.integers(min_value=1, max_value=24),
-    seed=st.integers(min_value=0, max_value=2**31 - 1),
-)
-@settings(max_examples=40, deadline=None)
-def test_png_roundtrip_property(w, h, seed):
-    """encode_png → parse_png is the identity on any RGB array."""
-    import numpy as np
-
-    from logstash_integration_jdbc_spark.operators.multimodal import (
-        encode_png,
-        parse_png,
-    )
-
-    px = np.random.RandomState(seed).randint(0, 256, size=(h, w, 3), dtype=np.uint8)
-    got_w, got_h, got = parse_png(encode_png(px))
-    assert (got_w, got_h) == (w, h)
-    assert np.array_equal(got, px)
-
-
 # -- BPE: the incremental trainer ≡ a brute re-count-per-round trainer
 #    and encode is lossless (token concat reproduces the words) -------------
 
