@@ -15,11 +15,13 @@ Routing modes:
 - ``exclusive=False``: an event lands in every matching sink — multiple
   independent `if` blocks.
 
-Scale note: each sink write re-reads the enriched frame's lineage unless
-it is cached/persisted once; ``Router.write_all`` persists the enriched
-frame, fans out filters (cheap, codegen'd), and writes each partition-
-pruned sink. One shuffle per sink (the salted repartition) — unavoidable
-if sinks need bounded file counts; skew is neutralized by the salt.
+Scale note: exclusive routing writes every sink in one pass — one salted
+exchange keyed on (sink, ts_hour[, run_id], salt), whose reducer count
+AQE sizes to the batch, then one dynamic-partition write; the per-sink
+counts ride that write as observed metrics. Each partition dir gets at
+most ``n_salts`` files, and a hot key spreads over its salts. Multicast
+routing persists the frame, then counts and writes each sink through its
+own salted exchange.
 """
 
 from __future__ import annotations

@@ -9,11 +9,17 @@ with defaults/tags → tag-routed fan-out) with Spark-native physics:
 - parse: grok-compiled ``regexp_extract`` — whole-stage codegen, zero
   Python (north_star "no per-row Python");
 - enrich: broadcast hash joins with jdbc_static semantics (J2/J4/R1-R3)
-  against max_rows-guarded dimensions (S9);
-- route: tag/predicate fan-out to hour-partitioned, salt-spread sinks (R4);
-- aggregate: per-sink (role, tool, hour) counts — map-side partial agg;
-- checkpoint: scalar max-ts watermark + per-partition cursors written
-  atomically ONLY after all sinks committed (at-least-once, S3).
+  against max_rows-guarded dimensions (S9); each lookup's dimension side
+  is compiled once per dimension load and reused every batch;
+- route: tag/predicate fan-out to hour-partitioned, salt-spread sinks
+  (R4) through one exchange whose reducer count AQE sizes to the batch;
+- aggregate: per-sink (role, tool, hour) counts — map-side partial agg —
+  over a read-back of only this run's sink partitions, with a known
+  schema, so a run's cost does not grow with the committed history;
+- checkpoint: scalar max-ts watermark + per-partition cursors, taken from
+  the same read-back and written atomically ONLY after all sinks and the
+  aggregate committed (at-least-once, S3). An empty batch writes no sink
+  or aggregate data and leaves the checkpoint's values as they were.
 
 Every stage carries an ``observe`` metric — per-stage row counts with no
 extra actions (LineageCollector).
@@ -29,6 +35,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from logstash_integration_jdbc_spark.functions.parse import parse_tool_calls
 from logstash_integration_jdbc_spark.operators.aggregate import hourly_counts
@@ -114,12 +121,23 @@ def _dim(spark: SparkSession, name: str, path: str, max_rows: int) -> DimensionL
     return _DIM_CACHE[key]
 
 
+# The processor built over the loaders' current DataFrames, per (session,
+# dimension paths): its lookups compile their dimension side once and
+# reuse it every batch; a refresh() hands out a new DataFrame, which
+# builds a new processor.
+_LOOKUPS: dict[tuple[int, str, str], tuple[tuple[DataFrame, ...], LookupProcessor]] = {}
+
+
 def build_lookups(spark: SparkSession, cfg: PipelineConfig) -> LookupProcessor:
-    tool_loader = _dim(spark, "tool_dim", cfg.tool_dim_path, cfg.max_dim_rows)
-    role_loader = _dim(spark, "role_dim", cfg.role_dim_path, cfg.max_dim_rows)
+    tool_dim = _dim(spark, "tool_dim", cfg.tool_dim_path, cfg.max_dim_rows).get()
+    role_dim = _dim(spark, "role_dim", cfg.role_dim_path, cfg.max_dim_rows).get()
+    key = (id(spark), cfg.tool_dim_path, cfg.role_dim_path)
+    hit = _LOOKUPS.get(key)
+    if hit is not None and hit[0][0] is tool_dim and hit[0][1] is role_dim:
+        return hit[1]
     tool_lookup = Lookup(
         id="tool_info",
-        dim=tool_loader.get(),
+        dim=tool_dim,
         on=[("tool", "=", "tool")],
         parameters={"tool": "[tool_call]"},  # parsed field, field-ref scheme
         select=["tool_name", "tool_category"],
@@ -129,7 +147,7 @@ def build_lookups(spark: SparkSession, cfg: PipelineConfig) -> LookupProcessor:
     )
     role_lookup = Lookup(
         id="role_info",
-        dim=role_loader.get(),
+        dim=role_dim,
         on=[("role", "=", "role")],
         parameters={"role": "[role]"},
         select=["role_label", "role_rank"],
@@ -137,7 +155,9 @@ def build_lookups(spark: SparkSession, cfg: PipelineConfig) -> LookupProcessor:
         tag_on_failure=["_role_lookup_failure"],
         tag_on_default_use=[TAG_ROLE_DEFAULT],
     )
-    return LookupProcessor([tool_lookup, role_lookup])
+    processor = LookupProcessor([tool_lookup, role_lookup])
+    _LOOKUPS[key] = ((tool_dim, role_dim), processor)
+    return processor
 
 
 def enrich(df: DataFrame, processor: LookupProcessor) -> DataFrame:
@@ -182,9 +202,8 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict[str, Any]:
     run_id = _fmt_run_id(tracker.value)
 
     # Single-pass fan-out: one salted shuffle, one write partitioned by
-    # (sink, ts_hour, run_id). No persist — the parse/enrich stages are
-    # map-only and recomputing them for the (tiny-output) aggregate pass
-    # is the 100 TB-correct tradeoff vs caching the whole batch.
+    # (sink, ts_hour, run_id). No persist — the aggregate and the cursors
+    # read the committed sinks back, so the batch is computed once.
     # ALL per-stage lineage counters ride the write action as ONE
     # CollectMetrics node. One node, not one per stage: each observe()
     # splits whole-stage codegen, and three of them measured +90% wall on
@@ -206,16 +225,23 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict[str, Any]:
     )
     observed = router.last_observed
 
-    # per-sink hourly aggregates over the sinks read back (columnar
-    # re-read pruned to 4 columns): aggregates exactly what was committed.
+    # The sinks hold every scanned row exactly once, so one read-back of
+    # THIS run's partitions feeds both the aggregate and the cursors. The
+    # glob lists only this run_id's directories and the schema is known
+    # (the enriched frame plus the three string partition columns), so
+    # the read runs no schema-inference or listing job and does not grow
+    # with the number of committed runs.
     agg_counts: dict[str, int] = {}
+    cursors: dict[str, dict[str, Any]] = {}
     if sum(sink_counts.values()) > 0:
         from pyspark.sql import Observation
 
-        agg_src = spark.read.parquet(os.path.join(cfg.out_dir, "sinks")).filter(
-            F.col("run_id") == run_id
-        )
-        agg = hourly_counts(agg_src, keys=("sink", "role", "tool")).withColumn(
+        sinks_dir = os.path.join(cfg.out_dir, "sinks")
+        schema = T.StructType(enriched.schema.fields + [
+            T.StructField(c, T.StringType()) for c in ("sink", "ts_hour", "run_id")])
+        committed = (spark.read.schema(schema).option("basePath", sinks_dir)
+                     .parquet(os.path.join(sinks_dir, "sink=*", "ts_hour=*", f"run_id={run_id}")))
+        agg = hourly_counts(committed, keys=("sink", "role", "tool")).withColumn(
             "run_id", F.lit(run_id)
         )
         sink_names = [k for k, v in sink_counts.items() if v > 0]
@@ -228,16 +254,14 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict[str, Any]:
         agg.write.mode("overwrite").partitionBy("sink", "run_id").parquet(agg_path)
         got = agg_obs.get
         agg_counts = {n: int(got[n] or 0) for n in sink_names}
+        # Per-partition cursors from the committed rows: the same values
+        # as over the scan, without opening every table file again.
+        cursors = partition_cursors(committed, ts_col=cfg.tracking_column)
 
-    # Checkpoint: advance ONLY now, after every sink committed
-    # (at-least-once; a failure above leaves the old watermark intact and
-    # the rerun overwrites the same run_id partitions idempotently).
-    # One aggregation pass over the watermark-filtered, column-pruned
-    # source: the global watermark is the max over the per-partition
-    # cursors. (Folding the cursors into the write's CollectMetrics was
-    # measured SLOWER: 16 conditional max(struct) exprs cost ~2.3 s/M
-    # rows on the hot write pass vs ~1 s for this 3-column scan job.)
-    cursors = partition_cursors(scanned, ts_col=cfg.tracking_column)
+    # Checkpoint: advance ONLY now, after every sink and the aggregate
+    # committed (at-least-once; a failure above leaves the old watermark
+    # intact and the rerun overwrites the same run_id partitions
+    # idempotently). The global watermark is the max over the cursors.
     new_mark = max((c["max_ts"] for c in cursors.values()), default=None)
     if new_mark is not None:
         tracker.set_value(new_mark)

@@ -227,3 +227,99 @@ def test_failed_lookup_target_type_matches_ok_path(spark, tool_dim):
     bad = LookupProcessor([lk]).enhance(fact, failed=["tool_info"])
     assert ok.schema == bad.schema
     assert ok.unionByName(bad).count() == 2
+
+
+class TestCompileOnce:
+    """A lookup compiles its dimension side once and reuses it for every
+    fact batch; each batch gets the answers a fresh lookup would give."""
+
+    @pytest.fixture()
+    def lk(self, spark):
+        dim = spark.createDataFrame(
+            [("search", "search_v1", "retrieval"), ("search", "search_v2", "retrieval"),
+             (None, "nullkey", "none"), ("7", "seven", "digits")],
+            "tool string, tool_name string, tool_category string",
+        )
+        # "note" is a default-only field: null in found rows
+        return mk_lookup(dim, default_hash={"tool_name": "unknown", "note": "filled"})
+
+    @staticmethod
+    def rows(df):
+        return {
+            (r.conv_id, r.turn_idx): (
+                None if r.tool_info is None else sorted(tuple(x) for x in r.tool_info),
+                r[TAGS_COL], r[OK_COL])
+            for r in df.collect()
+        }
+
+    def test_static_batches_share_one_compile(self, spark, lk, fact):
+        default = [("unknown", None, "filled")]
+        assert self.rows(lk.apply(fact)) == {
+            # duplicate dimension keys → a 2-element target
+            ("c1", 0): ([("search_v1", "retrieval", None), ("search_v2", "retrieval", None)],
+                        [], True),
+            # the null-keyed dimension row matches nothing
+            ("c1", 1): (default, ["_default"], True),
+            # missing fact field → failure tag, null target, gate false
+            ("c2", 0): (None, ["_failure"], False),
+        }
+        compiled = lk._compiled
+        ints = spark.createDataFrame([("c3", 0, 7), ("c3", 1, 8), ("c3", 2, None)],
+                                     "conv_id string, turn_idx int, tool int")
+        # an int fact key joins the string dimension key
+        assert self.rows(lk.apply(ints)) == {
+            ("c3", 0): ([("seven", "digits", None)], [], True),
+            ("c3", 1): (default, ["_default"], True),
+            ("c3", 2): (None, ["_failure"], False),
+        }
+        assert lk._compiled is compiled
+
+    def test_streaming_after_static_keeps_its_semantics(self, lk, fact):
+        lk.apply(fact).collect()
+        default = [("unknown", None, "filled")]
+        assert self.rows(streaming_lookup(fact, lk)) == {
+            ("c1", 0): ([("search_v1", "retrieval", None), ("search_v2", "retrieval", None)],
+                        [], True),
+            ("c1", 1): (default, ["_default"], True),
+            ("c2", 0): (default, ["_failure", "_default"], True),
+        }
+
+    def test_replaced_dimension_recompiles(self, spark, lk, fact):
+        lk.apply(fact).collect()
+        lk.dim = spark.createDataFrame([("ghost", "ghost_v1", "spooky")],
+                                       "tool string, tool_name string, tool_category string")
+        got = self.rows(lk.apply(fact))
+        assert got[("c1", 1)] == ([("ghost_v1", "spooky", None)], [], True)
+        assert got[("c1", 0)] == ([("unknown", None, "filled")], ["_default"], True)
+
+
+def test_pipeline_lookups_follow_dimension_refresh(spark, fixture_dir, tmp_path):
+    """``build_lookups`` hands back the same compiled processor until the
+    dimension loader refreshes; the next enrich then sees the new rows."""
+    from logstash_integration_jdbc_spark import pipeline
+
+    schema = "tool string, tool_name string, tool_category string"
+    tool_path = str(tmp_path / "tool_dim")
+    spark.createDataFrame([("search", "search_v1", "retrieval")], schema).write.parquet(tool_path)
+    cfg = pipeline.PipelineConfig(
+        transcripts_path=str(tmp_path / "unused"), tool_dim_path=tool_path,
+        role_dim_path=f"{fixture_dir}/role_dim.parquet", out_dir=str(tmp_path / "out"))
+    fact = spark.createDataFrame([("c1", 0, "search", "user"), ("c1", 1, "bash", "user")],
+                                 "conv_id string, turn_idx int, tool_call string, role string")
+
+    def tool_info(proc):
+        return {k: [tuple(x) for x in r.tool_info]
+                for k, r in by_key(pipeline.enrich(fact, proc)).items()}
+
+    proc = pipeline.build_lookups(spark, cfg)
+    assert pipeline.build_lookups(spark, cfg) is proc
+    assert tool_info(proc) == {("c1", 0): [("search_v1", "retrieval")],
+                               ("c1", 1): [("unknown", "unknown")]}
+
+    spark.createDataFrame([("search", "search_v2", "retrieval"), ("bash", "bash_v1", "compute")],
+                          schema).write.mode("overwrite").parquet(tool_path)
+    pipeline._dim(spark, "tool_dim", tool_path, cfg.max_dim_rows).refresh()
+    fresh = pipeline.build_lookups(spark, cfg)
+    assert fresh is not proc
+    assert tool_info(fresh) == {("c1", 0): [("search_v2", "retrieval")],
+                                ("c1", 1): [("bash_v1", "compute")]}
