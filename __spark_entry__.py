@@ -1672,49 +1672,6 @@ def _q_ann_lsh_topk(spark, sf_dir):
     )
 
 
-def _q_ann_pq_adc_topk(spark, sf_dir):
-    # Product-quantized ADC top-k (the ANN *memory* path: 8 one-byte
-    # codes per 64-dim vector = 64× smaller than float64; raw vectors
-    # never enter the scoring exchange). Codebooks: subspace slices of
-    # the 16 smallest-id vectors + 1 distributed Lloyd step. The oracle
-    # recomputes the trained codebooks with an INDEPENDENT numpy twin
-    # and replays encode (argmin-L2 via the v·w − ‖w‖²/2 identity,
-    # ties → smallest code) + ADC scoring in SQL over those literals.
-    from logstash_integration_jdbc_spark.operators.similarity import pq_adc_topk
-
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    queries = emb.filter(F.col("vec_id") < 5).selectExpr(
-        "vec_id as query_id", "embedding")
-    return pq_adc_topk(emb, queries, k=10, n_subspaces=8, n_codes=16,
-                       train_iters=1, use_udf_encode=False).select(
-        "query_id", "vec_id", F.round("cosine", 4).alias("cos4")
-    )
-
-
-def _q_ann_ivf_pq_topk(spark, sf_dir):
-    # IVF-PQ composition (the full 10^9-vector ANN recipe): 2-iter
-    # Lloyd-refined centroids prune candidates to 4 probed buckets,
-    # RESIDUALS are PQ-encoded (seeds/training skip the zero-residual
-    # centroid rows), ADC picks a k·5 shortlist, exact cosine reranks.
-    # The oracle retrains centroids AND residual codebooks with an
-    # INDEPENDENT numpy twin and replays assignment, encode, probing,
-    # ADC shortlisting and the exact rerank in SQL over those literals.
-    from logstash_integration_jdbc_spark.operators.similarity import ivf_pq_topk
-
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    queries = emb.filter(F.col("vec_id") < 5).selectExpr(
-        "vec_id as query_id", "embedding")
-    return ivf_pq_topk(emb, queries, k=10, n_centroids=8, n_probe=4,
-                       n_subspaces=8, n_codes=16, kmeans_iters=2,
-                       train_iters=1, rerank_factor=5).select(
-        "query_id", "vec_id", F.round("cosine", 4).alias("cos4")
-    )
-
-
 def _q_embedding_near_dup(spark, sf_dir):
     # The companion corpus is PERTURBED, not copied: even dims ×1.35, odd
     # ×0.65 → cosine(v, v') ≈ 1/√(1+0.35²) ≈ 0.94…0.96 depending on the
@@ -2239,8 +2196,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "quantile_filter": _q_quantile_filter,
         "token_budget_mix": _q_token_budget_mix,
         "quantile_threshold_filter": _q_quantile_threshold_filter,
-        "ann_pq_adc_topk": _q_ann_pq_adc_topk,
-        "ann_ivf_pq_topk": _q_ann_ivf_pq_topk,
     }
 
 
@@ -3449,267 +3404,6 @@ def oracle_sql() -> dict[str, str]:
     q["ann_ivf_lloyd_topk"] = _value_oracle("ann_ivf_lloyd_topk",
                                             _build_ivf_lloyd_sql)
 
-    # PQ/ADC: codebooks (init = subspace slices of the 16 smallest-id
-    # vectors, 1 Lloyd step) recomputed by an independent numpy twin and
-    # inlined; SQL replays encode (argmax of v·w − ‖w‖²/2, ties →
-    # smallest code) and ADC scoring (ordered per-subspace sums so the
-    # float fold order matches the Spark expression chain).
-    def _build_pq_adc_sql() -> str:
-        import duckdb as _dk
-        import numpy as _np4
-
-        rows = _dk.sql(
-            "SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) "
-            f"FROM read_parquet('{_ORACLE_SF_DIR}/embeddings.parquet') "
-            "ORDER BY vec_id"
-        ).fetchall()
-        V = _np4.array([r[1] for r in rows], dtype=_np4.float64)
-        m, K = 8, 16
-        dsub = V.shape[1] // m
-        Vs = V.reshape(len(V), m, dsub)
-        B = Vs[:K].transpose(1, 0, 2).copy()            # (m, K, dsub)
-        for _ in range(1):
-            half = 0.5 * _np4.einsum("mkd,mkd->mk", B, B)
-            S = _np4.einsum("nmd,mkd->nmk", Vs, B) - half[None, :, :]
-            A = _np4.argmax(S, axis=2)                  # first max ≡ smallest code
-            newB = B.copy()
-            for mm in range(m):
-                for c in range(K):
-                    mask = A[:, mm] == c
-                    if mask.any():
-                        newB[mm, c] = Vs[mask, mm].mean(axis=0)
-            B = newB
-        cw = ", ".join(
-            "({}, {}, [{}])".format(
-                mm, c, ", ".join(repr(float(x)) for x in B[mm, c]))
-            for mm in range(m) for c in range(K)
-        )
-        return """
-        WITH e AS (
-            SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-            FROM embeddings
-        ), cw AS (
-            SELECT sub, code, w FROM (VALUES {CW}) t(sub, code, w)
-        ), sc AS (
-            SELECT e.vec_id, cw.sub, cw.code, cw.w,
-                   list_sum(list_transform(range(1, {DSUB} + 1),
-                            i -> e.v[cw.sub * {DSUB} + i] * cw.w[i]))
-                   - 0.5 * list_sum(list_transform(cw.w, x -> x * x)) AS s
-            FROM e CROSS JOIN cw
-        ), codes AS (
-            SELECT vec_id, sub, code, w FROM (
-                SELECT *, row_number() OVER (PARTITION BY vec_id, sub
-                                             ORDER BY s DESC, code ASC) AS rn
-                FROM sc
-            ) WHERE rn = 1
-        ), qs AS (
-            SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5
-        ), contrib AS (
-            SELECT q.query_id, c.vec_id, c.sub,
-                   list_sum(list_transform(range(1, {DSUB} + 1),
-                            i -> q.qv[c.sub * {DSUB} + i] * c.w[i])) AS ip,
-                   list_sum(list_transform(c.w, x -> x * x)) AS n2
-            FROM codes c CROSS JOIN qs q WHERE c.vec_id <> q.query_id
-        ), agg AS (
-            SELECT query_id, vec_id,
-                   list_sum(list(ip ORDER BY sub)) AS ip_sum,
-                   list_sum(list(n2 ORDER BY sub)) AS n2_sum
-            FROM contrib GROUP BY query_id, vec_id
-        ), qn AS (
-            SELECT query_id, sqrt(list_sum(list_transform(qv, x -> x * x))) AS qnorm
-            FROM qs
-        ), scored AS (
-            SELECT a.query_id, a.vec_id,
-                   a.ip_sum / (qn.qnorm * sqrt(a.n2_sum)) AS cosine
-            FROM agg a JOIN qn ON a.query_id = qn.query_id
-        )
-        SELECT query_id, vec_id, round(cosine, 4) AS cos4 FROM (
-            SELECT *, row_number() OVER (PARTITION BY query_id
-                                         ORDER BY cosine DESC, vec_id ASC) AS rn
-            FROM scored
-        ) WHERE rn <= 10
-        """.replace("{CW}", cw).replace("{DSUB}", str(dsub))
-
-    q["ann_pq_adc_topk"] = _value_oracle("ann_pq_adc_topk", _build_pq_adc_sql)
-
-    # IVF-PQ: the composed recipe. The twin retrains the 2-iter Lloyd
-    # centroids (as the ivf_lloyd twin) AND the 1-iter residual
-    # codebooks (seeds = residuals of the 16 smallest ids ABOVE the
-    # centroid ids — the operator skips zero-residual centroid rows);
-    # every c/w-only constant (½‖w‖², ‖w‖², c_sub·w, ‖c‖²) is folded
-    # with the same sequential Python sums the Spark expressions use.
-    # SQL replays assignment, residual encode, probing, ADC shortlist
-    # (k·5 by adc DESC, vec_id ASC) and the exact-cosine rerank.
-    def _build_ivf_pq_sql() -> str:
-        import duckdb as _dk
-        import numpy as _np5
-
-        rows = _dk.sql(
-            "SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) "
-            f"FROM read_parquet('{_ORACLE_SF_DIR}/embeddings.parquet') "
-            "ORDER BY vec_id"
-        ).fetchall()
-        ids = [r[0] for r in rows]
-        V = _np5.array([r[1] for r in rows], dtype=_np5.float64)
-        dim = V.shape[1]
-        m, K, n_cent = 8, 16, 8
-        dsub = dim // m
-
-        def _sdot(a, b):
-            acc = 0.0
-            for x, y in zip(a, b):
-                acc += float(x) * float(y)
-            return acc
-
-        # centroids: 8 smallest ids + 2 Lloyd iterations
-        C = V[:n_cent].copy()
-        for _ in range(2):
-            sims = (V @ C.T) / (
-                _np5.linalg.norm(V, axis=1, keepdims=True)
-                * _np5.linalg.norm(C, axis=1)[None, :])
-            best = _np5.argmax(sims, axis=1)
-            C = _np5.array([
-                V[best == c].mean(axis=0) if (best == c).any() else C[c]
-                for c in range(n_cent)
-            ])
-        cent_ids = ids[:n_cent]
-        max_cid = max(cent_ids)
-        # final assignment + residuals
-        sims = (V @ C.T) / (
-            _np5.linalg.norm(V, axis=1, keepdims=True)
-            * _np5.linalg.norm(C, axis=1)[None, :])
-        A = _np5.argmax(sims, axis=1)
-        R = V - C[A]
-        # residual codebooks over ids > max_cid: seed 16 smallest + 1 iter
-        mask = _np5.array([i > max_cid for i in ids])
-        Rt = R[mask]
-        Rs = Rt.reshape(len(Rt), m, dsub)
-        B = Rs[:K].transpose(1, 0, 2).copy()            # (m, K, dsub)
-        for _ in range(1):
-            half = 0.5 * _np5.einsum("mkd,mkd->mk", B, B)
-            S = _np5.einsum("nmd,mkd->nmk", Rs, B) - half[None, :, :]
-            Ac = _np5.argmax(S, axis=2)
-            newB = B.copy()
-            for mm in range(m):
-                for c in range(K):
-                    sel = Ac[:, mm] == c
-                    if sel.any():
-                        newB[mm, c] = Rs[sel, mm].mean(axis=0)
-            B = newB
-
-        cl = ", ".join(
-            "({}, {}, [{}], {})".format(
-                cent_ids[c], c, ", ".join(repr(float(x)) for x in C[c]),
-                repr(_sdot(C[c], C[c])))
-            for c in range(n_cent)
-        )
-        cw = ", ".join(
-            "({}, {}, [{}], {}, {})".format(
-                mm, c, ", ".join(repr(float(x)) for x in B[mm, c]),
-                repr(0.5 * _sdot(B[mm, c], B[mm, c])),
-                repr(_sdot(B[mm, c], B[mm, c])))
-            for mm in range(m) for c in range(K)
-        )
-        cdw = ", ".join(
-            "({}, {}, {}, {})".format(
-                cp, mm, c,
-                repr(_sdot(C[cp][mm * dsub:(mm + 1) * dsub], B[mm, c])))
-            for cp in range(n_cent) for mm in range(m) for c in range(K)
-        )
-        return """
-        WITH e AS (
-            SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-            FROM embeddings
-        ), cents AS (
-            SELECT centroid_id, cpos, cv, n2c FROM (VALUES {CL}) t(centroid_id, cpos, cv, n2c)
-        ), cw AS (
-            SELECT sub, code, w, halfn2, n2w FROM (VALUES {CW}) t(sub, code, w, halfn2, n2w)
-        ), cdw AS (
-            SELECT cpos, sub, code, val FROM (VALUES {CDW}) t(cpos, sub, code, val)
-        ), assigned AS (
-            SELECT vec_id, v, centroid_id, cpos, cv, n2c FROM (
-                SELECT e.vec_id, e.v, c.centroid_id, c.cpos, c.cv, c.n2c,
-                       row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                           list_sum(list_transform(range(1, {DIM} + 1), i -> e.v[i] * c.cv[i]))
-                           / (sqrt(list_sum(list_transform(e.v, x -> x * x)))
-                              * sqrt(list_sum(list_transform(c.cv, x -> x * x)))) DESC,
-                           c.centroid_id ASC) AS rn
-                FROM e CROSS JOIN cents c
-            ) WHERE rn = 1
-        ), resid AS (
-            SELECT vec_id, centroid_id, cpos, n2c,
-                   list_transform(range(1, {DIM} + 1), i -> v[i] - cv[i]) AS r
-            FROM assigned
-        ), sc AS (
-            SELECT resid.vec_id, cw.sub, cw.code,
-                   list_sum(list_transform(range(1, {DSUB} + 1),
-                            i -> resid.r[cw.sub * {DSUB} + i] * cw.w[i]))
-                   - cw.halfn2 AS s
-            FROM resid CROSS JOIN cw
-        ), codes AS (
-            SELECT vec_id, sub, code FROM (
-                SELECT *, row_number() OVER (PARTITION BY vec_id, sub
-                                             ORDER BY s DESC, code ASC) AS rn
-                FROM sc
-            ) WHERE rn = 1
-        ), qs AS (
-            SELECT vec_id AS query_id, v AS qv,
-                   sqrt(list_sum(list_transform(v, x -> x * x))) AS qnorm
-            FROM e WHERE vec_id < 5
-        ), probes AS (
-            SELECT query_id, centroid_id, qv, qnorm,
-                   list_sum(list_transform(range(1, {DIM} + 1), i -> qv[i] * cv[i])) AS qc
-            FROM (
-                SELECT q.query_id, c.centroid_id, c.cv, q.qv, q.qnorm,
-                       row_number() OVER (PARTITION BY q.query_id ORDER BY
-                           list_sum(list_transform(range(1, {DIM} + 1), i -> q.qv[i] * c.cv[i]))
-                           / (sqrt(list_sum(list_transform(q.qv, x -> x * x)))
-                              * sqrt(list_sum(list_transform(c.cv, x -> x * x)))) DESC,
-                           c.centroid_id ASC) AS rn
-                FROM qs q CROSS JOIN cents c
-            ) WHERE rn <= 4
-        ), contrib AS (
-            SELECT p.query_id, a.vec_id, a.cpos, a.n2c, p.qv, p.qnorm, p.qc, k.sub,
-                   list_sum(list_transform(range(1, {DSUB} + 1),
-                            i -> p.qv[k.sub * {DSUB} + i] * w.w[i])) AS ip,
-                   2.0 * d.val + w.n2w AS g
-            FROM assigned a
-            JOIN probes p ON a.centroid_id = p.centroid_id
-            JOIN codes k ON k.vec_id = a.vec_id
-            JOIN cw w ON w.sub = k.sub AND w.code = k.code
-            JOIN cdw d ON d.cpos = a.cpos AND d.sub = k.sub AND d.code = k.code
-            WHERE a.vec_id <> p.query_id
-        ), agg AS (
-            SELECT query_id, vec_id,
-                   any_value(qc) + list_sum(list(ip ORDER BY sub)) AS ip_tot,
-                   any_value(n2c) + list_sum(list(g ORDER BY sub)) AS n2_tot,
-                   any_value(qnorm) AS qnorm
-            FROM contrib GROUP BY query_id, vec_id
-        ), short AS (
-            SELECT query_id, vec_id FROM (
-                SELECT query_id, vec_id,
-                       row_number() OVER (PARTITION BY query_id
-                           ORDER BY ip_tot / (qnorm * sqrt(n2_tot)) DESC,
-                                    vec_id ASC) AS rn
-                FROM agg
-            ) WHERE rn <= 50
-        ), rerank AS (
-            SELECT s.query_id, s.vec_id,
-                   list_sum(list_transform(range(1, {DIM} + 1), i -> e.v[i] * q.qv[i]))
-                   / (sqrt(list_sum(list_transform(e.v, x -> x * x))) * q.qnorm) AS cosine
-            FROM short s
-            JOIN e ON e.vec_id = s.vec_id
-            JOIN qs q ON q.query_id = s.query_id
-        )
-        SELECT query_id, vec_id, round(cosine, 4) AS cos4 FROM (
-            SELECT *, row_number() OVER (PARTITION BY query_id
-                                         ORDER BY cosine DESC, vec_id ASC) AS rn
-            FROM rerank
-        ) WHERE rn <= 10
-        """.replace("{CL}", cl).replace("{CW}", cw).replace(
-            "{CDW}", cdw).replace("{DSUB}", str(dsub)).replace("{DIM}", str(dim))
-
-    q["ann_ivf_pq_topk"] = _value_oracle("ann_ivf_pq_topk", _build_ivf_pq_sql)
     # ANN LSH oracle: the 16-bit sketch rebuilt in SQL from the same
     # deterministic plane coefficients (similarity._plane_coeff).
     from logstash_integration_jdbc_spark.operators.similarity import _plane_coeff

@@ -143,7 +143,7 @@ class Router:
             # partition-dir groups, so output files ≈ dirs × salts
             # rather than tasks × dirs (see salted_repartition).
             out = salted_repartition(routed, key=salt_col, n_salts=n_salts,
-                                     extra_cols=all_parts, with_key=False)
+                                     extra_cols=all_parts)
             if catalog_table is not None:
                 spark = out.sparkSession
                 if not spark.catalog.tableExists(catalog_table):
@@ -226,7 +226,7 @@ class Router:
             counts = {}
             for name, sink_df in self.split(df).items():
                 sink_df = salted_repartition(sink_df, key=salt_col, n_salts=n_salts,
-                                             extra_cols=part_cols, with_key=False)
+                                             extra_cols=part_cols)
                 path = os.path.join(base_dir, f"sink={name}")
                 n = sink_df.count()
                 if n > 0:

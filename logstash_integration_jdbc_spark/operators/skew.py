@@ -9,8 +9,8 @@ mitigations, used together:
 - explicit salting for writes/repartitions where AQE doesn't apply:
   partition by ``(extra_cols..., pmod(xxhash64(key, salt_bits), n))`` so
   one hot key spreads over ``n_salts`` tasks. The salt derives from
-  xxhash64 of the key plus a per-row component, deterministic and
-  RNG-free.
+  xxhash64 of the key plus a per-row component (``turn_idx``/``ts``,
+  else the frame's other scalar columns), deterministic and RNG-free.
 
 ``spread`` handles the opposite skew — too FEW input partitions: a
 narrow scan is hash-spread across all cores before CPU-heavy map work.
@@ -22,6 +22,7 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, MapType, StructType, VariantType
 
 
 def salt_expr(key: str, n_salts: int, row_cols: Sequence[str] = ("turn_idx",)):
@@ -35,52 +36,36 @@ def salted_repartition(
     key: str,
     n_salts: int = 8,
     extra_cols: Sequence[str] = (),
-    num_partitions: int | None = None,
-    with_key: bool = True,
 ) -> DataFrame:
-    """Repartition on (extra_cols, key, salt) — hot keys spread n_salts-wide
-    when the frame carries a per-row salt column (``turn_idx`` and/or
-    ``ts``); without one the salt is constant per key, so a hot key
-    still lands in one task.
+    """Repartition on (extra_cols, salt): one hot key spreads n_salts-wide.
 
-    ``with_key=False`` drops the raw key COLUMN from the partitioning
-    expression (the salt still derives from it, so with a per-row salt
-    column a hot key still spreads n_salts-wide): partitioning
-    degenerates to the (extra_cols, salt) group key, so each reduce
-    task holds only the few groups that hash to it instead of a slice
-    of EVERY group. For a dynamic-partitioned write that is the
-    difference between O(groups) and O(tasks × groups) output files
-    (guide §6 small-files; measured 1572 → ~170 files and −45% write
-    wall on the 1M-row pipeline sink). Keep ``with_key=True`` when
-    downstream needs rows of one key clustered or a uniform row-level
-    spread.
+    The salt hashes the key with a per-row part: ``turn_idx`` and/or
+    ``ts`` when the frame has them, otherwise every other scalar column
+    (array, map, struct and variant columns are skipped; Spark cannot
+    hash a map). Rows that agree on all of those share a salt.
+
+    The raw key column is not in the partitioning expression, so the
+    exchange has only (extra_cols, salt) groups and each reduce task
+    holds a few whole groups instead of a slice of every group. For a
+    dynamic-partitioned write that is O(groups) output files instead of
+    O(tasks × groups) (measured 1572 → ~170 files and −45% write wall
+    on the 1M-row pipeline sink). The reducer count is left to AQE
+    coalescing, which merges whole hash partitions and never splits
+    one, so each (dir, salt) group still lands in exactly one task
+    (≤ n_salts files per dir). Measured on the pipeline sink at
+    local[4] (4 vCPU) against a pin at 2× cores: a 10k-row incremental
+    batch writes 6 files instead of 30 in 18 tasks instead of 28, a
+    100k-row batch 169 files instead of 245, and a 1M-row batch is no
+    slower.
     """
     row_cols = [c for c in ("turn_idx", "ts") if c in df.columns]
+    if not row_cols:
+        row_cols = [
+            f.name for f in df.schema.fields if f.name != key and not isinstance(
+                f.dataType, (ArrayType, MapType, StructType, VariantType))
+        ]
     salt = salt_expr(key, n_salts, row_cols).alias("__salt")
-    cols = [F.col(c) for c in extra_cols] + ([F.col(key)] if with_key else []) + [salt]
-    if num_partitions is None and not with_key:
-        # Without the key column the exchange has only dirs × salts
-        # groups, so its size follows the batch: leave the reducer count
-        # to AQE coalescing. A coalesced partition merges whole hash
-        # partitions and never splits one, so each (dir, salt) group
-        # still lands in exactly one task (≤ n_salts files per dir).
-        # Measured on the pipeline sink at local[4] (4 vCPU) against a
-        # pin at 2× cores: a 10k-row incremental batch writes 6 files
-        # instead of 30 in 18 tasks instead of 28, a 100k-row batch 169
-        # files instead of 245, and a 1M-row batch is no slower.
-        return df.repartition(*cols)
-    if num_partitions is None:
-        # An explicit count pins the exchange: repartition(cols) without N
-        # lets AQE rebalance to ~advisory-sized (64 MB) partitions, which
-        # caps downstream stage parallelism at data-size/64MB tasks — on a
-        # wide executor that leaves most cores idle (measured: a 519 MB
-        # write ran ~10 tasks on 32 cores). 1× cores feeds every core;
-        # 2× cores measured consistently SLOWER on the fan-out write
-        # (64 vs 32 reducers at 1M rows: ~9-16s vs ~5-10s) — each extra
-        # reducer multiplies dynamic-partition writer files (tasks × dirs)
-        # and per-task sort/flush overhead without adding parallelism.
-        num_partitions = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(num_partitions, *cols)
+    return df.repartition(*[F.col(c) for c in extra_cols], salt)
 
 
 def spread(df: DataFrame, key: str) -> DataFrame:

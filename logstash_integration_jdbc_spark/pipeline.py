@@ -30,7 +30,7 @@ from __future__ import annotations
 import json
 import os
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -101,7 +101,6 @@ class PipelineConfig:
     # the same run_id (idempotent dynamic overwrite)
     statement_retry_attempts: int = 1
     statement_retry_wait_s: float = 0.5
-    extra: dict[str, Any] = field(default_factory=dict)
 
 
 # Dimension loaders memoized per (session, path): the count-guard and

@@ -369,52 +369,3 @@ def test_filter_above_quantile_broadcasts_thresholds_no_window(spark):
     assert "BroadcastHashJoin" in plan
     assert "Window" not in plan
     assert "EvalPython" not in plan
-
-
-def test_pq_adc_shuffles_carry_no_vectors(spark):
-    """The PQ memory-path contract: after encode, raw embedding floats
-    never enter a shuffle — the top-k exchanges move only
-    (query_id, vec_id, cosine). At 10^9 corpus vectors that is the
-    difference between shuffling ~8 B/row of codes-derived scores and
-    dragging 512 B/row of float64s."""
-    from logstash_integration_jdbc_spark.operators.similarity import (
-        pq_adc_topk,
-    )
-
-    emb = spark.read.parquet(
-        "/root/testdata/sf0.001/embeddings.parquet"
-    ).withColumn("embedding", F.col("embedding").cast("array<double>"))
-    queries = emb.filter(F.col("vec_id") < 3).selectExpr(
-        "vec_id as query_id", "embedding")
-    plan = plan_of(pq_adc_topk(emb, queries, k=5, use_udf_encode=False))
-    for seg in plan.split("Exchange ")[1:]:
-        node = seg.split("\n")[0]
-        assert "embedding" not in node and "__qvec" not in node, node
-    # scoring is expression-only for small codebooks — no Python eval
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" not in plan
-
-
-def test_ivf_pq_shuffles_carry_no_vectors(spark):
-    """Same memory-path contract for the composed IVF-PQ plan: after
-    residual encode, every hash-partitioned exchange moves only ids,
-    codes-derived scores and the probe keys — never the float vectors
-    (query vectors ride a BROADCAST to the probed buckets, which is the
-    point: |queries|·n_probe rows, not |corpus|)."""
-    from logstash_integration_jdbc_spark.operators.similarity import (
-        ivf_pq_topk,
-    )
-
-    emb = spark.read.parquet(
-        "/root/testdata/sf0.001/embeddings.parquet"
-    ).withColumn("embedding", F.col("embedding").cast("array<double>"))
-    queries = emb.filter(F.col("vec_id") < 3).selectExpr(
-        "vec_id as query_id", "embedding")
-    plan = plan_of(ivf_pq_topk(emb, queries, k=5, n_centroids=4, n_probe=2,
-                               train_iters=0))
-    for seg in plan.split("Exchange hashpartitioning")[1:]:
-        node = seg.split("\n")[0]
-        assert "embedding" not in node and "__qvec" not in node, node
-    # ADC scoring is expression-only — no Python eval anywhere
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" not in plan

@@ -60,15 +60,40 @@ def test_write_layout_hour_partitioned(spark, tmp_path, transcripts):
     assert back.count() == 2000
 
 
+def _partition_sizes(df):
+    """Rows per partition of ``df`` with AQE coalescing off, so a salted
+    exchange shows its raw spark.sql.shuffle.partitions (8) partitions."""
+    spark = df.sparkSession
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        return [r.n for r in df.groupBy(F.spark_partition_id().alias("p"))
+                .agg(F.count(F.lit(1)).alias("n")).collect()]
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_salted_repartition_spreads_hot_key(spark):
     df = spark.range(0, 10000).select(
         F.lit("hot").alias("conv_id"), F.col("id").cast("int").alias("turn_idx")
     )
-    out = salted_repartition(df, "conv_id", n_salts=8, num_partitions=8)
-    sizes = [r.n for r in out.groupBy(F.spark_partition_id().alias("p"))
-             .agg(F.count(F.lit(1)).alias("n")).collect()]
+    sizes = _partition_sizes(salted_repartition(df, "conv_id", n_salts=8))
     # a plain repartition("conv_id") puts all 10k rows in ONE partition;
     # salting must spread them across several.
+    assert len(sizes) >= 4
+    assert max(sizes) < 10000 * 0.5
+
+
+def test_salted_repartition_spreads_hot_key_without_row_columns(spark):
+    # No turn_idx/ts: the row part of the salt comes from the other
+    # scalar columns (the map column is skipped; hashing it would fail).
+    df = spark.range(0, 10000).select(
+        F.lit("hot").alias("conv_id"),
+        F.concat(F.lit("payload-"), F.col("id").cast("string")).alias("payload"),
+        F.create_map(F.lit("k"), F.col("id")).alias("attrs"),
+    )
+    sizes = _partition_sizes(salted_repartition(df, "conv_id", n_salts=8))
     assert len(sizes) >= 4
     assert max(sizes) < 10000 * 0.5
 
@@ -205,9 +230,6 @@ def test_salted_repartition_with_key_false_spreads_and_bounds_files(
     # the hot-key spread is preserved: the salt still derives from the
     # key + row columns, so one hot conv_id spans several salts
     hot = df.withColumn("conv_id", F.lit("hot"))
-    out = salted_repartition(hot, "conv_id", n_salts=8, num_partitions=8,
-                             with_key=False)
-    sizes = [r2.n for r2 in out.groupBy(F.spark_partition_id().alias("p"))
-             .agg(F.count(F.lit(1)).alias("n")).collect()]
+    sizes = _partition_sizes(salted_repartition(hot, "conv_id", n_salts=8))
     assert len([s for s in sizes if s > 0]) >= 4
     assert max(sizes) < 4000 * 0.5
