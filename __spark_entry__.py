@@ -259,48 +259,6 @@ def _q_assemble_capped(spark, sf_dir):
     return out.select("conv_id", "document", "n_turns", "n_tokens")
 
 
-def _q_chat_template(spark, sf_dir):
-    # SFT export: chat-template rendering + loss-mask character spans
-    # (assistant-content [s,e) offsets into the rendered document).
-    # Spans are flattened to a canonical "s-e;s-e" string for the
-    # driver's scalar value-hash; extraction exactness is pinned in
-    # tests/test_assemble.py.
-    from logstash_integration_jdbc_spark.operators.assemble import (
-        render_chat_template,
-    )
-
-    ev = _t(spark, sf_dir, "events").select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        F.col("event_id").cast("int").alias("turn_idx"),
-        F.col("event_type").alias("role"),
-        F.col("props").alias("text"),
-    )
-    out = render_chat_template(ev, assistant_role="purchase")
-    spans_str = F.array_join(
-        F.transform(F.col("loss_spans"),
-                    lambda sp: F.concat_ws("-", sp["s"], sp["e"])), ";")
-    return out.select("conv_id", "document", spans_str.alias("spans_str"),
-                      "n_targets", "target_chars")
-
-
-def _q_conv_tail_budget(spark, sf_dir):
-    # context-budget trim: longest conversation suffix whose cumulative
-    # whitespace-token count fits the budget (reverse cumsum window +
-    # filter — no second exchange)
-    from logstash_integration_jdbc_spark.operators.assemble import (
-        truncate_tail_budget,
-    )
-
-    ev = _t(spark, sf_dir, "events").select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        F.col("event_id").cast("int").alias("turn_idx"),
-        F.col("event_type").alias("role"),
-        F.col("props").alias("text"),
-    )
-    return truncate_tail_budget(ev, budget=40).select(
-        "conv_id", "turn_idx", "role", "cum_tokens")
-
-
 def _q_grok_parse(spark, sf_dir):
     # north_star parse stage: multi-pattern grok with break_on_match and
     # _grokparsefailure tagging, JVM-side (GrokPipeline)
@@ -817,21 +775,6 @@ def _q_csv_parse(spark, sf_dir):
                       F.array_join("tags", ",").alias("tags_str"))
 
 
-def _q_context_windows(spark, sf_dir):
-    # SFT example construction: each target-role turn paired with the
-    # rendered previous ≤k turns (one conv_id exchange, k-bounded frame)
-    from logstash_integration_jdbc_spark.operators.assemble import context_windows
-
-    ev = _t(spark, sf_dir, "events").select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        F.col("event_id").cast("int").alias("turn_idx"),
-        F.col("event_type").alias("role"),
-        F.col("props").alias("text"),
-        F.col("ts"),
-    )
-    return context_windows(ev, k=4, target_role="purchase")
-
-
 def _q_throttle_rate(spark, sf_dir):
     # logstash throttle filter: first max_count per key per period
     # survive, the rest are flagged — one (key, bucket) exchange
@@ -1074,20 +1017,6 @@ def _q_geoip(spark, sf_dir):
         "lo long, hi long, country string, city string")
     out = geoip_lookup(ev.withColumn("ip", ip), "ip", geo)
     return out.select("event_id", "ip", "country", "city")
-
-
-def _q_dsir_weights(spark, sf_dir):
-    # DSIR (Xie et al. 2023): hashed unigram+bigram importance weights
-    # of every document against the lang='en' slice as the target
-    # corpus; one bucket exchange per distribution, one broadcast
-    # log-ratio join, one per-doc sum. Oracle: full pure-Python replay
-    # (xxhash64 twins) emitted as a VALUES table.
-    from logstash_integration_jdbc_spark.operators.dsir import dsir_weights
-
-    docs = _t(spark, sf_dir, "documents")
-    tgt = docs.filter(F.col("lang") == "en")
-    w = dsir_weights(docs, tgt, n_buckets=4096, alpha=0.5)
-    return w.select("doc_id", "n_feats", F.round("log_w", 6).alias("log_w"))
 
 
 def _q_translate(spark, sf_dir):
@@ -1337,23 +1266,6 @@ def _q_profile_table(spark, sf_dir):
         "min_val", "max_val",
         F.round("mean", 6).alias("mean6"),
         F.round("stddev", 6).alias("sd6"))
-
-
-def _q_nb_classifier(spark, sf_dir):
-    # Trainable NB quality classifier (the CCNet/GPT-3 linear-filter
-    # role): self-train on lang=='en' labels, score the corpus. Exact
-    # integer counts → LLR expression; round(4) absorbs fp sum-order
-    # differences; nb_pred derives from the ROUNDED score so both
-    # engines threshold the same value.
-    from logstash_integration_jdbc_spark.operators.classify import (
-        train_and_score,
-    )
-
-    docs = _t(spark, sf_dir, "documents").withColumn(
-        "label", F.col("lang") == "en")
-    out = train_and_score(docs, "label")
-    nb4 = F.round("nb_score", 4)
-    return out.select("doc_id", nb4.alias("nb4"), (nb4 > 0).alias("nb_pred"))
 
 
 def _q_semantic_dedup(spark, sf_dir):
@@ -2029,40 +1941,6 @@ def _q_dedup_components(spark, sf_dir):
         F.sum("id").cast("bigint").alias("sum_ids"))
 
 
-def _q_preference_pairs(spark, sf_dir):
-    # DPO-style preference-pair assembly: per source, the highest- vs
-    # lowest-quality document with deterministic tie-breaks (ties →
-    # lowest id), zero-gap groups dropped. The discrete 0..1 quality
-    # score makes ties common, so the tie-break contract is what this
-    # row actually pins; the oracle replays the quality formula + two
-    # rank windows in DuckDB.
-    from logstash_integration_jdbc_spark.operators.preference import (
-        preference_pairs,
-    )
-    from logstash_integration_jdbc_spark.operators.textstats import quality_score
-
-    docs = quality_score(_t(spark, sf_dir, "documents"))
-    return preference_pairs(docs, "source", "doc_id", "quality")
-
-
-def _q_graph_pagerank(spark, sf_dir):
-    # link-graph quality prior: damped PageRank over a deterministic
-    # host graph derived from events (src = user_id % 24, dst =
-    # event_id % 32 — nodes 24..31 appear only as destinations, so the
-    # dangling-mass path is exercised). 3 fixed iterations; the oracle
-    # unrolls the same three rounds as chained DuckDB CTEs with every
-    # constant forced to DOUBLE so both engines run identical IEEE
-    # arithmetic; ranks rounded to 6 dp absorb summation-order ulps.
-    from logstash_integration_jdbc_spark.operators.graph import pagerank
-
-    ev = _t(spark, sf_dir, "events")
-    edges = ev.select(
-        (F.col("user_id") % 24).alias("src"),
-        (F.col("event_id") % 32).alias("dst"))
-    return pagerank(edges, iters=3).select(
-        "node", F.round("rank", 6).alias("rank6"))
-
-
 def _q_zorder_key(spark, sf_dir):
     # multi-dimensional write-layout key: Morton interleave of two
     # 8-bit columns, all-Catalyst bit arithmetic (no UDF). The oracle
@@ -2090,8 +1968,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "j1_streaming_lookup": _q_streaming_lookup,
         "grok_parse": _q_grok_parse,
         "dedup_minhash": _q_dedup_minhash,
-        "chat_template_spans": _q_chat_template,
-        "conv_tail_budget": _q_conv_tail_budget,
         "dissect_parse": _q_dissect_parse,
         "kv_parse": _q_kv_parse,
         "json_parse": _q_json_parse,
@@ -2111,13 +1987,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "c4_rules": _q_c4_rules,
         "dedup_lines": _q_dedup_lines,
         "dedup_semantic": _q_semantic_dedup,
-        "nb_classifier": _q_nb_classifier,
         "bpe_encode": _q_bpe_encode,
         "text_bm25_topk": _q_bm25_topk,
         "url_canonical": _q_url_canonical,
-        "preference_pairs": _q_preference_pairs,
         "hard_negatives": _q_hard_negatives,
-        "graph_pagerank": _q_graph_pagerank,
         "zorder_key": _q_zorder_key,
         "j2_static_lookup": _q_static_lookup,
         "r4_router_counts": _q_router_counts,
@@ -2178,10 +2051,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "profile_table": _q_profile_table,
         "text_embed": _q_text_embed,
         "anomaly_counts": _q_anomaly_counts,
-        "context_windows": _q_context_windows,
         "xml_parse": _q_xml_parse,
         "uuid_stamp": _q_uuid_stamp,
-        "dsir_weights": _q_dsir_weights,
         "metrics_rates": _q_metrics_rates,
         "temperature_mix": _q_temperature_mix,
         "json_encode_event": _q_json_encode,
@@ -2355,53 +2226,6 @@ def _substring_oracle_values() -> str:
     ) + ") t(id_a, id_b, n_shared_anchors)"
 
 
-def _dsir_oracle_values() -> str:
-    """Twin replay of _q_dsir_weights: hashed unigram+bigram features
-    (Spark-parity xxhash64 twins), add-0.5 smoothed target/raw
-    distributions, per-doc summed log-ratio, rounded to 6 dp."""
-    import math
-    from collections import Counter
-
-    import duckdb
-
-    from logstash_integration_jdbc_spark.functions.xxhash import (
-        spark_ws_tokens,
-        spark_xxhash64_longs,
-        xxh64_str,
-    )
-
-    B, ALPHA = 4096, 0.5
-    rows = duckdb.sql(
-        f"SELECT doc_id, text, lang FROM "
-        f"read_parquet('{_ORACLE_SF_DIR}/documents.parquet') ORDER BY doc_id"
-    ).fetchall()
-
-    def feats(text: str) -> list[int]:
-        th = [xxh64_str(t) for t in spark_ws_tokens(text or "")]
-        return ([h % B for h in th]
-                + [spark_xxhash64_longs([a, b]) % B
-                   for a, b in zip(th, th[1:])])
-
-    doc_feats = {did: feats(t) for did, t, _ in rows}
-    p: Counter = Counter()
-    q: Counter = Counter()
-    for did, _t_, lang in rows:
-        if lang == "en":
-            p.update(doc_feats[did])
-        q.update(doc_feats[did])
-    t_p = sum(p.values()) + ALPHA * B
-    t_q = sum(q.values()) + ALPHA * B
-    out = []
-    for did, fs in doc_feats.items():
-        lw = sum(math.log((p[b] + ALPHA) / t_p)
-                 - math.log((q[b] + ALPHA) / t_q) for b in fs)
-        out.append((did, len(fs), round(lw, 6)))
-    return "SELECT * FROM (VALUES " + ", ".join(
-        f"(CAST({d} AS BIGINT), CAST({n} AS BIGINT), "
-        f"CAST({w!r} AS DOUBLE))" for d, n, w in out
-    ) + ") t(doc_id, n_feats, log_w)"
-
-
 def _zlib_oracle_values() -> str:
     """Twin replay of _q_zlib_ratio: the same CPython zlib at level 6.
     Rounding must be HALF_UP (Spark's round on double goes through
@@ -2551,8 +2375,7 @@ _STOP_EN = "'the','and','of','to','a','in','is','that','it','for'"
 
 # Shared DuckDB CTE replaying textstats.quality_score with source
 # carried through — ends in s(doc_id, source, quality). Used by the
-# quantile_filter / preference_pairs / quantile_threshold_filter
-# oracles (single definition so the twin formula cannot drift).
+# quantile_filter oracle.
 _QUALITY_SRC_CTE = rf"""
         WITH f AS (
             SELECT doc_id, source,
@@ -2703,60 +2526,6 @@ def oracle_sql() -> dict[str, str]:
                         ELSE len(regexp_split_to_array(trim(lower(c.text)), '\s+')) END) AS BIGINT) AS n_tokens
         FROM capped c JOIN raw r ON c.conv_id = r.conv_id
         GROUP BY c.conv_id
-    """
-    # chat_template_spans: rendered = {start}{role}\n{text}{end}; span
-    # offsets are exact prefix sums of rendered lengths, replayed via
-    # the same 1-preceding cumulative-length window Spark uses.
-    q["chat_template_spans"] = r"""
-        WITH t AS (
-            SELECT CAST(user_id AS VARCHAR) AS conv_id,
-                   CAST(event_id AS INT) AS turn_idx,
-                   event_type AS role,
-                   '<|im_start|>' || event_type || chr(10) || props
-                       || '<|im_end|>' || chr(10) AS rendered,
-                   len('<|im_start|>' || event_type || chr(10)) AS hlen,
-                   len(props) AS tlen
-            FROM events
-        ), o AS (
-            SELECT *, coalesce(sum(len(rendered)) OVER (
-                          PARTITION BY conv_id ORDER BY turn_idx
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                      0) AS off
-            FROM t
-        )
-        SELECT conv_id,
-               string_agg(rendered, '' ORDER BY turn_idx) AS document,
-               coalesce(string_agg(
-                   CASE WHEN role = 'purchase'
-                        THEN (off + hlen) || '-' || (off + hlen + tlen) END,
-                   ';' ORDER BY turn_idx), '') AS spans_str,
-               CAST(count(*) FILTER (WHERE role = 'purchase') AS BIGINT)
-                   AS n_targets,
-               CAST(coalesce(sum(tlen) FILTER (WHERE role = 'purchase'), 0)
-                    AS BIGINT) AS target_chars
-        FROM o GROUP BY conv_id
-    """
-    # conv_tail_budget: reverse cumulative whitespace-token sum, keep
-    # the suffix fitting the budget (same window Spark runs).
-    q["conv_tail_budget"] = r"""
-        WITH t AS (
-            SELECT CAST(user_id AS VARCHAR) AS conv_id,
-                   CAST(event_id AS INT) AS turn_idx,
-                   event_type AS role,
-                   CASE WHEN trim(props) = '' THEN 0
-                        ELSE len(regexp_split_to_array(trim(lower(props)),
-                                                       '\s+')) END AS toks
-            FROM events
-        ), c AS (
-            SELECT conv_id, turn_idx, role,
-                   CAST(sum(toks) OVER (
-                       PARTITION BY conv_id ORDER BY turn_idx DESC
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                    AS BIGINT) AS cum_tokens
-            FROM t
-        )
-        SELECT conv_id, turn_idx, role, cum_tokens FROM c
-        WHERE cum_tokens <= 40
     """
     q["r4_router_counts"] = """
         SELECT sink, count(*) AS n FROM (
@@ -3076,7 +2845,6 @@ def oracle_sql() -> dict[str, str]:
     """
     q["dedup_simhash"] = _value_oracle("simhash", _simhash_oracle_values)
     q["dedup_substring"] = _value_oracle("substring", _substring_oracle_values)
-    q["dsir_weights"] = _value_oracle("dsir", _dsir_oracle_values)
     q["temperature_mix"] = _value_oracle("temperature_mix",
                                          _temperature_oracle_values)
     q["text_zlib_ratio"] = _value_oracle("text_zlib_ratio",
@@ -3813,41 +3581,6 @@ def oracle_sql() -> dict[str, str]:
         _prof_branch("n_chars", "bigint", True),
     ])
 
-    # NB classifier replay: same tokenizer twin, exact counts, the same
-    # Laplace-1 LLR formula in ln(), prior log-odds, per-doc sums.
-    q["nb_classifier"] = rf"""
-        WITH lab AS (
-            SELECT doc_id, text, (lang = 'en') AS y FROM documents
-        ), tok AS (
-            SELECT doc_id, y, unnest({_toks}) AS token FROM lab
-        ), counts AS (
-            SELECT token,
-                   CAST(sum(CASE WHEN y THEN 1 ELSE 0 END) AS DOUBLE) AS c1,
-                   CAST(sum(CASE WHEN y THEN 0 ELSE 1 END) AS DOUBLE) AS c0
-            FROM tok GROUP BY token
-        ), tot AS (
-            SELECT sum(c1) AS n1, sum(c0) AS n0,
-                   CAST(count(*) AS DOUBLE) AS v
-            FROM counts
-        ), llr AS (
-            SELECT token, ln((c1 + 1.0) / (n1 + v)) - ln((c0 + 1.0) / (n0 + v))
-                       AS llr
-            FROM counts, tot
-        ), prior AS (
-            SELECT ln((sum(CASE WHEN y THEN 1 ELSE 0 END) + 1.0)
-                      / (sum(CASE WHEN y THEN 0 ELSE 1 END) + 1.0)) AS p
-            FROM lab
-        ), per_doc AS (
-            SELECT t.doc_id, sum(coalesce(l.llr, 0.0)) AS s
-            FROM tok t LEFT JOIN llr l USING (token)
-            GROUP BY t.doc_id
-        )
-        SELECT lab.doc_id,
-               round(prior.p + coalesce(pd.s, 0.0), 4) AS nb4,
-               round(prior.p + coalesce(pd.s, 0.0), 4) > 0 AS nb_pred
-        FROM lab LEFT JOIN per_doc pd USING (doc_id), prior
-    """
-
     # SemDeDup replay: corpus ∪ perturbed companion, assignment by
     # cosine argmax over the 8 smallest-id seed centroids (ties →
     # smallest centroid_id, same as the Spark struct-argmax), then the
@@ -3955,24 +3688,6 @@ def oracle_sql() -> dict[str, str]:
                concat(c_mktsegment, ',', c_name) AS seg_name,
                c_nationkey AS nk, '' AS tags_str
         FROM customer
-    """
-    q["context_windows"] = """
-        WITH t AS (
-            SELECT CAST(user_id AS VARCHAR) AS conv_id,
-                   CAST(event_id AS INTEGER) AS turn_idx,
-                   event_type AS role, props AS text
-            FROM events
-        )
-        SELECT conv_id, turn_idx,
-               coalesce(array_to_string(
-                   list(concat(role, ': ', text)) OVER win, chr(10)), '')
-                   AS context,
-               CAST(coalesce(len(list(1) OVER win), 0) AS INTEGER) AS n_ctx,
-               text AS target
-        FROM t
-        WINDOW win AS (PARTITION BY conv_id ORDER BY turn_idx
-                       ROWS BETWEEN 4 PRECEDING AND 1 PRECEDING)
-        QUALIFY role = 'purchase'
     """
     q["throttle_rate"] = """
         SELECT event_id,
@@ -4376,27 +4091,6 @@ def oracle_sql() -> dict[str, str]:
     q["url_canonical"] = _value_oracle(
         "url_canonical", _build_url_canonical_sql)
 
-    # preference_pairs: quality formula + two rank windows (score DESC
-    # / ASC, both tie-broken by doc_id ASC), zero-gap groups dropped.
-    q["preference_pairs"] = _QUALITY_SRC_CTE + """
-        , c AS (
-            SELECT source, doc_id, quality,
-                   ROW_NUMBER() OVER (PARTITION BY source
-                                      ORDER BY quality DESC, doc_id) AS rk
-            FROM s
-        ), r AS (
-            SELECT source, doc_id, quality,
-                   ROW_NUMBER() OVER (PARTITION BY source
-                                      ORDER BY quality ASC, doc_id) AS rk
-            FROM s
-        )
-        SELECT c.source, c.doc_id AS chosen_id, r.doc_id AS rejected_id,
-               c.quality AS chosen_score, r.quality AS rejected_score,
-               c.quality - r.quality AS score_gap
-        FROM c JOIN r ON c.source = r.source AND c.rk = 1 AND r.rk = 1
-        WHERE c.quality - r.quality > 0
-    """
-
     q["hard_negatives"] = """
         WITH e AS (
             SELECT vec_id, label,
@@ -4460,52 +4154,6 @@ def oracle_sql() -> dict[str, str]:
                CAST(SUM(e.event_id) AS BIGINT) AS sum_ids
         FROM events e JOIN t ON e.event_type = t.event_type
         WHERE e.value > t.thr GROUP BY e.event_type
-    """
-
-    # graph_pagerank: the 3 power-iteration rounds unrolled as chained
-    # CTEs. Every constant is forced to DOUBLE (DuckDB parses bare
-    # decimal literals as DECIMAL, which would change the arithmetic);
-    # dangling mass multiplies by inv_n (not /N) to mirror the Spark
-    # plan's `dangling * (1/N)` literal bit-for-bit.
-    _pr_iters = "".join(
-        f""",
-        c{i} AS (
-            SELECT e.dst AS node, SUM(r.rank / r.dg) AS c
-            FROM e JOIN r{i - 1} r ON e.src = r.node GROUP BY e.dst
-        ),
-        g{i} AS (
-            SELECT COALESCE(SUM(rank), 0.0::DOUBLE) AS dm
-            FROM r{i - 1} WHERE dg IS NULL
-        ),
-        r{i} AS (
-            SELECT nd.node, nd.dg,
-                   (SELECT base FROM nn) + 0.85::DOUBLE *
-                   (COALESCE(c{i}.c, 0.0::DOUBLE)
-                    + (SELECT dm FROM g{i}) * (SELECT inv_n FROM nn)) AS rank
-            FROM nd LEFT JOIN c{i} ON nd.node = c{i}.node
-        )"""
-        for i in (1, 2, 3)
-    )
-    q["graph_pagerank"] = f"""
-        WITH e AS (
-            SELECT user_id % 24 AS src, event_id % 32 AS dst FROM events
-        ),
-        nodes AS (
-            SELECT DISTINCT node FROM (
-                SELECT src AS node FROM e UNION ALL SELECT dst FROM e)
-        ),
-        deg AS (SELECT src, COUNT(*) AS dg FROM e GROUP BY src),
-        nd AS (
-            SELECT n.node, d.dg FROM nodes n LEFT JOIN deg d ON n.node = d.src
-        ),
-        nn AS (
-            SELECT 1.0::DOUBLE / COUNT(*) AS inv_n,
-                   (1.0::DOUBLE - 0.85::DOUBLE) / COUNT(*) AS base
-            FROM nd
-        ),
-        r0 AS (SELECT node, dg, (SELECT inv_n FROM nn) AS rank FROM nd)
-        {_pr_iters}
-        SELECT node, ROUND(rank, 6) AS rank6 FROM r3
     """
 
     # zorder_key: the identical Morton shift/mask expression replayed

@@ -74,135 +74,3 @@ def assemble_conversations(
         "last_ts",
     )
 
-
-def context_windows(
-    df: DataFrame,
-    k: int,
-    target_role: str = "assistant",
-    sep: str = "\n",
-) -> DataFrame:
-    """Sliding-context training examples: one row per ``target_role``
-    turn, pairing it with the rendered previous ≤k turns.
-
-    The SFT-example constructor: for every assistant turn, context =
-    the k turns before it (any role), target = the turn's own text.
-    Physical shape: ONE conv_id exchange; the per-target context is a
-    ``collect_list(struct(turn_idx, line))`` over a rows-between
-    window frame (frame order follows the window's ORDER BY, so the
-    rendering is deterministic given unique turn_idx). The frame is
-    computed BEFORE the role filter so non-target turns still appear
-    in contexts; k bounds per-row state, so a 10⁶-turn conversation
-    costs O(k) per emitted example, never O(len(conv)).
-
-    Output: conv_id, turn_idx, context (string; empty for a
-    conversation-opening target), n_ctx, target.
-    """
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    from pyspark.sql import Window
-
-    w = (Window.partitionBy("conv_id").orderBy("turn_idx")
-               .rowsBetween(-k, -1))
-    ctx = F.collect_list(
-        F.struct(F.col("turn_idx").alias("turn_idx"),
-                 render_turn(F.col("role"), F.col("text")).alias("line"))
-    ).over(w)
-    return (df.withColumn("__ctx", ctx)
-              .filter(F.col("role") == target_role)
-              .select(
-                  "conv_id", "turn_idx",
-                  F.array_join(F.transform(F.col("__ctx"), lambda t: t["line"]),
-                               sep).alias("context"),
-                  F.size("__ctx").alias("n_ctx"),
-                  F.col("text").alias("target")))
-
-
-def render_chat_template(
-    df: DataFrame,
-    assistant_role: str = "assistant",
-    start_tok: str = "<|im_start|>",
-    end_tok: str = "<|im_end|>\n",
-) -> DataFrame:
-    """Chat-template rendering with loss-mask character spans — the
-    SFT-export stage: one model-ready training string per conversation
-    plus the [start, end) character spans of every ``assistant_role``
-    turn's CONTENT (header/footer tokens excluded), i.e. exactly the
-    regions a trainer unmasks for loss.
-
-    Each turn renders as ``{start_tok}{role}\\n{text}{end_tok}`` and the
-    document is the in-order concatenation with NO extra separator, so
-    span offsets are exact prefix sums of rendered-turn lengths.
-
-    Physical shape: ONE conv_id exchange. Offsets come from a
-    cumulative-length window over (conv_id, turn_idx); the groupBy that
-    follows reuses the window's hash partitioning (no second exchange —
-    pinned by the plan test). All string/offset math is JVM expressions;
-    spans sort by their (strictly increasing) start via
-    ``array_sort`` on a struct whose first field is ``s``.
-
-    Output: conv_id, document, loss_spans array<struct<s,e>> (empty —
-    not null — when a conversation has no assistant turn), n_targets,
-    target_chars.
-    """
-    from pyspark.sql import Window
-
-    header = F.concat(F.lit(start_tok), F.col("role"), F.lit("\n"))
-    rendered = F.concat(header, F.col("text"), F.lit(end_tok))
-    is_target = F.col("role") == assistant_role
-    w = (Window.partitionBy("conv_id").orderBy("turn_idx")
-               .rowsBetween(Window.unboundedPreceding, -1))
-    off = F.coalesce(F.sum(F.length(rendered)).over(w).cast("bigint"),
-                     F.lit(0).cast("bigint"))
-    s = (off + F.length(header)).cast("bigint")
-    e = (s + F.length(F.col("text"))).cast("bigint")
-    rows = df.select(
-        "conv_id",
-        F.struct(F.col("turn_idx").alias("turn_idx"),
-                 rendered.alias("line")).alias("__turn"),
-        F.when(is_target,
-               F.struct(s.alias("s"), e.alias("e"))).alias("__span"),
-        F.when(is_target, e - s).otherwise(F.lit(0)).cast("bigint")
-         .alias("__tchars"),
-    )
-    g = rows.groupBy("conv_id").agg(
-        F.array_sort(F.collect_list("__turn")).alias("__turns"),
-        F.array_sort(F.collect_list("__span")).alias("loss_spans"),
-        F.count(F.col("__span")).cast("bigint").alias("n_targets"),
-        F.sum("__tchars").cast("bigint").alias("target_chars"),
-    )
-    return g.select(
-        "conv_id",
-        F.array_join(F.transform(F.col("__turns"), lambda t: t["line"]), "")
-         .alias("document"),
-        "loss_spans", "n_targets", "target_chars",
-    )
-
-
-def truncate_tail_budget(df: DataFrame, budget: int) -> DataFrame:
-    """Context-budget trim: keep the longest conversation SUFFIX whose
-    cumulative whitespace-token count fits ``budget`` — the standard
-    prep before packing chat history into a bounded context window
-    (most-recent turns win; a turn that overflows drops itself and
-    everything earlier).
-
-    Physical shape: one window over (conv_id, turn_idx DESC) computing
-    the reverse cumulative token sum, then a filter — no second
-    exchange, no collect. The reverse cumsum is nondecreasing toward
-    older turns, so ``cum <= budget`` always selects a contiguous
-    suffix (zero-token turns keep it flat, never break contiguity).
-
-    Output: the input rows that survive, plus ``cum_tokens`` (tokens in
-    the kept suffix up to and including this turn, counted from the
-    conversation's end).
-    """
-    if budget < 0:
-        raise ValueError(f"budget must be >= 0, got {budget}")
-    from pyspark.sql import Window
-
-    from logstash_integration_jdbc_spark.operators.textstats import token_count
-
-    w = (Window.partitionBy("conv_id").orderBy(F.col("turn_idx").desc())
-               .rowsBetween(Window.unboundedPreceding, 0))
-    cum = F.sum(token_count(F.col("text")).cast("bigint")).over(w)
-    return (df.withColumn("cum_tokens", cum)
-              .filter(F.col("cum_tokens") <= budget))

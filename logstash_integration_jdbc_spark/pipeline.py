@@ -178,7 +178,15 @@ def build_router() -> Router:
 
 
 def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict[str, Any]:
-    """Execute one resumable batch; returns metrics + sink counts."""
+    """Execute one resumable batch; returns metrics + sink counts.
+
+    The batch is every row whose tracking column is strictly above the
+    committed watermark. A row that lands in the table after a batch
+    with max ts T committed, with ts at or below T, is never scanned: it
+    reaches no sink or aggregate and moves neither the watermark nor the
+    cursors (the reference drops late data the same way). A checkpoint
+    file that is not valid JSON raises before anything is written.
+    """
     t0 = time.time()
     tracker = ValueTracker(
         path=cfg.checkpoint_path,

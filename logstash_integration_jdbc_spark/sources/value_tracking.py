@@ -83,7 +83,14 @@ class ValueTracker:
     # -- persistence ------------------------------------------------------
     def _load(self) -> None:
         with open(self.path, encoding="utf-8") as f:
-            state = json.load(f)
+            try:
+                state = json.load(f)
+            except json.JSONDecodeError as e:
+                # never fall back to the initial value: that would
+                # re-ingest the whole table
+                raise ValueError(
+                    f"checkpoint {self.path} is not valid JSON ({e}); restore "
+                    "it or rerun with clean_run=True") from e
         if state.get("type") != self.tracking_type:
             raise ValueError(
                 f"checkpoint type {state.get('type')!r} does not match "

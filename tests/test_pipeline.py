@@ -182,6 +182,86 @@ class TestResume:
         assert matched.count() == m1["sinks"]["matched"]
         assert matched.groupBy("conv_id", "turn_idx").count().filter("count > 1").count() == 0
 
+    def test_late_rows_at_or_below_watermark_are_never_ingested(
+            self, spark, fixture_dir, tmp_path):
+        """The watermark contract: once a batch with max ts T commits, a
+        row appended later with ts <= T is never scanned, so it reaches no
+        sink and no aggregate, and the watermark and cursors move only on
+        the rows above T."""
+        import json
+
+        from logstash_integration_jdbc_spark.sources.scan import partition_cursors
+        from logstash_integration_jdbc_spark.sources.value_tracking import ValueTracker
+
+        table, out = str(tmp_path / "table"), str(tmp_path / "out")
+        ckpt = str(tmp_path / "ckpt.json")
+        full = spark.read.parquet(f"{fixture_dir}/transcripts.parquet")
+        cutoff = full.selectExpr("percentile_approx(ts, 0.5) AS c").first().c
+        base = full.filter(F.col("ts") <= F.lit(cutoff))
+        base.coalesce(1).write.parquet(table)
+
+        def cfg():
+            return PipelineConfig(
+                transcripts_path=table,
+                tool_dim_path=f"{fixture_dir}/tool_dim.parquet",
+                role_dim_path=f"{fixture_dir}/role_dim.parquet",
+                out_dir=out, checkpoint_path=ckpt)
+
+        m1 = run_pipeline(spark, PipelineConfig(**{**cfg().__dict__, "clean_run": True}))
+
+        # one appended file: late rows under new conv_ids, half of them at
+        # exactly T and half at their old ts below it, plus a few rows above T
+        t_max = base.agg(F.max("ts").alias("t_max"))
+        picked = base.orderBy("conv_id", "turn_idx").limit(40).withColumn(
+            "conv_id", F.concat(F.lit("zz-late-"), F.col("conv_id")))
+        at_t = (picked.filter(F.col("turn_idx") % 2 == 0).crossJoin(t_max)
+                .withColumn("ts", F.col("t_max")).drop("t_max"))
+        late = at_t.unionByName(picked.filter(F.col("turn_idx") % 2 == 1))
+        above = full.filter(F.col("ts") > F.lit(cutoff)).orderBy(
+            "ts", "conv_id", "turn_idx").limit(5)
+        late.unionByName(above).coalesce(1).write.mode("append").parquet(table)
+        n_above = above.count()
+        assert late.count() == 40 and n_above == 5
+
+        with open(ckpt, encoding="utf-8") as fh:
+            committed = json.load(fh)
+        expected = ValueTracker(path=ckpt, tracking_type="timestamp")
+        expected.path = str(tmp_path / "expected.json")
+        expected.set_value(above.agg(F.max("ts")).first()[0])
+        expected.set_partitions(partition_cursors(above))
+        expected.write()
+        with open(expected.path, encoding="utf-8") as fh:
+            want = json.load(fh)
+        # the late rows would move the cursors if they were ingested, and
+        # the rows above T do move them
+        wrong = ValueTracker(path=ckpt, tracking_type="timestamp")
+        wrong.set_partitions(partition_cursors(late.unionByName(above)))
+        assert wrong.partitions != expected.partitions
+        assert committed["partitions"] != want["partitions"]
+
+        m2 = run_pipeline(spark, cfg())
+        m3 = run_pipeline(spark, cfg())
+        assert m2["stages"]["scan"]["rows"] == sum(m2["sinks"].values()) == n_above
+        assert m3["stages"]["scan"]["rows"] == sum(m3["sinks"].values()) == 0
+        assert m3["agg_rows"] == {}
+
+        sinks = spark.read.option("basePath", os.path.join(out, "sinks")).parquet(
+            os.path.join(out, "sinks", "sink=*"))
+        assert sinks.filter(F.col("conv_id").startswith("zz-late-")).count() == 0
+        assert sinks.count() == m1["stages"]["scan"]["rows"] + n_above
+        tick = sinks.filter(F.col("run_id").cast("string") == m2["run_id"])
+        assert tick.count() == n_above
+        assert tick.join(t_max, F.col("ts") <= F.col("t_max")).count() == 0
+        agg = spark.read.parquet(os.path.join(out, "agg"))
+        assert {str(r.run_id) for r in agg.select("run_id").distinct().collect()} == {
+            m1["run_id"], m2["run_id"]}
+        assert (agg.filter(F.col("run_id").cast("string") == m2["run_id"])
+                .agg(F.sum("n_turns")).first()[0]) == n_above
+
+        with open(ckpt, encoding="utf-8") as fh:
+            got = json.load(fh)
+        assert (got["value"], got["partitions"]) == (want["value"], want["partitions"])
+
 
 class TestRetry:
     def test_with_retries_recovers_and_exhausts(self):

@@ -157,6 +157,32 @@ class TestFaultInjection:
         assert_committed(spark, table, out)
 
 
+@pytest.mark.parametrize("torn", ["empty", "truncated"])
+def test_torn_checkpoint_raises_before_any_write(spark, fixture_dir, ticked, torn):
+    """A checkpoint file that is empty or cut mid-JSON stops the run
+    before any sink or aggregate write and is left byte-identical: the
+    run never falls back to the epoch and re-ingests the table."""
+    table, out = ticked
+    path = os.path.join(out, "ckpt.json")
+    with open(path, "rb") as fh:
+        good = fh.read()
+    content = b"" if torn == "empty" else good[: len(good) // 2]
+    with open(path, "wb") as fh:
+        fh.write(content)
+
+    def tree():
+        return {p: os.stat(p).st_mtime_ns
+                for sub in ("sinks", "agg")
+                for p in glob.glob(os.path.join(out, sub, "**"), recursive=True)}
+
+    before = tree()
+    with pytest.raises(ValueError, match="checkpoint"):
+        run_pipeline(spark, config(fixture_dir, table, out))
+    assert tree() == before
+    with open(path, "rb") as fh:
+        assert fh.read() == content
+
+
 def count_jobs(spark, fn):
     """``fn()`` and the number of Spark jobs it ran."""
     sc = spark.sparkContext

@@ -338,22 +338,6 @@ def test_canonicalize_url_map_only_jvm(spark):
     assert "Exchange" not in plan and "EvalPython" not in plan
 
 
-def test_preference_pairs_single_aggregate_no_window(spark):
-    from logstash_integration_jdbc_spark.operators.preference import (
-        preference_pairs,
-    )
-    from logstash_integration_jdbc_spark.operators.textstats import quality_score
-
-    docs = quality_score(
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet"))
-    plan = plan_of(preference_pairs(docs, "source", "doc_id", "quality"))
-    # one partial+final hash aggregate over the group key — no window
-    # funnel, no join, map-side combine before the single exchange
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "Window" not in plan and "Join" not in plan
-    assert "EvalPython" not in plan
-
-
 def test_filter_above_quantile_broadcasts_thresholds_no_window(spark):
     from logstash_integration_jdbc_spark.operators.sampling import (
         filter_above_quantile,

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from logstash_integration_jdbc_spark.operators.textstats import (
@@ -534,3 +535,40 @@ def test_filter_above_quantile_threshold_form(spark):
 
     with _pytest.raises(ValueError):
         filter_above_quantile(df, "score", 0.0, "src")
+
+
+def test_temperature_sample_flattens_mix(spark):
+    from pyspark.sql import functions as F
+
+    from logstash_integration_jdbc_spark.operators.sampling import (
+        hash_uniform,
+        temperature_sample,
+    )
+
+    rows = [(i, "big" if i < 8000 else "small") for i in range(10_000)]
+    df = spark.createDataFrame(rows, "id int, src string")
+    out = temperature_sample(df, "src", F.col("id"), tau=2.0)
+    got = {r["src"]: r["n"] for r in
+           out.groupBy("src").agg(F.count(F.lit(1)).alias("n")).collect()}
+    # smallest source keeps everything (p=1); big source thins by
+    # (8000/2000)^(1/2-1) = 0.5
+    assert got["small"] == 2000
+    assert got["big"] == pytest.approx(4000, rel=0.05)
+    # deterministic: same call, same survivors
+    ids1 = sorted(r["id"] for r in out.collect())
+    ids2 = sorted(r["id"] for r in
+                  temperature_sample(df, "src", F.col("id"), tau=2.0).collect())
+    assert ids1 == ids2
+
+
+def test_temperature_tau1_noop_and_validation(spark):
+    from pyspark.sql import functions as F
+
+    from logstash_integration_jdbc_spark.operators.sampling import (
+        temperature_sample,
+    )
+
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "id int, src string")
+    assert temperature_sample(df, "src", F.col("id"), tau=1.0).count() == 2
+    with pytest.raises(ValueError):
+        temperature_sample(df, "src", F.col("id"), tau=0)
