@@ -626,33 +626,6 @@ def _q_contamination(spark, sf_dir):
         "corpus_id", "bench_id", "n_overlap")
 
 
-def _q_pack_sequences(spark, sf_dir):
-    # fixed-budget training-sequence packing (deterministic, cluster-
-    # size-independent); oracle = independent pure-Python greedy twin
-    # over the same bucket hash + token counts.
-    from logstash_integration_jdbc_spark.operators.sampling import pack_sequences
-
-    docs = _t(spark, sf_dir, "documents")
-    return pack_sequences(docs, budget=200, n_buckets=16).select(
-        "doc_id", "n_tokens", "bucket", "seq_idx")
-
-
-_SPLIT_FRACTIONS = {"train": 0.8, "val": 0.1, "test": 0.1}
-
-
-def _q_split_by_hash(spark, sf_dir):
-    # deterministic leakage-safe train/val/test split by key hash; the
-    # oracle recomputes every doc's assignment with the pure-Python
-    # XXH64 twin using the SAME cumulative-bound float accumulation.
-    from logstash_integration_jdbc_spark.operators.sampling import split_by_hash
-
-    docs = _t(spark, sf_dir, "documents")
-    out = split_by_hash(docs, F.col("doc_id"), _SPLIT_FRACTIONS)
-    return out.groupBy("split").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("doc_id").cast("bigint").alias("sum_ids"))
-
-
 def _q_normalize_unicode(spark, sf_dir):
     # Unicode canonicalization, made non-vacuous on the ASCII corpus by
     # appending a deterministic messy suffix (decomposed e+U+0301, a
@@ -687,27 +660,6 @@ def _q_dedup_incremental(spark, sf_dir):
     pairs = dedup_against_index(new, index, hist)
     return pairs.where(F.col("jaccard") >= 0.8).select(
         "new_id", "index_id", F.round("jaccard", 6).alias("jac"))
-
-
-def _q_text_embed(spark, sf_dir):
-    # hashed random-projection embedding (map-only text → array<double>);
-    # probed as exact integers: sum of squares, component sum, and three
-    # fixed components — the oracle recomputes them with the independent
-    # pure-python XXH64 twin (parity pinned in tests/test_xxhash.py).
-    from logstash_integration_jdbc_spark.operators.embed import embed_text
-
-    docs = _t(spark, sf_dir, "documents")
-    emb = embed_text(docs)
-    e = F.col("embedding")
-    return emb.select(
-        "doc_id",
-        F.aggregate(e, F.lit(0.0), lambda a, x: a + x * x)
-         .cast("long").alias("ss"),
-        F.aggregate(e, F.lit(0.0), lambda a, x: a + x)
-         .cast("long").alias("s1"),
-        F.element_at(e, 1).cast("long").alias("c0"),
-        F.element_at(e, 32).cast("long").alias("c31"),
-        F.element_at(e, 64).cast("long").alias("c63"))
 
 
 def _q_dissect_parse(spark, sf_dir):
@@ -968,22 +920,6 @@ def _q_range_gate(spark, sf_dir):
     return out.select(
         "event_id", F.col("range_ok").cast("int").alias("ok"),
         F.array_join("tags", ",").alias("tags_str"))
-
-
-def _q_temperature_mix(spark, sf_dir):
-    # T5/Pile temperature mixing over a skewed derived grouping
-    # (testdata sources are uniform, so skew is synthesized: 70/20/10):
-    # keep-prob p_s ∝ n_s^(1/τ−1), deterministic key-hash draw
-    from logstash_integration_jdbc_spark.operators.sampling import (
-        temperature_sample,
-    )
-
-    docs = _t(spark, sf_dir, "documents").withColumn(
-        "bucket",
-        F.when(F.col("doc_id") % 10 < 7, "big")
-         .when(F.col("doc_id") % 10 < 9, "mid").otherwise("small"))
-    out = temperature_sample(docs, "bucket", F.col("doc_id"), tau=2.0)
-    return out.select("doc_id", "bucket")
 
 
 def _q_metrics_rates(spark, sf_dir):
@@ -1253,21 +1189,6 @@ def _q_mutate_fields(spark, sf_dir):
                       "name", "seg", "label")
 
 
-def _q_profile_table(spark, sf_dir):
-    # One-pass column profile of `documents`; exact distincts so the
-    # SQL replay matches bit-for-bit (the approx/HLL path is the 100 TB
-    # default and is plan-tested instead); round(6) on the moments.
-    from logstash_integration_jdbc_spark.operators.profile import profile
-
-    docs = _t(spark, sf_dir, "documents")
-    out = profile(docs, exact_distinct=True)
-    return out.select(
-        "column", "dtype", "n_rows", "n_nulls", "n_distinct",
-        "min_val", "max_val",
-        F.round("mean", 6).alias("mean6"),
-        F.round("stddev", 6).alias("sd6"))
-
-
 def _q_semantic_dedup(spark, sf_dir):
     # SemDeDup (arXiv:2303.09540) over the corpus ∪ its perturbed
     # companion (the embedding_near_dup construction: cosine(v, v') ≈
@@ -1338,48 +1259,6 @@ def _q_perplexity(spark, sf_dir):
 
     docs = spread(_t(spark, sf_dir, "documents"), "doc_id")
     return perplexity(docs)
-
-
-def _q_sample_weighted(spark, sf_dir):
-    # quality-proportional deterministic downsample: keep-probability
-    # 0.5 * min(n_chars/400, 1), decided by the doc_id hash; the oracle
-    # replays every decision with the pure-Python XXH64 twin.
-    from logstash_integration_jdbc_spark.operators.sampling import (
-        sample_weighted,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    w = F.least(F.col("n_chars") / 400.0, F.lit(1.0))
-    out = sample_weighted(docs, F.col("doc_id"), w, scale=0.5)
-    return out.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("doc_id").cast("bigint").alias("sum_ids"))
-
-
-def _q_quota_per_source(spark, sf_dir):
-    # domain balancing: cap each source at 30 docs, survivors chosen by
-    # the deterministic doc_id-hash draw; per-source survivor count +
-    # id-sum is replayed by the XXH64 twin.
-    from logstash_integration_jdbc_spark.operators.sampling import (
-        quota_per_group,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    out = quota_per_group(docs, "source", 30, tiebreak_col="doc_id")
-    return out.groupBy("source").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("doc_id").cast("bigint").alias("sum_ids"))
-
-
-def _q_curation_funnel(spark, sf_dir):
-    # end-to-end curation composition (redact → quality gate → language
-    # gate → normalized exact dedup): the one-row per-stage survivor
-    # funnel must equal a single DuckDB CTE chain replaying all four
-    # stages over the same corpus.
-    from logstash_integration_jdbc_spark.operators.curate import curation_funnel
-
-    docs = _t(spark, sf_dir, "documents")
-    return curation_funnel(docs)
 
 
 def _q_dedup_minhash(spark, sf_dir):
@@ -1796,44 +1675,6 @@ def _q_transcript_pipeline(spark, sf_dir):
     return enriched.groupBy(sink.alias("sink")).agg(F.count(F.lit(1)).alias("n"))
 
 
-def _q_quantile_filter(spark, sf_dir):
-    # FineWeb-style "keep the top 25% by classifier score per source":
-    # integer rank gate (ceil(p*n) survivors ordered score DESC, id
-    # ASC) — no float quantile interpolation to diverge between
-    # engines; the oracle replays the quality formula + the same
-    # window in DuckDB.
-    from logstash_integration_jdbc_spark.operators.sampling import (
-        filter_top_quantile,
-    )
-    from logstash_integration_jdbc_spark.operators.textstats import quality_score
-
-    docs = _t(spark, sf_dir, "documents")
-    out = filter_top_quantile(quality_score(docs), "quality", 0.25,
-                              group_col="source", tiebreak_col="doc_id")
-    return out.groupBy("source").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_kept"),
-        F.sum("doc_id").cast("bigint").alias("sum_ids"))
-
-
-def _q_token_budget_mix(spark, sf_dir):
-    # data mixing by TOKEN quota: admit docs per source in
-    # deterministic hash order until an 800-token budget would be
-    # exceeded (quota by tokens, not rows — long-doc sources exhaust
-    # their share with fewer documents). XXH64-twin VALUES oracle.
-    from logstash_integration_jdbc_spark.operators.sampling import (
-        token_budget_per_group,
-    )
-    from logstash_integration_jdbc_spark.operators.textstats import token_count
-
-    docs = _t(spark, sf_dir, "documents").withColumn(
-        "n_tokens", token_count(F.col("text")))
-    out = token_budget_per_group(docs, "source", 800, "n_tokens")
-    return out.groupBy("source").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum("n_tokens").cast("bigint").alias("n_tokens"),
-        F.sum("doc_id").cast("bigint").alias("sum_ids"))
-
-
 def _url_variant_exprs(d):
     """Deterministic synthetic URL from a doc_id — Spark-expression
     form, mirrored value-for-value by ``_url_variant_py``. Covers mixed
@@ -1881,27 +1722,6 @@ def _q_url_canonical(spark, sf_dir):
         "doc_id", _url_variant_exprs(d).alias("url"))
     canon = docs.select("doc_id", canonicalize_url(F.col("url")).alias("canon"))
     return canon.where(d % 20 == 3).orderBy("doc_id")
-
-
-def _q_quantile_threshold_filter(spark, sf_dir):
-    # the scale form of quantile filtering: per-group p75 threshold
-    # over a CONTINUOUS score (tiny agg, broadcast back), keep
-    # strictly above — map-only on the corpus side, no giant per-group
-    # window. Uses events.value (the discrete document quality score
-    # is degenerate here: its per-source median IS its max, so
-    # strictly-above would be vacuously empty). Exact interpolated
-    # percentile ≡ DuckDB quantile_cont; any 1-ulp formula difference
-    # lands strictly between the two order stats, so the comparison
-    # set is stable.
-    from logstash_integration_jdbc_spark.operators.sampling import (
-        filter_above_quantile,
-    )
-
-    ev = _t(spark, sf_dir, "events")
-    out = filter_above_quantile(ev, "value", 0.75, "event_type")
-    return out.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_kept"),
-        F.sum("event_id").cast("bigint").alias("sum_ids"))
 
 
 def _q_hard_negatives(spark, sf_dir):
@@ -1962,7 +1782,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "embedding_near_dups_scalable": _q_embedding_near_dups_scalable,
         "streaming_counts": _q_streaming_counts,
         "streaming_dedup": _q_streaming_dedup,
-        "curation_funnel": _q_curation_funnel,
         "transcript_pipeline": _q_transcript_pipeline,
         "s2_incremental_scan": _q_incremental_scan,
         "j1_streaming_lookup": _q_streaming_lookup,
@@ -2015,9 +1834,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_quality": _q_quality,
         "text_langid": _q_langid,
         "text_redact_pii": _q_redact_pii,
-        "split_by_hash": _q_split_by_hash,
         "contamination_check": _q_contamination,
-        "pack_sequences": _q_pack_sequences,
         "ann_ivf_topk": _q_ann_ivf_topk,
         "ann_ivf_lloyd_topk": _q_ann_ivf_lloyd_topk,
         "ann_lsh_topk": _q_ann_lsh_topk,
@@ -2044,17 +1861,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_tfidf": _q_tfidf,
         "text_chunk_docs": _q_chunk_docs,
         "text_perplexity": _q_perplexity,
-        "sample_weighted": _q_sample_weighted,
-        "quota_per_source": _q_quota_per_source,
         "dedup_incremental": _q_dedup_incremental,
         "normalize_unicode": _q_normalize_unicode,
-        "profile_table": _q_profile_table,
-        "text_embed": _q_text_embed,
         "anomaly_counts": _q_anomaly_counts,
         "xml_parse": _q_xml_parse,
         "uuid_stamp": _q_uuid_stamp,
         "metrics_rates": _q_metrics_rates,
-        "temperature_mix": _q_temperature_mix,
         "json_encode_event": _q_json_encode,
         "range_gate": _q_range_gate,
         "text_zlib_ratio": _q_zlib_ratio,
@@ -2064,9 +1876,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "hybrid_rrf_topk": _q_hybrid_rrf,
         "streaming_pairs": _q_streaming_pairs,
         "ann_quantized_topk": _q_ann_quantized_topk,
-        "quantile_filter": _q_quantile_filter,
-        "token_budget_mix": _q_token_budget_mix,
-        "quantile_threshold_filter": _q_quantile_threshold_filter,
     }
 
 
@@ -2330,41 +2139,6 @@ def _bpe_oracle_values() -> str:
             + ") t(doc_id, bpe_len, toks_md5)")
 
 
-def _temperature_oracle_values() -> str:
-    """Twin replay of _q_temperature_mix: skewed bucket per doc_id%10,
-    keep-prob n_s^(1/2-1)/max, survivors by the shared key-hash draw."""
-    import duckdb
-
-    from logstash_integration_jdbc_spark.functions.xxhash import xxh64_str
-    from logstash_integration_jdbc_spark.operators.sampling import (
-        HASH_BUCKETS,
-    )
-
-    rows = duckdb.sql(
-        f"SELECT doc_id FROM "
-        f"read_parquet('{_ORACLE_SF_DIR}/documents.parquet') ORDER BY doc_id"
-    ).fetchall()
-
-    def bucket(did: int) -> str:
-        m = did % 10
-        return "big" if m < 7 else ("mid" if m < 9 else "small")
-
-    from collections import Counter
-
-    n = Counter(bucket(d) for (d,) in rows)
-    raw = {s: c ** (1.0 / 2.0 - 1.0) for s, c in n.items()}
-    mx = max(raw.values())
-    p = {s: v / mx for s, v in raw.items()}
-    kept = []
-    for (did,) in rows:
-        u = (xxh64_str(f"{did}#42") % HASH_BUCKETS) / float(HASH_BUCKETS)
-        if u < p[bucket(did)]:
-            kept.append((did, bucket(did)))
-    return "SELECT * FROM (VALUES " + ", ".join(
-        f"(CAST({d} AS BIGINT), '{b}')" for d, b in kept
-    ) + ") t(doc_id, bucket)"
-
-
 def _fingerprint_oracle_values() -> str:
     rows = [(did, _py_fingerprint(text)) for did, text in _read_docs()]
     return "SELECT * FROM (VALUES " + ", ".join(
@@ -2373,34 +2147,6 @@ def _fingerprint_oracle_values() -> str:
 
 _STOP_EN = "'the','and','of','to','a','in','is','that','it','for'"
 
-# Shared DuckDB CTE replaying textstats.quality_score with source
-# carried through — ends in s(doc_id, source, quality). Used by the
-# quantile_filter oracle.
-_QUALITY_SRC_CTE = rf"""
-        WITH f AS (
-            SELECT doc_id, source,
-                CASE WHEN trim(text) = '' THEN []::VARCHAR[]
-                     ELSE regexp_split_to_array(trim(lower(text)), '\s+') END AS toks,
-                length(text) AS n_chars,
-                length(text) - length(regexp_replace(text, '[^\w\s]', '', 'g')) AS n_punct,
-                length(regexp_replace(text, '\s+', '', 'g')) AS n_nospace
-            FROM documents
-        ), g AS (
-            SELECT doc_id, source, len(toks) AS n_tokens,
-                round(CASE WHEN n_chars > 0 THEN CAST(n_punct AS DOUBLE)/n_chars ELSE 0.0 END, 6) AS punct_ratio,
-                round(CASE WHEN len(toks) > 0
-                      THEN CAST(len(list_filter(toks, t -> t IN ({_STOP_EN}))) AS DOUBLE)/len(toks)
-                      ELSE 0.0 END, 6) AS stopword_ratio,
-                round(CASE WHEN len(toks) > 0 THEN CAST(n_nospace AS DOUBLE)/len(toks) ELSE 0.0 END, 6) AS mean_word_len
-            FROM f
-        ), s AS (
-            SELECT doc_id, source,
-                CAST(round((CASE WHEN n_tokens >= 10 THEN 0.25 ELSE 0.0 END)
-              + (CASE WHEN mean_word_len > 1.0 AND mean_word_len <= 12.0 THEN 0.25 ELSE 0.0 END)
-              + (CASE WHEN punct_ratio < 0.3 THEN 0.25 ELSE 0.0 END)
-              + (CASE WHEN stopword_ratio > 0.0 THEN 0.25 ELSE 0.0 END), 2) AS DOUBLE) AS quality
-            FROM g
-        )"""
 _STOP = {
     "en": _STOP_EN,
     "de": "'der','die','das','und','ist','nicht','ein','zu','mit','auf'",
@@ -2717,79 +2463,6 @@ def oracle_sql() -> dict[str, str]:
         f"CAST(length({_red}) AS INT) AS red_len FROM documents"
     )
 
-    # split-by-hash: per-split (n, sum_ids) recomputed with the
-    # pure-Python XXH64 twin and the operator's own cumulative-bound
-    # accumulation (bit-identical floats on both sides).
-    def _build_split_sql() -> str:
-        import duckdb as _dk
-
-        from logstash_integration_jdbc_spark.functions.xxhash import xxh64_str
-        from logstash_integration_jdbc_spark.operators.sampling import (
-            HASH_BUCKETS,
-        )
-
-        ids = [r[0] for r in _dk.sql(
-            f"SELECT doc_id FROM read_parquet('{_ORACLE_SF_DIR}/documents.parquet')"
-        ).fetchall()]
-        items = list(_SPLIT_FRACTIONS.items())
-        bounds = []
-        cum = 0.0
-        for name, frac in items[:-1]:
-            cum += frac  # same accumulation order as split_by_hash
-            bounds.append((name, cum))
-        agg: dict[str, list[int]] = {}
-        for did in ids:
-            u = (xxh64_str(f"{did}#42") % HASH_BUCKETS) / float(HASH_BUCKETS)
-            s = items[-1][0]
-            for name, b in bounds:
-                if u < b:
-                    s = name
-                    break
-            a = agg.setdefault(s, [0, 0])
-            a[0] += 1
-            a[1] += did
-        vals = ", ".join(
-            f"('{s}', CAST({n} AS BIGINT), CAST({sm} AS BIGINT))"
-            for s, (n, sm) in sorted(agg.items())
-        )
-        return f"SELECT * FROM (VALUES {vals}) t(split, n, sum_ids)"
-
-    q["split_by_hash"] = _value_oracle("split_by_hash", _build_split_sql)
-
-    def _build_pack_sql() -> str:
-        import duckdb as _dk
-
-        from logstash_integration_jdbc_spark.functions.xxhash import (
-            spark_ws_tokens,
-            xxh64_str,
-        )
-
-        rows = _dk.sql(
-            "SELECT doc_id, text FROM "
-            f"read_parquet('{_ORACLE_SF_DIR}/documents.parquet')"
-        ).fetchall()
-        per_bucket: dict[int, list[tuple[int, int]]] = {}
-        for did, text in rows:
-            n = 0 if text.strip(" ") == "" else len(spark_ws_tokens(text))
-            b = xxh64_str(f"{did}#pack42") % 16
-            per_bucket.setdefault(b, []).append((did, n))
-        out = []
-        for b, docs_in in per_bucket.items():
-            seq, used = 0, 0
-            for did, n in sorted(docs_in):
-                if used > 0 and used + n > 200:
-                    seq += 1
-                    used = 0
-                out.append((did, n, b, seq))
-                used += n
-        vals = ", ".join(
-            f"(CAST({d} AS BIGINT), {n}, {b}, CAST({s} AS BIGINT))"
-            for d, n, b, s in out
-        )
-        return (f"SELECT * FROM (VALUES {vals}) "
-                "t(doc_id, n_tokens, bucket, seq_idx)")
-
-    q["pack_sequences"] = _value_oracle("pack_sequences", _build_pack_sql)
     q["contamination_check"] = r"""
         WITH tok AS (
             SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS w, text
@@ -2845,8 +2518,6 @@ def oracle_sql() -> dict[str, str]:
     """
     q["dedup_simhash"] = _value_oracle("simhash", _simhash_oracle_values)
     q["dedup_substring"] = _value_oracle("substring", _substring_oracle_values)
-    q["temperature_mix"] = _value_oracle("temperature_mix",
-                                         _temperature_oracle_values)
     q["text_zlib_ratio"] = _value_oracle("text_zlib_ratio",
                                          _zlib_oracle_values)
     q["bpe_encode"] = _value_oracle("bpe", _bpe_oracle_values)
@@ -2949,64 +2620,6 @@ def oracle_sql() -> dict[str, str]:
                  WHEN f_en = greatest(f_en, f_de, f_fr, f_es) THEN 'en'
                  ELSE 'de' END AS lang_pred
         FROM s
-    """
-    # curation funnel: the full redact→quality→lang→dedup chain in ONE
-    # CTE pipeline over the redacted text (stage SQL bodies identical to
-    # the per-stage oracles above, re-rooted at the redaction).
-    _redraw = "text"
-    for _pat, _repl in PII_PATTERNS:
-        _redraw = f"regexp_replace({_redraw}, '{_pat}', '{_repl}', 'g')"
-    q["curation_funnel"] = rf"""
-        WITH red AS (
-            SELECT doc_id, {_redraw} AS text FROM documents
-        ), cf AS (
-            SELECT doc_id,
-                CASE WHEN trim(text) = '' THEN []::VARCHAR[]
-                     ELSE regexp_split_to_array(trim(lower(text)), '\s+') END AS toks,
-                length(text) AS n_chars,
-                length(text) - length(regexp_replace(text, '[^\w\s]', '', 'g')) AS n_punct,
-                length(regexp_replace(text, '\s+', '', 'g')) AS n_nospace,
-                CAST(length(regexp_replace(text, '[^一-鿿]', '', 'g')) AS DOUBLE)
-                    / greatest(length(text), 1) AS cjk_ratio,
-                text
-            FROM red
-        ), cg AS (
-            SELECT doc_id, toks, cjk_ratio, text, len(toks) AS n_tokens,
-                round(CASE WHEN n_chars > 0 THEN CAST(n_punct AS DOUBLE)/n_chars ELSE 0.0 END, 6) AS punct_ratio,
-                round(CASE WHEN len(toks) > 0
-                      THEN CAST(len(list_filter(toks, t -> t IN ({_STOP_EN}))) AS DOUBLE)/len(toks)
-                      ELSE 0.0 END, 6) AS stopword_ratio,
-                round(CASE WHEN len(toks) > 0 THEN CAST(n_nospace AS DOUBLE)/len(toks) ELSE 0.0 END, 6) AS mean_word_len
-            FROM cf
-        ), cq AS (
-            SELECT doc_id, toks, cjk_ratio, text FROM cg
-            WHERE round((CASE WHEN n_tokens >= 10 THEN 0.25 ELSE 0.0 END)
-                + (CASE WHEN mean_word_len > 1.0 AND mean_word_len <= 12.0 THEN 0.25 ELSE 0.0 END)
-                + (CASE WHEN punct_ratio < 0.3 THEN 0.25 ELSE 0.0 END)
-                + (CASE WHEN stopword_ratio > 0.0 THEN 0.25 ELSE 0.0 END), 2) >= 0.5
-        ), cl AS (
-            SELECT doc_id, text FROM (
-                SELECT doc_id, text, cjk_ratio,
-                       {frac['en']} AS f_en, {frac['de']} AS f_de,
-                       {frac['fr']} AS f_fr, {frac['es']} AS f_es
-                FROM cq
-            )
-            WHERE (CASE WHEN cjk_ratio > 0.25 THEN 'zh'
-                     WHEN greatest(f_en, f_de, f_fr, f_es) = 0 THEN 'unknown'
-                     WHEN f_fr = greatest(f_en, f_de, f_fr, f_es) THEN 'fr'
-                     WHEN f_es = greatest(f_en, f_de, f_fr, f_es) THEN 'es'
-                     WHEN f_en = greatest(f_en, f_de, f_fr, f_es) THEN 'en'
-                     ELSE 'de' END) = 'en'
-        ), cd AS (
-            SELECT doc_id FROM cl QUALIFY doc_id = min(doc_id) OVER (
-                PARTITION BY trim(regexp_replace(
-                    regexp_replace(lower(text), '[^\w\s]', '', 'g'),
-                    '\s+', ' ', 'g')))
-        )
-        SELECT (SELECT count(*) FROM red) AS n_input,
-               (SELECT count(*) FROM cq) AS n_quality,
-               (SELECT count(*) FROM cl) AS n_lang,
-               (SELECT count(*) FROM cd) AS n_dedup
     """
     q["ann_cosine_topk"] = """
         WITH e AS (
@@ -3471,116 +3084,6 @@ def oracle_sql() -> dict[str, str]:
         FROM t WHERE len(toks) < 2
     """
 
-    def _build_sample_weighted_sql() -> str:
-        import duckdb as _dk
-
-        from logstash_integration_jdbc_spark.functions.xxhash import xxh64_str
-        from logstash_integration_jdbc_spark.operators.sampling import (
-            HASH_BUCKETS,
-        )
-
-        rows = _dk.sql(
-            f"SELECT doc_id, n_chars FROM "
-            f"read_parquet('{_ORACLE_SF_DIR}/documents.parquet')"
-        ).fetchall()
-        n = 0
-        sm = 0
-        for did, n_chars in rows:
-            # mirror sample_weighted + the _q_sample_weighted weight:
-            # p = clamp(0.5 * min(n_chars/400, 1), 0, 1)
-            p = min(max(min(n_chars / 400.0, 1.0) * 0.5, 0.0), 1.0)
-            u = (xxh64_str(f"{did}#42") % HASH_BUCKETS) / float(HASH_BUCKETS)
-            if u < p:
-                n += 1
-                sm += did
-        return (f"SELECT CAST({n} AS BIGINT) AS n, "
-                f"CAST({sm} AS BIGINT) AS sum_ids")
-
-    q["sample_weighted"] = _value_oracle(
-        "sample_weighted", _build_sample_weighted_sql)
-
-    def _build_quota_sql() -> str:
-        import duckdb as _dk
-
-        from logstash_integration_jdbc_spark.functions.xxhash import xxh64_str
-        from logstash_integration_jdbc_spark.operators.sampling import (
-            HASH_BUCKETS,
-        )
-
-        rows = _dk.sql(
-            f"SELECT doc_id, source FROM "
-            f"read_parquet('{_ORACLE_SF_DIR}/documents.parquet')"
-        ).fetchall()
-        groups: dict[str, list[tuple[float, int]]] = {}
-        for did, src in rows:
-            u = (xxh64_str(f"{did}#42") % HASH_BUCKETS) / float(HASH_BUCKETS)
-            groups.setdefault(src, []).append((u, did))
-        vals = []
-        for src in sorted(groups):
-            kept = [d for _, d in sorted(groups[src])[:30]]
-            vals.append(
-                f"('{src}', CAST({len(kept)} AS BIGINT), "
-                f"CAST({sum(kept)} AS BIGINT))")
-        return ("SELECT * FROM (VALUES " + ", ".join(vals)
-                + ") t(source, n, sum_ids)")
-
-    q["quota_per_source"] = _value_oracle("quota_per_source", _build_quota_sql)
-
-    # text_embed: expected integer probes recomputed with the pure-
-    # python XXH64 twin over the same trim/lower/\s+ tokens.
-    def _build_text_embed_sql() -> str:
-        import duckdb as _dk
-
-        from logstash_integration_jdbc_spark.functions.xxhash import xxh64
-
-        rows = _dk.sql(
-            f"SELECT doc_id, text FROM "
-            f"read_parquet('{_ORACLE_SF_DIR}/documents.parquet')"
-        ).fetchall()
-        vals = []
-        for did, text in rows:
-            toks = text.strip().lower().split() if text and text.strip() else []
-            v = [0] * 64
-            for t in toks:
-                h = xxh64(t.encode("utf-8"))
-                for j in range(64):
-                    v[j] += 1 if (h >> j) & 1 else -1
-            ss = sum(x * x for x in v)
-            vals.append(
-                f"(CAST({did} AS BIGINT), CAST({ss} AS BIGINT), "
-                f"CAST({sum(v)} AS BIGINT), CAST({v[0]} AS BIGINT), "
-                f"CAST({v[31]} AS BIGINT), CAST({v[63]} AS BIGINT))")
-        return ("SELECT * FROM (VALUES " + ", ".join(vals)
-                + ") t(doc_id, ss, s1, c0, c31, c63)")
-
-    q["text_embed"] = _value_oracle("text_embed", _build_text_embed_sql)
-
-    # profile replay: per-column stats as a UNION ALL (one branch per
-    # documents column, Spark dtype names inlined as literals).
-    def _prof_branch(col: str, dtype: str, numeric: bool) -> str:
-        mean = (f"round(avg({col}), 6)" if numeric
-                else "CAST(NULL AS DOUBLE)")
-        sd = (f"round(stddev_samp({col}), 6)" if numeric
-              else "CAST(NULL AS DOUBLE)")
-        return f"""
-            SELECT '{col}' AS "column", '{dtype}' AS dtype,
-                   count(*) AS n_rows,
-                   CAST(sum(CASE WHEN {col} IS NULL THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_nulls,
-                   count(DISTINCT {col}) AS n_distinct,
-                   CAST(min({col}) AS VARCHAR) AS min_val,
-                   CAST(max({col}) AS VARCHAR) AS max_val,
-                   {mean} AS mean6, {sd} AS sd6
-            FROM documents"""
-
-    q["profile_table"] = " UNION ALL ".join([
-        _prof_branch("doc_id", "bigint", True),
-        _prof_branch("text", "string", False),
-        _prof_branch("lang", "string", False),
-        _prof_branch("source", "string", False),
-        _prof_branch("n_chars", "bigint", True),
-    ])
-
     # SemDeDup replay: corpus ∪ perturbed companion, assignment by
     # cosine argmax over the 8 smallest-id seed centroids (ties →
     # smallest centroid_id, same as the Spark struct-argmax), then the
@@ -4012,62 +3515,6 @@ def oracle_sql() -> dict[str, str]:
                concat('cust-', c_custkey, '/', lower(c_mktsegment)) AS label
         FROM customer
     """
-    # quantile_filter: the text_quality formula replayed with source
-    # carried through, then the SAME integer rank gate (ceil(p*n)
-    # survivors ordered quality DESC, doc_id ASC) as a window.
-    q["quantile_filter"] = _QUALITY_SRC_CTE + """
-        , r AS (
-            SELECT source, doc_id,
-                   ROW_NUMBER() OVER (PARTITION BY source
-                                      ORDER BY quality DESC, doc_id) AS rk,
-                   COUNT(*) OVER (PARTITION BY source) AS n
-            FROM s
-        )
-        SELECT source, CAST(COUNT(*) AS BIGINT) AS n_kept,
-               CAST(SUM(doc_id) AS BIGINT) AS sum_ids
-        FROM r WHERE rk <= CEIL(0.25 * n) GROUP BY source
-    """
-
-    # token_budget_mix: greedy admit-while-fits replayed by the
-    # pure-Python XXH64 twin (same hash order, same token counts).
-    def _build_token_budget_sql() -> str:
-        import duckdb as _dk
-
-        from logstash_integration_jdbc_spark.functions.xxhash import (
-            spark_ws_tokens,
-            xxh64_str,
-        )
-        from logstash_integration_jdbc_spark.operators.sampling import (
-            HASH_BUCKETS,
-        )
-
-        rows = _dk.sql(
-            f"SELECT doc_id, source, text FROM "
-            f"read_parquet('{_ORACLE_SF_DIR}/documents.parquet')"
-        ).fetchall()
-        groups: dict[str, list[tuple[float, int, int]]] = {}
-        for did, src, text in rows:
-            u = (xxh64_str(f"{did}#42") % HASH_BUCKETS) / float(HASH_BUCKETS)
-            n_tok = 0 if text.strip(" ") == "" else len(spark_ws_tokens(text))
-            groups.setdefault(src, []).append((u, did, n_tok))
-        vals = []
-        for src in sorted(groups):
-            cum, ids, toks = 0, [], 0
-            for _, did, n_tok in sorted(groups[src]):
-                cum += n_tok
-                if cum > 800:
-                    break
-                ids.append(did)
-                toks += n_tok
-            vals.append(f"('{src}', CAST({len(ids)} AS BIGINT), "
-                        f"CAST({toks} AS BIGINT), "
-                        f"CAST({sum(ids)} AS BIGINT))")
-        return ("SELECT * FROM (VALUES " + ", ".join(vals)
-                + ") t(source, n_docs, n_tokens, sum_ids)")
-
-    q["token_budget_mix"] = _value_oracle(
-        "token_budget_mix", _build_token_budget_sql)
-
     # url_canonical: same synthetic URLs rebuilt + canonicalized by the
     # independent urllib twin (functions/url.canonicalize_url_py).
     def _build_url_canonical_sql() -> str:
@@ -4141,19 +3588,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT a AS id, least(a, min(b)) AS component
             FROM reach GROUP BY a
         ) GROUP BY component
-    """
-
-    # quantile_threshold_filter: per-group exact interpolated p75
-    # threshold (quantile_cont ≡ Spark percentile), keep strictly above.
-    q["quantile_threshold_filter"] = """
-        WITH t AS (
-            SELECT event_type, quantile_cont(value, 0.75) AS thr
-            FROM events GROUP BY event_type
-        )
-        SELECT e.event_type, CAST(COUNT(*) AS BIGINT) AS n_kept,
-               CAST(SUM(e.event_id) AS BIGINT) AS sum_ids
-        FROM events e JOIN t ON e.event_type = t.event_type
-        WHERE e.value > t.thr GROUP BY e.event_type
     """
 
     # zorder_key: the identical Morton shift/mask expression replayed

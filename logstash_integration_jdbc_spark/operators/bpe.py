@@ -251,8 +251,7 @@ def bpe_encode(df: DataFrame, merges: list[tuple[str, str]],
 def bpe_token_count(df: DataFrame, merges: list[tuple[str, str]],
                     text_col: str = "text",
                     out_col: str = "bpe_len") -> DataFrame:
-    """Learned-vocabulary token counts (the budget input
-    ``pack_sequences`` wants).
+    """Learned-vocabulary token counts.
 
     Count-only kernel: per word it memoizes len(encode_word(...)) and
     returns one long per row — the token STRINGS are never concatenated

@@ -21,11 +21,10 @@ join — with no Python in the hot path. Scale shape:
   scan's.
 
 Reference provenance: the reference has no retrieval surface (it is a
-JDBC ingest plugin); these are the corpus-side operators a training
-pipeline needs between ingest (``sources/scan.py``) and dedup/packing
-(``operators/dedup.py`` / ``sampling.py``) — keyword-driven subset
-selection, quality-by-relevance filtering, and fixed-token-window
-chunking ahead of sequence packing.
+JDBC ingest plugin); these are the corpus-side operators that sit
+between ingest (``sources/scan.py``) and dedup (``operators/dedup.py``)
+— keyword-driven subset selection, quality-by-relevance filtering, and
+fixed-token-window chunking.
 """
 
 from __future__ import annotations

@@ -164,7 +164,7 @@ class Router:
                         # an AnalysisException and must NOT be rerouted to
                         # the positional insertInto.
                         msg = str(e)
-                        err_class = getattr(e, "getErrorClass", lambda: None)() or ""
+                        err_class = getattr(e, "getCondition", lambda: None)() or ""
                         v1_gap = ("TABLE_OPERATION" in err_class
                                   or "Cannot write into v1 table" in msg
                                   or "UnsupportedOperation" in msg

@@ -187,27 +187,12 @@ def test_exact_cosine_pairs_is_tiled_not_collected(spark):
 
 
 def test_redact_and_split_are_map_only_jvm(spark):
-    from logstash_integration_jdbc_spark.operators.sampling import split_by_hash
     from logstash_integration_jdbc_spark.operators.textstats import redact_pii
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     red = redact_pii(docs)
     plan = plan_of(red)
     assert "EvalPython" not in plan and "Exchange" not in plan
-    spl = split_by_hash(docs, F.col("doc_id"),
-                        {"train": 0.8, "val": 0.1, "test": 0.1})
-    plan = plan_of(spl)
-    assert "EvalPython" not in plan and "Exchange" not in plan
-
-
-def test_pack_sequences_single_bucket_exchange(spark):
-    from logstash_integration_jdbc_spark.operators.sampling import pack_sequences
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    plan = plan_of(pack_sequences(docs, budget=200))
-    # one shuffle on the bucket key feeding the packing kernel — the
-    # token count and bucket hash are map-side
-    assert plan.count("Exchange hashpartitioning") == 1
 
 
 def test_chunk_documents_is_map_only_jvm(spark):
@@ -302,31 +287,6 @@ def test_rrf_fuse_single_aggregate_over_union(spark):
     assert "TakeOrdered" in plan
 
 
-def test_quantile_and_token_budget_single_group_exchange(spark):
-    from logstash_integration_jdbc_spark.operators.sampling import (
-        filter_top_quantile,
-        token_budget_per_group,
-    )
-    from logstash_integration_jdbc_spark.operators.textstats import (
-        quality_score,
-        token_count,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    plan = plan_of(filter_top_quantile(quality_score(docs), "quality", 0.25,
-                                       group_col="source"))
-    # rank + count share ONE window exchange on the group key; the
-    # score itself is map-side JVM expressions
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "EvalPython" not in plan
-
-    plan = plan_of(token_budget_per_group(
-        docs.withColumn("n_tokens", token_count(F.col("text"))),
-        "source", 800, "n_tokens"))
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "EvalPython" not in plan
-
-
 def test_canonicalize_url_map_only_jvm(spark):
     from logstash_integration_jdbc_spark.functions.url import with_canonical_url
 
@@ -336,20 +296,3 @@ def test_canonicalize_url_map_only_jvm(spark):
                  F.col("doc_id").cast("string")).alias("url"))
     plan = plan_of(with_canonical_url(docs))
     assert "Exchange" not in plan and "EvalPython" not in plan
-
-
-def test_filter_above_quantile_broadcasts_thresholds_no_window(spark):
-    from logstash_integration_jdbc_spark.operators.sampling import (
-        filter_above_quantile,
-    )
-    from logstash_integration_jdbc_spark.operators.textstats import quality_score
-
-    docs = quality_score(
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet"))
-    plan = plan_of(filter_above_quantile(docs, "quality", 0.5, "source"))
-    # tiny per-group threshold aggregate broadcast back; the corpus
-    # side is filtered map-only — no window, no sort-merge exchange
-    # of the big side on the group key
-    assert "BroadcastHashJoin" in plan
-    assert "Window" not in plan
-    assert "EvalPython" not in plan

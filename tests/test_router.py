@@ -134,6 +134,7 @@ def test_write_all_format_pluggable_json(spark, enriched, tmp_path):
     assert back.count() == counts["matched"] > 0
 
 
+@pytest.mark.filterwarnings("error::FutureWarning")
 def test_write_all_catalog_table_v2(spark, enriched, tmp_path):
     """catalog_table routes through DataFrameWriterV2 (the Iceberg API
     shape): create-partitioned on first write, overwritePartitions on

@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from logstash_integration_jdbc_spark.operators.textstats import (
@@ -114,157 +113,6 @@ def test_redact_pii(spark):
     assert got[4] == "call <PHONE> ok"
     assert got[5] == "none here 123 plain"
     assert got[6] == ""
-
-
-def test_split_by_hash_determinism_and_leakage(spark):
-    from logstash_integration_jdbc_spark.operators.sampling import (
-        sample_by_hash,
-        split_by_hash,
-    )
-
-    df = spark.range(5000).select(
-        F.col("id"), (F.col("id") % 500).alias("conv"))
-    out = split_by_hash(df, F.col("conv"), {"train": 0.8, "val": 0.1, "test": 0.1})
-    rows = out.collect()
-    # deterministic: rerun assigns identically
-    again = {(r.id): r.split for r in out.collect()}
-    assert all(again[r.id] == r.split for r in rows)
-    # leakage-safe: one split per conv key
-    per_conv = {}
-    for r in rows:
-        per_conv.setdefault(r.conv, set()).add(r.split)
-    assert all(len(s) == 1 for s in per_conv.values())
-    # proportions in the right ballpark over 500 keys
-    n = {s: 0 for s in ("train", "val", "test")}
-    for r in rows:
-        n[r.split] += 1
-    assert 0.7 < n["train"] / 5000 < 0.9
-    assert n["train"] + n["val"] + n["test"] == 5000
-
-    sub = sample_by_hash(df, F.col("conv"), 0.2)
-    k = sub.select("conv").distinct().count()
-    assert 50 < k < 150  # ~100 of 500 keys
-    # subset is key-closed: every kept conv keeps all its rows
-    assert sub.count() == k * 10
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="sum to 1"):
-        split_by_hash(df, F.col("conv"), {"a": 0.5, "b": 0.4})
-    # emptiness has its own message (ADVICE r4: checked BEFORE the sum)
-    with _pytest.raises(ValueError, match="must not be empty"):
-        split_by_hash(df, F.col("conv"), {})
-
-
-def test_pack_sequences_budget_and_determinism(spark):
-    from logstash_integration_jdbc_spark.operators.sampling import pack_sequences
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    out = pack_sequences(docs, budget=150, n_buckets=8)
-    rows = out.collect()
-    assert len(rows) == docs.count()
-    # every sequence respects the budget unless it is a single long doc
-    per_seq: dict = {}
-    for r in rows:
-        per_seq.setdefault((r.bucket, r.seq_idx), []).append(r.n_tokens)
-    for toks in per_seq.values():
-        assert sum(toks) <= 150 or len(toks) == 1
-    # deterministic across recomputation and independent of partitioning
-    again = {r.doc_id: (r.bucket, r.seq_idx)
-             for r in pack_sequences(docs.repartition(13), budget=150,
-                                     n_buckets=8).collect()}
-    assert all(again[r.doc_id] == (r.bucket, r.seq_idx) for r in rows)
-    # sequences fill greedily in id order within a bucket: seq indexes
-    # are contiguous from 0
-    by_bucket: dict = {}
-    for r in rows:
-        by_bucket.setdefault(r.bucket, set()).add(r.seq_idx)
-    for seqs in by_bucket.values():
-        assert seqs == set(range(len(seqs)))
-
-
-def test_curate_documents_end_to_end(spark):
-    from logstash_integration_jdbc_spark.operators.curate import (
-        curate_documents,
-        curation_funnel,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    out = curate_documents(docs)
-    rows = out.collect()
-    assert rows, "curation should keep some documents"
-    assert {"text_redacted", "quality", "lang_pred", "split"} <= set(out.columns)
-    assert all(r.quality >= 0.5 and r.lang_pred == "en" for r in rows)
-    assert {r.split for r in rows} <= {"train", "val", "test"}
-    # dedup kept one representative per normalized redacted text
-    texts = [r.text_redacted.lower() for r in rows]
-    from logstash_integration_jdbc_spark.operators.dedup import (
-        normalize_text_expr,  # noqa: F401  (expression parity is oracle-tested)
-    )
-
-    funnel = curation_funnel(docs).first()
-    assert funnel.n_input == docs.count()
-    assert (funnel.n_input >= funnel.n_quality >= funnel.n_lang
-            >= funnel.n_dedup == len(rows))
-
-
-def test_sample_weighted_bias_and_determinism(spark):
-    from logstash_integration_jdbc_spark.operators.sampling import (
-        hash_uniform,
-        sample_weighted,
-    )
-
-    df = spark.range(4000).select(
-        F.col("id"),
-        (F.when(F.col("id") % 2 == 0, 0.9).otherwise(0.1)).alias("q"))
-    out = sample_weighted(df, F.col("id"), F.col("q"), scale=1.0)
-    rows = out.collect()
-    hi = sum(1 for r in rows if r.q == 0.9)
-    lo = len(rows) - hi
-    # retention tracks the weight: ~90% of heavy rows, ~10% of light
-    assert 1650 < hi < 1950 and 100 < lo < 300
-    # deterministic and replayable from the hash contract
-    again = {r.id for r in out.collect()}
-    assert {r.id for r in rows} == again
-    u = {r.id: r.u for r in df.select(
-        "id", hash_uniform(F.col("id")).alias("u")).collect()}
-    exp = {r.id for r in df.collect() if u[r.id] < min(r.q, 1.0)}
-    assert again == exp
-    # scale caps at probability 1
-    assert sample_weighted(df, F.col("id"), F.lit(2.0), scale=3.0).count() == 4000
-
-
-def test_quota_per_group_caps_and_orders(spark):
-    from logstash_integration_jdbc_spark.operators.sampling import (
-        quota_per_group,
-    )
-
-    df = spark.range(1000).select(
-        F.col("id"), (F.col("id") % 7).cast("string").alias("src"),
-        (F.col("id") % 13).cast("double").alias("ppl"))
-    out = quota_per_group(df, "src", 20, tiebreak_col="id")
-    counts = {r.src: r.n for r in
-              out.groupBy("src").agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert all(n == 20 for n in counts.values())
-    # deterministic under repartitioning
-    again = {r.id for r in quota_per_group(
-        df.repartition(17), "src", 20, tiebreak_col="id").collect()}
-    assert {r.id for r in out.collect()} == again
-    # order_col keeps the BEST rows (lowest ppl) per group
-    best = quota_per_group(df, "src", 5, order_col="ppl", tiebreak_col="id")
-    for r in best.groupBy("src").agg(F.max("ppl").alias("m")).collect():
-        assert r.m <= 1.0  # 1000/7 ≈ 143 rows/group → five ppl∈{0..12} dupes
-    # a group smaller than the quota survives whole
-    small = spark.createDataFrame(
-        [(1, "only")], "id bigint, src string")
-    assert quota_per_group(small, "src", 20, tiebreak_col="id").count() == 1
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="quota"):
-        quota_per_group(df, "src", 0, tiebreak_col="id")
-    with _pytest.raises(ValueError, match="tiebreak_col"):
-        quota_per_group(df, "src", 5)
 
 
 def test_gopher_rules_each_rule_fires(spark):
@@ -412,82 +260,6 @@ def test_compression_ratio_separates_repetition_from_prose(spark):
     assert out[1] == len(zlib.compress(b, 6)) / len(b)
 
 
-def test_filter_top_quantile_exact_rank_gate(spark):
-    from logstash_integration_jdbc_spark.operators.sampling import (
-        filter_top_quantile,
-    )
-
-    # 2 groups x 10 rows, score == id so the top-30% set is closed-form
-    rows = [(g, gi * 100 + i, float(i))
-            for gi, g in enumerate(("a", "b")) for i in range(10)]
-    df = spark.createDataFrame(rows, "src string, doc_id long, score double")
-    out = filter_top_quantile(df, "score", 0.3, group_col="src",
-                              tiebreak_col="doc_id").collect()
-    by_src = {}
-    for r in out:
-        by_src.setdefault(r.src, set()).add(r.doc_id % 100)
-    # ceil(0.3 * 10) = 3 highest scores per group
-    assert by_src == {"a": {7, 8, 9}, "b": {7, 8, 9}}
-
-    # ties broken by ascending id: equal scores keep the LOWEST ids
-    tied = spark.createDataFrame(
-        [("a", i, 1.0) for i in range(10)],
-        "src string, doc_id long, score double")
-    kept = {r.doc_id for r in filter_top_quantile(
-        tied, "score", 0.5, group_col="src", tiebreak_col="doc_id").collect()}
-    assert kept == {0, 1, 2, 3, 4}
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        filter_top_quantile(df, "score", 1.5, group_col="src")
-
-
-def test_token_budget_per_group_caps_tokens(spark):
-    from logstash_integration_jdbc_spark.operators.sampling import (
-        token_budget_per_group,
-    )
-
-    rows = [(("x" if i < 30 else "y"), i, 10 + (i % 5)) for i in range(60)]
-    df = spark.createDataFrame(rows, "src string, doc_id long, n_tokens int")
-    out = token_budget_per_group(df, "src", 100, "n_tokens")
-    agg = {r.src: (r.n, r.toks) for r in out.groupBy("src").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("n_tokens").alias("toks")).collect()}
-    # every group's admitted token total is within budget and non-empty
-    for src, (n, toks) in agg.items():
-        assert 0 < toks <= 100, (src, toks)
-        assert n < 30  # budget actually dropped rows
-
-    # deterministic: same seed -> same admitted ids; different seed differs
-    ids1 = {r.doc_id for r in out.collect()}
-    ids2 = {r.doc_id for r in token_budget_per_group(
-        df, "src", 100, "n_tokens").collect()}
-    assert ids1 == ids2
-    ids3 = {r.doc_id for r in token_budget_per_group(
-        df, "src", 100, "n_tokens", seed=7).collect()}
-    assert ids1 != ids3
-
-    # admit-while-fits: replay group x greedily in hash order
-    from logstash_integration_jdbc_spark.functions.xxhash import xxh64_str
-    from logstash_integration_jdbc_spark.operators.sampling import HASH_BUCKETS
-
-    xs = [(did, tok) for (src, did, tok) in rows if src == "x"]
-    order = sorted(xs, key=lambda t: ((xxh64_str(f"{t[0]}#42") % HASH_BUCKETS)
-                                      / HASH_BUCKETS, t[0]))
-    cum, expect = 0, set()
-    for did, tok in order:
-        cum += tok
-        if cum > 100:
-            break
-        expect.add(did)
-    assert {i for i in ids1 if i < 30} == expect
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        token_budget_per_group(df, "src", 0, "n_tokens")
-
-
 def test_canonicalize_url_matches_python_twin(spark):
     from logstash_integration_jdbc_spark.functions.url import (
         canonicalize_url,
@@ -511,64 +283,3 @@ def test_canonicalize_url_matches_python_twin(spark):
     df2 = spark.createDataFrame([(g,) for g in got], "url string")
     again = [r[0] for r in df2.select(canonicalize_url(F.col("url"))).collect()]
     assert again == got
-
-
-def test_filter_above_quantile_threshold_form(spark):
-    from logstash_integration_jdbc_spark.operators.sampling import (
-        filter_above_quantile,
-    )
-
-    # scores 0..9 per group: median 4.5, strictly-above keeps 5..9
-    rows = [(g, gi * 100 + i, float(i))
-            for gi, g in enumerate(("a", "b")) for i in range(10)]
-    df = spark.createDataFrame(rows, "src string, doc_id long, score double")
-    kept = {(r.src, r.doc_id % 100) for r in filter_above_quantile(
-        df, "score", 0.5, "src").collect()}
-    assert kept == {(g, i) for g in ("a", "b") for i in range(5, 10)}
-
-    # approx form agrees on this tiny input (sketch is exact here)
-    ka = {(r.src, r.doc_id % 100) for r in filter_above_quantile(
-        df, "score", 0.5, "src", approx=True).collect()}
-    assert ka == kept
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        filter_above_quantile(df, "score", 0.0, "src")
-
-
-def test_temperature_sample_flattens_mix(spark):
-    from pyspark.sql import functions as F
-
-    from logstash_integration_jdbc_spark.operators.sampling import (
-        hash_uniform,
-        temperature_sample,
-    )
-
-    rows = [(i, "big" if i < 8000 else "small") for i in range(10_000)]
-    df = spark.createDataFrame(rows, "id int, src string")
-    out = temperature_sample(df, "src", F.col("id"), tau=2.0)
-    got = {r["src"]: r["n"] for r in
-           out.groupBy("src").agg(F.count(F.lit(1)).alias("n")).collect()}
-    # smallest source keeps everything (p=1); big source thins by
-    # (8000/2000)^(1/2-1) = 0.5
-    assert got["small"] == 2000
-    assert got["big"] == pytest.approx(4000, rel=0.05)
-    # deterministic: same call, same survivors
-    ids1 = sorted(r["id"] for r in out.collect())
-    ids2 = sorted(r["id"] for r in
-                  temperature_sample(df, "src", F.col("id"), tau=2.0).collect())
-    assert ids1 == ids2
-
-
-def test_temperature_tau1_noop_and_validation(spark):
-    from pyspark.sql import functions as F
-
-    from logstash_integration_jdbc_spark.operators.sampling import (
-        temperature_sample,
-    )
-
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "id int, src string")
-    assert temperature_sample(df, "src", F.col("id"), tau=1.0).count() == 2
-    with pytest.raises(ValueError):
-        temperature_sample(df, "src", F.col("id"), tau=0)
