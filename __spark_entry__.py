@@ -610,22 +610,6 @@ def _q_redact_pii(spark, sf_dir):
         F.length("text_redacted").cast("int").alias("red_len"))
 
 
-def _q_contamination(spark, sf_dir):
-    # GPT-3-style n-gram decontamination: benchmark = every 20th doc,
-    # corpus = all documents; pairs with ≥2 shared trigram shingles
-    # (125 hit pairs at sf0.01 — parameters chosen so the check carries
-    # real rows). Oracle: gram-STRING intersection counts in SQL (the
-    # hash is injective modulo 64-bit collisions, so counts agree).
-    from logstash_integration_jdbc_spark.operators.dedup import (
-        contamination_pairs,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    bench = docs.filter(F.col("doc_id") % 20 == 0)
-    return contamination_pairs(docs, bench, n_shingle=3, min_overlap=2).select(
-        "corpus_id", "bench_id", "n_overlap")
-
-
 def _q_normalize_unicode(spark, sf_dir):
     # Unicode canonicalization, made non-vacuous on the ASCII corpus by
     # appending a deterministic messy suffix (decomposed e+U+0301, a
@@ -641,25 +625,6 @@ def _q_normalize_unicode(spark, sf_dir):
     return normalize_unicode(docs).select(
         "doc_id", F.md5("text_norm").alias("norm_md5"),
         F.length("text_norm").alias("norm_len"))
-
-
-def _q_dedup_incremental(spark, sf_dir):
-    # incremental ingest dedup: docs with doc_id%5==0 play the "new
-    # batch", the rest the already-ingested corpus whose band-key index
-    # is probed. Same 64/16 banding ⇒ same ≈4e-8 miss bound for the
-    # ≥0.9-jaccard pairs vs the exact cross oracle.
-    from logstash_integration_jdbc_spark.operators.dedup import (
-        build_minhash_index,
-        dedup_against_index,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    new = docs.where(F.col("doc_id") % 5 == 0)
-    hist = docs.where(F.col("doc_id") % 5 != 0)
-    index = build_minhash_index(hist)
-    pairs = dedup_against_index(new, index, hist)
-    return pairs.where(F.col("jaccard") >= 0.8).select(
-        "new_id", "index_id", F.round("jaccard", 6).alias("jac"))
 
 
 def _q_dissect_parse(spark, sf_dir):
@@ -1189,52 +1154,6 @@ def _q_mutate_fields(spark, sf_dir):
                       "name", "seg", "label")
 
 
-def _q_semantic_dedup(spark, sf_dir):
-    # SemDeDup (arXiv:2303.09540) over the corpus ∪ its perturbed
-    # companion (the embedding_near_dup construction: cosine(v, v') ≈
-    # 0.94-0.97 vs a 0.51 background max — threshold 0.9 sits in a wide
-    # gap, so fp association order can't flip a pair). 8 clusters,
-    # smallest-id seed centroids, no Lloyd (the Lloyd twin is already
-    # exercised by ann_ivf_lloyd_topk); survivors + their cluster.
-    from logstash_integration_jdbc_spark.operators.dedup import semantic_dedup
-
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    pert = emb.select(
-        (F.col("vec_id") + 100_000).alias("vec_id"),
-        F.transform(
-            "embedding",
-            lambda x, i: x * F.when(i % 2 == 0, F.lit(1.35)).otherwise(F.lit(0.65)),
-        ).alias("embedding"),
-    )
-    both = emb.select("vec_id", "embedding").unionByName(pert)
-    return semantic_dedup(both, n_clusters=8, threshold=0.9).select(
-        "vec_id", "centroid_id")
-
-
-def _q_dedup_lines(spark, sf_dir):
-    # RefinedWeb-style line-wise corpus dedup, made non-vacuous on the
-    # single-line corpus by chunking every doc into 8-word lines first —
-    # the corpus's exact/near-duplicate docs then share whole lines,
-    # which the operator must delete from EVERY member (a fully-
-    # duplicated doc collapses to the empty string but keeps its row).
-    # sha256 of the rewritten text compares byte-exact with the replay.
-    from logstash_integration_jdbc_spark.operators.dedup import dedup_lines
-
-    docs = _t(spark, sf_dir, "documents")
-    words = F.split(F.col("text"), " ", -1)
-    n_lines = F.greatest(
-        F.ceil(F.size(words) / F.lit(8.0)).cast("int"), F.lit(1))
-    lines = F.transform(
-        F.sequence(F.lit(0), n_lines - 1),
-        lambda i: F.array_join(F.slice(words, i * 8 + 1, 8), " "),
-    )
-    docs2 = docs.select("doc_id", F.array_join(lines, "\n").alias("text"))
-    return dedup_lines(docs2).select(
-        "doc_id", F.sha2("text", 256).alias("text_sha"), "n_lines_removed")
-
-
 def _q_gopher_rules(spark, sf_dir):
     # Gopher document-quality rules (Rae et al. 2021) — flags + keep;
     # min_words lowered to 20 for the synthetic short-doc corpus so the
@@ -1274,27 +1193,6 @@ def _q_dedup_minhash(spark, sf_dir):
     return pairs.filter(F.col("jaccard") >= 0.8).select(
         "id_a", "id_b", F.round("jaccard", 6).alias("jac")
     )
-
-
-def _q_dedup_ngram_jaccard(spark, sf_dir):
-    # bigram (n=2) variant of the shingle pipeline: same LSH pruning
-    # (64 hashes / 16 bands), exact bigram jaccard verified per pair.
-    # Bigram jaccard of a near-dup pair dominates its trigram jaccard, so
-    # the ≥0.9 corpus pairs keep the ≈4e-8 miss bound vs the O(n²) oracle.
-    from logstash_integration_jdbc_spark.operators.dedup import ngram_jaccard_pairs
-
-    docs = _t(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(docs, threshold=0.8, n_shingle=2)
-    return pairs.select("id_a", "id_b", F.round("jaccard", 6).alias("jac"))
-
-
-def _q_simhash(spark, sf_dir):
-    # pandas-UDF FNV/simhash — not expressible portably in SQL → rows-only
-    from logstash_integration_jdbc_spark.operators.dedup import simhash_near_dups
-
-    docs = _t(spark, sf_dir, "documents")
-    both = docs.unionByName(docs.withColumn("doc_id", F.col("doc_id") + 1_000_000))
-    return simhash_near_dups(both, max_hamming=3)
 
 
 def _q_dedup_substring(spark, sf_dir):
@@ -1804,8 +1702,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_components": _q_dedup_components,
         "gopher_rules": _q_gopher_rules,
         "c4_rules": _q_c4_rules,
-        "dedup_lines": _q_dedup_lines,
-        "dedup_semantic": _q_semantic_dedup,
         "bpe_encode": _q_bpe_encode,
         "text_bm25_topk": _q_bm25_topk,
         "url_canonical": _q_url_canonical,
@@ -1828,18 +1724,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tpch_q1": _q_tpch_q1,
         "tpch_q3": _q_tpch_q3,
         "dedup_exact_norm": _q_dedup_exact_norm,
-        "dedup_simhash": _q_simhash,
         "dedup_substring": _q_dedup_substring,
         "text_token_count": _q_token_count,
         "text_quality": _q_quality,
         "text_langid": _q_langid,
         "text_redact_pii": _q_redact_pii,
-        "contamination_check": _q_contamination,
         "ann_ivf_topk": _q_ann_ivf_topk,
         "ann_ivf_lloyd_topk": _q_ann_ivf_lloyd_topk,
         "ann_lsh_topk": _q_ann_lsh_topk,
         "embedding_near_dup": _q_embedding_near_dup,
-        "dedup_ngram_jaccard": _q_dedup_ngram_jaccard,
         "text_repetition": _q_text_repetition,
         "j4_like_lookup": _q_like_lookup,
         "text_fingerprint": _q_fingerprint,
@@ -1861,7 +1754,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_tfidf": _q_tfidf,
         "text_chunk_docs": _q_chunk_docs,
         "text_perplexity": _q_perplexity,
-        "dedup_incremental": _q_dedup_incremental,
         "normalize_unicode": _q_normalize_unicode,
         "anomaly_counts": _q_anomaly_counts,
         "xml_parse": _q_xml_parse,
@@ -1918,28 +1810,6 @@ def _value_oracle(key: str, build) -> str:
     return _XXHASH_ORACLE_CACHE[ck]
 
 
-def _py_simhash(text: str) -> int:
-    """Independent simhash twin of operators.dedup._simhash_udf."""
-    import numpy as np
-
-    from logstash_integration_jdbc_spark.functions.xxhash import (
-        spark_ws_tokens,
-        xxh64_str,
-    )
-
-    hs = [xxh64_str(t) & ((1 << 64) - 1) for t in spark_ws_tokens(text)]
-    if not hs:
-        return 0
-    arr = np.array(hs, dtype=np.uint64)
-    bits = ((arr[:, None] >> np.arange(64, dtype=np.uint64)) & 1).astype(np.int32) * 2 - 1
-    acc = bits.sum(axis=0)
-    val = 0
-    for p in range(64):
-        if acc[p] > 0:
-            val |= 1 << p
-    return val - (1 << 64) if val >= (1 << 63) else val
-
-
 def _py_fingerprint(text: str) -> int:
     """Independent twin of textstats.fingerprint (FNV-style token fold)."""
     from logstash_integration_jdbc_spark.functions.xxhash import (
@@ -1953,36 +1823,6 @@ def _py_fingerprint(text: str) -> int:
     for t in toks:
         acc = (acc * 1099511628211 + (xxh64_str(t) & mask)) & mask
     return acc - (1 << 64) if acc >= (1 << 63) else acc
-
-
-def _simhash_oracle_values() -> str:
-    """Expected (id_a, id_b, hamming ≤ 3) pairs over the doubled corpus,
-    via pure-Python simhash + numpy O(n²) popcount (exact: pigeonhole
-    guarantees the 4×16-bit blocking finds every pair at hamming ≤ 3)."""
-    import numpy as np
-
-    docs = _read_docs()
-    both = docs + [(i + 1_000_000, t) for i, t in docs]
-    sims = {}
-    by_text: dict[str, int] = {}
-    for did, text in both:
-        if text not in by_text:
-            by_text[text] = _py_simhash(text)
-        sims[did] = by_text[text]
-    ids = np.array(sorted(sims), dtype=np.int64)
-    vals = np.array([sims[i] for i in ids], dtype=np.int64).view(np.uint64)
-    x = vals[:, None] ^ vals[None, :]
-    pop = np.zeros(x.shape, dtype=np.int32)
-    lut = np.array([bin(i).count("1") for i in range(256)], dtype=np.int32)
-    for shift in range(0, 64, 8):
-        pop += lut[((x >> np.uint64(shift)) & np.uint64(0xFF)).astype(np.int64)]
-    iu = np.triu_indices(len(ids), k=1)
-    rows = [(int(ids[i]), int(ids[j]), int(pop[i, j]))
-            for i, j in zip(*iu) if pop[i, j] <= 3]
-    return "SELECT * FROM (VALUES " + ", ".join(
-        f"(CAST({a} AS BIGINT), CAST({b} AS BIGINT), CAST({h} AS INT))"
-        for a, b, h in rows
-    ) + ") t(id_a, id_b, hamming)"
 
 
 def _substring_oracle_values() -> str:
@@ -2463,26 +2303,6 @@ def oracle_sql() -> dict[str, str]:
         f"CAST(length({_red}) AS INT) AS red_len FROM documents"
     )
 
-    q["contamination_check"] = r"""
-        WITH tok AS (
-            SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS w, text
-            FROM documents
-        ), sh3 AS (
-            SELECT doc_id,
-                list_distinct(
-                    CASE WHEN len(w) >= 3
-                         THEN list_transform(range(1, len(w) - 1),
-                             i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])
-                         ELSE [text] END
-                ) AS s
-            FROM tok
-        )
-        SELECT c.doc_id AS corpus_id, b.doc_id AS bench_id,
-               CAST(len(list_intersect(c.s, b.s)) AS BIGINT) AS n_overlap
-        FROM sh3 c JOIN sh3 b
-          ON b.doc_id % 20 = 0 AND c.doc_id <> b.doc_id
-        WHERE len(list_intersect(c.s, b.s)) >= 2
-    """
     # pipeline oracles: SQL reimplementation of parse→enrich→route over
     # the written copy of the deterministic generated input (RE2 regex ≡
     # the compiled TOOL_CALL_GROK; lookup miss → default → defaults_used).
@@ -2516,7 +2336,6 @@ def oracle_sql() -> dict[str, str]:
             FROM read_parquet('{_PIPELINE_ORACLE_DIR}/transcripts.parquet/*.parquet')
         ) GROUP BY role
     """
-    q["dedup_simhash"] = _value_oracle("simhash", _simhash_oracle_values)
     q["dedup_substring"] = _value_oracle("substring", _substring_oracle_values)
     q["text_zlib_ratio"] = _value_oracle("text_zlib_ratio",
                                          _zlib_oracle_values)
@@ -2529,27 +2348,6 @@ def oracle_sql() -> dict[str, str]:
                round(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
                      / len(list_distinct(list_concat(a.s, b.s))), 6) AS jac
         FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-              / len(list_distinct(list_concat(a.s, b.s))) >= 0.8
-    """
-    q["dedup_ngram_jaccard"] = """
-        WITH tok2 AS (
-            SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS w, text
-            FROM documents
-        ), sh2 AS (
-            SELECT doc_id,
-                list_distinct(
-                    CASE WHEN len(w) >= 2
-                         THEN list_transform(range(1, len(w)),
-                                             i -> w[i] || ' ' || w[i+1])
-                         ELSE [text] END
-                ) AS s
-            FROM tok2
-        )
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-               round(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-                     / len(list_distinct(list_concat(a.s, b.s))), 6) AS jac
-        FROM sh2 a JOIN sh2 b ON a.doc_id < b.doc_id
         WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
               / len(list_distinct(list_concat(a.s, b.s))) >= 0.8
     """
@@ -2987,18 +2785,6 @@ def oracle_sql() -> dict[str, str]:
                    '[^\S\n]+', ' ', 'g'))) AS norm_len
         FROM documents
     """
-    # Incremental dedup oracle: exact trigram-shingle jaccard across
-    # the batch (doc_id%5=0) × history (doc_id%5≠0) cut.
-    q["dedup_incremental"] = f"""
-        WITH {_SHINGLES_CTE}
-        SELECT a.doc_id AS new_id, b.doc_id AS index_id,
-               round(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-                     / len(list_distinct(list_concat(a.s, b.s))), 6) AS jac
-        FROM sh a JOIN sh b
-          ON a.doc_id % 5 = 0 AND b.doc_id % 5 <> 0
-        WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-              / len(list_distinct(list_concat(a.s, b.s))) >= 0.8
-    """
     # Gopher rules replay — mirror textstats.gopher_rules(min_words=20)
     # term by term (RE2-safe regexes shared verbatim).
     q["gopher_rules"] = rf"""
@@ -3084,87 +2870,6 @@ def oracle_sql() -> dict[str, str]:
         FROM t WHERE len(toks) < 2
     """
 
-    # SemDeDup replay: corpus ∪ perturbed companion, assignment by
-    # cosine argmax over the 8 smallest-id seed centroids (ties →
-    # smallest centroid_id, same as the Spark struct-argmax), then the
-    # smaller-id-neighbor drop rule confined to clusters.
-    _dot = ("list_sum(list_transform(range(1, len({a}) + 1), "
-            "i -> {a}[i] * {b}[i]))")
-    _cos = (_dot + " / (sqrt(list_sum(list_transform({a}, x -> x * x)))"
-            " * sqrt(list_sum(list_transform({b}, x -> x * x))))")
-    q["dedup_semantic"] = f"""
-        WITH e AS (
-            SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-            FROM embeddings
-        ), u AS (
-            SELECT vec_id, v FROM e
-            UNION ALL
-            SELECT vec_id + 100000 AS vec_id,
-                   list_transform(range(1, len(v) + 1),
-                       i -> v[i] * (CASE WHEN (i - 1) % 2 = 0
-                                         THEN 1.35 ELSE 0.65 END)) AS v
-            FROM e
-        ), cents AS (
-            SELECT vec_id AS centroid_id, v AS cv FROM u
-            ORDER BY vec_id LIMIT 8
-        ), assigned AS (
-            SELECT vec_id, v, centroid_id FROM (
-                SELECT u.vec_id, u.v, c.centroid_id,
-                       row_number() OVER (PARTITION BY u.vec_id ORDER BY
-                           {_cos.format(a='u.v', b='c.cv')} DESC,
-                           c.centroid_id ASC) AS rn
-                FROM u CROSS JOIN cents c
-            ) WHERE rn = 1
-        ), dropped AS (
-            SELECT DISTINCT a.vec_id
-            FROM assigned a JOIN assigned b
-              ON a.centroid_id = b.centroid_id AND b.vec_id < a.vec_id
-            WHERE {_cos.format(a='a.v', b='b.v')} >= 0.9
-        )
-        SELECT a.vec_id, a.centroid_id FROM assigned a
-        WHERE a.vec_id NOT IN (SELECT vec_id FROM dropped)
-    """
-
-    # Line-wise dedup replay: same 8-word chunk view, then duplicated
-    # lines (>= 2 distinct docs, length >= 1) deleted from every doc and
-    # the remainder rejoined in order; sha256 compares byte-exact.
-    q["dedup_lines"] = """
-        WITH w AS (
-            SELECT doc_id, string_split(text, ' ') AS ws FROM documents
-        ), d2 AS (
-            SELECT doc_id, array_to_string(
-                list_transform(
-                    range(0, greatest(CAST(ceil(len(ws) / 8.0) AS INT), 1)),
-                    i -> array_to_string(ws[i*8+1 : i*8+8], ' ')),
-                chr(10)) AS text
-            FROM w
-        ), lines AS (
-            SELECT doc_id,
-                   unnest(range(0, len(string_split(text, chr(10))))) AS pos,
-                   unnest(string_split(text, chr(10))) AS line
-            FROM d2
-        ), dups AS (
-            SELECT line FROM lines WHERE length(line) >= 1
-            GROUP BY line HAVING count(DISTINCT doc_id) >= 2
-        ), kept AS (
-            SELECT l.doc_id, l.pos, l.line FROM lines l
-            WHERE length(l.line) < 1
-               OR l.line NOT IN (SELECT line FROM dups)
-        ), rb AS (
-            SELECT doc_id, string_agg(line, chr(10) ORDER BY pos) AS text,
-                   count(*) AS n_kept
-            FROM kept GROUP BY doc_id
-        ), tot AS (
-            SELECT doc_id, count(*) AS n_lines FROM lines GROUP BY doc_id
-        )
-        SELECT d2.doc_id,
-               sha256(coalesce(rb.text, '')) AS text_sha,
-               CAST(tot.n_lines - coalesce(rb.n_kept, 0) AS BIGINT)
-                   AS n_lines_removed
-        FROM d2
-        LEFT JOIN rb USING (doc_id)
-        JOIN tot USING (doc_id)
-    """
     q["dissect_parse"] = """
         SELECT event_id,
                CASE WHEN event_type <> 'error' THEN event_id END AS eid,

@@ -4,9 +4,9 @@ Implements the public xxHash64 algorithm (Yann Collet's spec,
 https://github.com/Cyan4973/xxHash — the algorithm description is
 public domain) with Spark's default seed 42 over a string's UTF-8
 bytes. It exists so DuckDB-side oracles for xxhash64-based operators
-(simhash, document fingerprinting) can be computed by an independent
-implementation rather than trusting the Spark path being tested;
-parity with Spark is pinned in tests/test_xxhash.py.
+(exact-substring anchors, document fingerprinting) can be computed by
+an independent implementation rather than trusting the Spark path
+being tested; parity with Spark is pinned in tests/test_xxhash.py.
 
 Per-call pure Python is plenty for oracle-sized corpora; the engine's
 hot path stays on the JVM's xxhash64.

@@ -1,10 +1,9 @@
 """Deduplication operators for large-scale training-data pipelines.
 
 Not in the reference (it has no dedup); required first-class components
-for the 100 TB training-data story. All exact/minhash/ngram paths are
-pure Catalyst expressions (codegen, no Python); simhash uses a
-numpy-vectorized Arrow pandas UDF (bit-twiddling built-ins can't express
-it cleanly).
+for the 100 TB training-data story. Exact dedup and shingling are pure
+Catalyst expressions (codegen, no Python); the MinHash band and winnow
+kernels are numpy-vectorized Arrow pandas UDFs.
 
 Scale design notes:
 - exact dedup shuffles on a 256-bit digest of the text, never the text
@@ -362,10 +361,10 @@ def _bucket_pairs(df: DataFrame, keys: list[str], members: Column) -> DataFrame:
     than one member.
 
     The shared pair emitter of the LSH-style operators (minhash bands,
-    winnow anchors, simhash chunks, sketch probes): ONE shuffle on the
-    bucket key, each member's signature computed once (vs a self-join
-    evaluating it per side), pairs emitted by posexplode + slice-explode
-    of the sorted member list. A degenerate bucket of B members (e.g.
+    winnow anchors, sketch probes): ONE shuffle on the bucket key, each
+    member's signature computed once (vs a self-join evaluating it per
+    side), pairs emitted by posexplode + slice-explode of the sorted
+    member list. A degenerate bucket of B members (e.g.
     boilerplate docs) yields O(B²) pairs; exact-dedup upstream is the
     intended guard.
     """
@@ -376,23 +375,6 @@ def _bucket_pairs(df: DataFrame, keys: list[str], members: Column) -> DataFrame:
         .select(*keys, F.posexplode("__ms").alias("__i", "__a"), F.col("__ms"))
         .select(*keys, "__a",
                 F.explode(F.expr("slice(__ms, __i + 2, size(__ms))")).alias("__b"))
-    )
-
-
-def _jaccard_verify(cand: DataFrame, a: str, b: str, sh_a: DataFrame,
-                    sh_b: DataFrame, id_col: str) -> DataFrame:
-    """(a, b, jaccard): exact shingle-set jaccard of the candidate pairs
-    in ``cand``; ``sh_a``/``sh_b`` are the (id_col, __sh) shingle frames
-    of the two sides."""
-    return (
-        cand.join(sh_a.withColumnsRenamed({id_col: a, "__sh": "__sh_a"}), a)
-        .join(sh_b.withColumnsRenamed({id_col: b, "__sh": "__sh_b"}), b)
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("__sh_a", "__sh_b"))
-            / F.size(F.array_union("__sh_a", "__sh_b")),
-        )
-        .select(a, b, "jaccard")
     )
 
 
@@ -475,53 +457,15 @@ def minhash_lsh_candidates(
     pair_ids = cand.select(
         F.explode(F.array("id_a", "id_b")).alias(id_col)).distinct()
     sh = _shingled(texts.join(pair_ids, id_col), id_col, text_col, n_shingle)
-    return _jaccard_verify(cand, "id_a", "id_b", sh, sh, id_col)
-
-
-def contamination_pairs(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_shingle: int = 8,
-    min_overlap: int = 1,
-) -> DataFrame:
-    """Benchmark decontamination: (corpus_id, bench_id, n_overlap) for
-    every corpus doc sharing ≥ ``min_overlap`` word n-gram shingles
-    with a benchmark/eval doc (the GPT-3/PaLM-style n-gram overlap
-    check; 8-13 grams are the usual production settings).
-
-    Scale shape: the benchmark side is SMALL by definition (eval sets),
-    so its exploded distinct shingles broadcast — the corpus side is
-    one map pass (tokenize + gram-hash + explode) into a broadcast hash
-    join, then one shuffle on (corpus_id, bench_id) for the overlap
-    count. Nothing is quadratic in the corpus. Shingle arrays are
-    distinct per doc, so the count IS the intersection size.
-
-    Self-pairs (same id on both sides, e.g. when the benchmark is a
-    subset of the corpus) are excluded.
-    """
-    c = _shingled(_texts(corpus, id_col, text_col), id_col, text_col,
-                  n_shingle).select(
-        F.col(id_col).alias("corpus_id"), F.explode("__sh").alias("__g"))
-    b = _shingled(_texts(benchmark, id_col, text_col), id_col, text_col,
-                  n_shingle).select(
-        F.col(id_col).alias("bench_id"), F.explode("__sh").alias("__g"))
     return (
-        c.join(F.broadcast(b), "__g")
-        .filter(F.col("corpus_id") != F.col("bench_id"))
-        .groupBy("corpus_id", "bench_id")
-        .agg(F.count(F.lit(1)).alias("n_overlap"))
-        .filter(F.col("n_overlap") >= min_overlap)
-    )
-
-
-def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.8,
-                        id_col: str = "doc_id", text_col: str = "text",
-                        n_shingle: int = 3) -> DataFrame:
-    """Near-dup pairs with exact n-gram jaccard ≥ threshold (LSH-pruned)."""
-    return minhash_lsh_candidates(df, id_col, text_col, n_shingle).filter(
-        F.col("jaccard") >= threshold
+        cand.join(sh.withColumnsRenamed({id_col: "id_a", "__sh": "__sh_a"}), "id_a")
+        .join(sh.withColumnsRenamed({id_col: "id_b", "__sh": "__sh_b"}), "id_b")
+        .withColumn(
+            "jaccard",
+            F.size(F.array_intersect("__sh_a", "__sh_b"))
+            / F.size(F.array_union("__sh_a", "__sh_b")),
+        )
+        .select("id_a", "id_b", "jaccard")
     )
 
 
@@ -699,66 +643,6 @@ def substring_dup_pairs(df: DataFrame, id_col: str = "doc_id",
         _bucket_pairs(anch, ["__anchor"], F.collect_set(id_col))
         .groupBy(F.col("__a").alias("id_a"), F.col("__b").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("n_shared_anchors"))
-    )
-
-
-# -- SimHash ----------------------------------------------------------------
-
-@functools.lru_cache(maxsize=None)
-def _simhash_udf():
-    """The simhash pandas UDF (built lazily: needs an active session).
-
-    Input is the array of 64-bit *token hashes* (computed JVM-side with
-    xxhash64 — string work never crosses into Python). The UDF flattens
-    the batch, unpacks hash bits to ±1, and segment-sums with
-    `np.add.reduceat` — no per-row or per-token Python loop.
-    """
-    @pandas_udf("long")
-    def _simhash64(hashes: pd.Series) -> pd.Series:
-        nz, flat, starts = _flatten(hashes)
-        out = np.zeros(len(hashes), dtype=np.int64)
-        if flat is not None:
-            # bit matrix (total_tokens × 64) of ±1 contributions
-            bits = np.unpackbits(
-                flat.astype(">i8").view(np.uint8).reshape(-1, 8), axis=1
-            ).astype(np.int32) * 2 - 1
-            acc = np.add.reduceat(bits, starts, axis=0)
-            out[nz] = np.packbits(acc > 0, axis=1).copy().view(">i8").ravel()
-        return pd.Series(out)
-
-    return _simhash64
-
-
-def simhash(df: DataFrame, text_col: str = "text", out_col: str = "simhash") -> DataFrame:
-    return df.withColumn(out_col, _simhash_udf()(token_hashes(F.col(text_col))))
-
-
-def simhash_near_dups(df: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text", max_hamming: int = 3) -> DataFrame:
-    """Near-dup pairs by simhash hamming distance ≤ max_hamming.
-
-    Scale path: block on 4 16-bit chunks (pigeonhole — any pair within
-    hamming ≤ 3 agrees on ≥1 chunk), join within blocks, verify with
-    bit_count(xor) — all JVM-side after the signature.
-    """
-    sh = simhash(spread(df.select(id_col, text_col), id_col),
-                 text_col).select(id_col, "simhash")
-    chunks = sh.select(
-        id_col, "simhash",
-        F.posexplode(F.array(*[
-            F.shiftright(F.col("simhash"), k * 16).bitwiseAND(F.lit(0xFFFF))
-            for k in range(4)
-        ])).alias("__chunk_idx", "__chunk"),
-    )
-    members = F.collect_list(F.struct(F.col(id_col).alias("id"), F.col("simhash")))
-    return (
-        _bucket_pairs(chunks, ["__chunk_idx", "__chunk"], members)
-        .select(
-            F.col("__a.id").alias("id_a"), F.col("__b.id").alias("id_b"),
-            F.bit_count(F.col("__a.simhash").bitwiseXOR(F.col("__b.simhash"))).alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
     )
 
 
@@ -1009,7 +893,7 @@ def dedup_components(pairs: DataFrame, id_a: str = "id_a",
     """Connected components over near-dup PAIRS → (id, component) where
     component = the smallest id reachable from ``id``.
 
-    The missing step between pair emission (minhash/simhash/embedding
+    The missing step between pair emission (minhash/substring/embedding
     near-dup all return pairs) and actually DROPPING duplicates: near-
     dups are transitive in practice (A≈B, B≈C ⇒ keep one of {A,B,C}),
     so the keep-set is one representative per connected component, not
@@ -1087,236 +971,3 @@ def keep_representatives(df: DataFrame, pairs: DataFrame,
     losers = comps.filter(F.col("id") != F.col("component")).select(
         F.col("id").alias(id_col))
     return df.join(losers, id_col, "left_anti")
-
-
-def build_minhash_index(df: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text", n_shingle: int = 3,
-                        num_hashes: int = 64, bands: int = 16) -> DataFrame:
-    """The persistable LSH index of a corpus: one (id, __band, __bucket)
-    row per (doc, band) — exactly the band keys
-    ``minhash_lsh_candidates`` computes internally, exposed so an
-    ingest pipeline can WRITE them once and probe them every batch.
-
-    At 100 TB: write this table partitioned/bucketed by
-    (__band, __bucket) (e.g. ``writeTo(...).partitionedBy(bucket(N,
-    "__bucket"))``) so every later probe joins co-located, and append
-    each accepted batch's keys — the index grows by O(batch), never
-    recomputed.
-    """
-    return minhash_band_buckets(df, id_col, text_col, n_shingle,
-                                num_hashes, bands)
-
-
-def dedup_against_index(new_df: DataFrame, index: DataFrame,
-                        index_texts: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text", n_shingle: int = 3,
-                        num_hashes: int = 64, bands: int = 16,
-                        ) -> DataFrame:
-    """Incremental near-dup detection: probe a NEW batch against the
-    stored band-key index of everything ingested so far — the daily
-    production shape (crawl batch vs history) where re-running
-    all-pairs LSH over history+batch would cost O(history) per day.
-
-    Returns (new_id, index_id, jaccard) with exact shingle jaccard
-    verified — filter by threshold downstream. Plan: the batch's band
-    keys (batch-sized) join the index on (__band, __bucket) — map-side
-    co-located when the index is bucket-partitioned, otherwise one
-    exchange of the BATCH side; history never re-shingles. Verification
-    re-reads text for candidate ids only (both sides pruned by the
-    candidate id set, so the index_texts scan is id-pushdown-prunable).
-    ``index_texts`` is (id, text) for index members; only candidate
-    rows are ever read.
-    """
-    new_bands = minhash_band_buckets(new_df, id_col, text_col, n_shingle,
-                                     num_hashes, bands)
-    idx = index.select(F.col(id_col).alias("index_id"),
-                       F.col("__band"), F.col("__bucket"))
-    cand = (new_bands
-            .select(F.col(id_col).alias("new_id"), "__band", "__bucket")
-            .join(idx, ["__band", "__bucket"])
-            .where(F.col("new_id") != F.col("index_id"))
-            .select("new_id", "index_id")
-            .distinct()
-            # small by banding design; feeds the two id-prunes below —
-            # same eager-materialization rationale as
-            # minhash_lsh_candidates (localCheckpoint, not persist)
-            .localCheckpoint(eager=True))
-    new_ids = cand.select(F.col("new_id").alias(id_col)).distinct()
-    idx_ids = cand.select(F.col("index_id").alias(id_col)).distinct()
-    sh_new = _shingled(_texts(new_df.join(new_ids, id_col), id_col,
-                              text_col), id_col, text_col, n_shingle)
-    sh_idx = _shingled(_texts(index_texts.join(idx_ids, id_col), id_col,
-                              text_col), id_col, text_col, n_shingle)
-    return _jaccard_verify(cand, "new_id", "index_id", sh_new, sh_idx, id_col)
-
-
-def novel_in_batch(new_df: DataFrame, index: DataFrame,
-                   index_texts: DataFrame, threshold: float = 0.8,
-                   id_col: str = "doc_id", text_col: str = "text",
-                   n_shingle: int = 3, num_hashes: int = 64,
-                   bands: int = 16) -> DataFrame:
-    """The accept set: new-batch rows with NO index match ≥ threshold.
-
-    Anti-join of the batch against its verified matches — the rows to
-    append to the corpus (and whose band keys to append to the index).
-    """
-    matches = (dedup_against_index(new_df, index, index_texts, id_col,
-                                   text_col, n_shingle, num_hashes, bands)
-               .where(F.col("jaccard") >= threshold)
-               .select(F.col("new_id").alias(id_col)).distinct())
-    return new_df.join(matches, [id_col], "left_anti")
-
-
-# -- line-level corpus dedup ---------------------------------------------
-
-def duplicated_lines(df: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id", delimiter: str = "\n",
-                     min_dup_docs: int = 2,
-                     min_line_chars: int = 1) -> DataFrame:
-    """Hashes of lines that appear in >= ``min_dup_docs`` distinct docs.
-
-    Corpus-level boilerplate detection (the RefinedWeb / MassiveText
-    line-wise dedup primitive): split every document on ``delimiter``,
-    count DISTINCT documents per line, keep the duplicated ones. Lines
-    shorter than ``min_line_chars`` are exempt (never reported).
-
-    Returns (line_hash) — 64-bit xxhash of the line text. The shuffle
-    payload is (hash, doc_id) pairs with map-side partial aggregation;
-    line TEXT never crosses the exchange.
-    """
-    import re as _re
-
-    parts = F.split(F.col(text_col), _re.escape(delimiter), -1)
-    lines = df.select(F.col(id_col), F.explode(parts).alias("__line"))
-    return (
-        lines.where(F.length("__line") >= min_line_chars)
-        .select(F.xxhash64("__line").alias("line_hash"), id_col)
-        .groupBy("line_hash")
-        .agg(F.countDistinct(id_col).alias("__docs"))
-        .where(F.col("__docs") >= min_dup_docs)
-        .select("line_hash")
-    )
-
-
-def dedup_lines(df: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id", delimiter: str = "\n",
-                min_dup_docs: int = 2, min_line_chars: int = 1) -> DataFrame:
-    """Remove corpus-duplicated lines from every document (RefinedWeb-
-    style line-wise deduplication: lines shared by >= ``min_dup_docs``
-    documents — navboxes, license boilerplate, cookie banners — are
-    deleted from ALL documents; the rest of each document is rejoined
-    in order). Not in the reference (no dedup there); a first-class
-    100 TB curation component.
-
-    Returns ``df`` with ``text_col`` rewritten (a fully-duplicated
-    document becomes the empty string, the row is kept) plus
-    ``n_lines_removed``.
-
-    Scale design: three narrow shuffles and the line text never moves —
-      1. (line_hash, doc_id) partial-agg exchange for the distinct-doc
-         counts (16 B rows);
-      2. (doc_id, pos, line_hash) x dup-hash join keyed on the hash
-         (AQE broadcasts the dup side when boilerplate is sparse);
-      3. the removal-position sets join back to ``df`` on ``doc_id`` —
-         the ONE move of document text, inherent to rewriting it.
-    The rewrite itself is a map-side ``filter(split(text), (l, i) ->
-    NOT array_contains(rm, i))`` — pure Catalyst, no Python.
-    """
-    import re as _re
-
-    pat = _re.escape(delimiter)
-    parts = F.split(F.col(text_col), pat, -1)
-    lines = df.select(
-        F.col(id_col), F.posexplode(parts).alias("__pos", "__line")
-    ).where(F.length("__line") >= min_line_chars)
-    dup = duplicated_lines(df, text_col, id_col, delimiter,
-                           min_dup_docs, min_line_chars)
-    removals = (
-        lines.select(id_col, "__pos", F.xxhash64("__line").alias("line_hash"))
-        .join(dup, "line_hash")
-        .groupBy(id_col)
-        .agg(F.collect_set("__pos").alias("__rm"))
-    )
-    rm = F.col("__rm")
-    rewritten = F.when(rm.isNull(), F.col(text_col)).otherwise(
-        F.array_join(
-            F.filter(parts, lambda l, i: ~F.array_contains(rm, i)),
-            delimiter,
-        )
-    )
-    out = (
-        df.join(removals, [id_col], "left")
-        .withColumn("__new_text", rewritten)
-        .withColumn(
-            "n_lines_removed",
-            # size(NULL) is -1 under non-ANSI Spark, so branch explicitly
-            F.when(rm.isNull(), F.lit(0)).otherwise(F.size(rm)).cast("long"),
-        )
-        .drop("__rm")
-    )
-    return out.withColumn(text_col, F.col("__new_text")).drop("__new_text")
-
-
-# -- semantic dedup (SemDeDup) -------------------------------------------
-
-def semantic_dedup(df: DataFrame, id_col: str = "vec_id",
-                   vec_col: str = "embedding", n_clusters: int = 16,
-                   threshold: float = 0.95, kmeans_iters: int = 0,
-                   max_cluster_rows: int = 2_000_000) -> DataFrame:
-    """SemDeDup-style semantic deduplication (Abbas et al. 2023,
-    arXiv:2303.09540): k-means-cluster the embedding space, then search
-    near-duplicates ONLY within clusters and keep one representative
-    per duplicate relation.
-
-    Drop rule (deterministic, SQL-replayable): a row is dropped iff
-    some SMALLER-id row in the SAME cluster has cosine >= ``threshold``
-    with it. (The paper keeps the point with lowest centroid
-    similarity; a fixed-id rule makes the output run-, partitioning-
-    and cluster-size-independent.)
-
-    Scale design: centroids are driver-side literals (smallest-id seed
-    vectors + optional Lloyd refinement — ``similarity.ivf_index``), so
-    assignment is a map-side argmax with NO shuffle; the quadratic work
-    is confined to clusters — ONE groupBy(centroid) exchange, then an
-    O(|C|^2) float64 GEMM per cluster inside applyInPandas.
-    ``n_clusters`` is the memory/skew knob: size it so n/k rows of dim
-    doubles fit one task (the paper's own strategy — they use k≈11k for
-    LAION); a cluster larger than ``max_cluster_rows`` raises rather
-    than silently OOMing an executor.
-
-    Returns the surviving rows of ``df`` plus their ``centroid_id``.
-    """
-    import numpy as np
-
-    from .similarity import _assign_expr, _collect_centroids, _lloyd_refine
-
-    vecs = df.select(id_col, vec_col)
-    cents = _collect_centroids(vecs, n_clusters, id_col, vec_col)
-    if kmeans_iters:
-        cents = _lloyd_refine(vecs, cents, id_col, vec_col, kmeans_iters)
-    assigned = vecs.withColumn("centroid_id", _assign_expr(vec_col, cents))
-
-    def _dropped(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) > max_cluster_rows:
-            raise ValueError(
-                f"semantic_dedup cluster of {len(pdf)} rows exceeds "
-                f"max_cluster_rows={max_cluster_rows}; raise n_clusters "
-                f"(or the guard) so per-cluster GEMM fits a task")
-        pdf = pdf.sort_values(id_col)
-        V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-        nrm = np.linalg.norm(V, axis=1)
-        nrm[nrm == 0.0] = 1.0
-        S = (V / nrm[:, None]) @ (V / nrm[:, None]).T
-        drop = np.tril(S >= threshold, -1).any(axis=1)
-        return pdf.loc[drop, [id_col]]
-
-    dropped = (
-        assigned.groupBy("centroid_id")
-        .applyInPandas(_dropped, schema=f"{id_col} long")
-    )
-    survivors = df.join(dropped, [id_col], "left_anti")
-    # assignment is a map-side literal argmax — recompute it on the
-    # survivors instead of joining `assigned` back (saves a full-table
-    # shuffle; the anti-join's dropped side is the only other exchange
-    # and AQE broadcasts it when small)
-    return survivors.withColumn("centroid_id", _assign_expr(vec_col, cents))

@@ -318,8 +318,7 @@ def c4_rules(df: DataFrame, text_col: str = "text",
     All split/filter/rlike Catalyst expressions — no shuffle, no
     Python; thresholds parametrized. Deduplication of three-sentence
     spans (the paper's other step) is the job of the dedup operators
-    (``dedup_lines`` / ``substring_dup_pairs``), not re-implemented
-    here.
+    (``substring_dup_pairs``), not re-implemented here.
     """
     text = F.coalesce(F.col(text_col), F.lit(""))
     lines = F.split(text, r"\n")

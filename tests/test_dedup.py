@@ -1,4 +1,4 @@
-"""Deduplication operators: exact, MinHash+LSH, SimHash, embedding."""
+"""Deduplication operators: exact, MinHash+LSH, substring, embedding."""
 
 from __future__ import annotations
 
@@ -10,9 +10,6 @@ from logstash_integration_jdbc_spark.operators.dedup import (
     embedding_near_dups,
     exact_dedup,
     minhash_lsh_candidates,
-    ngram_jaccard_pairs,
-    simhash,
-    simhash_near_dups,
 )
 
 BASE = ("the quick brown fox jumps over the lazy dog and then runs far away "
@@ -65,21 +62,6 @@ def test_minhash_jaccard_matches_python_oracle(docs):
     expected = len(a & c) / len(a | c)
     got = {(r.id_a, r.id_b): r.jaccard for r in minhash_lsh_candidates(docs).collect()}
     assert got[(0, 2)] == pytest.approx(expected)
-
-
-def test_ngram_jaccard_threshold(docs):
-    hits = ngram_jaccard_pairs(docs, threshold=0.99)
-    assert {(r.id_a, r.id_b) for r in hits.collect()} == {(0, 1)}
-
-
-def test_simhash_identical_and_near(docs):
-    sh = {r.doc_id: r.simhash for r in simhash(docs).collect()}
-    assert sh[0] == sh[1]
-    pairs = {(r.id_a, r.id_b): r.hamming for r in
-             simhash_near_dups(docs, max_hamming=10).collect()}
-    assert pairs[(0, 1)] == 0
-    assert (0, 2) in pairs and 0 < pairs[(0, 2)] <= 10
-    assert (3, 4) not in pairs
 
 
 def test_embedding_near_dups(spark):
@@ -326,44 +308,6 @@ def test_minhash_band_buckets_shape(docs):
     assert all(len(v) == 1 for v in by_band.values())
 
 
-def test_contamination_pairs(spark):
-    from logstash_integration_jdbc_spark.operators.dedup import (
-        contamination_pairs,
-    )
-
-    corpus = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog today"),
-            (2, "a quick brown fox jumps over the lazy cat instead"),
-            (3, "completely different words nothing shared at all here now"),
-            (10, "the quick brown fox jumps over the lazy dog today"),
-        ],
-        "doc_id bigint, text string",
-    )
-    bench = corpus.filter(F.col("doc_id") == 10)
-    got = {(r.corpus_id, r.bench_id): r.n_overlap for r in
-           contamination_pairs(corpus, bench, n_shingle=3,
-                               min_overlap=2).collect()}
-    # doc 1 is identical to bench 10: all 8 trigrams overlap
-    assert got[(1, 10)] == 8
-    # doc 2 shares the middle trigrams but not 2+; compute: shared
-    # trigrams of "quick brown fox jumps over the lazy" region
-    assert got[(2, 10)] >= 2
-    assert (3, 10) not in got
-    assert (10, 10) not in got  # self-pair excluded
-
-
-def test_contamination_benchmark_broadcast_plan(spark):
-    from logstash_integration_jdbc_spark.operators.dedup import (
-        contamination_pairs,
-    )
-
-    corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    bench = corpus.filter(F.col("doc_id") % 50 == 0)
-    plan = contamination_pairs(corpus, bench)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-
-
 def test_dedup_components_chains_and_cliques(spark):
     from logstash_integration_jdbc_spark.operators.dedup import (
         dedup_components,
@@ -506,220 +450,6 @@ def test_substring_pairs_validation(spark):
         winnow_anchors(df, min_tokens=1)
     with _pytest.raises(ValueError):
         winnow_anchors(df, window=0)
-
-
-def test_dedup_against_index_finds_cross_dups(spark):
-    from logstash_integration_jdbc_spark.operators.dedup import (
-        build_minhash_index,
-        dedup_against_index,
-        novel_in_batch,
-    )
-
-    base = ("the quick brown fox jumps over the lazy dog while the cat "
-            "watches from the warm windowsill in the afternoon sun")
-    hist_rows = [(i, f"history document number {i} " + base) for i in range(20)]
-    # batch: 100 duplicates history doc 3's text exactly; 101 is novel
-    batch_rows = [
-        (100, "history document number 3 " + base),
-        (101, "completely different content about distributed query "
-              "engines shuffling partitioned columnar data at scale"),
-    ]
-    hist = spark.createDataFrame(hist_rows, "doc_id bigint, text string")
-    batch = spark.createDataFrame(batch_rows, "doc_id bigint, text string")
-    index = build_minhash_index(hist)
-    pairs = dedup_against_index(batch, index, hist)
-    strong = {(r.new_id, r.index_id) for r in pairs.collect()
-              if r.jaccard >= 0.8}
-    assert (100, 3) in strong
-    assert not any(n == 101 for n, _ in strong)
-    exact = [r for r in pairs.collect() if (r.new_id, r.index_id) == (100, 3)]
-    assert exact[0].jaccard == 1.0
-    # accept set: only the novel doc survives
-    kept = novel_in_batch(batch, index, hist, threshold=0.8)
-    assert [r.doc_id for r in kept.collect()] == [101]
-
-
-def test_dedup_against_index_matches_full_lsh(spark):
-    # probing batch-vs-index must find exactly the cross pairs the
-    # monolithic LSH over the union finds (same banding)
-    from logstash_integration_jdbc_spark.operators.dedup import (
-        build_minhash_index,
-        dedup_against_index,
-        minhash_lsh_candidates,
-    )
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet").select("doc_id", "text")
-    batch = docs.where(F.col("doc_id") % 5 == 0)
-    hist = docs.where(F.col("doc_id") % 5 != 0)
-    got = {(r.new_id, r.index_id)
-           for r in dedup_against_index(
-               batch, build_minhash_index(hist), hist).collect()
-           if r.jaccard >= 0.8}
-    full = minhash_lsh_candidates(docs).where(F.col("jaccard") >= 0.8)
-    want = set()
-    for r in full.collect():
-        a_new, b_new = r.id_a % 5 == 0, r.id_b % 5 == 0
-        if a_new and not b_new:
-            want.add((r.id_a, r.id_b))
-        elif b_new and not a_new:
-            want.add((r.id_b, r.id_a))
-    assert got == want
-
-
-# -- line-level corpus dedup ---------------------------------------------
-
-def _line_docs(spark):
-    rows = [
-        (1, "COOKIE BANNER\nalpha unique one\nNAV FOOTER"),
-        (2, "COOKIE BANNER\nbeta unique two\nNAV FOOTER"),
-        (3, "COOKIE BANNER\ngamma unique three"),
-        (4, "delta all original\nepsilon also original"),
-        (5, "COOKIE BANNER\nNAV FOOTER"),
-    ]
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_dedup_lines_removes_boilerplate_everywhere(spark):
-    from logstash_integration_jdbc_spark.operators.dedup import dedup_lines
-
-    out = {r["doc_id"]: r for r in dedup_lines(_line_docs(spark)).collect()}
-    assert out[1]["text"] == "alpha unique one"
-    assert out[2]["text"] == "beta unique two"
-    assert out[3]["text"] == "gamma unique three"
-    assert out[4]["text"] == "delta all original\nepsilon also original"
-    # fully-boilerplate doc survives as an empty string, not a dropped row
-    assert out[5]["text"] == ""
-    assert [out[i]["n_lines_removed"] for i in (1, 2, 3, 4, 5)] == [2, 2, 1, 0, 2]
-
-
-def test_dedup_lines_min_dup_docs_threshold(spark):
-    from logstash_integration_jdbc_spark.operators.dedup import dedup_lines
-
-    # NAV FOOTER appears in 3 docs, COOKIE BANNER in 4: at min_dup_docs=4
-    # only the banner goes
-    out = {r["doc_id"]: r["text"]
-           for r in dedup_lines(_line_docs(spark), min_dup_docs=4).collect()}
-    assert out[1] == "alpha unique one\nNAV FOOTER"
-    assert out[5] == "NAV FOOTER"
-
-
-def test_dedup_lines_short_line_exemption(spark):
-    from logstash_integration_jdbc_spark.operators.dedup import dedup_lines
-
-    rows = [(1, "ok\nlong shared boilerplate line"),
-            (2, "ok\nlong shared boilerplate line"),
-            (3, "ok\nunique text")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r["text"]
-           for r in dedup_lines(df, min_line_chars=5).collect()}
-    # "ok" is shared by all three but under min_line_chars → kept
-    assert out[1] == "ok"
-    assert out[3] == "ok\nunique text"
-
-
-def test_dedup_lines_preserves_order_and_empty_lines(spark):
-    from logstash_integration_jdbc_spark.operators.dedup import dedup_lines
-
-    rows = [(1, "a unique\n\nSHARED LINE\nz tail"),
-            (2, "SHARED LINE\nother body")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r["text"] for r in dedup_lines(df).collect()}
-    # empty line (below min_line_chars=1) is preserved in place
-    assert out[1] == "a unique\n\nz tail"
-    assert out[2] == "other body"
-
-
-def test_duplicated_lines_counts_distinct_docs(spark):
-    from logstash_integration_jdbc_spark.operators.dedup import duplicated_lines
-
-    # the repeated line within ONE doc must not count as cross-doc dup
-    rows = [(1, "same line\nsame line"), (2, "other")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    assert duplicated_lines(df).count() == 0
-
-
-def test_dedup_lines_custom_delimiter(spark):
-    from logstash_integration_jdbc_spark.operators.dedup import dedup_lines
-
-    rows = [(1, "shared seg | mine"), (2, "shared seg | yours")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r["text"]
-           for r in dedup_lines(df, delimiter=" | ").collect()}
-    assert out[1] == "mine" and out[2] == "yours"
-
-
-# -- semantic dedup (SemDeDup) -------------------------------------------
-
-def _sem_vectors():
-    import numpy as np
-
-    rng = np.random.RandomState(11)
-    base = rng.randn(20, 16)
-    rows = [(i, base[i].tolist()) for i in range(20)]
-    # near-copies of vectors 3 and 7 (tiny additive noise → cosine ≈ 1)
-    for j, src in ((100, 3), (101, 7), (102, 3)):
-        rows.append((j, (base[src] + 0.01 * rng.randn(16)).tolist()))
-    return rows
-
-
-def test_semantic_dedup_drops_higher_id_twins(spark):
-    from logstash_integration_jdbc_spark.operators.dedup import semantic_dedup
-
-    df = spark.createDataFrame(_sem_vectors(),
-                               "vec_id long, embedding array<double>")
-    out = semantic_dedup(df, n_clusters=4, threshold=0.95)
-    kept = {r["vec_id"] for r in out.collect()}
-    # all originals survive (mutual cosines are low); every near-copy
-    # has a smaller-id twin in its cluster → dropped
-    assert set(range(20)) <= kept
-    assert kept.isdisjoint({100, 101, 102})
-    assert "centroid_id" in out.columns
-
-
-def test_semantic_dedup_matches_numpy_rule(spark):
-    import numpy as np
-
-    from logstash_integration_jdbc_spark.operators.dedup import semantic_dedup
-
-    rows = _sem_vectors()
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = semantic_dedup(df, n_clusters=4, threshold=0.95, kmeans_iters=1)
-    got = {(r["vec_id"], r["centroid_id"]) for r in out.collect()}
-
-    # independent twin: assignment by cosine argmax over the same
-    # deterministic centroids (4 smallest ids + 1 Lloyd step), then the
-    # smaller-id-neighbor drop rule per cluster
-    ids = [r[0] for r in rows]
-    V = np.array([r[1] for r in rows], dtype=np.float64)
-    Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-    C = V[:4].copy()
-    for _ in range(1):
-        sims = Vn @ (C / np.linalg.norm(C, axis=1, keepdims=True)).T
-        best = np.argmax(sims, axis=1)
-        C = np.array([V[best == c].mean(axis=0) if (best == c).any()
-                      else C[c] for c in range(4)])
-    sims = Vn @ (C / np.linalg.norm(C, axis=1, keepdims=True)).T
-    best = np.argmax(sims, axis=1)
-    S = Vn @ Vn.T
-    want = set()
-    for i, vid in enumerate(ids):
-        drop = any(S[i, j] >= 0.95 and ids[j] < vid
-                   for j in range(len(ids)) if best[j] == best[i])
-        if not drop:
-            want.add((vid, ids[best[i]]))
-    assert got == want
-
-
-def test_semantic_dedup_cluster_guard(spark):
-    import pytest as _pytest
-
-    from logstash_integration_jdbc_spark.operators.dedup import semantic_dedup
-
-    df = spark.createDataFrame(_sem_vectors(),
-                               "vec_id long, embedding array<double>")
-    with _pytest.raises(Exception, match="max_cluster_rows"):
-        semantic_dedup(df, n_clusters=1, max_cluster_rows=5).collect()
 
 
 def test_band_bucket_is_numeric_hash_of_band_slice(docs, spark):

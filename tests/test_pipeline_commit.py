@@ -22,6 +22,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from logstash_integration_jdbc_spark import pipeline
+from logstash_integration_jdbc_spark.operators import router
 from logstash_integration_jdbc_spark.operators.aggregate import hourly_counts
 from logstash_integration_jdbc_spark.pipeline import PipelineConfig, run_pipeline
 from logstash_integration_jdbc_spark.sources.scan import partition_cursors
@@ -154,6 +155,37 @@ class TestFaultInjection:
         m = run_pipeline(spark, config(fixture_dir, table, out))
         assert f"run_id={m['run_id']}" in seen["agg_runs"]
         assert len(run_ids(out)) == 2
+        assert_committed(spark, table, out)
+
+    def test_task_failure_mid_sink_write(self, spark, fixture_dir, batches, ticked,
+                                         monkeypatch):
+        table, out = ticked
+        path = os.path.join(out, "ckpt.json")
+        with open(path, "rb") as fh:
+            before = fh.read()
+        victim = spark.read.parquet(batches["late"]).orderBy(
+            F.col("ts").desc(), "conv_id", "turn_idx").first()
+        orig = router.salted_repartition
+
+        def fail_one_row(*a, **k):
+            # spark_partition_id() makes the predicate nondeterministic, so
+            # it is not pushed below the exchange: the failing task is in
+            # the stage that writes the sinks
+            hit = ((F.col("conv_id") == victim.conv_id)
+                   & (F.col("turn_idx") == victim.turn_idx)
+                   & (F.spark_partition_id() >= 0))
+            return orig(*a, **k).filter(
+                F.when(hit, F.raise_error(F.lit("injected task failure")))
+                .otherwise(F.lit(True)))
+
+        monkeypatch.setattr(router, "salted_repartition", fail_one_row)
+        with pytest.raises(Exception, match="injected task failure"):
+            run_pipeline(spark, config(fixture_dir, table, out))
+        monkeypatch.undo()
+        with open(path, "rb") as fh:
+            assert fh.read() == before
+        m = run_pipeline(spark, config(fixture_dir, table, out))
+        assert len(run_ids(out)) == 2 and m["run_id"] in run_ids(out)
         assert_committed(spark, table, out)
 
 

@@ -3,7 +3,8 @@ strategy (SURVEY.md §5: the reference has no property tests).
 
 Each property pins an operator against an independent oracle over
 generated inputs: asof_join vs pandas.merge_asof, GrokParser vs Python
-re, ValueTracker vs identity round-trip, exact_dedup invariants.
+re, ValueTracker vs identity round-trip, exact_dedup invariants, and the
+MinHash band and winnow kernels vs their JVM and window references.
 Spark actions are slow, so examples are kept small and deadlines off.
 """
 
@@ -133,6 +134,89 @@ def test_exact_dedup_invariants(spark, texts):
     for i, t in enumerate(texts):
         first_idx.setdefault(t, i)
     assert sorted(r.doc_id for r in kept) == sorted(first_idx.values())
+
+
+# -- near-dup kernels ≡ their JVM / window references on generated docs.
+#    A four-token vocabulary makes band slices and anchors collide. ---------
+
+_VOCAB = ["a", "b", "c", "d"]
+
+
+def _words(n: int):
+    return st.lists(st.sampled_from(_VOCAB), min_size=n, max_size=n).map(" ".join)
+
+
+_ODD_DOCS = st.sampled_from([None, ""])
+
+
+@st.composite
+def band_docs(draw):
+    # docs of 1..8 tokens plus null and empty text: below n_shingle=3
+    # the shingle set is the whole-text fallback, null text reads as ""
+    texts = draw(st.lists(
+        st.one_of(_ODD_DOCS, st.integers(min_value=1, max_value=8).flatmap(_words)),
+        min_size=1, max_size=16))
+    num_hashes, bands = draw(st.sampled_from([(64, 16), (32, 8), (16, 16)]))
+    return texts, num_hashes, bands
+
+
+@settings(**SETTINGS)
+@given(band_docs())
+def test_band_buckets_equal_jvm_hash_of_signature_slices(spark, data):
+    from pyspark.sql import functions as F
+
+    from logstash_integration_jdbc_spark.operators.dedup import (
+        _shingled,
+        _texts,
+        minhash_band_buckets,
+        minhash_signature_udf,
+    )
+
+    texts, num_hashes, bands = data
+    r = num_hashes // bands
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id bigint, text string")
+    sig = (_shingled(_texts(df, "doc_id", "text"), "doc_id", "text", 3)
+           .withColumn("__sig", minhash_signature_udf(num_hashes)(F.col("__sh"))))
+    want = {}
+    for row in sig.select("doc_id", *[
+            F.xxhash64(*[F.col("__sig")[b * r + k] for k in range(r)]).alias(f"b{b}")
+            for b in range(bands)]).collect():
+        want.update({(row["doc_id"], b): row[f"b{b}"] for b in range(bands)})
+    got = {(row["doc_id"], row["__band"]): row["__bucket"] for row in
+           minhash_band_buckets(df, num_hashes=num_hashes, bands=bands).collect()}
+    assert got == want
+
+
+@st.composite
+def winnow_batches(draw):
+    # window > min_tokens, docs of 1..window+1 grams side by side in one
+    # kernel batch: the inputs behind the short-doc anchor bug. At least
+    # 8 docs, so every example puts several short docs next to each other
+    min_tokens = draw(st.integers(min_value=2, max_value=4))
+    window = draw(st.integers(min_value=min_tokens + 1, max_value=min_tokens + 3))
+    grams = st.integers(min_value=1, max_value=window + 1)
+    texts = draw(st.lists(
+        st.one_of(_ODD_DOCS, grams.flatmap(lambda g: _words(min_tokens - 1 + g))),
+        min_size=8, max_size=24))
+    return texts, min_tokens, window
+
+
+@settings(**SETTINGS)
+@given(winnow_batches())
+def test_winnow_kernel_equals_reference_on_generated_batches(spark, data):
+    from logstash_integration_jdbc_spark.operators.dedup import (
+        winnow_anchors,
+        winnow_anchors_expr,
+    )
+
+    texts, min_tokens, window = data
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id bigint, text string")
+
+    def anchors(fn):
+        out = fn(df, min_tokens=min_tokens, window=window).collect()
+        return {(r["doc_id"], r["__anchor"]) for r in out}
+
+    assert anchors(winnow_anchors) == anchors(winnow_anchors_expr)
 
 
 # -- BPE: the incremental trainer ≡ a brute re-count-per-round trainer
