@@ -291,11 +291,7 @@ def _q_router_counts(spark, sf_dir):
         ],
         default_sink="other",
     )
-    parts = [df.select(F.lit(name).alias("sink")) for name, df in router.split(ev).items()]
-    allp = parts[0]
-    for p in parts[1:]:
-        allp = allp.unionByName(p)
-    return allp.groupBy("sink").agg(F.count(F.lit(1)).alias("n"))
+    return router.route(ev).groupBy("sink").agg(F.count(F.lit(1)).alias("n"))
 
 
 def _q_hourly_counts(spark, sf_dir):

@@ -2,25 +2,18 @@
 
 The reference relies on upstream Logstash for parsing (SURVEY.md §2.5);
 the north_star requires a vectorized extractor of tool-call/event fields
-from ``text`` with no per-row Python. Two tiers:
-
-1. ``GrokParser`` — a mini grok compiler: ``%{WORD:name}``-style
-   patterns compile to a single Java regex evaluated with
-   ``regexp_extract`` per capture, entirely JVM-side inside whole-stage
-   codegen. This is the default and the fast path (zero Python).
-2. ``parse_text_pandas`` — an Arrow pandas UDF using precompiled regex +
-   ``pd.Series.str.extract`` for patterns Java regex can't express;
-   batch-vectorized, never row-at-a-time.
+from ``text`` with no per-row Python. ``GrokParser`` is a mini grok
+compiler: ``%{WORD:name}``-style patterns compile to a single Java regex
+evaluated with ``regexp_extract`` per capture, entirely JVM-side inside
+whole-stage codegen.
 """
 
 from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 # Base pattern registry — the standard logstash-grok names, re-expressed
 # (logstash-patterns-core semantics, own formulation; alternations are
@@ -429,24 +422,3 @@ class GrokPipeline:
             df = add_tags(df, ~any_match, self.tag_on_failure)
         return df
 
-
-def parse_text_pandas(pattern: str, fields: list[str]):
-    """Arrow pandas-UDF fallback extractor → map<string,string>.
-
-    Returns a pandas_udf usable as
-    ``df.withColumn("parsed", udf(col("text")))``. Batch-vectorized
-    (`str.extract` over the whole Arrow batch); for Java-regex-expressible
-    patterns prefer GrokParser (stays in codegen, no Python at all).
-    """
-    compiled = re.compile(pattern)
-
-    @pandas_udf("map<string,string>")
-    def _extract(s: pd.Series) -> pd.Series:
-        frame = s.str.extract(compiled)
-        frame.columns = fields[: len(frame.columns)]
-        return pd.Series(
-            [None if row.isna().all() else {k: v for k, v in row.items() if pd.notna(v)}
-             for _, row in frame.iterrows()]
-        )
-
-    return _extract

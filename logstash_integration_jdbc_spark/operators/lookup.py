@@ -40,7 +40,6 @@ from typing import Any, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from logstash_integration_jdbc_spark.functions.interpolate import param_expr
 
@@ -161,33 +160,7 @@ class Lookup:
               fact_key: Sequence[str] | None = None) -> DataFrame:
         """Enrich ``fact`` with this lookup's target/tags/success columns:
         one join, then one ``select`` of compiled expressions."""
-        c = self._compile()
-        cols = fact.columns
-        target, tags, ok = c.outputs(static_semantics, TAGS_COL in cols, OK_COL in cols)
-        if c.right is not None:
-            joined = fact.join(c.right, c.cond, "left")
-        else:
-            joined = self._apply_theta(fact, c.keys, fact_key)
-        # fact columns in place (replaced where they exist), then the
-        # new ones in the order withColumn would have appended them
-        new = {TAGS_COL: tags, OK_COL: ok, self.target: target}
-        out = [new.pop(n).alias(n) if n in new else F.col(_quote(n)) for n in cols]
-        return joined.select(*out, *[e.alias(n) for n, e in new.items()])
-
-    def _payload_array_type(self) -> T.ArrayType:
-        """array<struct> type of the target, from schema only (usable even
-        when the dimension's data is unavailable)."""
-        dim_fields = {f.name: f.dataType for f in self.dim.schema.fields}
-        dh = self.default_hash or {}
-        fields = []
-        for f_ in self._payload_fields():
-            if f_ in dim_fields:
-                fields.append(T.StructField(f_, dim_fields[f_]))
-            else:
-                fields.append(T.StructField(f_, _LIT_TYPES[_lit_type(dh.get(f_))]))
-        # containsNull=False matches collect_list's output type, so
-        # degraded and healthy batches stay schema-identical
-        return T.ArrayType(T.StructType(fields), containsNull=False)
+        return self._enrich(fact, static_semantics, fact_key, failed=False)
 
     def apply_failed(self, fact: DataFrame, static_semantics: bool = True) -> DataFrame:
         """Batch-scoped SQL-error path — the dimension was unavailable.
@@ -198,25 +171,31 @@ class Lookup:
         unsuccessful on SQL error (lookup.rb:92-109). The columnar batch
         equivalent: ONE load attempt per batch (the broadcast build *is*
         the cache; its failure is the negative entry), after which every
-        row takes the failure treatment without further probing:
+        row takes the per-row failure treatment without probing — the
+        ``apply`` select over a NULL payload with every row invalid:
 
         - static: failure tags, target NOT set (null), gate false;
         - streaming: failure tags AND — payload being empty — default
           tags + default target; target always set, matched regardless.
         """
-        fact = _ensure_tags(fact)
-        if OK_COL not in fact.columns:
-            fact = fact.withColumn(OK_COL, F.lit(True))
-        atype = self._payload_array_type()
-        if static_semantics:
-            out = fact.withColumn(self.target, F.lit(None).cast(atype))
-            out = add_tags(out, F.lit(True), self.tag_on_failure)
-            return out.withColumn(OK_COL, F.lit(False))
-        target = (self._default_array() if self.default_hash is not None
-                  else F.array().cast(atype))
-        out = fact.withColumn(self.target, target)
-        out = add_tags(out, F.lit(True), self.tag_on_failure)
-        return add_tags(out, F.lit(True), self.tag_on_default_use)
+        return self._enrich(fact, static_semantics, None, failed=True)
+
+    def _enrich(self, fact: DataFrame, static: bool,
+                fact_key: Sequence[str] | None, failed: bool) -> DataFrame:
+        c = self._compile()
+        cols = fact.columns
+        target, tags, ok = c.outputs(static, TAGS_COL in cols, OK_COL in cols, failed)
+        if failed:
+            joined = fact.withColumn("__payload", F.lit(None).cast(c.payload_type))
+        elif c.right is not None:
+            joined = fact.join(c.right, c.cond, "left")
+        else:
+            joined = self._apply_theta(fact, c.keys, fact_key)
+        # fact columns in place (replaced where they exist), then the
+        # new ones in the order withColumn would have appended them
+        new = {TAGS_COL: tags, OK_COL: ok, self.target: target}
+        out = [new.pop(n).alias(n) if n in new else F.col(_quote(n)) for n in cols]
+        return joined.select(*out, *[e.alias(n) for n, e in new.items()])
 
     def _apply_theta(self, fact: DataFrame, keys: dict[str, Column],
                      fact_key: Sequence[str] | None) -> DataFrame:
@@ -257,14 +236,6 @@ def _lit_type(v: Any) -> str:
     return "string"
 
 
-_LIT_TYPES: dict[str, T.DataType] = {
-    "boolean": T.BooleanType(),
-    "bigint": T.LongType(),
-    "double": T.DoubleType(),
-    "string": T.StringType(),
-}
-
-
 class _Compiled:
     """One lookup's dimension side and output expressions, built once per
     ``dim`` DataFrame and reused for every fact batch it enriches.
@@ -299,20 +270,24 @@ class _Compiled:
                      == F.col(f"__k_{dim_col}"))
                 self.cond = c if self.cond is None else (self.cond & c)
         self.default = lk._default_array()
-        self._outputs: dict[tuple[bool, bool, bool], tuple[Column, Column, Column]] = {}
+        self._outputs: dict[tuple[bool, bool, bool, bool], tuple[Column, Column, Column]] = {}
 
-    def outputs(self, static: bool, has_tags: bool, has_ok: bool) -> tuple[Column, Column, Column]:
+    def outputs(self, static: bool, has_tags: bool, has_ok: bool,
+                failed: bool) -> tuple[Column, Column, Column]:
         """(target, tags, gate) over the joined ``__payload``; the fact's
-        own tags/gate columns are the base when it has them."""
-        key = (static, has_tags, has_ok)
+        own tags/gate columns are the base when it has them. ``failed``
+        treats every row as invalid (the dimension could not be probed)."""
+        key = (static, has_tags, has_ok, failed)
         if key not in self._outputs:
             tags = F.col(TAGS_COL) if has_tags else F.array().cast("array<string>")
             ok = F.col(OK_COL) if has_ok else F.lit(True)
-            self._outputs[key] = self._build(static, tags, ok)
+            invalid = F.lit(True) if failed else self.invalid
+            self._outputs[key] = self._build(static, tags, ok, invalid)
         return self._outputs[key]
 
-    def _build(self, static: bool, tags: Column, ok: Column) -> tuple[Column, Column, Column]:
-        lk, invalid = self.lk, self.invalid
+    def _build(self, static: bool, tags: Column, ok: Column,
+               invalid: Column) -> tuple[Column, Column, Column]:
+        lk = self.lk
         payload = F.col("__payload")
         found = payload.isNotNull() & (F.size(payload) > 0)
         empty = payload.isNull() | (F.size(payload) == 0)

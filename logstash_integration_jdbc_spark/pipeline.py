@@ -21,8 +21,10 @@ with defaults/tags → tag-routed fan-out) with Spark-native physics:
   aggregate committed (at-least-once, S3). An empty batch writes no sink
   or aggregate data and leaves the checkpoint's values as they were.
 
-Every stage carries an ``observe`` metric — per-stage row counts with no
-extra actions (LineageCollector).
+The per-stage row counters (rows scanned, parse hits, lookups ok) and the
+per-sink counts ride the sink write as ONE ``observe`` node: no extra
+actions, and one node rather than one per stage keeps whole-stage codegen
+in one piece.
 """
 
 from __future__ import annotations
@@ -177,6 +179,44 @@ def build_router() -> Router:
     )
 
 
+def commit_aggregate(
+    spark: SparkSession, out_dir: str, run_id: str, schema: T.StructType,
+    sink_counts: dict[str, int],
+) -> tuple[DataFrame | None, dict[str, int]]:
+    """Read back this run's committed sinks, write their per-sink (role,
+    tool, hour) counts to ``out_dir/agg``; return the read-back and the
+    aggregate write's observed rows per sink (``(None, {})`` when the run
+    committed no rows).
+
+    The glob lists only this run_id's directories and the schema is
+    known (``schema`` plus the three string partition columns), so the
+    read runs no schema-inference or listing job and does not grow with
+    the number of committed runs.
+    """
+    if sum(sink_counts.values()) == 0:
+        return None, {}
+    from pyspark.sql import Observation
+
+    sinks_dir = os.path.join(out_dir, "sinks")
+    schema = T.StructType(schema.fields + [
+        T.StructField(c, T.StringType()) for c in ("sink", "ts_hour", "run_id")])
+    committed = (spark.read.schema(schema).option("basePath", sinks_dir)
+                 .parquet(os.path.join(sinks_dir, "sink=*", "ts_hour=*", f"run_id={run_id}")))
+    agg = hourly_counts(committed, keys=("sink", "role", "tool")).withColumn(
+        "run_id", F.lit(run_id)
+    )
+    sink_names = [k for k, v in sink_counts.items() if v > 0]
+    agg_obs = Observation()
+    agg = agg.observe(agg_obs, *[
+        F.sum(F.when(F.col("sink") == n, 1).otherwise(0)).alias(n)
+        for n in sink_names
+    ])
+    agg.write.mode("overwrite").partitionBy("sink", "run_id").parquet(
+        os.path.join(out_dir, "agg"))
+    got = agg_obs.get
+    return committed, {n: int(got[n] or 0) for n in sink_names}
+
+
 def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict[str, Any]:
     """Execute one resumable batch; returns metrics + sink counts.
 
@@ -233,34 +273,11 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict[str, Any]:
     observed = router.last_observed
 
     # The sinks hold every scanned row exactly once, so one read-back of
-    # THIS run's partitions feeds both the aggregate and the cursors. The
-    # glob lists only this run_id's directories and the schema is known
-    # (the enriched frame plus the three string partition columns), so
-    # the read runs no schema-inference or listing job and does not grow
-    # with the number of committed runs.
-    agg_counts: dict[str, int] = {}
+    # THIS run's partitions feeds both the aggregate and the cursors.
+    committed, agg_counts = commit_aggregate(
+        spark, cfg.out_dir, run_id, enriched.schema, sink_counts)
     cursors: dict[str, dict[str, Any]] = {}
-    if sum(sink_counts.values()) > 0:
-        from pyspark.sql import Observation
-
-        sinks_dir = os.path.join(cfg.out_dir, "sinks")
-        schema = T.StructType(enriched.schema.fields + [
-            T.StructField(c, T.StringType()) for c in ("sink", "ts_hour", "run_id")])
-        committed = (spark.read.schema(schema).option("basePath", sinks_dir)
-                     .parquet(os.path.join(sinks_dir, "sink=*", "ts_hour=*", f"run_id={run_id}")))
-        agg = hourly_counts(committed, keys=("sink", "role", "tool")).withColumn(
-            "run_id", F.lit(run_id)
-        )
-        sink_names = [k for k, v in sink_counts.items() if v > 0]
-        agg_obs = Observation()
-        agg = agg.observe(agg_obs, *[
-            F.sum(F.when(F.col("sink") == n, 1).otherwise(0)).alias(n)
-            for n in sink_names
-        ])
-        agg_path = os.path.join(cfg.out_dir, "agg")
-        agg.write.mode("overwrite").partitionBy("sink", "run_id").parquet(agg_path)
-        got = agg_obs.get
-        agg_counts = {n: int(got[n] or 0) for n in sink_names}
+    if committed is not None:
         # Per-partition cursors from the committed rows: the same values
         # as over the scan, without opening every table file again.
         cursors = partition_cursors(committed, ts_col=cfg.tracking_column)

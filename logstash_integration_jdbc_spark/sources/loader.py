@@ -5,8 +5,9 @@ jdbc_static bulk-loads remote tables into a local lookup store
 ``count(*)`` guard runs first and the load is aborted when it returns 0
 or exceeds ``max_rows`` (default 1,000,000, loader.rb:65-74). The Derby
 CSV-spool import (read_write_database.rb:64-100) is moot on Spark — the
-dimension is simply read, optionally cached, and *broadcast* into the
-join, which is exactly the role the Derby index played (db_object.rb:19).
+dimension is simply read, cached, and *broadcast* into the join (each
+``Lookup`` adds its own broadcast hint), which is exactly the role the
+Derby index played (db_object.rb:19).
 
 ``refresh()`` reproduces S13 (loader_schedule repeated truncate-and-
 reload, jdbc_static.rb:87-92): re-read + re-cache; the next action plans
@@ -19,7 +20,6 @@ from __future__ import annotations
 from typing import Callable
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 class LoaderError(RuntimeError):
@@ -27,19 +27,17 @@ class LoaderError(RuntimeError):
 
 
 class DimensionLoader:
-    """Guarded, cacheable, re-broadcastable dimension table."""
+    """Guarded, cached, reloadable dimension table."""
 
     def __init__(
         self,
         name: str,
         load_fn: Callable[[], DataFrame],
         max_rows: int = 1_000_000,
-        cache: bool = True,
     ) -> None:
         self.name = name
         self._load_fn = load_fn
         self.max_rows = max_rows
-        self.cache = cache
         self._df: DataFrame | None = None
         self.reload_count = 0  # metrics counter, mirrors jdbc_static.rb reload metric
         self.last_count: int | None = None
@@ -49,10 +47,6 @@ class DimensionLoader:
             self.refresh()
         assert self._df is not None
         return self._df
-
-    def broadcast(self) -> DataFrame:
-        """The dimension with an explicit broadcast hint — guarded small."""
-        return F.broadcast(self.get())
 
     def refresh(self) -> DataFrame:
         df = self._load_fn()
@@ -65,9 +59,9 @@ class DimensionLoader:
             raise LoaderError(
                 f"loader {self.name!r}: {n} rows exceeds max_rows={self.max_rows}; load aborted"
             )
-        if self._df is not None and self.cache:
+        if self._df is not None:
             self._df.unpersist()
-        self._df = df.cache() if self.cache else df
+        self._df = df.cache()
         self.last_count = n
         self.reload_count += 1
         return self._df

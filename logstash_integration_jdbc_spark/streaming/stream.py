@@ -16,8 +16,12 @@ the statement, /root/reference/lib/logstash/inputs/jdbc.rb:176-195); its
   same `Lookup.apply` compiles to a broadcast hash join against the
   static dimension in every micro-batch (re-read per batch ≡ S13
   refresh semantics / jdbc_streaming's TTL cache expiry);
-- routing: `foreachBatch` applies the same Router single-pass
-  partitioned write (exactly-once via run_id = batch id).
+- routing and commit: `foreachBatch` runs `run_pipeline`'s two commit
+  steps on each micro-batch — the Router's single-pass partitioned write
+  (exactly-once via run_id = batch id), then ``commit_aggregate``: the
+  per-sink hourly counts over a read-back of that batch's committed
+  sink partitions, written to ``out_dir/agg``. The micro-batch itself
+  is computed once, by the sink write.
 """
 
 from __future__ import annotations
@@ -28,9 +32,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from logstash_integration_jdbc_spark.functions.parse import parse_tool_calls
-from logstash_integration_jdbc_spark.operators.aggregate import hourly_counts
 from logstash_integration_jdbc_spark.operators.lookup import LookupProcessor
 from logstash_integration_jdbc_spark.operators.router import Router
+from logstash_integration_jdbc_spark.pipeline import commit_aggregate
 
 
 def streaming_hourly_counts(
@@ -143,7 +147,8 @@ def run_streaming_pipeline(
     schema: str | None = None,
     max_files_per_trigger: int | None = None,
 ) -> None:
-    """One availableNow micro-batch run: parse → enrich → route → write.
+    """One availableNow micro-batch run: parse → enrich → route → write
+    → aggregate of the committed sinks.
 
     Resumability comes from the Spark streaming checkpoint (source file
     offsets ≡ sql_last_value); each invocation processes exactly the
@@ -165,18 +170,12 @@ def run_streaming_pipeline(
     enriched = processor.enhance(parsed)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        router.write_all(
+        run_id = f"batch{batch_id}"
+        sink_counts = router.write_all(
             batch_df, os.path.join(out_dir, "sinks"),
-            ts_col="ts", salt_col="conv_id",
-            run_id=f"batch{batch_id}",
+            ts_col="ts", salt_col="conv_id", run_id=run_id,
         )
-        agg = hourly_counts(
-            batch_df.withColumn("sink", router.sink_expr()),
-            keys=("sink", "role", "tool"),
-        ).withColumn("run_id", F.lit(f"batch{batch_id}"))
-        agg.write.mode("overwrite").partitionBy("sink", "run_id").parquet(
-            os.path.join(out_dir, "agg")
-        )
+        commit_aggregate(spark, out_dir, run_id, batch_df.schema, sink_counts)
 
     q = (
         enriched.writeStream

@@ -214,6 +214,26 @@ def test_failed_lookup_streaming_semantics(spark, tool_dim):
     assert "_fail" in r["tags"] and "_default" in r["tags"]
 
 
+@pytest.mark.parametrize("static", [True, False])
+def test_failed_dimension_equals_per_row_failure(spark, tool_dim, static):
+    """A batch whose dimension failed to load gives every row what a
+    per-row failure (a missing parameter field) gives it: the same
+    target, tags and gate. Without ``default_hash`` the streaming target
+    is ``[{}]``, the analog of the reference's ``[@default_hash]``."""
+    lk = Lookup(id="tool_info", dim=tool_dim,
+                on=[("tool", "=", "t")], parameters={"t": "[tool_call]"},
+                select=["tool_name"],
+                tag_on_failure=["_fail"], tag_on_default_use=["_default"])
+    per_row = lk.apply(spark.createDataFrame([(None,)], "tool_call string"),
+                       static_semantics=static).first()
+    failed = lk.apply_failed(spark.createDataFrame([("search",)], "tool_call string"),
+                             static_semantics=static).first()
+    for col in ("tool_info", TAGS_COL, OK_COL):
+        assert failed[col] == per_row[col], col
+    assert failed["tool_info"] == (None if static else [(None,)])
+    assert sorted(failed[TAGS_COL]) == (["_fail"] if static else ["_default", "_fail"])
+
+
 def test_failed_lookup_target_type_matches_ok_path(spark, tool_dim):
     """Degraded and healthy batches must produce union-compatible frames
     (a mid-stream dim outage can't break the sink schema)."""

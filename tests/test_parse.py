@@ -6,7 +6,6 @@ import pytest
 
 from logstash_integration_jdbc_spark.functions.parse import (
     GrokParser,
-    parse_text_pandas,
     parse_tool_calls,
 )
 
@@ -41,16 +40,6 @@ def test_parse_stays_jvm_side(spark, transcripts):
     # / ArrowEvalPython in the plan — the whole point of the grok compiler.
     plan = parse_tool_calls(transcripts)._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan
-
-
-def test_pandas_udf_fallback_extracts_map(spark):
-    udf = parse_text_pandas(r"status=(\w+) dur_ms=(\d+)", ["status", "dur_ms"])
-    df = spark.createDataFrame(
-        [("x status=ok dur_ms=5",), ("nothing",)], "text string"
-    )
-    rows = df.select(udf("text").alias("m")).collect()
-    assert rows[0].m == {"status": "ok", "dur_ms": "5"}
-    assert rows[1].m is None
 
 
 def test_grok_registry_timestamp_iso8601(spark):

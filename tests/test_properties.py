@@ -3,8 +3,10 @@ strategy (SURVEY.md §5: the reference has no property tests).
 
 Each property pins an operator against an independent oracle over
 generated inputs: asof_join vs pandas.merge_asof, GrokParser vs Python
-re, ValueTracker vs identity round-trip, exact_dedup invariants, and the
-MinHash band and winnow kernels vs their JVM and window references.
+re, ValueTracker vs identity round-trip, exact_dedup invariants, the
+MinHash band and winnow kernels vs their JVM and window references,
+Router.route vs a Python routing rule, and salted_repartition's row and
+spread invariants.
 Spark actions are slow, so examples are kept small and deadlines off.
 """
 
@@ -268,3 +270,121 @@ def test_bpe_incremental_matches_brute(counts, k):
     for w, _n in counts:
         toks = bpe.encode_word(w, ranks)
         assert "".join(toks) == w + bpe.EOW
+
+
+# -- routing: Router.route ≡ a pure-Python first-match / all-matches rule
+#    under SQL three-valued logic, where a NULL condition is no match -------
+
+def _v(x, f):
+    return None if x is None else f(x)
+
+
+def _and(p, q):
+    if p is False or q is False:
+        return False
+    return None if p is None or q is None else True
+
+
+def _or(p, q):
+    if p is True or q is True:
+        return True
+    return None if p is None or q is None else False
+
+
+# name → (Spark condition over a, b, s; the same condition in Python)
+_ROUTES = {
+    "a_pos": (lambda F: F.col("a") > 0, lambda a, b, s: _v(a, lambda a: a > 0)),
+    "b_neg": (lambda F: F.col("b") < 0, lambda a, b, s: _v(b, lambda b: b < 0)),
+    "s_x": (lambda F: F.col("s") == "x", lambda a, b, s: _v(s, lambda s: s == "x")),
+    "a_or_b": (lambda F: (F.col("a") > 0) | (F.col("b") > 0),
+               lambda a, b, s: _or(_v(a, lambda a: a > 0), _v(b, lambda b: b > 0))),
+    "not_a_big": (lambda F: ~(F.col("a") > 1), lambda a, b, s: _v(a, lambda a: not a > 1)),
+    "a_and_s": (lambda F: (F.col("a") <= 0) & (F.col("s") != "y"),
+                lambda a, b, s: _and(_v(a, lambda a: a <= 0), _v(s, lambda s: s != "y"))),
+}
+
+
+@st.composite
+def routing_cases(draw):
+    def cell(values):
+        return st.one_of(st.none(), st.sampled_from(values))
+
+    rows = draw(st.lists(st.tuples(cell([-2, -1, 0, 1, 2]), cell([-2, -1, 0, 1, 2]),
+                                   cell(["x", "y"])), min_size=1, max_size=20))
+    names = draw(st.lists(st.sampled_from(sorted(_ROUTES)), min_size=1, max_size=4,
+                          unique=True))
+    return [(i, *r) for i, r in enumerate(rows)], names
+
+
+@pytest.mark.parametrize("exclusive", [True, False])
+@pytest.mark.parametrize("default_sink", ["rest", None])
+@settings(**SETTINGS)
+@given(routing_cases())
+def test_router_route_matches_python_reference(spark, exclusive, default_sink, case):
+    from pyspark.sql import functions as F
+
+    from logstash_integration_jdbc_spark.operators.router import Route, Router
+
+    rows, names = case
+    df = spark.createDataFrame(rows, "id int, a int, b int, s string")
+    router = Router([Route(n, _ROUTES[n][0](F)) for n in names],
+                    default_sink=default_sink, exclusive=exclusive)
+    got = sorted((r.id, r.sink) for r in router.route(df).select("id", "sink").collect())
+    want = []
+    for i, a, b, s in rows:
+        hits = [n for n in names if _ROUTES[n][1](a, b, s) is True]
+        if exclusive:
+            hits = hits[:1]
+        if not hits and default_sink is not None:
+            hits = [default_sink]
+        want += [(i, h) for h in hits]
+    assert got == sorted(want)
+
+
+# -- salted_repartition keeps every row and spreads a hot key, with or
+#    without the turn_idx/ts row columns, beside array and map columns -----
+
+@st.composite
+def salted_frames(draw):
+    n_salts = draw(st.sampled_from([4, 8]))
+    row_cols = draw(st.sampled_from([(), ("turn_idx",), ("ts",), ("turn_idx", "ts")]))
+    n_hot = draw(st.integers(min_value=2 * n_salts, max_value=4 * n_salts))
+    cold = draw(st.lists(st.sampled_from(["c1", "c2", "c3"]), max_size=10))
+    tags = st.lists(st.sampled_from(["t1", "t2"]), max_size=2)
+    attrs = st.dictionaries(st.sampled_from(["k1", "k2"]), st.integers(0, 3), max_size=2)
+    keys = ["hot"] * n_hot + cold
+    rows = [(k, i, _BASE + dt.timedelta(seconds=i), f"p{i}", draw(tags), draw(attrs))
+            for i, k in enumerate(keys)]
+    return n_salts, row_cols, rows
+
+
+@settings(**SETTINGS)
+@given(salted_frames())
+def test_salted_repartition_keeps_rows_and_spreads_hot_key(spark, case):
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from logstash_integration_jdbc_spark.operators.skew import salted_repartition
+
+    n_salts, row_cols, rows = case
+    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, ts timestamp, "
+                               "payload string, tags array<string>, attrs map<string,int>")
+    df = df.drop(*{"turn_idx", "ts"} - set(row_cols))
+
+    def bag(frame):
+        return Counter((*r[:-2], tuple(r.tags), tuple(sorted(r.attrs.items())))
+                       for r in frame.collect())
+
+    out = salted_repartition(df, "conv_id", n_salts=n_salts)
+    assert bag(out) == bag(df)
+    # AQE coalescing off: the exchange shows its raw partitions
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        hot_parts = (out.filter(F.col("conv_id") == "hot")
+                     .select(F.spark_partition_id().alias("p")).distinct().count())
+    finally:
+        spark.conf.set(key, old)
+    assert hot_parts > 1

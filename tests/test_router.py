@@ -19,15 +19,28 @@ def tagged(spark):
     return spark.createDataFrame(rows, "conv_id string, turn_idx int, tags array<string>")
 
 
+def _by_sink(rows, key=lambda x: x.id):
+    """sink name → sorted keys of the rows routed there."""
+    out: dict[str, list] = {}
+    for x in rows:
+        out.setdefault(x.sink, []).append(key(x))
+    return {k: sorted(v) for k, v in out.items()}
+
+
+def _conv_turn(x):
+    return (x.conv_id, x.turn_idx)
+
+
 def test_exclusive_first_match_wins(tagged):
     r = Router([
         Route("failed", F.array_contains("tags", "_failure")),
         Route("defaults", F.array_contains("tags", "_default")),
     ], default_sink="ok")
-    sinks = {k: {(x.conv_id, x.turn_idx) for x in v.collect()} for k, v in r.split(tagged).items()}
-    assert sinks["failed"] == {("c2", 0), ("c2", 1)}
-    assert sinks["defaults"] == {("c1", 0)}  # (c2,1) already claimed by failed
-    assert sinks["ok"] == {("c1", 1)}
+    assert _by_sink(r.route(tagged).collect(), _conv_turn) == {
+        "failed": [("c2", 0), ("c2", 1)],
+        "defaults": [("c1", 0)],  # (c2,1) already claimed by failed
+        "ok": [("c1", 1)],
+    }
 
 
 def test_non_exclusive_multicast(tagged):
@@ -35,13 +48,76 @@ def test_non_exclusive_multicast(tagged):
         Route("failed", F.array_contains("tags", "_failure")),
         Route("defaults", F.array_contains("tags", "_default")),
     ], default_sink=None, exclusive=False)
-    sinks = {k: v.count() for k, v in r.split(tagged).items()}
-    assert sinks == {"failed": 2, "defaults": 2}
+    assert _by_sink(r.route(tagged).collect(), _conv_turn) == {
+        "failed": [("c2", 0), ("c2", 1)],
+        "defaults": [("c1", 0), ("c2", 1)],  # (c1,1) matches neither: dropped
+    }
 
 
 def test_partition_totals_preserved(tagged):
     r = Router([Route("d", F.array_contains("tags", "_default"))])
-    assert sum(df.count() for df in r.split(tagged).values()) == tagged.count()
+    routed = r.route(tagged)
+    assert routed.count() == tagged.count()
+    assert routed.select("conv_id", "turn_idx").distinct().count() == tagged.count()
+
+
+def _events(spark, rows):
+    return spark.createDataFrame(
+        [(i, f"c{i}", i, v, kind) for i, v, kind in rows],
+        "id int, conv_id string, turn_idx int, v int, kind string",
+    ).withColumn("ts", F.to_timestamp(F.lit("2024-01-01 00:00:00")))
+
+
+def _written(spark, base):
+    return _by_sink(spark.read.parquet(base).collect())
+
+
+def test_write_all_without_default_sink_drops_unmatched(spark, tmp_path):
+    # default_sink=None: a row that matches no route is written nowhere
+    # and counted nowhere (it does not fall through to the last route)
+    df = _events(spark, [(1, 0, "a"), (2, 0, "b"), (3, 0, "c")])
+    r = Router([Route("a", F.col("kind") == "a"), Route("b", F.col("kind") == "b")],
+               default_sink=None)
+    counts = r.write_all(df, str(tmp_path), n_salts=2)
+    assert counts == {"a": 1, "b": 1}
+    assert _written(spark, str(tmp_path)) == {"a": [1], "b": [2]}
+
+
+@pytest.mark.parametrize("exclusive", [True, False])
+def test_null_condition_is_no_match(spark, tmp_path, exclusive):
+    # a route condition that evaluates to NULL does not match: the row
+    # falls through to the default sink, through route and write_all
+    df = _events(spark, [(1, None, "x"), (2, 5, "x"), (3, 500, "x")])
+    r = Router([Route("big", F.col("v") > 100)], default_sink="other",
+               exclusive=exclusive)
+    want = {"big": [3], "other": [1, 2]}
+    assert _by_sink(r.route(df).collect()) == want
+    assert r.write_all(df, str(tmp_path), n_salts=2) == {"big": 1, "other": 2}
+    assert _written(spark, str(tmp_path)) == want
+
+
+def test_multicast_write_all_is_one_write(spark, tmp_path, monkeypatch):
+    # multicast: each event is written once per matched sink (the default
+    # sink takes the rest) by ONE write, and the returned counts are the
+    # write's observed counts, equal to what was committed
+    from pyspark.sql import DataFrameWriter
+
+    df = _events(spark, [(i, i, "a" if i % 3 else "b") for i in range(1, 31)])
+    r = Router([Route("small", F.col("v") <= 20), Route("kind_a", F.col("kind") == "a")],
+               default_sink="rest", exclusive=False)
+    saves = []
+    save = DataFrameWriter.save
+    monkeypatch.setattr(DataFrameWriter, "save",
+                        lambda self, *a, **k: saves.append(a) or save(self, *a, **k))
+    counts = r.write_all(df, str(tmp_path), n_salts=2,
+                         extra_observe={"rows": F.count(F.lit(1))})
+    assert len(saves) == 1
+    want = {"small": list(range(1, 21)),
+            "kind_a": [i for i in range(1, 31) if i % 3],
+            "rest": [i for i in range(21, 31) if i % 3 == 0]}
+    assert _written(spark, str(tmp_path)) == want
+    assert counts == {k: len(v) for k, v in want.items()}
+    assert r.last_observed == {"rows": sum(counts.values())}
 
 
 def test_duplicate_sink_names_rejected():

@@ -60,6 +60,28 @@ def test_available_now_processes_then_resumes(spark, tmp_path, setup):
     assert dups == 0
 
 
+def test_streaming_aggregate_equals_recount_of_committed_sinks(spark, tmp_path, setup):
+    # each micro-batch's aggregate is computed from a read-back of the
+    # sink partitions that batch committed, so over every run it equals
+    # a recount of the sinks
+    from logstash_integration_jdbc_spark.operators.aggregate import hourly_counts
+
+    src, half1, half2, proc, router = setup
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    run_streaming_pipeline(spark, src, proc, router, out, ckpt)
+    half2.write.mode("append").parquet(src)
+    run_streaming_pipeline(spark, src, proc, router, out, ckpt)
+
+    cols = ["sink", "run_id", "role", "tool", "ts_hour", "n_turns"]
+    agg = spark.read.parquet(os.path.join(out, "agg")).select(*cols)
+    sinks = spark.read.parquet(os.path.join(out, "sinks")).drop("ts_hour")
+    recount = hourly_counts(sinks, keys=("sink", "run_id", "role", "tool")).select(*cols)
+    got = sorted(map(tuple, agg.collect()), key=repr)
+    assert got == sorted(map(tuple, recount.collect()), key=repr)
+    assert {r.run_id for r in agg.select("run_id").distinct().collect()} == {"batch0", "batch1"}
+    assert sum(r[-1] for r in got) == half1.count() + half2.count()
+
+
 def test_streaming_hourly_counts_watermark(spark, tmp_path, transcripts):
     src = str(tmp_path / "wsrc")
     transcripts.write.mode("overwrite").parquet(src)
