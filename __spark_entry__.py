@@ -14,7 +14,9 @@ applied identically on both sides.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -1107,6 +1109,8 @@ def _q_streaming_pairs(spark, sf_dir):
     _pin(spark)
     ev = _t(spark, sf_dir, "events")
     base = _tf.mkdtemp(prefix="spairs-q-")
+    # the returned frame reads lazily from base, so it goes at exit
+    atexit.register(shutil.rmtree, base, ignore_errors=True)
     sdir, edir = _os.path.join(base, "s"), _os.path.join(base, "e")
     ev.filter(F.col("event_type") == "click").select("user_id", "ts") \
         .write.mode("overwrite").parquet(sdir)
@@ -1278,25 +1282,6 @@ def _q_fingerprint(spark, sf_dir):
     return fingerprint(_t(spark, sf_dir, "documents")).select("doc_id", "fingerprint")
 
 
-def _q_ann_quantized_topk(spark, sf_dir):
-    # int8-quantized brute cosine: per-vector symmetric scale, scoring
-    # the tinyint arrays (scale cancels in cosine); oracle replays the
-    # quantization arithmetic in SQL (round = ties-away-from-zero in
-    # BOTH engines: BigDecimal HALF_UP / DuckDB round)
-    from logstash_integration_jdbc_spark.operators.similarity import (
-        cosine_topk_quantized,
-        quantize_embeddings,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>"))
-    qemb = quantize_embeddings(emb)
-    queries = (qemb.filter(F.col("vec_id") < 5)
-               .selectExpr("vec_id as query_id", "q_vec"))
-    return cosine_topk_quantized(qemb, queries, k=10).select(
-        "query_id", "vec_id", F.round("cosine", 4).alias("cos4"))
-
-
 def _q_ann_cosine_topk(spark, sf_dir):
     from logstash_integration_jdbc_spark.operators.similarity import cosine_topk
     from logstash_integration_jdbc_spark.operators.skew import spread
@@ -1306,53 +1291,6 @@ def _q_ann_cosine_topk(spark, sf_dir):
     )
     queries = emb.filter(F.col("vec_id") < 5).selectExpr("vec_id as query_id", "embedding")
     return cosine_topk(emb, queries, k=10).select(
-        "query_id", "vec_id", F.round("cosine", 4).alias("cos4")
-    )
-
-
-def _q_ann_ivf_topk(spark, sf_dir):
-    # IVF probe search — deterministic (centroids = 8 smallest vec_ids,
-    # 4 probes); the DuckDB oracle replicates assignment+probing exactly
-    from logstash_integration_jdbc_spark.operators.similarity import ivf_topk
-
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    queries = emb.filter(F.col("vec_id") < 5).selectExpr("vec_id as query_id", "embedding")
-    return ivf_topk(emb, queries, k=10, n_centroids=8, n_probe=4).select(
-        "query_id", "vec_id", F.round("cosine", 4).alias("cos4")
-    )
-
-
-def _q_ann_ivf_lloyd_topk(spark, sf_dir):
-    # IVF with 2 Lloyd refinement iterations (VERDICT r3 ask): the
-    # oracle recomputes the refined centroids with an INDEPENDENT
-    # numpy Lloyd twin (assign = cosine argmax, tie → smallest id;
-    # update = element-wise raw-vector mean) and replays assignment +
-    # probing + exact ranking in SQL over those literal centroids.
-    from logstash_integration_jdbc_spark.operators.similarity import ivf_topk
-
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    queries = emb.filter(F.col("vec_id") < 5).selectExpr("vec_id as query_id", "embedding")
-    return ivf_topk(emb, queries, k=10, n_centroids=8, n_probe=4,
-                    kmeans_iters=2).select(
-        "query_id", "vec_id", F.round("cosine", 4).alias("cos4")
-    )
-
-
-def _q_ann_lsh_topk(spark, sf_dir):
-    # sign-LSH blocked approximate top-k; the oracle replicates the
-    # 16-bit hyperplane sketch + 4-bit-block candidate join + exact
-    # cosine ranking with the same literal plane coefficients.
-    from logstash_integration_jdbc_spark.operators.similarity import lsh_topk
-
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    queries = emb.filter(F.col("vec_id") < 5).selectExpr("vec_id as query_id", "embedding")
-    return lsh_topk(emb, queries, k=10).select(
         "query_id", "vec_id", F.round("cosine", 4).alias("cos4")
     )
 
@@ -1481,6 +1419,8 @@ def _q_streaming_dedup(spark, sf_dir):
 
     _pin(spark)
     base = _tf.mkdtemp(prefix="sdedup-q-")
+    # the returned frame reads lazily from base, so it goes at exit
+    atexit.register(shutil.rmtree, base, ignore_errors=True)
     src = _os.path.join(base, "src")
     _write_pipeline_input(spark)
     tr = gen_transcripts(spark, n_rows=5000, seed=42)
@@ -1518,6 +1458,8 @@ def _q_streaming_counts(spark, sf_dir):
 
     _pin(spark)
     base = _tf.mkdtemp(prefix="stream-q-")
+    # the returned frame reads lazily from base, so it goes at exit
+    atexit.register(shutil.rmtree, base, ignore_errors=True)
     src = _os.path.join(base, "src")
     _write_pipeline_input(spark)
     gen_transcripts(spark, n_rows=5000, seed=42).write.mode("overwrite").parquet(src)
@@ -1618,23 +1560,6 @@ def _q_url_canonical(spark, sf_dir):
     return canon.where(d % 20 == 3).orderBy("doc_id")
 
 
-def _q_hard_negatives(spark, sf_dir):
-    # hard-negative mining for contrastive training: per query the 10
-    # nearest different-label vectors (self + positives excluded
-    # map-side BEFORE the top-k). Oracle = the ann_cosine_topk SQL
-    # with the label gate added.
-    from logstash_integration_jdbc_spark.operators.similarity import (
-        hard_negatives,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>"))
-    qs = emb.filter(F.col("vec_id") < 5).selectExpr(
-        "vec_id as query_id", "embedding", "label")
-    return hard_negatives(emb, qs, k=10).select(
-        "query_id", "vec_id", F.round("cosine", 4).alias("cos4"), "rank")
-
-
 def _q_dedup_components(spark, sf_dir):
     # the pairs → clusters composition: minhash near-dup pairs (the
     # dedup_minhash row's exact-verified set) fed through min-label
@@ -1701,7 +1626,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bpe_encode": _q_bpe_encode,
         "text_bm25_topk": _q_bm25_topk,
         "url_canonical": _q_url_canonical,
-        "hard_negatives": _q_hard_negatives,
         "zorder_key": _q_zorder_key,
         "j2_static_lookup": _q_static_lookup,
         "r4_router_counts": _q_router_counts,
@@ -1725,9 +1649,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_quality": _q_quality,
         "text_langid": _q_langid,
         "text_redact_pii": _q_redact_pii,
-        "ann_ivf_topk": _q_ann_ivf_topk,
-        "ann_ivf_lloyd_topk": _q_ann_ivf_lloyd_topk,
-        "ann_lsh_topk": _q_ann_lsh_topk,
         "embedding_near_dup": _q_embedding_near_dup,
         "text_repetition": _q_text_repetition,
         "j4_like_lookup": _q_like_lookup,
@@ -1763,7 +1684,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "clone_fanout": _q_clone_fanout,
         "hybrid_rrf_topk": _q_hybrid_rrf,
         "streaming_pairs": _q_streaming_pairs,
-        "ann_quantized_topk": _q_ann_quantized_topk,
     }
 
 
@@ -2434,189 +2354,6 @@ def oracle_sql() -> dict[str, str]:
             FROM scored
         ) WHERE rn <= 10
     """
-    q["ann_quantized_topk"] = """
-        WITH e AS (
-            SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-            FROM embeddings
-        ), sc AS (
-            SELECT vec_id, v,
-                   CASE WHEN amax > 0 THEN amax / 127.0 ELSE 1.0 END AS s
-            FROM (SELECT vec_id, v,
-                         list_max(list_transform(v, x -> abs(x))) AS amax
-                  FROM e)
-        ), qv AS (
-            SELECT vec_id, list_transform(v, x -> round(x / s)) AS q
-            FROM sc
-        ), qs AS (
-            SELECT vec_id AS query_id, q AS qq FROM qv WHERE vec_id < 5
-        ), scored AS (
-            SELECT s.query_id, c.vec_id,
-                   list_sum(list_transform(range(1, len(c.q) + 1), i -> c.q[i] * s.qq[i]))
-                   / (sqrt(list_sum(list_transform(c.q, x -> x * x)))
-                      * sqrt(list_sum(list_transform(s.qq, x -> x * x)))) AS cosine
-            FROM qv c CROSS JOIN qs s WHERE c.vec_id <> s.query_id
-        )
-        SELECT query_id, vec_id, round(cosine, 4) AS cos4 FROM (
-            SELECT *, row_number() OVER (PARTITION BY query_id
-                                         ORDER BY cosine DESC, vec_id ASC) AS rn
-            FROM scored
-        ) WHERE rn <= 10
-    """
-    q["ann_ivf_topk"] = """
-        WITH e AS (
-            SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-            FROM embeddings
-        ), cents AS (
-            SELECT vec_id AS centroid_id, v AS cv FROM e
-            ORDER BY vec_id LIMIT 8
-        ), assigned AS (
-            SELECT vec_id, v, centroid_id FROM (
-                SELECT e.vec_id, e.v, c.centroid_id,
-                       row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                           list_sum(list_transform(range(1, len(e.v) + 1), i -> e.v[i] * c.cv[i]))
-                           / (sqrt(list_sum(list_transform(e.v, x -> x * x)))
-                              * sqrt(list_sum(list_transform(c.cv, x -> x * x)))) DESC,
-                           c.centroid_id ASC) AS rn
-                FROM e CROSS JOIN cents c
-            ) WHERE rn = 1
-        ), qs AS (
-            SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5
-        ), probes AS (
-            SELECT query_id, centroid_id, qv FROM (
-                SELECT q.query_id, c.centroid_id, q.qv,
-                       row_number() OVER (PARTITION BY q.query_id ORDER BY
-                           list_sum(list_transform(range(1, len(q.qv) + 1), i -> q.qv[i] * c.cv[i]))
-                           / (sqrt(list_sum(list_transform(q.qv, x -> x * x)))
-                              * sqrt(list_sum(list_transform(c.cv, x -> x * x)))) DESC,
-                           c.centroid_id ASC) AS rn
-                FROM qs q CROSS JOIN cents c
-            ) WHERE rn <= 4
-        ), scored AS (
-            SELECT p.query_id, a.vec_id,
-                   list_sum(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * p.qv[i]))
-                   / (sqrt(list_sum(list_transform(a.v, x -> x * x)))
-                      * sqrt(list_sum(list_transform(p.qv, x -> x * x)))) AS cosine
-            FROM assigned a JOIN probes p ON a.centroid_id = p.centroid_id
-            WHERE a.vec_id <> p.query_id
-        )
-        SELECT query_id, vec_id, round(cosine, 4) AS cos4 FROM (
-            SELECT *, row_number() OVER (PARTITION BY query_id
-                                         ORDER BY cosine DESC, vec_id ASC) AS rn
-            FROM scored
-        ) WHERE rn <= 10
-    """
-    # Lloyd-refined IVF: centroids recomputed by an independent numpy
-    # Lloyd twin, inlined as literals; the rest of the SQL is the same
-    # assignment/probe/rank replay as ann_ivf_topk.
-    def _build_ivf_lloyd_sql() -> str:
-        import duckdb as _dk
-        import numpy as _np3
-
-        rows = _dk.sql(
-            "SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) "
-            f"FROM read_parquet('{_ORACLE_SF_DIR}/embeddings.parquet') "
-            "ORDER BY vec_id"
-        ).fetchall()
-        ids = [r[0] for r in rows]
-        V = _np3.array([r[1] for r in rows], dtype=_np3.float64)
-        C = V[:8].copy()
-        for _ in range(2):
-            sims = (V @ C.T) / (
-                _np3.linalg.norm(V, axis=1, keepdims=True)
-                * _np3.linalg.norm(C, axis=1)[None, :])
-            best = _np3.argmax(sims, axis=1)  # first max ≡ smallest id
-            C = _np3.array([
-                V[best == c].mean(axis=0) if (best == c).any() else C[c]
-                for c in range(8)
-            ])
-        cl = ", ".join(
-            "({}, [{}])".format(ids[c], ", ".join(repr(float(x)) for x in C[c]))
-            for c in range(8)
-        )
-        return """
-        WITH e AS (
-            SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-            FROM embeddings
-        ), cents AS (
-            SELECT centroid_id, cv FROM (VALUES {CL}) t(centroid_id, cv)
-        ), assigned AS (
-            SELECT vec_id, v, centroid_id FROM (
-                SELECT e.vec_id, e.v, c.centroid_id,
-                       row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                           list_sum(list_transform(range(1, len(e.v) + 1), i -> e.v[i] * c.cv[i]))
-                           / (sqrt(list_sum(list_transform(e.v, x -> x * x)))
-                              * sqrt(list_sum(list_transform(c.cv, x -> x * x)))) DESC,
-                           c.centroid_id ASC) AS rn
-                FROM e CROSS JOIN cents c
-            ) WHERE rn = 1
-        ), qs AS (
-            SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5
-        ), probes AS (
-            SELECT query_id, centroid_id, qv FROM (
-                SELECT q.query_id, c.centroid_id, q.qv,
-                       row_number() OVER (PARTITION BY q.query_id ORDER BY
-                           list_sum(list_transform(range(1, len(q.qv) + 1), i -> q.qv[i] * c.cv[i]))
-                           / (sqrt(list_sum(list_transform(q.qv, x -> x * x)))
-                              * sqrt(list_sum(list_transform(c.cv, x -> x * x)))) DESC,
-                           c.centroid_id ASC) AS rn
-                FROM qs q CROSS JOIN cents c
-            ) WHERE rn <= 4
-        ), scored AS (
-            SELECT p.query_id, a.vec_id,
-                   list_sum(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * p.qv[i]))
-                   / (sqrt(list_sum(list_transform(a.v, x -> x * x)))
-                      * sqrt(list_sum(list_transform(p.qv, x -> x * x)))) AS cosine
-            FROM assigned a JOIN probes p ON a.centroid_id = p.centroid_id
-            WHERE a.vec_id <> p.query_id
-        )
-        SELECT query_id, vec_id, round(cosine, 4) AS cos4 FROM (
-            SELECT *, row_number() OVER (PARTITION BY query_id
-                                         ORDER BY cosine DESC, vec_id ASC) AS rn
-            FROM scored
-        ) WHERE rn <= 10
-        """.replace("{CL}", cl)
-
-    q["ann_ivf_lloyd_topk"] = _value_oracle("ann_ivf_lloyd_topk",
-                                            _build_ivf_lloyd_sql)
-
-    # ANN LSH oracle: the 16-bit sketch rebuilt in SQL from the same
-    # deterministic plane coefficients (similarity._plane_coeff).
-    from logstash_integration_jdbc_spark.operators.similarity import _plane_coeff
-
-    def _sk_expr(vcol: str) -> str:
-        bits = []
-        for i in range(16):
-            coefs = "[" + ", ".join(repr(_plane_coeff(i, j)) for j in range(64)) + "]"
-            dot = (f"list_sum(list_transform(range(1, len({vcol}) + 1), "
-                   f"j -> {vcol}[j] * ({coefs})[j]))")
-            bits.append(f"(CASE WHEN {dot} > 0 THEN {1 << i} ELSE 0 END)")
-        return " + ".join(bits)
-
-    _blk = " OR ".join(
-        f"(((c.sketch >> {b * 4}) & 15) = ((q.sketch >> {b * 4}) & 15))"
-        for b in range(4)
-    )
-    q["ann_lsh_topk"] = f"""
-        WITH e AS (
-            SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-            FROM embeddings
-        ), sk AS (
-            SELECT vec_id, v, {_sk_expr('v')} AS sketch FROM e
-        ), qs AS (
-            SELECT vec_id AS query_id, v AS qv, sketch FROM sk WHERE vec_id < 5
-        ), cand AS (
-            SELECT q.query_id, c.vec_id,
-                   list_sum(list_transform(range(1, len(c.v) + 1), i -> c.v[i] * q.qv[i]))
-                   / (sqrt(list_sum(list_transform(c.v, x -> x * x)))
-                      * sqrt(list_sum(list_transform(q.qv, x -> x * x)))) AS cosine
-            FROM sk c JOIN qs q ON ({_blk}) AND c.vec_id <> q.query_id
-        )
-        SELECT query_id, vec_id, round(cosine, 4) AS cos4 FROM (
-            SELECT *, row_number() OVER (PARTITION BY query_id
-                                         ORDER BY cosine DESC, vec_id ASC) AS rn
-            FROM cand
-        ) WHERE rn <= 10
-    """
     q["embedding_near_dup"] = """
         WITH e AS (
             SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -3238,30 +2975,6 @@ def oracle_sql() -> dict[str, str]:
 
     q["url_canonical"] = _value_oracle(
         "url_canonical", _build_url_canonical_sql)
-
-    q["hard_negatives"] = """
-        WITH e AS (
-            SELECT vec_id, label,
-                   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-            FROM embeddings
-        ), qs AS (
-            SELECT vec_id AS query_id, label AS qlabel, v AS qv
-            FROM e WHERE vec_id < 5
-        ), scored AS (
-            SELECT q.query_id, e.vec_id,
-                   list_sum(list_transform(range(1, len(e.v) + 1), i -> e.v[i] * q.qv[i]))
-                   / (sqrt(list_sum(list_transform(e.v, x -> x * x)))
-                      * sqrt(list_sum(list_transform(q.qv, x -> x * x)))) AS cosine
-            FROM e CROSS JOIN qs q
-            WHERE e.vec_id <> q.query_id AND e.label <> q.qlabel
-        )
-        SELECT query_id, vec_id, round(cosine, 4) AS cos4,
-               CAST(rn AS INT) AS rank FROM (
-            SELECT *, row_number() OVER (PARTITION BY query_id
-                                         ORDER BY cosine DESC, vec_id ASC) AS rn
-            FROM scored
-        ) WHERE rn <= 10
-    """
 
     # dedup_components: transitive closure over the SAME exact-jaccard
     # pair set the dedup_minhash row verifies, via WITH RECURSIVE —

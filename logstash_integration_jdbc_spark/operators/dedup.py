@@ -722,8 +722,8 @@ def exact_cosine_pairs(df: DataFrame, id_col: str = "vec_id",
       expression arithmetic, keeping the output bit-identical to a
       sequential-sum oracle.
 
-    Quadratic by nature — at 100 TB pre-cluster (ivf_index) and run this
-    within buckets; for high thresholds (≥0.99) on less-clustered data
+    Quadratic by nature — at 100 TB pre-cluster the corpus and run this
+    within clusters; for high thresholds (≥0.99) on less-clustered data
     ``embedding_near_dups`` prunes genuinely and scales further.
 
     Tile sizing: when neither ``n_blocks`` nor ``n_rows`` is given, a
@@ -837,7 +837,7 @@ def embedding_near_dups(df: DataFrame, id_col: str = "vec_id",
     of exactness in the hard 0.95 regime (p=0.9 vs 0.5 per bit is a thin
     gap): ~9/256 per chunk on sketch-uniform pairs. For stricter
     thresholds raise chunk_bits (0.99 → 16); at 100 TB run exact-dedup
-    upstream and pre-cluster (IVF assignment) so blocks stay small —
+    upstream and pre-cluster the corpus so blocks stay small —
     same degenerate-bucket caveat as minhash banding.
 
     Pair emission groups ids per bucket (one shuffle on the bucket key,

@@ -7,6 +7,8 @@ the hot path; each scales as a map-only pass over the corpus.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -250,9 +252,7 @@ def gopher_rules(df: DataFrame, text_col: str = "text",
     return out.withColumn("gopher_keep", keep)
 
 
-_NFC_UDF = None
-
-
+@functools.lru_cache(maxsize=None)
 def _get_nfc_udf(form: str):
     """Arrow-batched Unicode normalizer. Normalization has no Catalyst
     expression, so this is one of the few justified Python paths (same
@@ -347,9 +347,7 @@ def c4_rules(df: DataFrame, text_col: str = "text",
     return out.withColumn("c4_keep", keep)
 
 
-_ZLIB_UDF = None
-
-
+@functools.lru_cache(maxsize=None)
 def _get_zlib_udf(level: int):
     """Arrow-batched zlib compression-ratio kernel — one of the few
     justified Python hops (no Catalyst compression expression; CPython

@@ -104,31 +104,11 @@ def test_asof_join_single_exchange_no_python(spark, fixture_dir):
     assert "Join" not in plan.replace("asof_join", "")
 
 
-def test_ivf_assignment_is_map_only(spark):
-    """Centroid assignment must be a map-side argmax over literal
-    centroids — no crossJoin exchange carrying corpus×n_centroids rows,
-    no per-row window (VERDICT r1 'What's wrong' #3)."""
-    from logstash_integration_jdbc_spark.operators.similarity import ivf_index
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    assigned, _ = ivf_index(emb, n_centroids=8)
-    plan = plan_of(assigned)
-    assert "Window" not in plan
-    assert "Exchange" not in plan          # pure projection over the scan
-    assert "Join" not in plan
-    assert "EvalPython" not in plan
-
-
 def test_topk_is_two_phase_no_global_query_window(spark):
     """Per-query top-k must pre-rank within (query_id, partition) before
     the final per-query window — a single global window funnels the whole
     corpus's scores for a query into one task (VERDICT r1 #4)."""
-    from logstash_integration_jdbc_spark.operators.similarity import (
-        cosine_topk,
-        ivf_topk,
-    )
+    from logstash_integration_jdbc_spark.operators.similarity import cosine_topk
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").withColumn(
         "embedding", F.col("embedding").cast("array<double>")
@@ -136,38 +116,11 @@ def test_topk_is_two_phase_no_global_query_window(spark):
     queries = emb.filter(F.col("vec_id") < 3).selectExpr(
         "vec_id as query_id", "embedding"
     )
-    for df in (cosine_topk(emb, queries, k=5), ivf_topk(emb, queries, k=5)):
-        plan = plan_of(df)
-        # phase-1 window keyed by (query_id, spark_partition_id): the only
-        # exchanges hashing on query_id alone are the tiny phase-2 merge
-        assert "SPARK_PARTITION_ID" in plan.upper()
-        assert plan.count("Window") >= 2
-
-
-def test_lsh_topk_dedup_exchange_carries_only_ids(spark):
-    """The candidate-pair dedup must shuffle bare (query_id, corpus_id)
-    pairs — not rows dragging two embedding vectors per duplicate
-    (VERDICT r2 'What's wrong' #3)."""
-    from logstash_integration_jdbc_spark.operators.similarity import lsh_topk
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    queries = emb.filter(F.col("vec_id") < 3).selectExpr(
-        "vec_id as query_id", "embedding"
-    )
-    plan = plan_of(lsh_topk(emb, queries, k=5))
-    # every pair-dedup aggregate keyed by (query_id, vec_id) must not
-    # carry an embedding/__qvec column through its exchange — neither as
-    # a key nor as a first(...) aggregate (the pre-fix shape)
-    dedup_nodes = []
-    for seg in plan.split("HashAggregate(")[1:]:
-        node = seg.split("\n")[0]          # one plan node per line
-        keys = node.split("keys=[")[1].split("]")[0] if "keys=[" in node else ""
-        if "query_id" in keys and "vec_id" in keys:
-            dedup_nodes.append(node)
-            assert "embedding" not in node and "__qvec" not in node, node
-    assert dedup_nodes, "expected a pair-dedup HashAggregate in the plan"
+    plan = plan_of(cosine_topk(emb, queries, k=5))
+    # phase-1 window keyed by (query_id, spark_partition_id): the only
+    # exchanges hashing on query_id alone are the tiny phase-2 merge
+    assert "SPARK_PARTITION_ID" in plan.upper()
+    assert plan.count("Window") >= 2
 
 
 def test_exact_cosine_pairs_is_tiled_not_collected(spark):
@@ -242,18 +195,6 @@ def test_perplexity_no_python_eval(spark):
     # one-row aggregate broadcasts — the model tables join shuffled
     assert "EvalPython" not in plan
     assert "BroadcastExchange" in plan
-
-
-def test_quantize_embeddings_pure_expression(spark):
-    from logstash_integration_jdbc_spark.operators.similarity import (
-        quantize_embeddings,
-    )
-
-    df = spark.createDataFrame([(0, [1.0, -2.0])],
-                               "vec_id int, embedding array<double>")
-    plan = plan_of(quantize_embeddings(df))
-    # no Python evaluation, no shuffle — the int8 index is a map pass
-    assert "EvalPython" not in plan and "Exchange" not in plan
 
 
 def test_bpe_word_counts_single_exchange(spark):
