@@ -625,164 +625,6 @@ def _q_normalize_unicode(spark, sf_dir):
         F.length("text_norm").alias("norm_len"))
 
 
-def _q_dissect_parse(spark, sf_dir):
-    # dissect-style delimiter parse (logstash-filter-dissect semantics):
-    # a synthesized log line round-trips through the compiled-regex
-    # extractor; 'error' rows take the _dissectfailure path.
-    from logstash_integration_jdbc_spark.functions.dissect import DissectParser
-
-    ev = _t(spark, sf_dir, "events")
-    line = F.when(
-        F.col("event_type") != "error",
-        F.concat(F.lit("evt "), F.col("event_id").cast("string"),
-                 F.lit(" ["), F.col("event_type"), F.lit("] user="),
-                 F.col("user_id").cast("string"), F.lit(" done")),
-    ).otherwise(F.lit("malformed line"))
-    p = DissectParser("evt %{eid} [%{etype}] user=%{uid} done",
-                      types={"eid": "long", "uid": "long"})
-    out = p.apply(ev.withColumn("line", line), text_col="line")
-    return out.select(
-        "event_id", "eid", "etype", "uid",
-        F.col("parse_ok").cast("int").alias("ok"),
-        F.array_join("tags", ",").alias("tags_str"))
-
-
-def _q_kv_parse(spark, sf_dir):
-    # logstash kv filter: key=value splitting with trim/include/prefix,
-    # pure higher-order functions (functions/structured.py)
-    from logstash_integration_jdbc_spark.functions.structured import kv_parse
-
-    ev = _t(spark, sf_dir, "events")
-    line = F.concat(
-        F.lit("[type]=<"), F.col("event_type"), F.lit("> [user]=<"),
-        F.col("user_id").cast("string"), F.lit("> junk"))
-    out = kv_parse(ev.withColumn("line", line), "line",
-                   trim_key="[]", trim_value="<>",
-                   include_keys=["type", "user"], prefix="p_",
-                   fields=["p_type", "p_user"])
-    return out.select("event_id", "p_type", "p_user",
-                      F.size("kv").alias("n_keys"))
-
-
-def _q_json_parse(spark, sf_dir):
-    # logstash json filter: schema'd from_json with corrupt-record
-    # failure tagging, merged to the top level
-    from logstash_integration_jdbc_spark.functions.structured import json_parse
-
-    ev = _t(spark, sf_dir, "events")
-    out = json_parse(ev, "props", "k int")
-    return out.select("event_id", "k", F.array_join("tags", ",").alias("tags_str"))
-
-
-def _q_csv_parse(spark, sf_dir):
-    # logstash csv filter: quote-aware from_csv — the quoted middle
-    # field contains the separator and must survive the round trip
-    from logstash_integration_jdbc_spark.functions.structured import csv_parse
-
-    cust = _t(spark, sf_dir, "customer")
-    line = F.concat(
-        F.col("c_custkey").cast("string"), F.lit(',"'),
-        F.col("c_mktsegment"), F.lit(","), F.col("c_name"), F.lit('",'),
-        F.col("c_nationkey").cast("string"))
-    out = csv_parse(cust.withColumn("line", line), "line",
-                    "ck bigint, seg_name string, nk bigint")
-    return out.select("c_custkey", "ck", "seg_name", "nk",
-                      F.array_join("tags", ",").alias("tags_str"))
-
-
-def _q_throttle_rate(spark, sf_dir):
-    # logstash throttle filter: first max_count per key per period
-    # survive, the rest are flagged — one (key, bucket) exchange
-    from logstash_integration_jdbc_spark.operators.throttle import throttle
-
-    ev = _t(spark, sf_dir, "events")
-    out = throttle(ev, ["user_id"], period="1 day", max_count=20,
-                   order_cols=["event_id"], tag=None)
-    return out.select("event_id", F.col("throttled").cast("int").alias("throttled"))
-
-
-def _q_anomaly_counts(spark, sf_dir):
-    # rolling z-score over hourly per-type counts (current bucket
-    # excluded; Poisson sqrt(mean) divisor floor)
-    from logstash_integration_jdbc_spark.operators.throttle import count_anomalies
-
-    ev = _t(spark, sf_dir, "events")
-    out = count_anomalies(ev, ["event_type"], window="1 hour",
-                          lookback=24, min_periods=6, z_thresh=3.0)
-    return out.select(
-        "event_type",
-        F.date_format("bucket", "yyyy-MM-dd HH").alias("bucket_s"),
-        "n",
-        F.round("mean_n", 4).alias("mean4"),
-        F.round("z", 4).alias("z4"),
-        F.col("is_anomaly").cast("int").alias("anom"))
-
-
-_CIDR_NETS = [("0.0.0.0/2", "low"), ("128.0.0.0/1", "high"),
-              ("10.0.0.0/8", "ten"), ("10.32.0.0/11", "ten-32")]
-
-
-def _q_cidr_label(spark, sf_dir):
-    # logstash cidr filter: dotted-quad → uint32 arithmetic + one
-    # most-specific-first CASE chain, map-only (operators/network.py)
-    from logstash_integration_jdbc_spark.operators.network import cidr_enrich
-
-    ev = _t(spark, sf_dir, "events")
-    ip_long = (F.col("user_id") * 2654435761) % 4294967296
-    ip = F.concat_ws(
-        ".",
-        ((ip_long / 16777216).cast("long") % 256).cast("string"),
-        ((ip_long / 65536).cast("long") % 256).cast("string"),
-        ((ip_long / 256).cast("long") % 256).cast("string"),
-        (ip_long % 256).cast("string"))
-    out = cidr_enrich(ev.withColumn("ip", ip), "ip", _CIDR_NETS)
-    return out.select("event_id", "ip", "network")
-
-
-def _q_split_events(spark, sf_dir):
-    # logstash split filter: one event per array element, positions
-    # kept (posexplode; map-only)
-    from logstash_integration_jdbc_spark.operators.eventops import split_events
-
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
-    toks = docs.withColumn("toks", F.split("text", " "))
-    out = split_events(toks, "toks", target="token", keep_position=True)
-    return out.select("doc_id", "token_pos", "token")
-
-
-def _q_bytes_parse(spark, sf_dir):
-    # logstash bytes filter: '10 MB' → byte count, binary (1024) mode;
-    # every 6th payload is unparseable and takes the failure tag
-    from logstash_integration_jdbc_spark.functions.units import parse_bytes
-
-    ev = _t(spark, sf_dir, "events")
-    unit = F.element_at(
-        F.array(*[F.lit(u) for u in ("B", "kb", "MB", "GiB", "tb", "junk")]),
-        (F.col("event_id") % 6).cast("int") + 1)
-    s = F.concat(F.col("value").cast("string"), F.lit(" "), unit)
-    out = parse_bytes(ev.withColumn("s", s), "s")
-    return out.select(
-        "event_id", F.round("bytes", 4).alias("nbytes"),
-        F.array_join("tags", ",").alias("tags_str"))
-
-
-def _q_tld_extract(spark, sf_dir):
-    # logstash tld filter: hostname → tld / registered domain /
-    # subdomain with two-level public-suffix handling
-    from logstash_integration_jdbc_spark.functions.units import tld_split
-
-    ev = _t(spark, sf_dir, "events")
-    suffix = F.element_at(
-        F.array(*[F.lit(u) for u in
-                  ("example.com", "test.co.uk", "data.org", "localhost")]),
-        (F.col("event_id") % 4).cast("int") + 1)
-    host = F.concat(F.lit("h"), (F.col("user_id") % 50).cast("string"),
-                    F.lit("."), suffix)
-    out = tld_split(ev.withColumn("host", host), "host")
-    return out.select("event_id", "host", "tld_tld", "tld_domain",
-                      "tld_subdomain")
-
-
 def _q_zlib_ratio(spark, sf_dir):
     # Dolma-style compression-ratio quality signal: one Arrow hop
     # (CPython zlib — deterministic, twin-replayable byte-exactly)
@@ -861,297 +703,6 @@ def _q_c4_rules(spark, sf_dir):
         F.col("c4_no_lorem").cast("int").alias("no_lorem"),
         F.col("c4_keep").cast("int").alias("keep"),
         F.md5("c4_text").alias("c4_md5"))
-
-
-def _q_json_encode(spark, sf_dir):
-    # logstash json_encode filter: to_json(struct) — Jackson, key
-    # order = field order, byte-parity with DuckDB's to_json
-    from logstash_integration_jdbc_spark.operators.fieldops import json_encode
-
-    ev = _t(spark, sf_dir, "events")
-    out = json_encode(ev, ["event_id", "event_type", "user_id"], target="j")
-    return out.select("event_id", "j")
-
-
-def _q_range_gate(spark, sf_dir):
-    # logstash range filter: numeric band + string-length band, flag +
-    # violation tag, one projection
-    from logstash_integration_jdbc_spark.operators.fieldops import range_check
-
-    ev = _t(spark, sf_dir, "events")
-    out = range_check(ev, [("value", 1.0, 8.0), ("props", 1, 12)])
-    return out.select(
-        "event_id", F.col("range_ok").cast("int").alias("ok"),
-        F.array_join("tags", ",").alias("tags_str"))
-
-
-def _q_metrics_rates(spark, sf_dir):
-    # logstash metrics filter, batch-exact: per (event_type, hour
-    # bucket) counts + exact trailing 1h/6h/24h rates — one groupBy
-    # exchange + one shared-sort window pass
-    from logstash_integration_jdbc_spark.operators.metrics import meter_rates
-
-    ev = _t(spark, sf_dir, "events")
-    return meter_rates(ev, "ts", ["event_type"], flush_interval=3600,
-                       windows=(3600, 21600, 86400), count_col="n")
-
-
-def _q_geoip(spark, sf_dir):
-    # logstash geoip filter over a range dimension: bucketed equi-join
-    # (never a nested-loop range probe), disjoint ranges, left
-    # semantics. Dim: 256 deterministic /9-ish ranges — range i covers
-    # the lower half of /8 block i, so the oracle replays the match in
-    # closed form while Spark exercises the real join.
-    from logstash_integration_jdbc_spark.operators.network import geoip_lookup
-
-    ev = _t(spark, sf_dir, "events")
-    ipl = (F.col("user_id") * 2654435761) % 4294967296
-    ip = F.concat_ws(
-        ".", ((ipl / 16777216) % 256).cast("int"),
-        ((ipl / 65536) % 256).cast("int"),
-        ((ipl / 256) % 256).cast("int"), (ipl % 256).cast("int"))
-    geo = spark.createDataFrame(
-        [(i * 16777216, i * 16777216 + 8388607, f"C{i % 32}", f"city{i}")
-         for i in range(256)],
-        "lo long, hi long, country string, city string")
-    out = geoip_lookup(ev.withColumn("ip", ip), "ip", geo)
-    return out.select("event_id", "ip", "country", "city")
-
-
-def _q_translate(spark, sf_dir):
-    # logstash translate filter: inline dictionary as plan literals
-    # (element_at over create_map — map-only, codegen)
-    from logstash_integration_jdbc_spark.operators.translate import (
-        translate_field,
-    )
-
-    ev = _t(spark, sf_dir, "events")
-    out = translate_field(
-        ev, "event_type",
-        {"click": "interaction", "view": "interaction",
-         "purchase": "conversion", "error": "fault"},
-        dest="label", fallback="other")
-    return out.select("event_id", "event_type", "label")
-
-
-# the useragent driver row's deterministic corpus: one UA string per
-# family branch, cycled by event_id (tests/test_translate_ua.py carries
-# the same strings with hand-checked expectations)
-_UA_CORPUS = (
-    "Mozilla/5.0 (Windows NT 10.0; Win64; x64) AppleWebKit/537.36 "
-    "(KHTML, like Gecko) Chrome/120.0.0.0 Safari/537.36",
-    "Mozilla/5.0 (Windows NT 10.0) AppleWebKit/537.36 (KHTML, like Gecko) "
-    "Chrome/119.0.0.0 Safari/537.36 Edge/119.0.2151.97",
-    "Mozilla/5.0 (X11; Linux x86_64) AppleWebKit/537.36 (KHTML, like Gecko) "
-    "Chrome/108.0.0.0 Safari/537.36 OPR/94.0.0.0",
-    "Mozilla/5.0 (iPhone; CPU iPhone OS 17_1 like Mac OS X) "
-    "AppleWebKit/605.1.15 (KHTML, like Gecko) Version/17.1 Mobile/15E148 "
-    "Safari/604.1",
-    "Mozilla/5.0 (Linux; Android 13; Pixel 7) AppleWebKit/537.36 "
-    "(KHTML, like Gecko) Chrome/118.0.0.0 Mobile Safari/537.36",
-    "Mozilla/5.0 (Windows NT 6.1; Trident/7.0; rv:11.0) like Gecko",
-    "Mozilla/5.0 (X11; Ubuntu; Linux x86_64; rv:109.0) Gecko/20100101 "
-    "Firefox/119.0",
-    "Mozilla/5.0 (compatible; Googlebot/2.1; +http://www.google.com/bot.html)",
-    "curl/8.4.0",
-)
-# (family, major, os, device) per corpus index — the oracle's CASE table
-_UA_EXPECT = (
-    ("Chrome", "120", "Windows", "Other"),
-    ("Edge", "119", "Windows", "Other"),
-    ("Opera", "94", "Linux", "Other"),
-    ("Mobile Safari", "17", "iOS", "iPhone"),
-    ("Chrome Mobile", "118", "Android", "Android Mobile"),
-    ("IE", "11", "Windows", "Other"),
-    ("Firefox", "119", "Linux", "Other"),
-    ("Spider", None, "Other", "Spider"),
-    ("Other", None, "Other", "Other"),
-)
-
-
-def _q_useragent(spark, sf_dir):
-    # logstash useragent filter: ordered rlike/regexp_extract chain
-    # (priority = uap-core ordering rules), one codegen projection.
-    # UA strings synthesized deterministically from event_id so the
-    # oracle can index the expectation table independently.
-    from logstash_integration_jdbc_spark.functions.useragent import (
-        parse_useragent,
-    )
-
-    ev = _t(spark, sf_dir, "events")
-    ua = F.element_at(F.array(*[F.lit(s) for s in _UA_CORPUS]),
-                      (F.col("event_id") % len(_UA_CORPUS)).cast("int") + 1)
-    out = parse_useragent(ev.withColumn("ua", ua), "ua", target=None)
-    return out.select("event_id", "name", "major", "os_name", "device")
-
-
-def _q_xml_parse(spark, sf_dir):
-    # logstash xml filter: Spark 4 native from_xml (JVM StAX), failure
-    # via the null-struct contract; every 97th payload truncated
-    from logstash_integration_jdbc_spark.functions.structured import xml_parse
-
-    ev = _t(spark, sf_dir, "events")
-    payload = F.when(
-        F.col("event_id") % 97 == 0, F.lit("<e><broken")).otherwise(
-        F.concat(F.lit('<e type="'), F.col("event_type"),
-                 F.lit('"><u>'), F.col("user_id"),
-                 F.lit("</u><v>"), F.col("value"), F.lit("</v></e>")))
-    out = xml_parse(ev.withColumn("payload", payload), "payload",
-                    "_type string, u bigint, v double")
-    return out.select(
-        "event_id", F.col("_type").alias("etype"), "u", "v",
-        F.array_join("tags", ",").alias("tags_str"))
-
-
-def _q_syslog_pri(spark, sf_dir):
-    # logstash syslog_pri filter: facility*8+severity arithmetic +
-    # literal-array label lookup, codegen only
-    from logstash_integration_jdbc_spark.functions.syslog import syslog_pri
-
-    ev = _t(spark, sf_dir, "events")
-    out = syslog_pri(
-        ev.withColumn("pri", (F.col("event_id") % 200).cast("int")), "pri")
-    return out.select(
-        "event_id", "pri", "syslog_facility_code", "syslog_severity_code",
-        "syslog_facility", "syslog_severity")
-
-
-def _q_uuid_stamp(spark, sf_dir):
-    # logstash uuid filter, idempotent form: RFC 4122 v3 (md5
-    # name-based) so retries/reruns mint identical ids
-    from logstash_integration_jdbc_spark.functions.ids import stamp_uuid
-
-    ev = _t(spark, sf_dir, "events")
-    return stamp_uuid(ev, "event_id").select("event_id", "uuid")
-
-
-def _q_clone_fanout(spark, sf_dir):
-    # logstash clone filter: original + one copy per label from ONE
-    # explode over a literal array (single source scan), label in
-    # `type` and appended to tags
-    from logstash_integration_jdbc_spark.operators.eventops import (
-        clone_events,
-    )
-
-    ev = _t(spark, sf_dir, "events").filter(F.col("event_id") < 2000)
-    out = clone_events(ev, ["audit", "archive"])
-    return out.select(
-        "event_id", "type", F.array_join("tags", ",").alias("tags_str"))
-
-
-def _q_multiline(spark, sf_dir):
-    # logstash multiline codec, columnar: running-sum event ordinals +
-    # one (source, ordinal) gather; events-as-lines per user, 'signup'
-    # starting each logical event, leading lines orphaned
-    from logstash_integration_jdbc_spark.operators.multiline import (
-        multiline_assemble,
-    )
-
-    ev = _t(spark, sf_dir, "events")
-    out = multiline_assemble(
-        ev, F.col("event_type") == "signup",
-        group_cols=("user_id",), order_cols=("event_id",),
-        text_col="props")
-    return out.select(
-        "user_id", "event_no", F.md5("message").alias("msg_md5"),
-        "n_lines", "first_line", "last_line",
-        F.col("orphaned").cast("int").alias("orph"))
-
-
-def _q_date_parse(spark, sf_dir):
-    # logstash date filter: first-matching-format wins via a coalesce
-    # chain of try_to_timestamp branches (one codegen'd projection)
-    from logstash_integration_jdbc_spark.functions.timezone import parse_date
-
-    ev = _t(spark, sf_dir, "events")
-    raw = F.when(F.col("event_id") % 2 == 0,
-                 F.date_format("ts", "yyyy-MM-dd HH:mm:ss")) \
-           .otherwise(F.date_format("ts", "MM/dd/yyyy HH:mm:ss"))
-    out = parse_date(ev.withColumn("raw", raw), "raw",
-                     ["yyyy-MM-dd HH:mm:ss", "MM/dd/yyyy HH:mm:ss"])
-    return out.select(
-        "event_id", "raw",
-        F.date_format("parsed_ts", "yyyy-MM-dd HH:mm:ss").alias("parsed_s"),
-        F.array_join("tags", ",").alias("tags_str"))
-
-
-def _q_elapsed_pairs(spark, sf_dir):
-    # logstash elapsed filter: click→purchase pairing per user, one
-    # id exchange (window + groupBy share the partitioning), batch-max
-    # expiry broadcast as a scalar
-    from logstash_integration_jdbc_spark.operators.throttle import elapsed
-
-    ev = _t(spark, sf_dir, "events")
-    out = elapsed(ev, F.col("event_type") == "click",
-                  F.col("event_type") == "purchase", "user_id",
-                  timeout="1 day")
-    return out.select(
-        "user_id",
-        F.date_format("start_ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("start_s"),
-        F.date_format("end_ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("end_s"),
-        F.round("elapsed_s", 6).alias("elapsed6"),
-        "status")
-
-
-def _q_streaming_pairs(spark, sf_dir):
-    # §2.7: stream-stream interval join (the elapsed filter on an
-    # unbounded stream) — click and purchase events streamed from two
-    # sources, paired per user within 1 hour; the range predicate is
-    # what bounds the join state. Oracle: the same interval join as
-    # plain SQL over the events view.
-    import os as _os
-    import tempfile as _tf
-
-    from logstash_integration_jdbc_spark.streaming.stream import (
-        streaming_pair_events,
-    )
-
-    _pin(spark)
-    ev = _t(spark, sf_dir, "events")
-    base = _tf.mkdtemp(prefix="spairs-q-")
-    # the returned frame reads lazily from base, so it goes at exit
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
-    sdir, edir = _os.path.join(base, "s"), _os.path.join(base, "e")
-    ev.filter(F.col("event_type") == "click").select("user_id", "ts") \
-        .write.mode("overwrite").parquet(sdir)
-    ev.filter(F.col("event_type") == "purchase").select("user_id", "ts") \
-        .write.mode("overwrite").parquet(edir)
-    schema = "user_id bigint, ts timestamp"
-    ss = spark.readStream.schema(schema).parquet(sdir)
-    es = spark.readStream.schema(schema).parquet(edir)
-    out = streaming_pair_events(ss, es, key_cols=("user_id",),
-                                within="1 hour",
-                                watermark_delay="1 hour")
-    q = (out.writeStream.outputMode("append").format("parquet")
-         .option("path", _os.path.join(base, "out"))
-         .option("checkpointLocation", _os.path.join(base, "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    got = spark.read.parquet(_os.path.join(base, "out"))
-    return got.select(
-        "user_id",
-        F.date_format("start_ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("start_s"),
-        F.date_format("end_ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("end_s"),
-        F.round("elapsed_s", 6).alias("elapsed6"))
-
-
-def _q_mutate_fields(spark, sf_dir):
-    # logstash mutate filter: rename/case/gsub/copy/convert/replace
-    # (sprintf interpolation)/remove — one codegen'd projection
-    from logstash_integration_jdbc_spark.operators.mutate import Mutate
-
-    cust = _t(spark, sf_dir, "customer")
-    out = Mutate([
-        ("rename", "c_name", "name"),
-        ("uppercase", "name"),
-        ("gsub", "name", "#", "-"),
-        ("copy", "c_mktsegment", "seg"),
-        ("lowercase", "seg"),
-        ("replace", "label", "cust-%{c_custkey}/%{seg}"),
-        ("remove", "c_acctbal", "c_nationkey", "c_mktsegment"),
-    ]).apply(cust)
-    return out.select(F.col("c_custkey").cast("long").alias("ck"),
-                      "name", "seg", "label")
 
 
 def _q_gopher_rules(spark, sf_dir):
@@ -1406,40 +957,6 @@ def _write_pipeline_input(spark):
     return tr
 
 
-def _q_streaming_dedup(spark, sf_dir):
-    # §2.7: watermark-bounded ingest dedup — the generated transcript
-    # batch delivered TWICE (at-least-once upstream); the deduped
-    # stream's per-role counts must equal the single-delivery counts
-    # (oracle: distinct-key SQL over the same generated input).
-    import os as _os
-    import tempfile as _tf
-
-    from logstash_integration_jdbc_spark.sources.generator import gen_transcripts
-    from logstash_integration_jdbc_spark.streaming.stream import streaming_dedup
-
-    _pin(spark)
-    base = _tf.mkdtemp(prefix="sdedup-q-")
-    # the returned frame reads lazily from base, so it goes at exit
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
-    src = _os.path.join(base, "src")
-    _write_pipeline_input(spark)
-    tr = gen_transcripts(spark, n_rows=5000, seed=42)
-    tr.write.mode("overwrite").parquet(src)
-    tr.write.mode("append").parquet(src)  # duplicate delivery
-    stream = spark.readStream.schema(tr.schema).parquet(src)
-    out = streaming_dedup(stream, key_cols=("conv_id", "turn_idx"),
-                          watermark_delay="1 hour")
-    q = (
-        out.writeStream.outputMode("append").format("parquet")
-        .option("path", _os.path.join(base, "out"))
-        .option("checkpointLocation", _os.path.join(base, "ckpt"))
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    got = spark.read.parquet(_os.path.join(base, "out"))
-    return got.groupBy("role").agg(F.count(F.lit(1)).alias("n"))
-
-
 def _q_streaming_counts(spark, sf_dir):
     # S8/§2.7: Structured Streaming availableNow run of the full
     # parse→enrich→route pipeline (Spark checkpoint ≡ sql_last_value);
@@ -1511,55 +1028,6 @@ def _q_transcript_pipeline(spark, sf_dir):
     return enriched.groupBy(sink.alias("sink")).agg(F.count(F.lit(1)).alias("n"))
 
 
-def _url_variant_exprs(d):
-    """Deterministic synthetic URL from a doc_id — Spark-expression
-    form, mirrored value-for-value by ``_url_variant_py``. Covers mixed
-    case, default/non-default ports, trailing slashes, empty paths,
-    tracking params, unsorted params, and fragments."""
-    scheme = F.when(d % 2 == 0, F.lit("HTTP")).otherwise(F.lit("https"))
-    host = F.concat(F.lit("Example"), (d % 7).cast("string"), F.lit(".COM"))
-    port = F.element_at(
-        F.array(F.lit(""), F.lit(":80"), F.lit(":443"), F.lit(":8080")),
-        (d % 4 + 1).cast("int"))
-    path = F.when(d % 11 == 0, F.lit("")).otherwise(
-        F.concat(F.lit("/p"), (d % 5).cast("string"),
-                 F.when(d % 3 == 0, F.lit("/")).otherwise(F.lit(""))))
-    query = F.element_at(
-        F.array(F.lit(""), F.lit("?b=2&utm_source=x&a=1"),
-                F.lit("?z=9&fbclid=1&y=1&x="), F.lit("?q=1")),
-        (d % 9 % 4 + 1).cast("int"))
-    frag = F.when(d % 5 == 0, F.lit("#sec")).otherwise(F.lit(""))
-    return F.concat(scheme, F.lit("://"), host, port, path, query, frag)
-
-
-def _url_variant_py(did: int) -> str:
-    scheme = "HTTP" if did % 2 == 0 else "https"
-    host = f"Example{did % 7}.COM"
-    port = ["", ":80", ":443", ":8080"][did % 4]
-    path = "" if did % 11 == 0 else (
-        f"/p{did % 5}" + ("/" if did % 3 == 0 else ""))
-    query = ["", "?b=2&utm_source=x&a=1",
-             "?z=9&fbclid=1&y=1&x=", "?q=1"][did % 9 % 4]
-    frag = "#sec" if did % 5 == 0 else ""
-    return f"{scheme}://{host}{port}{path}{query}{frag}"
-
-
-def _q_url_canonical(spark, sf_dir):
-    # URL canonicalization (web-dedup primitive): messy synthetic URLs
-    # derived from doc_id (every rule exercised) canonicalized by the
-    # pure-expression operator; the oracle recanonicalizes the same
-    # URLs with the independent urllib twin. Case/port/params/
-    # trailing-slash spellings collapse, so identical variant tuples
-    # dedup to one canonical string (n_dups > 1 for repeated combos).
-    from logstash_integration_jdbc_spark.functions.url import canonicalize_url
-
-    d = F.col("doc_id")
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", _url_variant_exprs(d).alias("url"))
-    canon = docs.select("doc_id", canonicalize_url(F.col("url")).alias("canon"))
-    return canon.where(d % 20 == 3).orderBy("doc_id")
-
-
 def _q_dedup_components(spark, sf_dir):
     # the pairs → clusters composition: minhash near-dup pairs (the
     # dedup_minhash row's exact-verified set) fed through min-label
@@ -1600,36 +1068,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         "embedding_near_dups_scalable": _q_embedding_near_dups_scalable,
         "streaming_counts": _q_streaming_counts,
-        "streaming_dedup": _q_streaming_dedup,
         "transcript_pipeline": _q_transcript_pipeline,
         "s2_incremental_scan": _q_incremental_scan,
         "j1_streaming_lookup": _q_streaming_lookup,
         "grok_parse": _q_grok_parse,
         "dedup_minhash": _q_dedup_minhash,
-        "dissect_parse": _q_dissect_parse,
-        "kv_parse": _q_kv_parse,
-        "json_parse": _q_json_parse,
-        "csv_parse": _q_csv_parse,
-        "mutate_fields": _q_mutate_fields,
-        "date_parse": _q_date_parse,
-        "translate_lookup": _q_translate,
-        "useragent_parse": _q_useragent,
-        "syslog_pri": _q_syslog_pri,
-        "multiline_fold": _q_multiline,
-        "split_events": _q_split_events,
-        "geoip_enrich": _q_geoip,
-        "cidr_label": _q_cidr_label,
-        "throttle_rate": _q_throttle_rate,
         "dedup_components": _q_dedup_components,
         "gopher_rules": _q_gopher_rules,
         "c4_rules": _q_c4_rules,
         "bpe_encode": _q_bpe_encode,
         "text_bm25_topk": _q_bm25_topk,
-        "url_canonical": _q_url_canonical,
         "zorder_key": _q_zorder_key,
         "j2_static_lookup": _q_static_lookup,
         "r4_router_counts": _q_router_counts,
-        "elapsed_pairs": _q_elapsed_pairs,
         "ann_cosine_topk": _q_ann_cosine_topk,
         "conv_assemble": _q_assemble,
         "s1_full_scan": _q_full_scan,
@@ -1672,18 +1123,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_chunk_docs": _q_chunk_docs,
         "text_perplexity": _q_perplexity,
         "normalize_unicode": _q_normalize_unicode,
-        "anomaly_counts": _q_anomaly_counts,
-        "xml_parse": _q_xml_parse,
-        "uuid_stamp": _q_uuid_stamp,
-        "metrics_rates": _q_metrics_rates,
-        "json_encode_event": _q_json_encode,
-        "range_gate": _q_range_gate,
         "text_zlib_ratio": _q_zlib_ratio,
-        "bytes_parse": _q_bytes_parse,
-        "tld_extract": _q_tld_extract,
-        "clone_fanout": _q_clone_fanout,
         "hybrid_rrf_topk": _q_hybrid_rrf,
-        "streaming_pairs": _q_streaming_pairs,
     }
 
 
@@ -2246,12 +1687,6 @@ def oracle_sql() -> dict[str, str]:
         FROM read_parquet('{_PIPELINE_ORACLE_DIR}/transcripts.parquet/*.parquet')
         GROUP BY 1
     """
-    q["streaming_dedup"] = f"""
-        SELECT role, count(*) AS n FROM (
-            SELECT DISTINCT conv_id, turn_idx, role
-            FROM read_parquet('{_PIPELINE_ORACLE_DIR}/transcripts.parquet/*.parquet')
-        ) GROUP BY role
-    """
     q["dedup_substring"] = _value_oracle("substring", _substring_oracle_values)
     q["text_zlib_ratio"] = _value_oracle("text_zlib_ratio",
                                          _zlib_oracle_values)
@@ -2603,133 +2038,6 @@ def oracle_sql() -> dict[str, str]:
         FROM t WHERE len(toks) < 2
     """
 
-    q["dissect_parse"] = """
-        SELECT event_id,
-               CASE WHEN event_type <> 'error' THEN event_id END AS eid,
-               CASE WHEN event_type <> 'error' THEN event_type END AS etype,
-               CASE WHEN event_type <> 'error' THEN user_id END AS uid,
-               CASE WHEN event_type <> 'error' THEN 1 ELSE 0 END AS ok,
-               CASE WHEN event_type <> 'error' THEN ''
-                    ELSE '_dissectfailure' END AS tags_str
-        FROM events
-    """
-    q["kv_parse"] = """
-        SELECT event_id, event_type AS p_type,
-               CAST(user_id AS VARCHAR) AS p_user, 2 AS n_keys
-        FROM events
-    """
-    q["json_parse"] = """
-        SELECT event_id,
-               CAST(json_extract_string(props, 'k') AS INTEGER) AS k,
-               '' AS tags_str
-        FROM events
-    """
-    q["csv_parse"] = """
-        SELECT c_custkey, c_custkey AS ck,
-               concat(c_mktsegment, ',', c_name) AS seg_name,
-               c_nationkey AS nk, '' AS tags_str
-        FROM customer
-    """
-    q["throttle_rate"] = """
-        SELECT event_id,
-               CASE WHEN row_number() OVER (
-                        PARTITION BY user_id, date_trunc('day', ts)
-                        ORDER BY ts, event_id) > 20
-                    THEN 1 ELSE 0 END AS throttled
-        FROM events
-    """
-    q["anomaly_counts"] = """
-        WITH c AS (
-            SELECT event_type, date_trunc('hour', ts) AS bucket,
-                   count(*) AS n
-            FROM events GROUP BY 1, 2
-        ), w AS (
-            SELECT event_type, bucket, n,
-                   count(*) OVER win AS prior_n,
-                   avg(n) OVER win AS mean_n,
-                   stddev_samp(n) OVER win AS sd_n
-            FROM c
-            WINDOW win AS (PARTITION BY event_type ORDER BY bucket
-                           ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING)
-        )
-        SELECT event_type, strftime(bucket, '%Y-%m-%d %H') AS bucket_s, n,
-               CASE WHEN prior_n >= 6 THEN round(mean_n, 4) END AS mean4,
-               CASE WHEN prior_n >= 6
-                         AND greatest(sd_n, sqrt(mean_n)) > 0
-                    THEN round((n - mean_n) / greatest(sd_n, sqrt(mean_n)), 4)
-                    END AS z4,
-               CASE WHEN prior_n >= 6
-                         AND greatest(sd_n, sqrt(mean_n)) > 0
-                         AND abs((n - mean_n) / greatest(sd_n, sqrt(mean_n))) > 3.0
-                    THEN 1 ELSE 0 END AS anom
-        FROM w
-    """
-    q["cidr_label"] = """
-        WITH b AS (
-            SELECT event_id,
-                   (user_id * 2654435761) % 4294967296 AS ipl
-            FROM events
-        )
-        SELECT event_id,
-               concat((ipl // 16777216) % 256, '.', (ipl // 65536) % 256,
-                      '.', (ipl // 256) % 256, '.', ipl % 256) AS ip,
-               CASE WHEN ipl BETWEEN 169869312 AND 171966463 THEN 'ten-32'
-                    WHEN ipl BETWEEN 167772160 AND 184549375 THEN 'ten'
-                    WHEN ipl BETWEEN 0 AND 1073741823 THEN 'low'
-                    WHEN ipl >= 2147483648 THEN 'high'
-                    END AS network
-        FROM b
-    """
-    q["multiline_fold"] = """
-        WITH l AS (
-            SELECT user_id, event_id, props,
-                   CAST(sum(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END)
-                       OVER (PARTITION BY user_id ORDER BY event_id)
-                       AS BIGINT) AS event_no
-            FROM events
-        )
-        SELECT user_id, event_no,
-               md5(string_agg(props, chr(10) ORDER BY event_id)) AS msg_md5,
-               count(*) AS n_lines,
-               min(event_id) AS first_line, max(event_id) AS last_line,
-               CASE WHEN event_no = 0 THEN 1 ELSE 0 END AS orph
-        FROM l GROUP BY user_id, event_no
-    """
-    q["bytes_parse"] = """
-        WITH b AS (
-            SELECT event_id, value, CAST(event_id % 6 AS INT) AS u
-            FROM events
-        )
-        SELECT event_id,
-               CASE u WHEN 0 THEN round(value, 4)
-                      WHEN 1 THEN round(value * 1024, 4)
-                      WHEN 2 THEN round(value * 1048576, 4)
-                      WHEN 3 THEN round(value * 1073741824, 4)
-                      WHEN 4 THEN round(value * 1099511627776, 4)
-                      END AS nbytes,
-               CASE WHEN u = 5 THEN '_bytesparsefailure' ELSE '' END
-                   AS tags_str
-        FROM b
-    """
-    q["tld_extract"] = """
-        WITH b AS (
-            SELECT event_id,
-                   'h' || (user_id % 50) AS hn,
-                   (['example.com','test.co.uk','data.org','localhost'])
-                       [CAST(event_id % 4 AS INT) + 1] AS suf
-            FROM events
-        )
-        SELECT event_id, hn || '.' || suf AS host,
-               CASE suf WHEN 'example.com' THEN 'com'
-                        WHEN 'test.co.uk' THEN 'co.uk'
-                        WHEN 'data.org' THEN 'org'
-                        ELSE 'localhost' END AS tld_tld,
-               CASE suf WHEN 'localhost' THEN hn || '.localhost'
-                        ELSE suf END AS tld_domain,
-               CASE suf WHEN 'localhost' THEN NULL ELSE hn END
-                   AS tld_subdomain
-        FROM b
-    """
     q["c4_rules"] = """
         WITH b AS (
             SELECT doc_id,
@@ -2758,223 +2066,6 @@ def oracle_sql() -> dict[str, str]:
                md5(c4_text) AS c4_md5
         FROM j
     """
-    q["json_encode_event"] = """
-        SELECT event_id,
-               to_json(struct_pack(event_id := event_id,
-                                   event_type := event_type,
-                                   user_id := user_id)) AS j
-        FROM events
-    """
-    q["range_gate"] = """
-        SELECT event_id,
-               CASE WHEN value BETWEEN 1.0 AND 8.0
-                         AND length(props) BETWEEN 1 AND 12
-                    THEN 1 ELSE 0 END AS ok,
-               CASE WHEN value BETWEEN 1.0 AND 8.0
-                         AND length(props) BETWEEN 1 AND 12
-                    THEN '' ELSE '_rangeviolation' END AS tags_str
-        FROM events
-    """
-    q["metrics_rates"] = """
-        WITH c AS (
-            SELECT event_type,
-                   CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS bucket_ts,
-                   count(*) AS n
-            FROM events GROUP BY 1, 2
-        )
-        SELECT event_type, bucket_ts, n,
-               round(sum(n) OVER (PARTITION BY event_type ORDER BY bucket_ts
-                   RANGE BETWEEN 0 PRECEDING AND CURRENT ROW) * 1.0
-                   / 3600, 6) AS rate_3600s,
-               round(sum(n) OVER (PARTITION BY event_type ORDER BY bucket_ts
-                   RANGE BETWEEN 18000 PRECEDING AND CURRENT ROW) * 1.0
-                   / 21600, 6) AS rate_21600s,
-               round(sum(n) OVER (PARTITION BY event_type ORDER BY bucket_ts
-                   RANGE BETWEEN 82800 PRECEDING AND CURRENT ROW) * 1.0
-                   / 86400, 6) AS rate_86400s
-        FROM c
-    """
-    q["geoip_enrich"] = """
-        WITH b AS (
-            SELECT event_id,
-                   (user_id * 2654435761) % 4294967296 AS ipl
-            FROM events
-        )
-        SELECT event_id,
-               concat((ipl // 16777216) % 256, '.', (ipl // 65536) % 256,
-                      '.', (ipl // 256) % 256, '.', ipl % 256) AS ip,
-               CASE WHEN ipl % 16777216 < 8388608
-                    THEN 'C' || ((ipl // 16777216) % 32) END AS country,
-               CASE WHEN ipl % 16777216 < 8388608
-                    THEN 'city' || (ipl // 16777216) END AS city
-        FROM b
-    """
-    q["translate_lookup"] = """
-        SELECT event_id, event_type,
-               CASE event_type
-                    WHEN 'click' THEN 'interaction'
-                    WHEN 'view' THEN 'interaction'
-                    WHEN 'purchase' THEN 'conversion'
-                    WHEN 'error' THEN 'fault'
-                    ELSE 'other' END AS label
-        FROM events
-    """
-    _ua_rows = ", ".join(
-        "({}, '{}', {}, '{}', '{}')".format(
-            i, fam, "NULL" if major is None else f"'{major}'", osn, dev)
-        for i, (fam, major, osn, dev) in enumerate(_UA_EXPECT))
-    q["useragent_parse"] = f"""
-        WITH exp(idx, name, major, os_name, device) AS (VALUES {_ua_rows})
-        SELECT e.event_id, x.name, x.major, x.os_name, x.device
-        FROM events e JOIN exp x ON e.event_id % {len(_UA_EXPECT)} = x.idx
-    """
-    q["xml_parse"] = """
-        SELECT event_id,
-               CASE WHEN event_id % 97 = 0 THEN NULL
-                    ELSE event_type END AS etype,
-               CASE WHEN event_id % 97 = 0 THEN NULL ELSE user_id END AS u,
-               CASE WHEN event_id % 97 = 0 THEN NULL ELSE value END AS v,
-               CASE WHEN event_id % 97 = 0 THEN '_xmlparsefailure'
-                    ELSE '' END AS tags_str
-        FROM events
-    """
-    from logstash_integration_jdbc_spark.functions.syslog import (
-        FACILITY_LABELS,
-        SEVERITY_LABELS,
-    )
-
-    _fac = ", ".join(f"'{x}'" for x in FACILITY_LABELS)
-    _sev = ", ".join(f"'{x}'" for x in SEVERITY_LABELS)
-    q["syslog_pri"] = f"""
-        WITH b AS (
-            SELECT event_id, CAST(event_id % 200 AS INT) AS pri FROM events
-        )
-        SELECT event_id, pri,
-               CASE WHEN pri < 192 THEN pri // 8 END AS syslog_facility_code,
-               CASE WHEN pri < 192 THEN pri % 8 END AS syslog_severity_code,
-               CASE WHEN pri < 192
-                    THEN ([{_fac}])[pri // 8 + 1] END AS syslog_facility,
-               CASE WHEN pri < 192
-                    THEN ([{_sev}])[pri % 8 + 1] END AS syslog_severity
-        FROM b
-    """
-    q["uuid_stamp"] = """
-        WITH h AS (
-            SELECT event_id, md5(CAST(event_id AS VARCHAR)) AS h FROM events
-        )
-        SELECT event_id,
-               substr(h, 1, 8) || '-' || substr(h, 9, 4) || '-3' ||
-               substr(h, 14, 3) || '-' ||
-               (['8','9','a','b'])[
-                   ((instr('0123456789abcdef', substr(h, 17, 1)) - 1) % 4) + 1
-               ] || substr(h, 18, 3) || '-' || substr(h, 21, 12) AS uuid
-        FROM h
-    """
-    q["streaming_pairs"] = """
-        SELECT s.user_id,
-               strftime(s.ts, '%Y-%m-%d %H:%M:%S.%f') AS start_s,
-               strftime(e.ts, '%Y-%m-%d %H:%M:%S.%f') AS end_s,
-               round(date_diff('microsecond', s.ts, e.ts) / 1000000.0, 6)
-                   AS elapsed6
-        FROM (SELECT user_id, ts FROM events WHERE event_type = 'click') s
-        JOIN (SELECT user_id, ts FROM events WHERE event_type = 'purchase') e
-          ON s.user_id = e.user_id
-         AND e.ts >= s.ts AND e.ts <= s.ts + INTERVAL 1 HOUR
-    """
-    q["clone_fanout"] = """
-        WITH e AS (SELECT event_id FROM events WHERE event_id < 2000)
-        SELECT event_id, NULL AS type, '' AS tags_str FROM e
-        UNION ALL
-        SELECT event_id, 'audit', 'audit' FROM e
-        UNION ALL
-        SELECT event_id, 'archive', 'archive' FROM e
-    """
-    q["split_events"] = """
-        WITH d AS (
-            SELECT doc_id, string_split(text, ' ') AS toks
-            FROM documents WHERE doc_id < 500
-        )
-        SELECT doc_id, u.pos - 1 AS token_pos, u.tok AS token
-        FROM (SELECT doc_id, unnest(toks) AS tok,
-                     generate_subscripts(toks, 1) AS pos FROM d) u
-    """
-    q["date_parse"] = """
-        SELECT event_id,
-               CASE WHEN event_id % 2 = 0
-                    THEN strftime(ts, '%Y-%m-%d %H:%M:%S')
-                    ELSE strftime(ts, '%m/%d/%Y %H:%M:%S') END AS raw,
-               strftime(date_trunc('second', ts),
-                        '%Y-%m-%d %H:%M:%S') AS parsed_s,
-               '' AS tags_str
-        FROM events
-    """
-    q["elapsed_pairs"] = """
-        WITH st AS (
-            SELECT user_id, min(ts) AS start_ts FROM events
-            WHERE event_type = 'click' GROUP BY 1
-        ), ea AS (
-            SELECT user_id, min(ts) AS end_any FROM events
-            WHERE event_type = 'purchase' GROUP BY 1
-        ), ef AS (
-            SELECT e.user_id, min(e.ts) AS end_after
-            FROM events e JOIN st USING (user_id)
-            WHERE e.event_type = 'purchase' AND e.ts >= st.start_ts
-            GROUP BY 1
-        ), base AS (
-            SELECT i.user_id, st.start_ts,
-                   coalesce(ef.end_after,
-                            CASE WHEN st.start_ts IS NULL
-                                 THEN ea.end_any END) AS end_ts
-            FROM (SELECT DISTINCT user_id FROM events) i
-            LEFT JOIN st USING (user_id)
-            LEFT JOIN ea USING (user_id)
-            LEFT JOIN ef USING (user_id)
-        )
-        SELECT user_id,
-               strftime(start_ts, '%Y-%m-%d %H:%M:%S.%f') AS start_s,
-               strftime(end_ts, '%Y-%m-%d %H:%M:%S.%f') AS end_s,
-               CASE WHEN start_ts IS NOT NULL THEN
-                    round(date_diff('microsecond', start_ts, end_ts)
-                          / 1000000.0, 6) END AS elapsed6,
-               CASE WHEN start_ts IS NULL AND end_ts IS NULL THEN NULL
-                    WHEN start_ts IS NULL THEN 'end_only'
-                    WHEN end_ts IS NULL AND
-                         (SELECT max(ts) FROM events)
-                             > start_ts + INTERVAL 1 DAY THEN 'expired'
-                    WHEN end_ts IS NULL THEN 'start_only'
-                    ELSE 'matched' END AS status
-        FROM base
-        WHERE start_ts IS NOT NULL OR end_ts IS NOT NULL
-    """
-    q["mutate_fields"] = """
-        SELECT c_custkey AS ck,
-               replace(upper(c_name), '#', '-') AS name,
-               lower(c_mktsegment) AS seg,
-               concat('cust-', c_custkey, '/', lower(c_mktsegment)) AS label
-        FROM customer
-    """
-    # url_canonical: same synthetic URLs rebuilt + canonicalized by the
-    # independent urllib twin (functions/url.canonicalize_url_py).
-    def _build_url_canonical_sql() -> str:
-        import duckdb as _dk
-
-        from logstash_integration_jdbc_spark.functions.url import (
-            canonicalize_url_py,
-        )
-
-        ids = [r[0] for r in _dk.sql(
-            f"SELECT doc_id FROM "
-            f"read_parquet('{_ORACLE_SF_DIR}/documents.parquet') "
-            "WHERE doc_id % 20 = 3 ORDER BY doc_id").fetchall()]
-        vals = [
-            f"({did}, '{canonicalize_url_py(_url_variant_py(did))}')"
-            for did in ids
-        ]
-        return ("SELECT * FROM (VALUES " + ", ".join(vals)
-                + ") t(doc_id, canon)")
-
-    q["url_canonical"] = _value_oracle(
-        "url_canonical", _build_url_canonical_sql)
 
     # dedup_components: transitive closure over the SAME exact-jaccard
     # pair set the dedup_minhash row verifies, via WITH RECURSIVE —

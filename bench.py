@@ -204,12 +204,9 @@ def run_bpe_bench(spark, n_rows: int = MINHASH_ROWS,
 
 def run_parse_bench(spark, n_rows: int = MINHASH_ROWS,
                     reps: int = BENCH_REPS) -> dict:
-    """Grok vs dissect at volume over 1M transcript turns: both extract
-    the same four fields from the structured-payload turns (the ~75%
-    parse-hit shape); wall + rows/s each, plus hit-count agreement.
-    Dissect's one anchored regex with literal inter-field delimiters is
-    the cheap path; grok pays per-field subpattern generality."""
-    from logstash_integration_jdbc_spark.functions.dissect import DissectParser
+    """Grok at volume over 1M transcript turns: four fields extracted
+    from the structured-payload turns (the ~75% parse-hit shape); wall,
+    rows/s and the hit count."""
     from logstash_integration_jdbc_spark.functions.parse import GrokParser
 
     from pyspark.sql import functions as F
@@ -219,25 +216,14 @@ def run_parse_bench(spark, n_rows: int = MINHASH_ROWS,
     grok = GrokParser(
         "tool_call=%{NOTSPACE:tool_call} status=%{WORD:status} "
         "dur_ms=%{INT:dur_ms} session=%{NOTSPACE:session}")
-    dissect = DissectParser(
-        "turn %{turn}: invoking tool_call=%{tool_call} status=%{status} "
-        "dur_ms=%{dur_ms} session=%{session}")
-    out = {}
-    hits = {}
-    for label, parser in (("grok", grok), ("dissect", dissect)):
-        walls = []
-        for _ in range(max(reps, 1)):
-            t0 = time.time()
-            hits[label] = parser.apply(tr).filter(F.col("parse_ok")).count()
-            walls.append(time.time() - t0)
-        wall = min(walls)
-        out[label] = {"wall_sec": round(wall, 3),
-                      "rows_per_sec": round(n_rows / wall, 1)}
-    # both must agree on which turns carry the structured payload
-    out["hits_agree"] = hits["grok"] == hits["dissect"]
-    out["hits"] = hits["grok"]
-    out["rows"] = n_rows
-    return out
+    walls = []
+    for _ in range(max(reps, 1)):
+        t0 = time.time()
+        hits = grok.apply(tr).filter(F.col("parse_ok")).count()
+        walls.append(time.time() - t0)
+    wall = min(walls)
+    return {"rows": n_rows, "hits": hits, "wall_sec": round(wall, 3),
+            "rows_per_sec": round(n_rows / wall, 1)}
 
 
 def run_minhash_bench(spark, n_rows: int = MINHASH_ROWS,
@@ -342,8 +328,7 @@ def main_bench() -> None:
     per_query["text_perplexity_1m"] = ppl1m["wall_sec"]
 
     parse1m = run_parse_bench(spark)
-    per_query["parse_grok_1m"] = parse1m["grok"]["wall_sec"]
-    per_query["parse_dissect_1m"] = parse1m["dissect"]["wall_sec"]
+    per_query["parse_grok_1m"] = parse1m["wall_sec"]
 
     bpe1m = run_bpe_bench(spark, reps=1)
     per_query["bpe_encode_1m"] = bpe1m["wall_sec"]

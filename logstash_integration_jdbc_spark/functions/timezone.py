@@ -45,40 +45,3 @@ def local_to_utc(col: Column, tz: str, dst_enabled_on_overlap: bool = False) -> 
     roundtrip = F.from_utc_timestamp(cand, tz)
     return F.when(roundtrip == col, cand).otherwise(dst)
 
-
-def parse_date(df, source: str, formats, target: str = "parsed_ts",
-               tag_on_failure: tuple[str, ...] = ("_dateparsefailure",)):
-    """Multi-format timestamp parsing — the logstash ``date`` filter.
-
-    The filter tries each ``match`` format in order and the first that
-    parses wins; an unparseable value gets ``_dateparsefailure``.
-    Columnar form: a ``coalesce`` chain of ``to_timestamp(col, fmt)``
-    branches (Spark's non-ANSI to_timestamp yields null on mismatch —
-    exactly the try-next signal), one codegen'd projection. Formats are
-    Spark/JDK datetime patterns, the moral equivalent of the filter's
-    Joda patterns; ``UNIX``/``UNIX_MS`` (epoch seconds/millis string
-    forms) are supported by name like the filter.
-    """
-    from pyspark.sql import DataFrame  # noqa: F401  (signature clarity)
-
-    if not formats:
-        raise ValueError("parse_date needs at least one format")
-    src = F.col(source)
-    branches = []
-    for fmt in formats:
-        if fmt == "UNIX":
-            branches.append(F.to_timestamp(
-                F.when(src.rlike(r"^\d+(\.\d+)?$"), src).cast("double")))
-        elif fmt == "UNIX_MS":
-            branches.append(F.to_timestamp(
-                F.when(src.rlike(r"^\d+$"), src).cast("double") / 1000.0))
-        else:
-            branches.append(F.try_to_timestamp(src, F.lit(fmt)))
-    parsed = F.coalesce(*branches) if len(branches) > 1 else branches[0]
-    df = df.withColumn(target, parsed)
-    if tag_on_failure:
-        from logstash_integration_jdbc_spark.operators.lookup import add_tags
-
-        df = add_tags(df, src.isNotNull() & F.col(target).isNull(),
-                      tag_on_failure)
-    return df

@@ -56,87 +56,6 @@ def streaming_hourly_counts(
     )
 
 
-def streaming_dedup(
-    stream: DataFrame,
-    key_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
-    ts_col: str = "ts",
-    watermark_delay: str = "10 minutes",
-) -> DataFrame:
-    """Ingest-time exactly-once-per-key dedup over a stream.
-
-    At-least-once upstreams (retried batches, replayed queues, the
-    reference's rerun-the-whole-failed-batch semantics) deliver the
-    same turn more than once; ``dropDuplicatesWithinWatermark`` keeps
-    the FIRST arrival of each key and bounds the dedup state by the
-    watermark delay — old keys age out of state instead of accumulating
-    forever, which is what makes this viable on an unbounded 10^12-turn
-    stream (a plain dropDuplicates would hold every key ever seen).
-    Duplicates arriving later than the delay pass through — bound it to
-    the upstream's redelivery window.
-    """
-    return stream.withWatermark(ts_col, watermark_delay).dropDuplicatesWithinWatermark(
-        list(key_cols))
-
-
-def streaming_pair_events(
-    starts: DataFrame,
-    ends: DataFrame,
-    key_cols: tuple[str, ...] = ("conv_id",),
-    ts_col: str = "ts",
-    within: str = "30 minutes",
-    watermark_delay: str = "10 minutes",
-    how: str = "inner",
-) -> DataFrame:
-    """Stream-stream interval join — the ``elapsed`` filter's streaming
-    sibling (pair a start event with the first-matching end event on an
-    unbounded stream).
-
-    Both sides are watermarked and the join carries the time-range
-    predicate ``start_ts <= end_ts <= start_ts + within``, which is
-    exactly what lets Spark BOUND the join state: a buffered start can
-    be dropped once the end-side watermark passes ``start_ts + within``
-    (without the range predicate, stream-stream state grows forever).
-    ``how='leftOuter'`` additionally emits unmatched starts with null
-    end columns once the watermark proves no match can arrive — the
-    elapsed filter's ``expired`` status, produced by the engine's state
-    timeout instead of a scheduler sweep.
-
-    Output: ``*key_cols, start_ts, end_ts, elapsed_s`` plus each side's
-    remaining columns (non-key input columns must not collide — rename
-    upstream). Works on batch frames too (same plan, no state).
-    """
-    if how not in ("inner", "leftOuter"):
-        raise ValueError("streaming_pair_events: how must be 'inner' or "
-                         "'leftOuter'")
-    keys = list(key_cols)
-    dup = (set(starts.columns) & set(ends.columns)) - set(keys) - {ts_col}
-    if dup:
-        raise ValueError(
-            f"streaming_pair_events: non-key columns collide: {sorted(dup)}"
-            " — rename them upstream")
-    s = starts.withColumnRenamed(ts_col, "start_ts")
-    e = ends.withColumnRenamed(ts_col, "end_ts")
-    for k in keys:
-        e = e.withColumnRenamed(k, f"__end_{k}")
-    if starts.isStreaming:
-        s = s.withWatermark("start_ts", watermark_delay)
-    if ends.isStreaming:
-        e = e.withWatermark("end_ts", watermark_delay)
-    cond = F.lit(True)
-    for k in keys:
-        cond = cond & (F.col(k) == F.col(f"__end_{k}"))
-    cond = cond & (F.col("end_ts") >= F.col("start_ts"))
-    cond = cond & (F.col("end_ts")
-                   <= F.col("start_ts") + F.expr(f"INTERVAL {within}"))
-    joined = s.join(e, cond, how)
-    return (joined.drop(*[f"__end_{k}" for k in keys])
-            .withColumn(
-                "elapsed_s",
-                F.when(F.col("end_ts").isNotNull(),
-                       F.col("end_ts").cast("double")
-                       - F.col("start_ts").cast("double"))))
-
-
 def run_streaming_pipeline(
     spark: SparkSession,
     transcripts_path: str,

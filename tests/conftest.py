@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -11,11 +12,30 @@ from logstash_integration_jdbc_spark.sources.generator import write_fixtures
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", master="local[4]",
-                  extra_conf={"spark.sql.shuffle.partitions": "8"})
+    # the catalog's warehouse and embedded Derby's log go here, not the cwd
+    scratch = tempfile.mkdtemp(prefix="ljspark-session-")
+    s = get_spark(app_name="tests", master="local[4]", extra_conf={
+        "spark.sql.shuffle.partitions": "8",
+        "spark.sql.warehouse.dir": os.path.join(scratch, "spark-warehouse"),
+        "spark.driver.extraJavaOptions":
+            f"-Dderby.stream.error.file={os.path.join(scratch, 'derby.log')}",
+    })
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+    shutil.rmtree(scratch, ignore_errors=True)
+
+
+@pytest.fixture(scope="session")
+def sf_dir():
+    """``sf_dir("sf0.001")`` is that scale factor's generated dataset
+    (TESTDATA.md); the calling test skips when it is absent."""
+    def at(sf: str) -> str:
+        d = os.path.join("/root/testdata", sf)
+        if not os.path.isdir(d):
+            pytest.skip(f"{d} is absent")
+        return d
+    return at
 
 
 @pytest.fixture(scope="session")

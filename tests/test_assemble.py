@@ -44,14 +44,14 @@ def test_jvm_only(spark):
     assert "EvalPython" not in plan
 
 
-def test_sessionize_native_matches_lag_form(spark):
+def test_sessionize_native_matches_lag_form(spark, sf_dir):
     from pyspark.sql import Window
 
     from logstash_integration_jdbc_spark.operators.aggregate import (
         sessionize_native,
     )
 
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    ev = spark.read.parquet(f"{sf_dir('sf0.001')}/events.parquet")
     sess = sessionize_native(ev, gap="30 minutes")
     native = {r.user_id: r.n for r in
               sess.groupBy("user_id").agg(F.count(F.lit(1)).alias("n")).collect()}

@@ -77,8 +77,8 @@ def test_embedding_near_dups(spark):
     assert (0, 2) not in pairs and (1, 2) not in pairs
 
 
-def test_dedup_on_real_documents(spark):
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+def test_dedup_on_real_documents(spark, sf_dir):
+    docs = spark.read.parquet(f"{sf_dir('sf0.001')}/documents.parquet")
     # duplicate the table with shifted ids → every doc has one exact dup
     shifted = docs.withColumn("doc_id", F.col("doc_id") + 1_000_000)
     both = docs.unionByName(shifted)
@@ -87,7 +87,7 @@ def test_dedup_on_real_documents(spark):
     assert kept.agg(F.max("doc_id")).first()[0] < 1_000_000  # min-id wins
 
 
-def test_signature_udf_matches_expression_form(spark):
+def test_signature_udf_matches_expression_form(spark, sf_dir):
     """The Arrow-UDF signature must equal the pure-expression reference."""
     from logstash_integration_jdbc_spark.operators.dedup import (
         minhash_signature,
@@ -95,7 +95,7 @@ def test_signature_udf_matches_expression_form(spark):
         shingle_hashes,
     )
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(50)
+    docs = spark.read.parquet(f"{sf_dir('sf0.001')}/documents.parquet").limit(50)
     base = docs.select("doc_id", shingle_hashes(F.col("text")).alias("sh"))
     both = base.select(
         "doc_id",
@@ -131,7 +131,7 @@ def test_signature_udf_null_and_empty_rows(spark):
         assert expr == udf, r.id
 
 
-def test_embedding_near_dup_recall_on_true_near_pairs(spark):
+def test_embedding_near_dup_recall_on_true_near_pairs(spark, sf_dir):
     """Recall bound on genuinely-near (NOT identical) pairs: perturb the
     real embeddings (even dims ×1.35, odd ×0.65 → cosine ≈ 0.94-0.96) and
     compare against the exact numpy O(n²) answer. Round-1's full-sketch-
@@ -141,7 +141,7 @@ def test_embedding_near_dup_recall_on_true_near_pairs(spark):
 
     from logstash_integration_jdbc_spark.operators.dedup import embedding_near_dups
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").withColumn(
+    emb = spark.read.parquet(f"{sf_dir('sf0.001')}/embeddings.parquet").withColumn(
         "embedding", F.col("embedding").cast("array<double>")
     ).select("vec_id", "embedding")
     pert = emb.select(
@@ -172,14 +172,14 @@ def test_embedding_near_dup_recall_on_true_near_pairs(spark):
     assert recall >= 0.95, f"recall {recall:.3f} on {len(want)} true pairs"
 
 
-def test_exact_cosine_pairs_equals_numpy(spark):
+def test_exact_cosine_pairs_equals_numpy(spark, sf_dir):
     """Block-GEMM exact pairs must equal the numpy O(n²) answer exactly
     (not just recall-bounded like the LSH-probe variant)."""
     import numpy as np
 
     from logstash_integration_jdbc_spark.operators.dedup import exact_cosine_pairs
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").withColumn(
+    emb = spark.read.parquet(f"{sf_dir('sf0.001')}/embeddings.parquet").withColumn(
         "embedding", F.col("embedding").cast("array<double>")
     ).select("vec_id", "embedding")
     pert = emb.select(
@@ -224,12 +224,12 @@ def test_tile_count_bounds_tile_memory():
     assert _tile_count(5, 8192, min_parallelism=32) == 5
 
 
-def test_exact_cosine_pairs_small_tiles_identical(spark):
+def test_exact_cosine_pairs_small_tiles_identical(spark, sf_dir):
     """Forcing many tiny tiles (tile-pair replication path under real
     multi-block traffic) must not change the exact answer."""
     from logstash_integration_jdbc_spark.operators.dedup import exact_cosine_pairs
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").withColumn(
+    emb = spark.read.parquet(f"{sf_dir('sf0.001')}/embeddings.parquet").withColumn(
         "embedding", F.col("embedding").cast("array<double>")
     ).select("vec_id", "embedding")
     pert = emb.select(
@@ -265,7 +265,7 @@ def test_exact_dedup_normalized_collapses_reformatted_copies(spark):
     assert norm == {1, 4, 5}          # 1≡2≡3 under normalization, min id wins
 
 
-def test_gram_hashes_preserve_shingle_set_relations(spark):
+def test_gram_hashes_preserve_shingle_set_relations(spark, sf_dir):
     """The staged token/gram hash form must induce the same shingle-SET
     structure as the reference shingle_hashes: equal set sizes per doc
     and equal pairwise intersection sizes (what jaccard consumes)."""
@@ -277,7 +277,7 @@ def test_gram_hashes_preserve_shingle_set_relations(spark):
         token_hashes,
     )
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(30)
+    docs = spark.read.parquet(f"{sf_dir('sf0.001')}/documents.parquet").limit(30)
     ref = {r.doc_id: set(r.s) for r in docs.select(
         "doc_id", shingle_hashes(F.col("text")).alias("s")).collect()}
     fast = {r.doc_id: set(r.s) for r in docs.select(
@@ -505,7 +505,7 @@ def test_band_bucket_udf_evaluated_once(docs, spark):
     assert plan.count("ArrowEvalPython") == 1
 
 
-def test_winnow_kernel_matches_window_reference(spark):
+def test_winnow_kernel_matches_window_reference(spark, sf_dir):
     # r6: winnow_anchors moved to a fused Arrow kernel; it must produce
     # exactly the window/sort reference's (id, anchor) set — including
     # short docs (no grams), few-gram docs (single min), dup anchors.
@@ -514,7 +514,7 @@ def test_winnow_kernel_matches_window_reference(spark):
         winnow_anchors_expr,
     )
 
-    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir('sf0.01')}/documents.parquet")
     texts = [(200001, "short doc"), (200002, " ".join(["tok"] * 10)),
              (200003, " ".join(f"w{i}" for i in range(11))),
              (200004, " ".join(f"w{i % 3}" for i in range(40))),

@@ -39,8 +39,8 @@ def test_every_private_helper_is_referenced():
 
 
 def test_streaming_queries_remove_their_temp_dirs(tmp_path):
-    # each streaming builder writes its source, sink and checkpoint under
-    # a fresh temp dir that its lazy result frame still reads; none may
+    # the streaming builder writes its source, sink and checkpoint under
+    # a fresh temp dir that its lazy result frame still reads; it may not
     # outlive the process
     import os
     import subprocess
@@ -56,12 +56,7 @@ def test_streaming_queries_remove_their_temp_dirs(tmp_path):
         from logstash_integration_jdbc_spark.session import get_spark
         spark = get_spark(app_name="tempdirs", master="local[2]",
                           extra_conf={"spark.sql.shuffle.partitions": "4"})
-        spark.sql("SELECT 1L AS user_id, 'click' AS event_type, "
-                  "TIMESTAMP'2024-01-01 00:00:00' AS ts UNION ALL "
-                  "SELECT 1L, 'purchase', TIMESTAMP'2024-01-01 00:30:00'"
-                  ).write.parquet(sys.argv[1] + "/events.parquet")
-        for name in ("streaming_counts", "streaming_dedup", "streaming_pairs"):
-            assert e.queries()[name](spark, sys.argv[1]).collect()
+        assert e.queries()["streaming_counts"](spark, sys.argv[1]).collect()
         spark.stop()
     """)
     root = Path(entrymod.__file__).parent
@@ -69,4 +64,4 @@ def test_streaming_queries_remove_their_temp_dirs(tmp_path):
                    env=dict(os.environ, TMPDIR=str(scratch)),
                    check=True, timeout=600)
     assert sorted(p.name for p in scratch.iterdir()
-                  if p.name.startswith(("stream-q-", "sdedup-q-", "spairs-q-"))) == []
+                  if p.name.startswith("stream-q-")) == []

@@ -9,8 +9,8 @@ from logstash_integration_jdbc_spark.operators.similarity import cosine_topk
 
 
 @pytest.fixture(scope="module")
-def emb(spark):
-    return spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").cache()
+def emb(spark, sf_dir):
+    return spark.read.parquet(f"{sf_dir('sf0.001')}/embeddings.parquet").cache()
 
 
 @pytest.fixture(scope="module")
@@ -53,7 +53,7 @@ def test_topk_rank_is_dense_and_ordered(emb, queries):
         assert rs[0].cosine >= rs[1].cosine >= rs[2].cosine
 
 
-def test_sketch_udf_matches_expression_form(spark):
+def test_sketch_udf_matches_expression_form(spark, sf_dir):
     """The numpy-matmul sketch UDF must equal the expression-form sketch
     bit-for-bit (same deterministic hyperplanes) at 16 bits and at the
     64 bits ``embedding_near_dups`` uses, where bit 63 is the sign bit.
@@ -65,7 +65,7 @@ def test_sketch_udf_matches_expression_form(spark):
         hyperplane_sketch_udf,
     )
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").withColumn(
+    emb = spark.read.parquet(f"{sf_dir('sf0.001')}/embeddings.parquet").withColumn(
         "embedding", F.col("embedding").cast("array<double>")
     ).limit(64)
     widths = (16, 64)

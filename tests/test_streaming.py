@@ -109,91 +109,3 @@ def test_streaming_hourly_counts_watermark(spark, tmp_path, transcripts):
         j = got.join(batch, ["role", "window_start"], "inner")
         mismatches = j.filter(got["n_turns"] != batch["n_turns"]).count()
         assert mismatches == 0
-
-
-def test_streaming_dedup_within_watermark(spark, tmp_path, transcripts):
-    from logstash_integration_jdbc_spark.streaming.stream import streaming_dedup
-
-    src = str(tmp_path / "dsrc")
-    # at-least-once upstream: the same rows delivered twice (two files)
-    sample = transcripts.limit(500)
-    sample.write.mode("overwrite").parquet(src)
-    sample.write.mode("append").parquet(src)
-    stream = spark.readStream.schema(transcripts.schema).parquet(src)
-    out = streaming_dedup(stream, key_cols=("conv_id", "turn_idx"),
-                          watermark_delay="1 hour")
-    q = (
-        out.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", str(tmp_path / "dout"))
-        .option("checkpointLocation", str(tmp_path / "dckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.read.parquet(str(tmp_path / "dout"))
-    n_keys = sample.select("conv_id", "turn_idx").distinct().count()
-    assert got.count() == n_keys
-    assert got.select("conv_id", "turn_idx").distinct().count() == n_keys
-
-
-def test_streaming_pair_events_interval_join(spark, tmp_path):
-    from datetime import datetime, timedelta
-
-    from logstash_integration_jdbc_spark.streaming.stream import (
-        streaming_pair_events,
-    )
-
-    t0 = datetime(2026, 1, 1, 12, 0, 0)
-    starts = [("c1", t0), ("c2", t0 + timedelta(minutes=5)),
-              ("c3", t0 + timedelta(minutes=10))]
-    # c1 matched within 30m; c2's end too late (>30m); c3 unmatched
-    ends = [("c1", t0 + timedelta(minutes=7)),
-            ("c2", t0 + timedelta(minutes=50)),
-            ("c9", t0 + timedelta(minutes=1))]
-    sdir, edir = str(tmp_path / "ps"), str(tmp_path / "pe")
-    spark.createDataFrame(starts, "conv_id string, ts timestamp") \
-        .write.parquet(sdir)
-    spark.createDataFrame(ends, "conv_id string, ts timestamp") \
-        .write.parquet(edir)
-    schema = "conv_id string, ts timestamp"
-    ss = spark.readStream.schema(schema).parquet(sdir)
-    es = spark.readStream.schema(schema).parquet(edir)
-    out = streaming_pair_events(ss, es, key_cols=("conv_id",),
-                                within="30 minutes")
-    q = (out.writeStream.outputMode("append").format("parquet")
-         .option("path", str(tmp_path / "pout"))
-         .option("checkpointLocation", str(tmp_path / "pckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    got = {r["conv_id"]: r for r in
-           spark.read.parquet(str(tmp_path / "pout")).collect()}
-    assert set(got) == {"c1"}
-    assert got["c1"]["elapsed_s"] == 420.0
-
-
-def test_streaming_pair_events_batch_twin_and_validation(spark):
-    from datetime import datetime, timedelta
-
-    import pytest as pt
-
-    from logstash_integration_jdbc_spark.streaming.stream import (
-        streaming_pair_events,
-    )
-
-    t0 = datetime(2026, 1, 1, 0, 0, 0)
-    s = spark.createDataFrame(
-        [("a", t0), ("b", t0)], "conv_id string, ts timestamp")
-    e = spark.createDataFrame(
-        [("a", t0 + timedelta(seconds=90))], "conv_id string, ts timestamp")
-    # batch frames run the same plan; leftOuter keeps unmatched starts
-    rows = {r["conv_id"]: r for r in streaming_pair_events(
-        s, e, within="5 minutes", how="leftOuter").collect()}
-    assert rows["a"]["elapsed_s"] == 90.0
-    assert rows["b"]["end_ts"] is None and rows["b"]["elapsed_s"] is None
-    with pt.raises(ValueError, match="how must be"):
-        streaming_pair_events(s, e, how="fullOuter")
-    s2 = s.withColumn("x", F.lit(1))
-    e2 = e.withColumn("x", F.lit(2))
-    with pt.raises(ValueError, match="collide"):
-        streaming_pair_events(s2, e2)

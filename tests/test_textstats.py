@@ -51,8 +51,8 @@ def test_lang_id_on_synthetic(spark):
     assert got == {1: "en", 2: "de", 3: "fr", 4: "es", 5: "zh", 6: "unknown"}
 
 
-def test_lang_id_accuracy_on_documents(spark):
-    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+def test_lang_id_accuracy_on_documents(spark, sf_dir):
+    docs = spark.read.parquet(f"{sf_dir('sf0.01')}/documents.parquet")
     scored = lang_id(docs).withColumn("hit", (F.col("lang_pred") == F.col("lang")).cast("int"))
     acc_en = scored.filter(F.col("lang") == "en").agg(F.avg("hit")).first()[0]
     # synthetic docs are word-salad; only require the heuristic to be
@@ -150,12 +150,12 @@ def test_gopher_rules_each_rule_fires(spark):
     assert rows[5].g_bullet_ok is False and rows[5].g_words_ok
 
 
-def test_gopher_rules_map_only_plan(spark):
+def test_gopher_rules_map_only_plan(spark, sf_dir):
     from logstash_integration_jdbc_spark.operators.textstats import (
         gopher_rules,
     )
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir('sf0.001')}/documents.parquet")
     plan = gopher_rules(docs)._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan and "Exchange" not in plan
 
@@ -258,28 +258,3 @@ def test_compression_ratio_separates_repetition_from_prose(spark):
     import zlib
     b = rows[0][1].encode()
     assert out[1] == len(zlib.compress(b, 6)) / len(b)
-
-
-def test_canonicalize_url_matches_python_twin(spark):
-    from logstash_integration_jdbc_spark.functions.url import (
-        canonicalize_url,
-        canonicalize_url_py,
-    )
-
-    urls = [
-        "HTTP://Example.COM:80/a/?b=2&utm_source=x&a=1#frag",
-        "https://Foo.org:443/path/sub/?z=9&fbclid=abc&y=1&x=",
-        "http://foo.bar:8080//weird/",
-        "https://a.b/",
-        "http://User:pw@Host.Net/p?q=1&ref=home",
-        "https://x.io/p%20q?a=%20b&utm_campaign=c",
-        "http://h.com",
-        "https://h.com/a?single&mc_cid=7&gclid=g",
-    ]
-    df = spark.createDataFrame([(u,) for u in urls], "url string")
-    got = [r[0] for r in df.select(canonicalize_url(F.col("url"))).collect()]
-    assert got == [canonicalize_url_py(u) for u in urls]
-    # idempotent: canonicalizing a canonical URL is a no-op
-    df2 = spark.createDataFrame([(g,) for g in got], "url string")
-    again = [r[0] for r in df2.select(canonicalize_url(F.col("url"))).collect()]
-    assert again == got
