@@ -14,9 +14,7 @@ applied identically on both sides.
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -957,49 +955,6 @@ def _write_pipeline_input(spark):
     return tr
 
 
-def _q_streaming_counts(spark, sf_dir):
-    # S8/§2.7: Structured Streaming availableNow run of the full
-    # parse→enrich→route pipeline (Spark checkpoint ≡ sql_last_value);
-    # returns per-sink counts of the committed sinks. Oracle: SQL
-    # reimplementation of the routing over the same generated input.
-    import os as _os
-    import tempfile as _tf
-
-    from logstash_integration_jdbc_spark.operators.lookup import Lookup, LookupProcessor
-    from logstash_integration_jdbc_spark.operators.router import Route, Router
-    from logstash_integration_jdbc_spark.sources.generator import (
-        gen_tool_dim,
-        gen_transcripts,
-    )
-    from logstash_integration_jdbc_spark.streaming.stream import run_streaming_pipeline
-
-    _pin(spark)
-    base = _tf.mkdtemp(prefix="stream-q-")
-    # the returned frame reads lazily from base, so it goes at exit
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
-    src = _os.path.join(base, "src")
-    _write_pipeline_input(spark)
-    gen_transcripts(spark, n_rows=5000, seed=42).write.mode("overwrite").parquet(src)
-    lk = Lookup(
-        id="tool_info", dim=gen_tool_dim(spark),
-        on=[("tool", "=", "tool")], parameters={"tool": "[tool_call]"},
-        select=["tool_name"],
-        default_hash={"tool_name": "unknown"},
-        tag_on_default_use=["_default"],
-    )
-    router = Router(
-        routes=[Route("parse_miss", ~F.col("parse_ok")),
-                Route("matched", F.col("parse_ok"))],
-        default_sink="failed",
-    )
-    run_streaming_pipeline(
-        spark, src, LookupProcessor([lk]), router,
-        _os.path.join(base, "out"), _os.path.join(base, "ckpt"),
-    )
-    sinks = spark.read.parquet(_os.path.join(base, "out", "sinks"))
-    return sinks.groupBy("sink").agg(F.count(F.lit(1)).alias("n"))
-
-
 def _q_transcript_pipeline(spark, sf_dir):
     # flagship parse→enrich→classify over the deterministic generated
     # transcript table (north_star shape); the oracle reimplements
@@ -1067,7 +1022,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Every entry has a DuckDB oracle in ``oracle_sql()``."""
     return {
         "embedding_near_dups_scalable": _q_embedding_near_dups_scalable,
-        "streaming_counts": _q_streaming_counts,
         "transcript_pipeline": _q_transcript_pipeline,
         "s2_incremental_scan": _q_incremental_scan,
         "j1_streaming_lookup": _q_streaming_lookup,
@@ -1678,13 +1632,6 @@ def oracle_sql() -> dict[str, str]:
         FROM tr t
         LEFT JOIN read_parquet('{_PIPELINE_ORACLE_DIR}/tool_dim.parquet/*.parquet') d
           ON t.tool_call = d.tool
-        GROUP BY 1
-    """
-    q["streaming_counts"] = f"""
-        SELECT CASE WHEN regexp_matches(text, '{_parse_re}')
-                    THEN 'matched' ELSE 'parse_miss' END AS sink,
-               count(*) AS n
-        FROM read_parquet('{_PIPELINE_ORACLE_DIR}/transcripts.parquet/*.parquet')
         GROUP BY 1
     """
     q["dedup_substring"] = _value_oracle("substring", _substring_oracle_values)

@@ -13,8 +13,6 @@ or locally:
 
 Subcommands:
     run      one resumable batch of the flagship pipeline
-    stream   one availableNow Structured-Streaming pass
-    tracker  update per-conversation cursors (stateful streaming)
     gen      materialize the deterministic synthetic fixtures
 """
 
@@ -37,14 +35,6 @@ def main(argv: list[str] | None = None) -> int:
     run.add_argument("--clean-run", action="store_true")
     run.add_argument("--no-record-last-run", action="store_true")
     run.add_argument("--salts", type=int, default=8)
-
-    st = sub.add_parser("stream", help="one availableNow streaming pass")
-    for name in ("--transcripts", "--tool-dim", "--role-dim", "--out", "--checkpoint"):
-        st.add_argument(name, required=True)
-
-    tr = sub.add_parser("tracker", help="update per-conversation cursors")
-    for name in ("--transcripts", "--out", "--checkpoint"):
-        tr.add_argument(name, required=True)
 
     gen = sub.add_parser("gen", help="materialize deterministic fixtures")
     gen.add_argument("--out", required=True)
@@ -72,24 +62,6 @@ def main(argv: list[str] | None = None) -> int:
         )
         metrics = run_pipeline(spark, cfg)
         print(json.dumps(metrics, default=str))
-    elif args.cmd == "stream":
-        from logstash_integration_jdbc_spark.pipeline import build_lookups, build_router, PipelineConfig
-        from logstash_integration_jdbc_spark.streaming.stream import run_streaming_pipeline
-
-        cfg = PipelineConfig(
-            transcripts_path=args.transcripts, tool_dim_path=args.tool_dim,
-            role_dim_path=args.role_dim, out_dir=args.out,
-        )
-        run_streaming_pipeline(
-            spark, args.transcripts, build_lookups(spark, cfg), build_router(),
-            args.out, args.checkpoint,
-        )
-        print(json.dumps({"status": "ok", "out": args.out}))
-    elif args.cmd == "tracker":
-        from logstash_integration_jdbc_spark.streaming.stateful import run_conversation_tracker
-
-        run_conversation_tracker(spark, args.transcripts, args.out, args.checkpoint)
-        print(json.dumps({"status": "ok", "out": args.out}))
     elif args.cmd == "gen":
         from logstash_integration_jdbc_spark.sources.generator import write_fixtures
 

@@ -29,11 +29,10 @@ def sessionize_native(df: DataFrame, key_col: str = "user_id",
     Spark's native ``session_window``.
 
     One partial-aggregable groupBy — no sort-based window chain —
-    measured ~20% faster than the lag+flag form at sf0.01, and the same
-    expression works under ``readStream`` with a watermark (stateful
-    session aggregation). Boundary semantics match the lag-based
-    ``gap_delta > gap`` flag exactly, INCLUDING the exact-gap case: an
-    event arriving exactly ``gap`` after the previous one MERGES into
+    measured ~20% faster than the lag+flag form at sf0.01. Boundary
+    semantics match the lag-based ``gap_delta > gap`` flag exactly,
+    INCLUDING the exact-gap case: an event arriving exactly ``gap``
+    after the previous one MERGES into
     the same session (Spark merges touching ``[start, last+gap)``
     windows) — pinned by tests alongside full-fixture equivalence.
     """

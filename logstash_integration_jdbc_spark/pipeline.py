@@ -29,6 +29,7 @@ in one piece.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import time
@@ -188,20 +189,30 @@ def commit_aggregate(
     aggregate write's observed rows per sink (``(None, {})`` when the run
     committed no rows).
 
-    The glob lists only this run_id's directories and the schema is
-    known (``schema`` plus the three string partition columns), so the
-    read runs no schema-inference or listing job and does not grow with
-    the number of committed runs.
+    The read lists only this run_id's directories and the schema is
+    known (``schema`` plus the three string partition columns), so it
+    runs no schema-inference job (nor a listing job, up to Spark's
+    32-path parallel-discovery threshold) and does not grow with the
+    number of committed runs. The directories are globbed on the driver:
+    handed one glob path, Spark's sink-metadata probe stats the literal
+    pattern and logs a ``FileNotFoundException`` on every run.
     """
-    if sum(sink_counts.values()) == 0:
+    total = sum(sink_counts.values())
+    if total == 0:
         return None, {}
     from pyspark.sql import Observation
 
     sinks_dir = os.path.join(out_dir, "sinks")
+    leaves = sorted(glob.glob(os.path.join(
+        glob.escape(sinks_dir), "sink=*", "ts_hour=*", f"run_id={run_id}")))
+    if not leaves:
+        raise RuntimeError(
+            f"run {run_id} committed {total} sink rows but no "
+            f"run_id={run_id} partition exists under {sinks_dir}")
     schema = T.StructType(schema.fields + [
         T.StructField(c, T.StringType()) for c in ("sink", "ts_hour", "run_id")])
     committed = (spark.read.schema(schema).option("basePath", sinks_dir)
-                 .parquet(os.path.join(sinks_dir, "sink=*", "ts_hour=*", f"run_id={run_id}")))
+                 .parquet(*leaves))
     agg = hourly_counts(committed, keys=("sink", "role", "tool")).withColumn(
         "run_id", F.lit(run_id)
     )

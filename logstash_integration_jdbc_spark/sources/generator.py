@@ -44,11 +44,6 @@ def _h(seed: int):
     return F.abs(F.xxhash64(F.col("id"), F.lit(seed)))
 
 
-def _u(seed: int):
-    """Deterministic per-row uniform double in [0, 1)."""
-    return (_h(seed) % 1_000_000) / 1_000_000.0
-
-
 def gen_transcripts(
     spark: SparkSession,
     n_rows: int = 100_000,

@@ -1,8 +1,2 @@
-from logstash_integration_jdbc_spark.streaming.stream import (  # noqa: F401
-    run_streaming_pipeline,
-    streaming_hourly_counts,
-)
-from logstash_integration_jdbc_spark.streaming.stateful import (  # noqa: F401
-    conversation_state,
-    run_conversation_tracker,
-)
+"""Scheduled re-execution (S8): ``schedule.Scheduler`` fires incremental
+``run_pipeline`` runs on a cron line, interval or period."""

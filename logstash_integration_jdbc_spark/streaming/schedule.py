@@ -11,13 +11,14 @@ config docs, ``:339-352`` run loop, ``:258-259`` exclusivity check):
   cadence, late runs don't shift the grid);
 - none of the three — the statement runs exactly once.
 
-Spark-first mapping: a fixed cadence over a streaming source is native
-Spark (``trigger(processingTime=...)``); what Spark lacks is
-calendar-aligned cron and run-end-relative gaps for *batch* re-execution
-(`availableNow` micro-batches, `run_pipeline` increments). This module
-supplies that driver-side loop with an injectable clock so tests are
-deterministic — the scheduled job itself stays a distributed Spark job;
-only the (trivial) timing decision lives on the driver.
+Spark-first mapping: each fire is one incremental ``run_pipeline`` run,
+which resumes from the checkpoint's watermark exactly as the
+reference's statement resumes from ``sql_last_value``. Spark has no
+calendar-aligned cron or run-end-relative gap for *batch*
+re-execution, so this module supplies that driver-side loop with an
+injectable clock so tests are deterministic — the scheduled job itself
+stays a distributed Spark job; only the (trivial) timing decision lives
+on the driver.
 
 Cron subset (the part of rufus-scheduler the reference documents):
 5-field ``minute hour day-of-month month day-of-week`` plus an optional
@@ -265,7 +266,7 @@ class Scheduler:
     def run(self, max_runs: int | None = None) -> int:
         """Block, firing per the configured mode; returns run count.
 
-        ``max_runs`` bounds the loop (tests / availableNow batch drains);
+        ``max_runs`` bounds the loop (tests / draining a backlog);
         ``stop()`` from the job itself also exits after the current run.
         """
         def done() -> bool:

@@ -5,25 +5,33 @@ import shutil
 import tempfile
 
 import pytest
+from hypothesis.configuration import set_hypothesis_home_dir
 
 from logstash_integration_jdbc_spark.session import get_spark
 from logstash_integration_jdbc_spark.sources.generator import write_fixtures
 
+# The catalog's warehouse, embedded Derby's log and Hypothesis's storage
+# (example database, unicode charmap cache) go here, not the cwd; the
+# directory goes when the session ends.
+_SCRATCH = tempfile.mkdtemp(prefix="ljspark-session-")
+set_hypothesis_home_dir(os.path.join(_SCRATCH, "hypothesis"))
+
+
+def pytest_unconfigure(config):
+    shutil.rmtree(_SCRATCH, ignore_errors=True)
+
 
 @pytest.fixture(scope="session")
 def spark():
-    # the catalog's warehouse and embedded Derby's log go here, not the cwd
-    scratch = tempfile.mkdtemp(prefix="ljspark-session-")
     s = get_spark(app_name="tests", master="local[4]", extra_conf={
         "spark.sql.shuffle.partitions": "8",
-        "spark.sql.warehouse.dir": os.path.join(scratch, "spark-warehouse"),
+        "spark.sql.warehouse.dir": os.path.join(_SCRATCH, "spark-warehouse"),
         "spark.driver.extraJavaOptions":
-            f"-Dderby.stream.error.file={os.path.join(scratch, 'derby.log')}",
+            f"-Dderby.stream.error.file={os.path.join(_SCRATCH, 'derby.log')}",
     })
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
-    shutil.rmtree(scratch, ignore_errors=True)
 
 
 @pytest.fixture(scope="session")

@@ -37,31 +37,3 @@ def test_every_private_helper_is_referenced():
                 used.add(node.id)
     assert sorted(private - used) == []
 
-
-def test_streaming_queries_remove_their_temp_dirs(tmp_path):
-    # the streaming builder writes its source, sink and checkpoint under
-    # a fresh temp dir that its lazy result frame still reads; it may not
-    # outlive the process
-    import os
-    import subprocess
-    import sys
-    import textwrap
-    from pathlib import Path
-
-    scratch = tmp_path / "tmp"
-    scratch.mkdir()
-    script = textwrap.dedent("""
-        import sys
-        import __spark_entry__ as e
-        from logstash_integration_jdbc_spark.session import get_spark
-        spark = get_spark(app_name="tempdirs", master="local[2]",
-                          extra_conf={"spark.sql.shuffle.partitions": "4"})
-        assert e.queries()["streaming_counts"](spark, sys.argv[1]).collect()
-        spark.stop()
-    """)
-    root = Path(entrymod.__file__).parent
-    subprocess.run([sys.executable, "-c", script, str(tmp_path)], cwd=root,
-                   env=dict(os.environ, TMPDIR=str(scratch)),
-                   check=True, timeout=600)
-    assert sorted(p.name for p in scratch.iterdir()
-                  if p.name.startswith("stream-q-")) == []

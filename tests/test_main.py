@@ -1,0 +1,52 @@
+"""The deployment entry point, ``python -m logstash_integration_jdbc_spark``:
+its ``run`` subcommand is one resumable batch of the flagship job."""
+
+from __future__ import annotations
+
+import json
+import os
+
+import pytest
+
+from logstash_integration_jdbc_spark import __main__ as cli
+from logstash_integration_jdbc_spark.session import DEFAULT_CONF
+
+
+@pytest.fixture
+def restore_sql_conf(spark):
+    # main() builds its session with get_spark, whose getOrCreate applies
+    # the engine defaults to the shared test session's runtime confs
+    saved = {k: spark.conf.get(k, None) for k in DEFAULT_CONF if k.startswith("spark.sql.")}
+    yield
+    for k, v in saved.items():
+        if v is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)
+
+
+def test_run_prints_sink_counts_then_resumes(spark, fixture_dir, tmp_path, capsys,
+                                             restore_sql_conf):
+    out, ckpt = tmp_path / "out", tmp_path / "ckpt.json"
+    argv = ["run", "--transcripts", f"{fixture_dir}/transcripts.parquet",
+            "--tool-dim", f"{fixture_dir}/tool_dim.parquet",
+            "--role-dim", f"{fixture_dir}/role_dim.parquet",
+            "--out", str(out), "--checkpoint", str(ckpt)]
+
+    def run() -> dict:
+        assert cli.main(argv) == 0
+        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    first = run()
+    on_disk = {r.sink: r["count"] for r in
+               spark.read.parquet(str(out / "sinks")).groupBy("sink").count().collect()}
+    assert {k: v for k, v in first["sinks"].items() if v} == on_disk
+    assert sum(on_disk.values()) == spark.read.parquet(
+        f"{fixture_dir}/transcripts.parquet").count()
+    mark = json.loads(ckpt.read_text())
+
+    second = run()
+    assert sum(second["sinks"].values()) == 0
+    assert second["watermark"] == first["watermark"]
+    assert json.loads(ckpt.read_text()) == mark
+    assert spark.read.parquet(str(out / "sinks")).count() == sum(on_disk.values())

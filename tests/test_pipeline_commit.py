@@ -15,6 +15,9 @@ import glob
 import json
 import os
 import shutil
+import subprocess
+import sys
+import textwrap
 import uuid
 from collections import Counter
 
@@ -287,3 +290,43 @@ def test_empty_tick_writes_nothing_and_keeps_checkpoint(spark, fixture_dir, tick
     assert data_files() == files
     assert checkpoint(out) == before
     assert calls == []
+
+
+def test_read_back_of_missing_partitions_raises(spark, tmp_path, transcripts):
+    # sink counts say rows committed, but no run_id partition exists
+    with pytest.raises(RuntimeError, match="no run_id=r1 partition"):
+        pipeline.commit_aggregate(spark, str(tmp_path), "r1", transcripts.schema,
+                                  {"matched": 3})
+
+
+def test_read_back_logs_no_missing_file_trace(tmp_path):
+    # one run in a fresh JVM at the default WARN log level: reading back
+    # the run's sink partitions must not stat a path that does not exist
+    # (Spark's sink-metadata probe logs a FileNotFoundException trace
+    # when handed a glob)
+    script = textwrap.dedent("""
+        import json, os, sys
+        from logstash_integration_jdbc_spark.pipeline import PipelineConfig, run_pipeline
+        from logstash_integration_jdbc_spark.session import get_spark
+        from logstash_integration_jdbc_spark.sources.generator import write_fixtures
+        root = sys.argv[1]
+        spark = get_spark(app_name="read-back", master="local[2]", extra_conf={
+            "spark.sql.shuffle.partitions": "4", "spark.driver.memory": "1g"})
+        d = os.path.join(root, "data")
+        write_fixtures(spark, d, n_rows=2000)
+        m = run_pipeline(spark, PipelineConfig(
+            transcripts_path=f"{d}/transcripts.parquet",
+            tool_dim_path=f"{d}/tool_dim.parquet",
+            role_dim_path=f"{d}/role_dim.parquet",
+            out_dir=os.path.join(root, "out")))
+        print(json.dumps(m["sinks"]))
+        spark.stop()
+    """)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    path = os.pathsep.join(filter(None, [repo, os.environ.get("PYTHONPATH")]))
+    proc = subprocess.run([sys.executable, "-c", script, str(tmp_path)], cwd=tmp_path,
+                          env=dict(os.environ, PYTHONPATH=path),
+                          capture_output=True, text=True, timeout=600)
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert sum(json.loads(proc.stdout.strip().splitlines()[-1]).values()) == 2000
+    assert "FileNotFoundException" not in proc.stderr
