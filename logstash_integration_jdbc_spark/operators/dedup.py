@@ -8,11 +8,13 @@ kernels are numpy-vectorized Arrow pandas UDFs.
 Scale design notes:
 - exact dedup shuffles on a 256-bit digest of the text, never the text
   itself — shuffle payload is O(rows·32B) regardless of document size;
-- MinHash+LSH: signatures and band buckets are computed map-side; the
-  only shuffle is the band-bucket exchange (rows×bands short rows), and
-  candidate verification joins only within buckets — the classic
-  near-linear near-dup pipeline (Broder minhash + banding as in the
-  Mining of Massive Datasets formulation);
+- MinHash+LSH: shingle sets, signatures and band buckets are computed
+  map-side and materialized once; the band-bucket exchange carries
+  rows×bands short rows, one-member buckets drop out before the member
+  aggregate, and the exact-Jaccard verify joins candidate pairs to the
+  materialized shingle sets — the classic near-linear near-dup pipeline
+  (Broder minhash + banding as in the Mining of Massive Datasets
+  formulation);
 - all hash "randomness" is fixed-coefficient universal hashing
   (a_i·h+b_i mod p) so results are deterministic across runs/clusters.
 """
@@ -23,7 +25,7 @@ import functools
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -128,9 +130,8 @@ def token_hashes(text_col: Column) -> Column:
     )
 
 
-def gram_hashes(th_col: Column, text_col: Column, n: int = 3,
-                distinct: bool = True) -> Column:
-    """n-gram shingle hashes from PRE-MATERIALIZED token hashes:
+def gram_hashes(th_col: Column, text_col: Column, n: int = 3) -> Column:
+    """Distinct n-gram shingle hashes from PRE-MATERIALIZED token hashes:
     gram hash = xxhash64 over the n consecutive token hashes.
 
     Hash values differ from ``shingle_hashes`` (hash-of-hashes vs
@@ -148,11 +149,9 @@ def gram_hashes(th_col: Column, text_col: Column, n: int = 3,
                                for j in range(n)]),
     )
     grams = F.when(k > 0, grams).otherwise(F.array(F.xxhash64(text_col)))
-    # distinct=False skips the per-row hash-set pass for consumers that
-    # only take the MIN over the grams (minhash signatures: min over a
-    # multiset == min over its set — bucket values verified identical).
-    # Jaccard consumers must keep distinct=True.
-    return F.array_distinct(grams) if distinct else grams
+    # the SET: the Jaccard verify needs it, and the minhash signature
+    # (a min) is the same over the set as over the multiset
+    return F.array_distinct(grams)
 
 
 # -- MinHash + LSH ---------------------------------------------------------
@@ -332,25 +331,24 @@ def minhash_band_bucket_udf(num_hashes: int = 64, bands: int = 16):
 def _texts(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Null-safe (id, text) projection, spread across all cores
     (``skew.spread``) — the shingle/signature stages must not run in the
-    source's 1-2 file-partitions (measured ~70% slower at sf0.1)."""
-    return spread(df.select(
-        F.col(id_col), F.coalesce(F.col(text_col), F.lit("")).alias(text_col)
-    ), id_col)
+    source's 1-2 file-partitions (measured ~70% slower at sf0.1). The
+    spread is decided on ``df``, whose RDD PySpark caches, not on a
+    fresh projection; column pruning still moves the projection below
+    the exchange."""
+    return spread(df, id_col).select(
+        F.col(id_col), F.coalesce(F.col(text_col), F.lit("")).alias(text_col))
 
 
 def _shingled(src: DataFrame, id_col: str, text_col: str,
-              n_shingle: int, distinct: bool = True) -> DataFrame:
+              n_shingle: int) -> DataFrame:
     """(id, __sh) via the staged token-hash → gram-hash form (~8× faster
     than the reference shingle_hashes; see gram_hashes docstring). The
-    intermediate select MATERIALIZES __th — required, not style.
-    ``distinct=False`` is the signature-only fast path (see
-    gram_hashes)."""
+    intermediate select MATERIALIZES __th — required, not style."""
     return (
         src.select(F.col(id_col), F.col(text_col),
                    token_hashes(F.col(text_col)).alias("__th"))
         .select(F.col(id_col),
-                gram_hashes(F.col("__th"), F.col(text_col),
-                            n_shingle, distinct=distinct).alias("__sh"))
+                gram_hashes(F.col("__th"), F.col(text_col), n_shingle).alias("__sh"))
     )
 
 
@@ -378,21 +376,10 @@ def _bucket_pairs(df: DataFrame, keys: list[str], members: Column) -> DataFrame:
     )
 
 
-def minhash_band_buckets(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_shingle: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-) -> DataFrame:
-    """(id, __band, __bucket) LSH band keys — one row per (doc, band).
-
-    The building block of ``minhash_lsh_candidates``; public so
-    diagnostics (e.g. the bench's bucket-size histogram, the first thing
-    to inspect when a corpus degenerates the banding) can reuse the
-    exact production lineage.
-    """
+def _band_frame(df: DataFrame, id_col: str, text_col: str, n_shingle: int,
+                num_hashes: int, bands: int) -> DataFrame:
+    """(id, __sh, __bk): each doc's distinct shingle set and its per-band
+    LSH keys, from one shingling pass."""
     # Band key = xxhash64 over the band's signature values as BIGINTs,
     # computed INSIDE the Arrow kernel (minhash_band_bucket_udf): the
     # r5 concat_ws form stringified all num_hashes values and
@@ -403,13 +390,52 @@ def minhash_band_buckets(
     # lost; hash collisions only ADD candidates, which the
     # exact-jaccard verify filters — downstream ≥-threshold outputs are
     # unchanged (verified vs brute-force jaccard at sf0.01/sf0.1).
-    base = _shingled(_texts(df, id_col, text_col), id_col, text_col,
-                     n_shingle, distinct=False).withColumn(
+    return _shingled(_texts(df, id_col, text_col), id_col, text_col,
+                     n_shingle).withColumn(
         "__bk", minhash_band_bucket_udf(num_hashes, bands)(F.col("__sh")))
-    return base.select(
-        id_col,
-        F.posexplode("__bk").alias("__band", "__bucket"),
+
+
+def _band_rows(frame: DataFrame, id_col: str) -> DataFrame:
+    return frame.select(id_col, F.posexplode("__bk").alias("__band", "__bucket"))
+
+
+def _shared_buckets(df: DataFrame, keys: list[str]) -> DataFrame:
+    """``df`` without the rows that are alone in their ``keys`` bucket.
+
+    For ``_bucket_pairs`` inputs whose buckets are nearly all singletons
+    (minhash bands, winnow anchors): the window count shares the
+    emitter's exchange, and the partial ``collect_list``/``collect_set``
+    would otherwise hold every bucket key and fall back to sorting past
+    ``spark.sql.objectHashAggregate.sortBased.fallbackThreshold`` keys
+    per task — the light/heavy-key split of skewed hash joins. Not for
+    the sketch probes, whose (chunk, 8-bit value) buckets are almost
+    never singletons, so the window only adds a sort (measured about
+    2.5% slower on ``embedding_near_dups_scalable`` at sf0.1, local[4]).
+    """
+    return (
+        df.withColumn("__n", F.count(F.lit(1)).over(Window.partitionBy(*keys)))
+        .filter(F.col("__n") > 1)
+        .drop("__n")
     )
+
+
+def minhash_band_buckets(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n_shingle: int = 3,
+    num_hashes: int = 64,
+    bands: int = 16,
+) -> DataFrame:
+    """(id, __band, __bucket) LSH band keys — one row per (doc, band).
+
+    Built on the same band frame as ``minhash_lsh_candidates``; public
+    so diagnostics (e.g. the bench's bucket-size histogram, the first
+    thing to inspect when a corpus degenerates the banding) can reuse
+    the exact production lineage.
+    """
+    return _band_rows(
+        _band_frame(df, id_col, text_col, n_shingle, num_hashes, bands), id_col)
 
 
 def minhash_lsh_candidates(
@@ -427,36 +453,25 @@ def minhash_lsh_candidates(
     jaccard verified (so downstream filters by threshold; no false
     positives survive).
     """
-    # Shingle hashing stays JVM-side (staged token/gram xxhash64); the
-    # signature is the CPU hot spot and runs as a numpy-vectorized Arrow
-    # UDF — both inside minhash_band_buckets.
-    texts = _texts(df, id_col, text_col)
-    band_keys = minhash_band_buckets(df, id_col, text_col, n_shingle,
-                                     num_hashes, bands)
+    # Each doc is shingled once, and its shingle set and band keys are
+    # materialized once: the bucket→pair exchange reads the band keys
+    # and both verify joins read the shingle sets, so nothing upstream
+    # (the spread, the interpreted shingling, the Python band kernel)
+    # runs twice. localCheckpoint (not persist) because its RDD blocks
+    # are reclaimed by the ContextCleaner when the DataFrame is
+    # dropped, whereas CacheManager entries from persist() accumulate
+    # across calls until an explicit unpersist the lazy API gives
+    # callers no natural point to issue.
+    docs = _band_frame(df, id_col, text_col, n_shingle, num_hashes,
+                       bands).localCheckpoint(eager=True)
+    keys = ["__band", "__bucket"]
     cand = (
-        _bucket_pairs(band_keys, ["__band", "__bucket"], F.collect_list(id_col))
+        _bucket_pairs(_shared_buckets(_band_rows(docs, id_col), keys), keys,
+                      F.collect_list(id_col))
         .select(F.col("__a").alias("id_a"), F.col("__b").alias("id_b"))
         .distinct()
-        # Materialized eagerly: the candidate PAIR set is small by
-        # design (bounded by the banding precision) and feeds two
-        # branches below — the id-prune and the verify join — which
-        # would otherwise recompute the whole shingle+signature+band
-        # pipeline once each. localCheckpoint (not persist) because its
-        # RDD blocks are reclaimed by the ContextCleaner when the
-        # DataFrame is dropped, whereas CacheManager entries from
-        # persist() accumulate across calls until an explicit unpersist
-        # the lazy API gives callers no natural point to issue.
-        .localCheckpoint(eager=True)
     )
-    # Verify only the docs that appear in some candidate pair: shingling
-    # is the measured hot spot (interpreted higher-order exprs), and
-    # re-shingling the FULL corpus twice for the two verify joins cost
-    # more than the band pipeline itself (~2×12 s of a 41 s total at 1M
-    # docs, local[32]). The prune makes verify cost proportional to the
-    # candidate set, not the corpus.
-    pair_ids = cand.select(
-        F.explode(F.array("id_a", "id_b")).alias(id_col)).distinct()
-    sh = _shingled(texts.join(pair_ids, id_col), id_col, text_col, n_shingle)
+    sh = docs.select(id_col, "__sh")
     return (
         cand.join(sh.withColumnsRenamed({id_col: "id_a", "__sh": "__sh_a"}), "id_a")
         .join(sh.withColumnsRenamed({id_col: "id_b", "__sh": "__sh_b"}), "id_b")
@@ -583,8 +598,6 @@ def winnow_anchors_expr(df: DataFrame, id_col: str = "doc_id",
     """
     if min_tokens < 2 or window < 1:
         raise ValueError("min_tokens must be >= 2 and window >= 1")
-    from pyspark.sql import Window
-
     L, W = min_tokens, window
     src = _texts(df, id_col, text_col).repartition(
         df.sparkSession.sparkContext.defaultParallelism, F.col(id_col))
@@ -640,7 +653,8 @@ def substring_dup_pairs(df: DataFrame, id_col: str = "doc_id",
     """
     anch = winnow_anchors(df, id_col, text_col, min_tokens, window)
     return (
-        _bucket_pairs(anch, ["__anchor"], F.collect_set(id_col))
+        _bucket_pairs(_shared_buckets(anch, ["__anchor"]), ["__anchor"],
+                      F.collect_set(id_col))
         .groupBy(F.col("__a").alias("id_a"), F.col("__b").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("n_shared_anchors"))
     )

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 DEFAULT_CONF: dict[str, str] = {
@@ -55,6 +56,25 @@ DEFAULT_CONF: dict[str, str] = {
 }
 
 
+# The package root, put on the local Python workers' PYTHONPATH so the
+# daemon module imports from any cwd.
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+DAEMON_MODULE = "logstash_integration_jdbc_spark.daemon"
+
+
+def session_conf(master: str, extra_conf: dict[str, str] | None = None) -> dict[str, str]:
+    """The confs a new session on ``master`` starts with: the engine
+    defaults, then ``extra_conf``. A ``local[...]`` master starts its
+    Python workers from ``daemon.py`` (cluster executors keep the plain
+    ``pyspark.daemon``)."""
+    conf = {**DEFAULT_CONF, **(extra_conf or {})}
+    if master == "local" or master.startswith("local["):
+        conf.setdefault("spark.python.daemon.module", DAEMON_MODULE)
+        conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+            p for p in (_ROOT, conf.get("spark.executorEnv.PYTHONPATH")) if p)
+    return conf
+
+
 def get_spark(
     app_name: str = "logstash-integration-jdbc-spark",
     master: str | None = None,
@@ -63,15 +83,14 @@ def get_spark(
     """Build (or fetch) a SparkSession with the engine defaults.
 
     ``master`` falls back to ``local[$SPARK_GRAFT_CPUS]`` (default all
-    cores) in the sandbox; on a cluster the submitter sets it.
+    cores) in the sandbox; on a cluster the submitter sets it. When a
+    session is already running, only ``extra_conf`` is applied to it:
+    re-applying the defaults would reset what its creator set.
     """
+    if SparkContext._active_spark_context is not None:
+        return SparkSession.builder.config(map=extra_conf or {}).getOrCreate()
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
-    builder = SparkSession.builder.appName(app_name).master(master)
-    conf = dict(DEFAULT_CONF)
-    if extra_conf:
-        conf.update(extra_conf)
-    for k, v in conf.items():
-        builder = builder.config(k, v)
-    return builder.getOrCreate()
+    return SparkSession.builder.appName(app_name).master(master).config(
+        map=session_conf(master, extra_conf)).getOrCreate()

@@ -4,29 +4,11 @@ its ``run`` subcommand is one resumable batch of the flagship job."""
 from __future__ import annotations
 
 import json
-import os
-
-import pytest
 
 from logstash_integration_jdbc_spark import __main__ as cli
-from logstash_integration_jdbc_spark.session import DEFAULT_CONF
 
 
-@pytest.fixture
-def restore_sql_conf(spark):
-    # main() builds its session with get_spark, whose getOrCreate applies
-    # the engine defaults to the shared test session's runtime confs
-    saved = {k: spark.conf.get(k, None) for k in DEFAULT_CONF if k.startswith("spark.sql.")}
-    yield
-    for k, v in saved.items():
-        if v is None:
-            spark.conf.unset(k)
-        else:
-            spark.conf.set(k, v)
-
-
-def test_run_prints_sink_counts_then_resumes(spark, fixture_dir, tmp_path, capsys,
-                                             restore_sql_conf):
+def test_run_prints_sink_counts_then_resumes(spark, fixture_dir, tmp_path, capsys):
     out, ckpt = tmp_path / "out", tmp_path / "ckpt.json"
     argv = ["run", "--transcripts", f"{fixture_dir}/transcripts.parquet",
             "--tool-dim", f"{fixture_dir}/tool_dim.parquet",

@@ -5,8 +5,9 @@ Each property pins an operator against an independent oracle over
 generated inputs: asof_join vs pandas.merge_asof, GrokParser vs Python
 re, ValueTracker vs identity round-trip, exact_dedup invariants, the
 MinHash band and winnow kernels vs their JVM and window references,
-Router.route vs a Python routing rule, and salted_repartition's row and
-spread invariants.
+minhash_lsh_candidates vs brute-force all-pairs Jaccard, the bucket→pair
+emitter vs brute-force enumeration, Router.route vs a Python routing
+rule, and salted_repartition's row and spread invariants.
 Spark actions are slow, so examples are kept small and deadlines off.
 """
 
@@ -219,6 +220,85 @@ def test_winnow_kernel_equals_reference_on_generated_batches(spark, data):
         return {(r["doc_id"], r["__anchor"]) for r in out}
 
     assert anchors(winnow_anchors) == anchors(winnow_anchors_expr)
+
+
+# -- minhash_lsh_candidates ≡ brute-force all-pairs Jaccard, and
+#    _bucket_pairs ≡ brute-force per-bucket pair enumeration ------------------
+
+def _py_shingles(text, n=3):
+    """The library's shingle set in Python: the word n-grams of the
+    lowercased text, or the whole text (null reads as "") when it has
+    fewer than n words."""
+    text = text or ""
+    words = _re.split(r"\s+", text.lower().strip(" "))
+    if len(words) < n:
+        return {text}
+    return {tuple(words[i:i + n]) for i in range(len(words) - n + 1)}
+
+
+@st.composite
+def lsh_corpora(draw):
+    # null, empty and 1-2 word docs (whole-text shingle), short docs over
+    # a four-word vocabulary (shared shingles), and one cluster of 30+
+    # identical copies (a bucket of 30+ members in every band)
+    docs = draw(st.lists(
+        st.one_of(_ODD_DOCS, st.integers(min_value=1, max_value=10).flatmap(_words)),
+        min_size=1, max_size=24))
+    cluster = draw(st.integers(min_value=3, max_value=10).flatmap(_words))
+    texts = docs + [cluster] * draw(st.integers(min_value=30, max_value=36))
+    return draw(st.permutations(texts))
+
+
+@settings(**SETTINGS)
+@given(lsh_corpora())
+def test_minhash_candidates_match_brute_force_jaccard(spark, texts):
+    from logstash_integration_jdbc_spark.operators.dedup import minhash_lsh_candidates
+
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id bigint, text string")
+    got = [(r.id_a, r.id_b, r.jaccard) for r in minhash_lsh_candidates(df).collect()]
+    pairs = {(a, b): j for a, b, j in got}
+    assert len(pairs) == len(got)  # each pair once
+    sh = [_py_shingles(t) for t in texts]
+    for (a, b), j in pairs.items():
+        assert a < b
+        assert j == len(sh[a] & sh[b]) / len(sh[a] | sh[b])
+    same = {(a, b) for a in range(len(sh)) for b in range(a + 1, len(sh))
+            if sh[a] == sh[b]}
+    assert same <= pairs.keys()
+
+
+@st.composite
+def bucket_rows(draw):
+    key = st.one_of(st.none(), st.integers(min_value=0, max_value=3))
+    member = st.one_of(st.none(), st.integers(min_value=0, max_value=20))
+    rows = draw(st.lists(st.tuples(key, key, member), max_size=40))
+    # a singleton bucket and a two-member bucket under null keys, always
+    return rows + [(9, 9, 1), (None, None, 2), (None, None, 3)]
+
+
+@settings(**SETTINGS)
+@given(bucket_rows())
+def test_bucket_pairs_match_brute_force_enumeration(spark, rows):
+    from collections import Counter, defaultdict
+
+    from pyspark.sql import functions as F
+
+    from logstash_integration_jdbc_spark.operators.dedup import _bucket_pairs
+
+    df = spark.createDataFrame(rows, "k1 int, k2 int, m bigint")
+    got = Counter((r["k1"], r["k2"], r["__a"], r["__b"]) for r in
+                  _bucket_pairs(df, ["k1", "k2"], F.collect_list("m")).collect())
+    buckets = defaultdict(list)
+    for k1, k2, m in rows:
+        if m is not None:  # collect_list skips nulls
+            buckets[(k1, k2)].append(m)
+    want = Counter()
+    for (k1, k2), ms in buckets.items():
+        ms.sort()
+        for i in range(len(ms)):
+            for j in range(i + 1, len(ms)):
+                want[(k1, k2, ms[i], ms[j])] += 1
+    assert got == want
 
 
 # -- BPE: the incremental trainer ≡ a brute re-count-per-round trainer
